@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..schema import sql_ident
+
 ODD_HEX = ("1", "3", "5", "7", "9", "b", "d", "f")
 
 
@@ -183,23 +185,22 @@ def minhash_signatures(
     doc per map partition."""
     if num_hashes > 8:
         raise ValueError("minhash_signatures supports up to 8 hashes (2 md5 x 4 chunks)")
-    words = F.split(F.lower(F.col(text_col)), " ")
-    sh_arr = F.transform(
-        F.sequence(F.lit(0), F.size(words) - n),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+    words = f"split(lower({sql_ident(text_col)}), ' ')"
+    sh_arr = (
+        f"transform(sequence(0, size({words}) - {n}), "
+        f"__i -> concat_ws(' ', slice({words}, __i + 1, {n})))"
     )
-    # explode_outer + null array keeps shingle-less docs (null signatures)
-    ex = _spread(df.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.explode_outer(F.when(F.size(words) >= n, sh_arr)).alias("__s"),
+    # explode_outer + null array keeps shingle-less docs (null signatures);
+    # the plan is SQL text: one parse per step, not a py4j trip per Column
+    ex = _spread(df.select(id_col, text_col)).selectExpr(
+        sql_ident(id_col),
+        f"explode_outer(CASE WHEN size({words}) >= {n} THEN {sh_arr} END) AS __s",
     )
-    h1 = F.md5(F.col("__s"))
-    h2 = F.md5(F.concat(F.lit("x:"), F.col("__s")))
-    aggs = []
-    for j in range(num_hashes):
-        src = h1 if j < 4 else h2
-        aggs.append(F.min(F.substring(src, (j % 4) * 8 + 1, 8)).alias(f"sig_{j}"))
-    return ex.groupBy(id_col).agg(*aggs)
+    hashes = ("md5(__s)", "md5(concat('x:', __s))")
+    return ex.groupBy(id_col).agg(*[
+        F.expr(f"min(substring({hashes[j // 4]}, {(j % 4) * 8 + 1}, 8)) AS sig_{j}")
+        for j in range(num_hashes)
+    ])
 
 
 def minhash_lsh_pairs(
@@ -254,56 +255,39 @@ def minhash_lsh_pairs(
     # less docs) behave identically: null slots count 0 matches either
     # way. The hex output contract of minhash_signatures/dedup_minhash_sig
     # is untouched.
-    nsig = sig.select(
-        F.col(id_col).alias("id"),
-        *[
-            F.conv(F.col(c), 16, 10).cast("bigint").alias(c)
-            for c in sig_cols
-        ],
+    nsig = sig.selectExpr(
+        f"{sql_ident(id_col)} AS id",
+        *[f"CAST(conv({c}, 16, 10) AS BIGINT) AS {c}" for c in sig_cols],
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bnd).alias("band"),
-                *[
-                    F.col(sig_cols[bnd * rpb + i]).alias(f"k{i}")
-                    for i in range(rpb)
-                ],
-            )
-            for bnd in range(bands)
-        ]
+    band_structs = ", ".join(
+        f"named_struct('band', {bnd}, "
+        + ", ".join(f"'k{i}', {sig_cols[bnd * rpb + i]}" for i in range(rpb))
+        + ")"
+        for bnd in range(bands)
     )
-    ex = nsig.select(
-        F.col("id"), *sig_cols, F.explode(band_structs).alias("b")
-    )
+    ex = nsig.selectExpr("id", *sig_cols, f"explode(array({band_structs})) AS b")
+    cond = "a.b = b.b AND a.id < b.id"
     if max_bucket is not None:
         # per-(band, bucket) size + min id: oversize buckets keep only the
         # star pairs anchored at the min-id member — O(m), not O(m^2)
         stats = ex.groupBy("b").agg(
-            F.count(F.lit(1)).alias("__bn"), F.min("id").alias("__bmin")
+            F.expr("count(1) AS __bn"), F.expr("min(id) AS __bmin")
         )
         ex = ex.join(stats, "b")
-    a, b = ex.alias("a"), ex.alias("b")
-    cond = (F.col("a.b") == F.col("b.b")) & (F.col("a.id") < F.col("b.id"))
-    if max_bucket is not None:
-        cond = cond & (
-            (F.col("a.__bn") <= max_bucket) | (F.col("a.id") == F.col("a.__bmin"))
-        )
-    k = float(num_hashes)
-    matches = sum(
-        F.when(F.col(f"a.sig_{j}") == F.col(f"b.sig_{j}"), 1).otherwise(0)
+        cond += f" AND (a.__bn <= {max_bucket} OR a.id = a.__bmin)"
+    matches = " + ".join(
+        f"CASE WHEN a.sig_{j} = b.sig_{j} THEN 1 ELSE 0 END"
         for j in range(num_hashes)
     )
     # score BEFORE dropDuplicates: the agreement filter is cheap codegen and
     # shrinks the dedup shuffle from |candidates| to |true pairs|
     return (
-        a.join(b, cond)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(matches / F.lit(k), 6).alias("est_jaccard"),
+        ex.alias("a").join(ex.alias("b"), F.expr(cond))
+        .selectExpr(
+            "a.id AS id_a", "b.id AS id_b",
+            f"round(({matches}) / {float(num_hashes)!r}D, 6) AS est_jaccard",
         )
-        .filter(F.col("est_jaccard") >= threshold)
+        .filter(f"est_jaccard >= {float(threshold)!r}D")
         .dropDuplicates(["id_a", "id_b"])
     )
 

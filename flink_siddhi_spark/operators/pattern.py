@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import SiddhiPlannerException, UnsupportedFeatureException
+from ..schema import sql_ident
 from ..siddhiql import ast as A
 
 TS_COL = "__ts"
@@ -1753,22 +1754,38 @@ def _group_match(p: _Partial, st: _Step, masks, i: int):
     return None
 
 
-def _try_fast_path(planner, q: A.Query, u: DataFrame, elems, strict_after,
-                   schemas, col_of, field_names, collection, sort_cols):
+def _elem_match(planner, valid: set[str], e: A.PatternElem, tags: dict) -> Column:
+    """Row-matches-element predicate: the stream tag test as SQL text (none
+    over a single stream, where it always holds), the user filter through
+    ``ExprCompiler``."""
+    from ..plans.expr import ExprCompiler
+
+    c = F.expr(f"{STREAM_COL} = {tags[e.stream]}") if len(tags) > 1 else None
+    if e.filter is not None:
+        comp = ExprCompiler(planner._plain_resolver(valid, {e.stream}), planner.extensions)
+        f = comp.compile(e.filter)
+        c = f if c is None else c & f
+    return F.lit(True) if c is None else c
+
+
+def _try_fast_path(planner, q: A.Query, u: DataFrame, elems, tags, valid,
+                   strict_after, col_of, field_names, sort_cols):
     """JVM-side (Catalyst window-function) lowering for the common 2-element
     patterns — no Python in the hot path, scales like any windowed query:
 
-    - ``[every] a=A[pa] -> b=B[pb] [within t]``: first pb-match after each
-      pa-match per key = one row_number + one frame-min + one self-join.
+    - ``[every] a=A[pa] -> b=B[pb] [within t]``: a running count of
+      pb-matches per key ranks every b; the first b after a row is the one
+      whose rank is one higher than the count at that row — one running
+      window (O(n) per key) + one equi-join on (key, rank).
     - ``a=A[pa] -> not B[pb] for t`` (absence): same machinery, emit when the
       next pb-match is absent or beyond the deadline.
     - ``[every] a=A[pa] , b=B[pb]`` (strict): lag() over the full per-key feed.
 
-    Returns the match table or None if the shape needs the general NFA.
+    The plumbing is SQL text (one server-side parse per step instead of a
+    py4j round trip per Column); the order is the batch NFA's total order
+    (event time, then fields, nulls last as in its pandas sort). Returns the
+    match table or None if the shape needs the general NFA.
     """
-    from pyspark.sql.window import Window
-    from ..plans.expr import ExprCompiler
-
     p: A.PatternInput = q.input
     if len(elems) != 2:
         return None
@@ -1780,101 +1797,78 @@ def _try_fast_path(planner, q: A.Query, u: DataFrame, elems, strict_after,
     if not b.negated and (b.min_count != 1):
         return None
 
-    def match_col(e: A.PatternElem) -> Column:
-        comp = ExprCompiler(
-            planner._plain_resolver(set(u.columns), {e.stream}), planner.extensions
-        )
-        c = F.col(STREAM_COL) == e.stream
-        if e.filter is not None:
-            c = c & comp.compile(e.filter)
-        return c
+    flagged = u.withColumns({
+        "__is_a": _elem_match(planner, valid, a, tags),
+        "__is_b": _elem_match(planner, valid, b, tags),
+    })
+    order = ", ".join(f"{sql_ident(c)} NULLS LAST" for c in sort_cols)
+    spec = f"PARTITION BY {PK_COL} ORDER BY {order}"
 
-    is_a, is_b = match_col(a), match_col(b)
-    wp = Window.partitionBy(PK_COL).orderBy(*[F.col(c) for c in sort_cols])
+    def packed(e: A.PatternElem) -> str:
+        # an element's output fields travel as ONE struct: a selectExpr costs
+        # a py4j command per expression string, so per-field strings would
+        # make every field cost a command at every step
+        return "struct(" + ", ".join(
+            f"{sql_ident(f)} AS {sql_ident(col_of[(e.alias, f)])}"
+            for f in field_names[e.alias]
+        ) + ")"
+
+    out = ["__a.*"] if b.negated else ["__a.*", "__b.*"]
 
     if strict_after[0]:
         # strict sequence over the FULL feed: previous row must be the a-match
-        lagged = u.withColumn("__cur_b", is_b).withColumn("__prev_a", F.lag(is_a).over(wp))
-        for fname in field_names[a.alias]:
-            lagged = lagged.withColumn(col_of[(a.alias, fname)], F.lag(F.col(fname)).over(wp))
-        matches = lagged.filter(F.col("__cur_b") & F.col("__prev_a"))
+        exprs = [
+            "__is_b", f"lag(__is_a) OVER ({spec}) AS __prev_a",
+            f"lag({packed(a)}) OVER ({spec}) AS __a", f"{packed(b)} AS __b",
+        ]
+        cond = "__is_b AND __prev_a"
         if not p.every:
             # PARITY.md contract (and the general NFA): without `every` the
             # single partial arms at the FIRST a-match per key; if its
             # immediate successor is not a b-match the sequence is dead — it
-            # does NOT re-arm at the next successful pair (round-7 property
-            # fuzz caught the old first-successful-match pick diverging from
-            # the NFA on feeds like x,x,y)
-            lagged2 = lagged.withColumn("__pos", F.row_number().over(wp))
-            lagged2 = lagged2.withColumn(
-                "__first_a",
-                F.min(F.when(is_a, F.col("__pos"))).over(
-                    Window.partitionBy(PK_COL).rowsBetween(
-                        Window.unboundedPreceding, Window.unboundedFollowing
-                    )
-                ),
+            # does NOT re-arm at the next successful pair. The previous row
+            # is that first a-match iff exactly one a-match precedes this row.
+            exprs.append(
+                f"count(CASE WHEN __is_a THEN 1 END) OVER ({spec} "
+                "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS __a_before"
             )
-            matches = lagged2.filter(
-                F.col("__cur_b") & F.col("__prev_a")
-                & (F.col("__pos") - 1 == F.col("__first_a"))
-            )
-        out_cols = [F.col(col_of[(a.alias, f)]) for f in field_names[a.alias]]
-        out_cols += [F.col(f).alias(col_of[(b.alias, f)]) for f in field_names[b.alias]]
-        return matches.select(*out_cols)
+            cond += " AND __a_before = 1"
+        return flagged.selectExpr(*exprs).filter(cond).selectExpr(*out)
 
     # relaxed '->': candidate rows only (predicate pushed to the scan)
-    cand = u.filter(is_a | is_b).withColumn("__is_a", is_a).withColumn("__is_b", is_b)
-    cand = cand.withColumn("__pos", F.row_number().over(wp))
-    cand = cand.withColumn("__bpos", F.when(F.col("__is_b"), F.col("__pos")))
-    cand = cand.withColumn(
-        "__next_b",
-        F.min(F.col("__bpos")).over(wp.rowsBetween(1, Window.unboundedFollowing)),
-    )
-    a_rows = cand.filter(F.col("__is_a"))
+    running = f"OVER ({spec} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    ranks = [f"count(CASE WHEN __is_b THEN 1 END) {running} AS __brank"]
+    a_cond = "__is_a"
     if not p.every:
-        wa = Window.partitionBy(PK_COL).orderBy(*[F.col(c) for c in sort_cols])
-        a_rows = a_rows.withColumn("__ar", F.row_number().over(wa)).filter(F.col("__ar") == 1)
-    a_sel = a_rows.select(
-        F.col(PK_COL), F.col(TS_COL).alias("__a_ts"), F.col("__next_b"),
-        F.col("__pos").alias("__a_pos"),
-        *[F.col(f).alias(col_of[(a.alias, f)]) for f in field_names[a.alias]],
+        ranks.append(f"count(CASE WHEN __is_a THEN 1 END) {running} AS __arank")
+        a_cond += " AND __arank = 1"
+    cand = flagged.filter("__is_a OR __is_b").selectExpr("*", *ranks)
+    a_sel = cand.filter(a_cond).selectExpr(
+        PK_COL, f"{TS_COL} AS __a_ts", "__brank + 1 AS __next_b", f"{packed(a)} AS __a",
+    )
+    b_sel = cand.filter("__is_b").selectExpr(
+        f"{PK_COL} AS __bpk", "__brank AS __b_rank", f"{TS_COL} AS __b_ts",
+        *([] if b.negated else [f"{packed(b)} AS __b"]),
     )
     if b.negated:
         # absence: no b-match within (a_ts, a_ts + for_ms]
-        b_sel = cand.filter(F.col("__is_b")).select(
-            F.col(PK_COL).alias("__bpk"), F.col("__pos").alias("__bpos2"),
-            F.col(TS_COL).alias("__b_ts"),
-        )
         joined = a_sel.join(
-            b_sel,
-            (F.col(PK_COL) == F.col("__bpk")) & (F.col("__next_b") == F.col("__bpos2")),
-            "left",
+            b_sel, F.expr(f"{PK_COL} = __bpk AND __b_rank = __next_b"), "left",
         )
-        absent = joined.filter(
-            F.col("__b_ts").isNull() | (F.col("__b_ts") - F.col("__a_ts") > F.lit(b.for_ms))
-        )
-        return absent.select(*[col_of[(a.alias, f)] for f in field_names[a.alias]])
-    b_sel = cand.filter(F.col("__is_b")).select(
-        F.col(PK_COL).alias("__bpk"), F.col("__pos").alias("__bpos2"),
-        F.col(TS_COL).alias("__b_ts"),
-        *[F.col(f).alias(col_of[(b.alias, f)]) for f in field_names[b.alias]],
-    )
+        return joined.filter(
+            f"__b_ts IS NULL OR __b_ts - __a_ts > {b.for_ms}"
+        ).selectExpr(*out)
     if p.every_at is not None:
         # 'a -> every b': pair a with EVERY later b (suffix restarts per b),
-        # not just the first — per-key equi-join + position inequality. Match
+        # not just the first — per-key equi-join + rank inequality. Match
         # fan-out is the semantic output size (each pair IS a result row),
         # within_ms bounds it in practice.
-        b_cond = F.col("__bpos2") > F.col("__a_pos")
+        cond = f"{PK_COL} = __bpk AND __b_rank >= __next_b"
     else:
-        b_cond = F.col("__next_b") == F.col("__bpos2")
-    joined = a_sel.join(
-        b_sel, (F.col(PK_COL) == F.col("__bpk")) & b_cond, "inner",
-    )
+        cond = f"{PK_COL} = __bpk AND __b_rank = __next_b"
     if p.within_ms is not None:
-        joined = joined.filter(F.col("__b_ts") - F.col("__a_ts") <= F.lit(p.within_ms))
-    keep = [col_of[(a.alias, f)] for f in field_names[a.alias]]
-    keep += [col_of[(b.alias, f)] for f in field_names[b.alias]]
-    return joined.select(*keep)
+        cond += f" AND __b_ts - __a_ts <= {p.within_ms}"
+    return a_sel.join(b_sel, F.expr(cond), "inner").selectExpr(*out)
 
 
 def compile_pattern(planner, q: A.Query):
@@ -1905,7 +1899,7 @@ def compile_pattern(planner, q: A.Query):
             raise SiddhiPlannerException(f"pattern stream '{s}' needs a ts_field")
         dfs[s] = df
 
-    # union-by-name with nulls for missing columns
+    # the union's fields: every stream's fields once, first stream first
     union_fields: list[tuple[str, T.DataType]] = []
     seen: dict[str, T.DataType] = {}
     for s in streams:
@@ -1921,33 +1915,41 @@ def compile_pattern(planner, q: A.Query):
                 seen[f.name] = f.dataType
                 union_fields.append((f.name, f.dataType))
 
-    parts = []
-    for s in streams:
-        have = set(dfs[s].columns)
-        cols = [F.lit(s).alias(STREAM_COL), F.col(TS_COL)]
-        for name, dtype in union_fields:
-            cols.append(F.col(name) if name in have else F.lit(None).cast(dtype).alias(name))
-        parts.append(dfs[s].select(*cols))
-    u = parts[0]
-    for part in parts[1:]:
-        u = u.unionByName(part)
-
-    # partition key
+    # union-by-name with nulls for missing columns, the stream as an int tag
+    # and the partition key: one selectExpr per stream, whose own columns
+    # pass through as "*" (one py4j command, whatever the field count)
     pk = q.partition_by or {}
-    if pk:
-        cases = None
-        for s in streams:
-            attr = pk.get(s)
-            if attr is None:
-                raise SiddhiPlannerException(f"partition with: missing key for stream '{s}'")
-            branch = F.col(attr)
-            cases = branch if cases is None else F.when(F.col(STREAM_COL) == s, F.col(attr)).otherwise(cases)
-        u = u.withColumn(PK_COL, cases if len(streams) > 1 else F.col(pk[streams[0]]))
-    else:
+    if not pk:
         from .windows import warn_global_order
 
         warn_global_order("un-partitioned pattern matching")
-        u = u.withColumn(PK_COL, F.lit(0))
+    tags = {s: i for i, s in enumerate(streams)}
+    parts = []
+    for s in streams:
+        have = set(dfs[s].columns)
+        exprs = ["*"]
+        for name, dtype in union_fields:
+            if name not in have:
+                exprs.append(f"CAST(NULL AS {dtype.simpleString()}) AS {sql_ident(name)}")
+        exprs.append(f"{tags[s]} AS {STREAM_COL}")
+        if pk:
+            attr = pk.get(s)
+            if attr is None:
+                raise SiddhiPlannerException(f"partition with: missing key for stream '{s}'")
+            if attr not in have:
+                raise SiddhiPlannerException(
+                    f"partition with: stream '{s}' has no attribute '{attr}'"
+                )
+            exprs.append(f"{sql_ident(attr)} AS {PK_COL}")
+        else:
+            exprs.append(f"0 AS {PK_COL}")
+        parts.append(dfs[s].selectExpr(*exprs))
+    u = parts[0]
+    for part in parts[1:]:
+        u = u.unionByName(part)
+    first = dfs[streams[0]].columns
+    u_names = [*first, *[n for n, _ in union_fields if n not in first], STREAM_COL, PK_COL]
+    valid = {STREAM_COL, TS_COL, PK_COL, *seen}
 
     # output schema: per element x per field of its stream
     out_fields: list[T.StructField] = []
@@ -1977,34 +1979,21 @@ def compile_pattern(planner, q: A.Query):
     within_ms = p.within_ms
     field_names = {e.alias: schemas[e.stream].fields for e in elems if not e.negated}
     collection = {e.alias: e.is_collection for e in elems if not e.negated}
-    filters = [(e.stream, e.filter) for e in elems]
+    filters = [(tags[e.stream], e.filter) for e in elems]
     out_names = [f.name for f in out_fields]
 
-    # absence fast path needs the negated elem's name mapping for nothing —
-    # but the 2-element JVM lowering needs field names for both real elems
-    fp_field_names = dict(field_names)
-    for e in elems:
-        if e.negated:
-            fp_field_names.setdefault(e.alias, schemas[e.stream].fields)
     fast = None if has_group else _try_fast_path(
-        planner, q, u, elems, strict_after, schemas, col_of, fp_field_names,
-        collection, sort_cols,
+        planner, q, u, elems, tags, valid, strict_after, col_of, field_names,
+        sort_cols,
     )
     if fast is None:
         # general NFA path: pure '->' patterns without negation only ever look
         # at events matching some element — push the disjunction to the scan.
         relaxed_only = all(not s for s in strict_after) and not any(e.negated for e in elems)
         if relaxed_only:
-            from ..plans.expr import ExprCompiler
-
             disj = None
             for e in elems:
-                comp = ExprCompiler(
-                    planner._plain_resolver(set(u.columns), {e.stream}), planner.extensions
-                )
-                c = (F.col(STREAM_COL) == e.stream) & (
-                    comp.compile(e.filter) if e.filter is not None else F.lit(True)
-                )
+                c = _elem_match(planner, valid, e, tags)
                 disj = c if disj is None else (disj | c)
             u = u.filter(disj)
 
@@ -2019,11 +2008,17 @@ def compile_pattern(planner, q: A.Query):
         else kernel2_shape(elems_c, every, every_at, strict_after)
     )
 
+    # applyInPandas resolves every input column by name, which a field name
+    # holding a backtick cannot pass: the union's fields travel under
+    # positional names and get their real names back on the pandas side
+    pos_names = [f"__f{i}" if n in seen else n for i, n in enumerate(u_names)]
+
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf.columns = u_names
         pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
         masks = []
-        for stream, filt in filters:
-            m = (pdf[STREAM_COL] == stream).to_numpy()
+        for tag, filt in filters:
+            m = (pdf[STREAM_COL] == tag).to_numpy()
             if filt is not None:
                 fv = _vec(filt, pdf)
                 m = m & fv.to_numpy(dtype=bool, na_value=False) if hasattr(fv, "to_numpy") else (m & bool(fv))
@@ -2090,7 +2085,8 @@ def compile_pattern(planner, q: A.Query):
             "spark.sql.shuffle.partitions", "200"
         ))
         result = (
-            u.repartition(n_shuffle, PK_COL)
+            u.toDF(*pos_names)
+            .repartition(n_shuffle, PK_COL)
             .groupBy(PK_COL)
             .applyInPandas(match_group, schema=out_schema)
         )

@@ -28,7 +28,7 @@ from ..errors import (
     UndefinedStreamException,
     UnsupportedFeatureException,
 )
-from ..schema import StreamSchema
+from ..schema import StreamSchema, sql_ident
 from ..siddhiql import ast as A
 from ..operators import windows as W
 from .expr import AggregateExtension, ExprCompiler, contains_agg, ext_key
@@ -83,18 +83,16 @@ class BatchPlanner:
         select + withColumn chain paid two analyzer passes plus a py4j
         round-trip per Column node; the expressions are node-identical."""
         s = self.stream_schema(name)
-        exprs = [f"`{f}`" for f in s.fields]
+        exprs = [sql_ident(f) for f in s.fields]
         if s.ts_field is not None:
             dt = dict(s.df.dtypes).get(s.ts_field, "")
+            ts = sql_ident(s.ts_field)
             if dt.startswith("timestamp"):
                 # TIMESTAMP_NTZ needs a cast first; session TZ should be UTC so
                 # NTZ values are interpreted as UTC (matches DuckDB epoch_ms).
-                exprs.append(
-                    f"unix_millis(CAST(`{s.ts_field}` AS TIMESTAMP)) "
-                    f"AS `{TS_COL}`"
-                )
+                exprs.append(f"unix_millis(CAST({ts} AS TIMESTAMP)) AS `{TS_COL}`")
             else:
-                exprs.append(f"CAST(`{s.ts_field}` AS BIGINT) AS `{TS_COL}`")
+                exprs.append(f"CAST({ts} AS BIGINT) AS `{TS_COL}`")
         return s.df.selectExpr(*exprs), s
 
     def ord_cols_for(self, s: StreamSchema) -> list[str]:

@@ -34,6 +34,12 @@ _SIDDHI_TO_SPARK: dict[str, T.DataType] = {
 }
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted, inner backticks
+    doubled, so any column name survives ``selectExpr``/``F.expr`` text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def siddhi_type_name(dt: T.DataType) -> str:
     """Best-effort Spark -> Siddhi type name for DDL rendering."""
     m = {

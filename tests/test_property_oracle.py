@@ -363,6 +363,53 @@ def test_random_mid_pattern_every_three_steps(spark, names):
     assert got == _brute_mid_every3(rows), rows
 
 
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    names=st.lists(st.sampled_from(["x", "y", "xy", "z"]), min_size=2, max_size=12),
+    gaps=st.lists(st.integers(0, 2), min_size=12, max_size=12),
+    prices=st.lists(st.sampled_from([None, 1.0, 2.0]), min_size=12, max_size=12),
+    shape=st.sampled_from(["relaxed", "every_at", "strict", "absence"]),
+    every=st.booleans(),
+    keyed=st.booleans(),
+)
+def test_random_fast_path_matches_general_nfa(spark, monkeypatch, names, gaps,
+                                              prices, shape, every, keyed):
+    """The 2-element JVM fast path against the general NFA on the same
+    query: ts ties broken by a null-holding field, events matching both a
+    and b, absence with no later b, ``every`` mid-pattern and no ``every``."""
+    from flink_siddhi_spark.operators import pattern as pattern_mod
+
+    ts, rows = 0, []
+    for i, nm in enumerate(names):
+        ts += gaps[i] * 1000
+        rows.append((prices[i], i, nm, ts, i % 2))
+    df = spark.createDataFrame(
+        rows, "price double, id int, name string, timestamp long, user int")
+    a, b = "name == 'x' or name == 'xy'", "name == 'y' or name == 'xy'"
+    ev = "every " if every else ""
+    if shape == "absence":
+        body = (f"from {ev}a = s[{a}] -> not s[{b}] for 1500 milliseconds "
+                "select a.id as a_id insert into Out;")
+    else:
+        conn = {"relaxed": "-> b", "every_at": "-> every b", "strict": ", b"}[shape]
+        body = (f"from {ev}a = s[{a}] {conn} = s[{b}] "
+                "select a.id as a_id, b.id as b_id insert into Out;")
+    cql = f"partition with (user of s) begin {body} end" if keyed else body
+
+    def run():
+        cep = SiddhiCEP(spark)
+        cep.define("s", df, "price", "id", "name", "timestamp", "user",
+                   ts_field="timestamp")
+        return sorted(tuple(r) for r in cep.from_("s").cql(cql).returns("Out").collect())
+
+    fast = run()
+    with monkeypatch.context() as m:
+        m.setattr(pattern_mod, "_try_fast_path", lambda *args, **kw: None)
+        nfa = run()
+    assert fast == nfa, (rows, shape, every, keyed)
+
+
 def _brute_asof(lefts, rights):
     """(k, lts) x (k, rts, v): latest v with rts <= lts; ties -> max v."""
     out = {}

@@ -232,6 +232,99 @@ def test_random_partitioned_pattern(spark, names, users, gaps, within_s):
     assert got == want, (rows, within_s)
 
 
+# ------------------------------- 2-element fast path: ties, overlap, nulls
+# price is the FIRST declared field, so ts ties are broken by a field that
+# holds nulls (nulls sort last), then by id; an 'xy' event matches both a
+# and b
+FP_SCHEMA = "price double, id int, name string, timestamp long, user int"
+FP_A = "name == 'x' or name == 'xy'"
+FP_B = "name == 'y' or name == 'xy'"
+
+
+def _fp_is_a(r):
+    return r[2] in ("x", "xy")
+
+
+def _fp_is_b(r):
+    return r[2] in ("y", "xy")
+
+
+def _brute_fast_shapes(rows, shape, every, bound_ms, keyed):
+    """Per key (one key when un-keyed), over the total order (ts, price
+    nulls last, id): each arming a (the first only without ``every``) pairs
+    with, for ``relaxed``, the first later b; for ``every_at``, every later
+    b; both within ``bound_ms`` when given. ``strict``: the very next row
+    must be a b. ``absence``: emitted when no later b has ts <= ts_a +
+    ``bound_ms`` (also when no later b exists)."""
+    out = []
+    for key in sorted({r[4] if keyed else 0 for r in rows}):
+        feed = sorted(
+            (r for r in rows if not keyed or r[4] == key),
+            key=lambda r: (r[3], r[0] is None, r[0] or 0.0, r[1]),
+        )
+        starts = [i for i, r in enumerate(feed) if _fp_is_a(r)]
+        if not every:
+            starts = starts[:1]
+        for i in starts:
+            aid, ats, later = feed[i][1], feed[i][3], feed[i + 1:]
+            if shape == "strict":
+                if later and _fp_is_b(later[0]):
+                    out.append((aid, later[0][1]))
+            elif shape == "absence":
+                if not any(_fp_is_b(r) and r[3] <= ats + bound_ms for r in later):
+                    out.append((aid, None))
+            else:
+                bs = [r for r in later if _fp_is_b(r)]
+                if shape == "relaxed":
+                    bs = bs[:1]
+                out += [(aid, r[1]) for r in bs
+                        if bound_ms is None or r[3] - ats <= bound_ms]
+    return sorted(out, key=str)
+
+
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    names=st.lists(st.sampled_from(["x", "y", "xy", "z"]), min_size=2, max_size=14),
+    gaps=st.lists(st.integers(0, 2), min_size=14, max_size=14),
+    prices=st.lists(st.sampled_from([None, 1.0, 2.0]), min_size=14, max_size=14),
+    users=st.lists(st.integers(1, 2), min_size=14, max_size=14),
+    shape=st.sampled_from(["relaxed", "every_at", "strict", "absence"]),
+    every=st.booleans(),
+    keyed=st.booleans(),
+    bound_s=st.sampled_from([None, 1, 3]),
+)
+def test_random_fast_path_ties_overlap_nulls(spark, names, gaps, prices, users,
+                                             shape, every, keyed, bound_s):
+    ts, rows = 0, []
+    for i, nm in enumerate(names):
+        ts += gaps[i] * 1000
+        rows.append((prices[i], i, nm, ts, users[i]))
+    if shape == "absence" and bound_s is None:
+        bound_s = 2
+    bound_ms = None if bound_s is None else bound_s * 1000 + 500
+    cep = SiddhiCEP(spark)
+    cep.define("s", spark.createDataFrame(rows, FP_SCHEMA),
+               "price", "id", "name", "timestamp", "user", ts_field="timestamp")
+    ev = "every " if every else ""
+    w = "" if bound_ms is None else f" within {bound_ms} milliseconds"
+    if shape == "absence":
+        body = (f"from {ev}a = s[{FP_A}] -> not s[{FP_B}] for {bound_ms} milliseconds "
+                "select a.id as a_id insert into Out;")
+    else:
+        conn = {"relaxed": "-> b", "every_at": "-> every b", "strict": ", b"}[shape]
+        body = (f"from {ev}a = s[{FP_A}] {conn} = s[{FP_B}]"
+                f"{'' if shape == 'strict' else w} "
+                "select a.id as a_id, b.id as b_id insert into Out;")
+    cql = f"partition with (user of s) begin {body} end" if keyed else body
+    out = cep.from_("s").cql(cql).returns("Out")
+    got = sorted(((r.a_id, r.b_id if shape != "absence" else None)
+                  for r in out.collect()), key=str)
+    want = _brute_fast_shapes(rows, shape, every,
+                              None if shape == "strict" else bound_ms, keyed)
+    assert got == want, (rows, shape, every, keyed, bound_ms)
+
+
 # ------------------------------------- streaming == batch parity fuzz
 def _run_streaming(spark, batches, cql, tmp_root, **cep_kwargs):
     """Drain the batches through the StreamingPlanner NFA (one file per
