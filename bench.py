@@ -559,7 +559,7 @@ def _streaming_throughput_bench(spark, sf_dir: str) -> dict:
                 "select e.user_id as user_id, e.event_id as error_id "
                 "insert into Out; end"
             ),
-            # the 3-step CQL funnel (late round 8: run_kernel3)
+            # the 3-step CQL funnel (the chain kernel)
             "cep_pattern_3step_10x": lambda: amp_cql_plan(
                 "partition with (user_id of events) begin "
                 "from every v = events[event_type == 'view'] "
@@ -597,11 +597,10 @@ def _streaming_throughput_bench(spark, sf_dir: str) -> dict:
                 amp_plain_stream(), ("view", "click", "purchase"),
                 within_ms=3_600_000, watermark="1 hour", key_buckets=1024,
             ),
-            # round 10 (VERDICT r9 ask #5): the quantified 2-step shape now
-            # dispatches the vectorized quant2 kernel instead of the
-            # general per-row NFA (same CQL as the round-9 general-NFA
-            # probe; the absence row above also exercises the round-10
-            # EventTimeTimeout timer path)
+            # the quantified 2-step shape on the vectorized chain_quant
+            # kernel (same CQL as the round-9 general-NFA probe; the
+            # absence row above also exercises the EventTimeTimeout timer
+            # path)
             "cep_pattern_quant_10x": lambda: amp_cql_plan(
                 "partition with (user_id of events) begin "
                 "from every e = events[event_type == 'error']<1:2> "
@@ -609,9 +608,8 @@ def _streaming_throughput_bench(spark, sf_dir: str) -> dict:
                 "select e[0].user_id as user_id, p.event_id as purchase_id "
                 "insert into Out; end"
             ),
-            # late round 10: one quantified INTERIOR stage in a k>=3 chain
-            # now dispatches run_kernel_chain_quant (this CQL ran the
-            # general per-row NFA before)
+            # one quantified INTERIOR stage in a k>=3 chain: the
+            # chain_quant kernel (run_kernel_chain_quants)
             "cep_pattern_quantchain_10x": lambda: amp_cql_plan(
                 "partition with (user_id of events) begin "
                 "from every e = events[event_type == 'error'] "

@@ -32,6 +32,7 @@ Batch-mode semantics (the oracle-checked contract):
 
 from __future__ import annotations
 
+import logging
 import operator
 from dataclasses import dataclass, field as dc_field
 
@@ -44,6 +45,8 @@ from pyspark.sql import types as T
 from ..errors import SiddhiPlannerException, UnsupportedFeatureException
 from ..schema import sql_ident
 from ..siddhiql import ast as A
+
+_log = logging.getLogger(__name__)
 
 TS_COL = "__ts"
 STREAM_COL = "__stream"
@@ -310,200 +313,247 @@ def _run_nfa(
     return matches
 
 
-def kernel2_shape(elems, every: bool, every_at, strict_after) -> str | None:
-    """Classify a 2-step pattern into one of the vectorizable shapes:
+def _plain(e) -> bool:
+    return not e.negated and e.min_count == 1 and e.max_count == 1
 
-    - ``'every2'``   : ``every a=A (->|,) b=B [within t]`` (round-7 kernel)
-    - ``'plain2'``   : the same without ``every`` (arm-once, first-attempt
-      contract per PARITY.md — the round-7 fuzz-found shape)
-    - ``'absence2'`` : ``every a=A -> not B for t [within w]`` (the absence
-      production shape; round-8, lands with watermark eviction)
-    - ``'chain'``    : ``every e1=A1 -> e2=A2 -> ... -> ek=Ak [within t]``,
-      k >= 3, all connectors relaxed (late round 8 — the k-step CQL
-      funnel; k=3 landed first, then generalized)
-    - ``'chain_absence'`` : the same chain ending in ``-> not Ak for t``
-      (late round 8 — funnel abandonment; streaming-only dispatch, since
-      batch additionally close-confirms)
-    - ``'quant2'``   : ``every a=A<n:m> -> b=B [within t]``, n >= 1
-      (round 10 — the quantified 2-step production shape; the general
-      NFA's per-row scale axis is arming density, so a hot key's armed
-      partials made this the last common shape on the slow path)
-    - ``'chain_quant'`` : a k>=3 relaxed every-chain with exactly ONE
-      quantified interior element (``every a -> b<n:m> -> c``, quant at
-      any stage but the last; late round 10 — generalizes quant2 along
-      the same arming-density axis)
 
-    or ``None`` when the pattern needs the general per-row NFA. These
-    cover the dominant production CEP shapes (the reference's own examples,
-    SiddhiCEPITCase.java:333-382, are all 2-step; relaxed chains are the
-    classic funnel)."""
-    if every_at is not None:
+def kernel_shape(elems, every: bool, every_at, strict_after) -> str | None:
+    """Classify a pattern of k >= 2 single elements into the numpy kernel
+    that runs it:
+
+    - ``'chain'``: ``every e1=A1 (->|,) ... (->|,) ek=Ak [within t]``, all
+      elements plain, any mix of relaxed and strict connectors
+      (:func:`run_kernel_chain`);
+    - ``'plain_chain'``: the same without ``every`` — the arm-once,
+      first-attempt contract of PARITY.md (:func:`run_kernel_chain_nonevery`);
+    - ``'chain_absence'``: ``every e1=A1 -> ... -> not Ak for t [within w]``
+      (:func:`run_kernel_chain_absence`);
+    - ``'chain_quant'``: a relaxed ``every`` chain ending in a plain element
+      whose other non-plain elements are ``<n:m>`` with n >= 1, no two
+      adjacent (:func:`run_kernel_chain_quants`; adjacent quants would race
+      each other's extension, a case the boundary logic does not model).
+
+    or ``None`` when the pattern needs the general per-row NFA: and/or
+    groups, mid-pattern ``every``, trailing quantifiers or optionals, bare
+    ``not X``, and strict absence or quantified chains."""
+    if every_at is not None or len(elems) < 2:
         return None
     if not all(isinstance(e, A.PatternElem) for e in elems):
         return None
-
-    def _plain(e):
-        return (not e.negated and not e.is_collection
-                and e.min_count == 1 and e.max_count == 1)
-
+    head, last = elems[:-1], elems[-1]
+    if all(_plain(e) for e in elems):
+        return "chain" if every else "plain_chain"
+    if not every or any(strict_after):
+        return None
+    if all(_plain(e) for e in head):
+        if last.negated and last.for_ms is not None and not last.is_collection:
+            return "chain_absence"
+        return None
+    nonplain = [i for i, e in enumerate(head) if not _plain(e)]
     if (
-        len(elems) >= 3
-        and len(strict_after) == len(elems) - 1
-        and not any(strict_after)
+        _plain(last)
+        and all(not head[i].negated and head[i].min_count >= 1 for i in nonplain)
+        and all(b - a >= 2 for a, b in zip(nonplain, nonplain[1:]))
     ):
-        last = elems[-1]
-        if all(_plain(e) for e in elems[:-1]):
-            if _plain(last):
-                return "chain" if every else "plain_chain"
-            if (
-                every
-                and last.negated
-                and last.for_ms is not None
-                and not last.is_collection
-            ):
-                return "chain_absence"
-            return None
-        if every and _plain(last):
-            # one or more quantified interior elements, no two adjacent,
-            # the rest plain -> the quant chain kernel (late round 10;
-            # adjacent quants would race each other's extension, a case
-            # the boundary logic does not model — general NFA)
-            nonplain = [i for i, e in enumerate(elems) if not _plain(e)]
-            if (
-                all(not elems[i].negated and elems[i].min_count >= 1
-                    for i in nonplain)
-                and all(b - a >= 2 for a, b in zip(nonplain, nonplain[1:]))
-            ):
-                return "chain_quant"
-        return None
-    if len(elems) != 2 or len(strict_after) != 1:
-        return None
-    a, b = elems
-    if a.negated:
-        return None
-    a_plain = (
-        not a.is_collection and a.min_count == 1 and a.max_count == 1
-    )
-    if b.negated:
-        if (
-            a_plain
-            and every
-            and not strict_after[0]
-            and b.for_ms is not None
-            and not b.is_collection
-        ):
-            return "absence2"
-        return None
-    if b.is_collection or b.min_count != 1 or b.max_count != 1:
-        return None
-    if not a_plain:
-        # ``every a=A<n:m> -> b=B [within t]`` — the quantified 2-step
-        # production shape (round 10, VERDICT r9 ask #5). Relaxed
-        # connector only; min_count >= 1 (a*/a? keep the general NFA's
-        # empty-capture close semantics)
-        if every and not strict_after[0] and a.min_count >= 1:
-            return "quant2"
-        return None
-    return "every2" if every else "plain2"
+        return "chain_quant"
+    return None
 
 
-def kernel2_applicable(elems, every: bool, every_at, strict_after) -> bool:
-    """True when the pattern is the round-7 ``every2`` kernel shape."""
-    return kernel2_shape(elems, every, every_at, strict_after) == "every2"
+# Below this many row·partial units (rows scanned × (1 + live partials +
+# fresh arms)) the row loop beats the quant kernel's fixed numpy cost of
+# about 100-130 µs per call (measured crossover).
+QUANT_KERNEL_MIN_WORK = 128
 
 
-def run_kernel2(
+def pattern_engine(shape: str | None, at_close: bool) -> str:
+    """Name of the engine :func:`run_shape` runs ``shape`` on: the kernel
+    shape, or ``'nfa'`` for the general row loop. The absence kernel never
+    confirms at the end of the data, which batch semantics treat as stream
+    close (``at_close``), so batch absence chains keep the row loop."""
+    if shape is None or (shape == "chain_absence" and at_close):
+        return "nfa"
+    return shape
+
+
+def run_shape(
+    shape: str | None,
     ts_vals,
-    mask_a,
-    mask_b,
+    masks: list,
+    steps: list,
+    strict_after: list[bool],
+    every: bool,
+    every_at: int | None,
+    within_ms: int | None,
+    start_idx: int = 0,
+    init: dict | None = None,
+    at_close: bool = True,
+):
+    """Match one key's ts-sorted rows from ``start_idx`` on, resuming from
+    ``init``; returns ``(matches, state)`` in ``_run_nfa``'s formats.
+
+    ``shape`` is :func:`kernel_shape` of ``steps`` (``None`` for the row
+    loop). Every kernel's matches and serialized state equal ``_run_nfa``'s
+    (pinned by tests/test_kernel2_unit.py), so the engine may change from
+    one micro-batch to the next: small quant visits run the row loop."""
+    import numpy as np
+
+    engine = pattern_engine(shape, at_close)
+    if engine == "chain_quant":
+        n_pend = len(init["partials"]) if init else 0
+        n_arms = int(np.count_nonzero(masks[0][start_idx:]))
+        work = (len(ts_vals) - start_idx) * (1 + n_pend + n_arms)
+        if work < QUANT_KERNEL_MIN_WORK:
+            engine = "nfa"
+    if engine == "chain":
+        return run_kernel_chain(
+            ts_vals, masks, strict_after, start_idx, init, within_ms
+        )
+    if engine == "plain_chain":
+        return run_kernel_chain_nonevery(
+            ts_vals, masks, strict_after, start_idx, init, within_ms
+        )
+    if engine == "chain_absence":
+        return run_kernel_chain_absence(
+            ts_vals, masks, start_idx, init, within_ms, steps[-1].for_ms
+        )
+    if engine == "chain_quant":
+        quants = [
+            (i, e.min_count, e.max_count)
+            for i, e in enumerate(steps) if not _plain(e)
+        ]
+        return run_kernel_chain_quants(
+            ts_vals, masks, quants, start_idx, init, within_ms
+        )
+    return _run_nfa(
+        None, masks, steps, strict_after, every, within_ms,
+        at_close=at_close, every_at=every_at, start_idx=start_idx,
+        init=init, return_state=True, ts_vals=ts_vals,
+    )
+
+
+def _fill_stage(cap, s, mask, start_idx, ts_vals, first_ts, within_ms):
+    """Capture relaxed stage ``s`` for every partial holding stage s-1 but
+    not s: the FIRST row matching ``mask`` after its stage s-1 capture,
+    among new rows only (a resumed partial saw no match in the
+    already-scanned prefix). A candidate beyond the within window stays
+    -1: the row loop evicts the partial at that row, and the kernels'
+    survivor rule agrees (ts[-1] >= ts[cand] > first_ts + t)."""
+    import numpy as np
+
+    new_s = np.flatnonzero(mask[start_idx:]) + start_idx
+    if not len(new_s):
+        return
+    prev = cap[s - 1]
+    si = np.searchsorted(new_s, prev, side="right")
+    has = (cap[s] < 0) & (prev >= 0) & (si < len(new_s))
+    cand = new_s[np.minimum(si, len(new_s) - 1)]
+    if within_ms is not None:
+        has &= (ts_vals[cand] - first_ts) <= within_ms
+    cap[s] = np.where(has, cand, cap[s])
+
+
+def run_kernel_chain(
+    ts_vals,
+    masks: list,
+    strict_after: list[bool],
     start_idx: int,
     init: dict | None,
     within_ms: int | None,
-    strict: bool,
 ):
-    """Vectorized NFA for the ``every A -> B [within t]`` shape — the exact
-    _run_nfa semantics computed with numpy set operations instead of the
-    per-row Python loop (bit-for-bit the same matches; pytest pins the two
-    engines equal on randomized feeds):
+    """Vectorized NFA for ``every e1=A1 (->|,) ... (->|,) ek=Ak
+    [within t]``, any k >= 2 plain elements. Exact ``_run_nfa`` semantics:
 
-    - followed-by: A matches the FIRST B at a later buffer position; the
-      match stands iff that B is inside A's within-window (the general NFA
-      evicts the partial at the first row beyond the window, so a
-      first-B outside it means no match ever) — one ``searchsorted`` of A
-      positions into B positions.
-    - strict (","): B must be the immediately-next buffer row.
-    - pending state: A rows with no later B yet whose window still reaches
-      past the newest processed row; serialized in the SAME partial format
-      ``_run_nfa`` produces, so the two engines are interchangeable across
-      micro-batches (out-of-order fallback re-runs either one).
-    """
+    - each A1-row arms a partial; stage by stage it captures the FIRST
+      later row matching the next element (relaxed ``->``), or exactly the
+      row right after the previous capture (strict ``,``): if that row has
+      not arrived yet the partial waits, if it has and does not match the
+      partial is dead. The final stage's row emits;
+    - ``within t``: the general NFA evicts a partial at the first row
+      (of any kind) beyond ``first_ts + t`` while a capture remains, so
+      ANY stage capture beyond the window means no match EVER — the
+      buffer is ts-sorted, so the gate is one comparison per candidate
+      and the survivor rule is ``ts[-1] - a_ts <= t``;
+    - pending state: a partial with j stages captured serializes at
+      ``pos`` j-1 (the row loop's lazy advance — a freshly-armed partial
+      sits at pos 0), byte-equal to ``_run_nfa`` and resumable by either
+      engine across micro-batches (pinned by tests/test_kernel2_unit.py).
+
+    One ``searchsorted`` per relaxed stage and one gather per strict
+    stage, vectorized across every live partial still needing that
+    stage."""
     import numpy as np
 
+    k = len(masks)
     n = len(ts_vals)
     if init is not None:
-        pend_pos = [p["captured"][0][0] for p in init["partials"]]
-        pend_ts = [p["first_ts"] for p in init["partials"]]
+        pend = init["partials"]
+        pend_ats = [int(p["first_ts"]) for p in pend]
+        pend_caps = [
+            [int(c[0]) if c else -1 for c in p["captured"]] for p in pend
+        ]
         started = bool(init["started"])
     else:
-        pend_pos, pend_ts, started = [], [], False
-    new_a = (np.nonzero(mask_a[start_idx:])[0] + start_idx).astype(np.int64)
-    a_pos = np.concatenate([np.asarray(pend_pos, dtype=np.int64), new_a])
-    a_ts = np.concatenate(
-        [np.asarray(pend_ts, dtype=np.int64), ts_vals[new_a]]
-    )
-    b_pos = (np.nonzero(mask_b[start_idx:])[0] + start_idx).astype(np.int64)
-    n_a = len(a_pos)
-    matches: list = []
-    if strict:
-        nxt = a_pos + 1
-        in_range = nxt < n
-        ok = np.zeros(n_a, dtype=bool)
-        safe_nxt = np.where(in_range, nxt, 0)
-        ok[in_range] = np.asarray(mask_b)[safe_nxt[in_range]]
-        if within_ms is not None:
-            win = np.zeros(n_a, dtype=np.int64)
-            win[in_range] = ts_vals[safe_nxt[in_range]]
-            ok &= (win - a_ts) <= within_ms
-        b_match = safe_nxt
-        keep = ~in_range  # the adjacent row hasn't arrived yet
-    else:
-        if len(b_pos):
-            pos = np.searchsorted(b_pos, a_pos, side="right")
-            has_b = pos < len(b_pos)
-            cand = b_pos[np.minimum(pos, len(b_pos) - 1)]
-            ok = has_b.copy()
-            if within_ms is not None:
-                ok &= (ts_vals[cand] - a_ts) <= within_ms
-            b_match = cand
-        else:
-            has_b = np.zeros(n_a, dtype=bool)
-            ok = has_b
-            b_match = np.zeros(n_a, dtype=np.int64)
-        # survivors: no B yet AND the within-window still reaches past the
-        # newest row (the general NFA drops a partial at the first row
-        # beyond its window, whatever that row's type)
-        keep = ~has_b
-        if within_ms is not None and n:
-            keep = keep & ((int(ts_vals[-1]) - a_ts) <= within_ms)
-    oi = np.nonzero(ok)[0]
-    if len(oi):
-        # emission order mirrors the row-loop NFA: by completing row, then A
-        order = np.lexsort((a_pos[oi], b_match[oi]))
-        for i in oi[order]:
-            matches.append([[int(a_pos[i])], [int(b_match[i])]])
-    partials = [
-        {
-            # pos stays 0 like the row loop (it advances lazily on consume):
-            # the two engines' serialized states are EXACTLY equal, pinned by
-            # tests/test_kernel2_unit.py
-            "pos": 0,
-            "captured": [[int(a_pos[i])], []],
-            "first_ts": int(a_ts[i]),
-            "last_ts": int(a_ts[i]),
-            "neg_deadline": None,
+        pend_ats, pend_caps, started = [], [], False
+    new_a = np.flatnonzero(masks[0][start_idx:]) + start_idx
+    n_pend = len(pend_caps)
+    n_a = n_pend + len(new_a)
+    if not n_a:
+        return [], {
+            "partials": [], "spawners": [],
+            "started": started, "done": False,
         }
-        for i in np.nonzero(keep)[0]
-    ]
+    a_ts = np.concatenate(
+        [np.asarray(pend_ats, dtype=np.int64), ts_vals[new_a]]
+    )
+    # cap[s][i] = buffer position captured for stage s by partial i
+    cap = np.full((k, n_a), -1, dtype=np.int64)
+    if n_pend:
+        cap[:, :n_pend] = np.asarray(pend_caps, dtype=np.int64).T
+    cap[0, n_pend:] = new_a
+    dead = np.zeros(n_a, dtype=bool)
+    for s in range(1, k):
+        if not strict_after[s - 1]:
+            _fill_stage(cap, s, masks[s], start_idx, ts_vals, a_ts, within_ms)
+            continue
+        # strict: the row right after the stage s-1 capture decides (a
+        # surviving strict partial's last capture is the buffer tail, so
+        # that row is always a new one)
+        prev = cap[s - 1]
+        need = (cap[s] < 0) & (prev >= 0)
+        arrived = prev + 1 < n
+        cand = np.minimum(prev + 1, n - 1)
+        has = need & arrived & np.asarray(masks[s])[cand]
+        if within_ms is not None:
+            has &= (ts_vals[cand] - a_ts) <= within_ms
+        dead |= need & arrived & ~has
+        cap[s] = np.where(has, cand, cap[s])
+    ok = cap[k - 1] >= 0
+    matches: list = []
+    oi = np.flatnonzero(ok)
+    if len(oi):
+        # emission order mirrors the row loop: by completing row, then
+        # by partial age (the partials list stays in arming order); one
+        # tolist per stage, not one int() per cell
+        sel = oi[np.lexsort((oi, cap[k - 1][oi]))]
+        cols = [[[x] for x in col] for col in cap[:, sel].tolist()]
+        matches = [list(t) for t in zip(*cols)]
+    keep = ~ok & ~dead
+    if within_ms is not None and n:
+        # the general NFA drops a partial at the first row beyond its
+        # window, whatever that row's type
+        keep &= (int(ts_vals[-1]) - a_ts) <= within_ms
+    ki = np.flatnonzero(keep)
+    partials = []
+    for caps, fts in zip(cap[:, ki].T.tolist(), a_ts[ki].tolist()):
+        filled = sum(c >= 0 for c in caps)
+        partials.append({
+            # pos advances lazily in the row loop: j captures -> pos j-1
+            "pos": filled - 1,
+            "captured": [[c] if c >= 0 else [] for c in caps],
+            "first_ts": fts,
+            "last_ts": int(ts_vals[caps[filled - 1]]),
+            "neg_deadline": None,
+        })
     return matches, {
         "partials": partials,
         "spawners": [],
@@ -512,27 +562,37 @@ def run_kernel2(
     }
 
 
-def run_kernel2_nonevery(
+def run_kernel_chain_nonevery(
     ts_vals,
-    mask_a,
-    mask_b,
+    masks: list,
+    strict_after: list[bool],
     start_idx: int,
     init: dict | None,
     within_ms: int | None,
-    strict: bool,
 ):
-    """Vectorized NFA for ``a=A (->|,) b=B [within t]`` WITHOUT ``every`` —
-    the first-attempt contract (PARITY.md, pinned by the round-7 fuzz
-    regression): the single partial arms at the FIRST a-match ever; if its
-    attempt fails (strict breaker, or the within-window closes before a B)
-    there is NO match ever. At most one match per key, then ``done``.
+    """Vectorized NFA for ``e1=A1 (->|,) ... (->|,) ek=Ak [within t]``
+    WITHOUT ``every``, any k >= 2 — the arm-once first-attempt contract
+    (PARITY.md): the single partial arms at the FIRST A1-match ever and
+    captures the first eligible row per relaxed stage, or exactly the row
+    right after the previous capture per strict stage; if that strict row
+    does not match, or the within-window closes before the chain
+    completes, there is NO match ever (dead: empty partials, ``started``
+    stays True so nothing re-arms). At most one match per key, then
+    ``done``.
 
-    State dict is byte-equal to ``_run_nfa``'s (pinned by
-    tests/test_kernel2_unit.py), so the engines interoperate across
-    micro-batches."""
-    import numpy as np
-
+    Scalar logic (one partial): each relaxed stage scans only up to its
+    first match (a short-circuiting ``argmax``); state byte-equal to
+    ``_run_nfa`` (tests/test_kernel2_unit.py)."""
+    k = len(masks)
     n = len(ts_vals)
+
+    def _first(mask, lo):
+        """First position >= lo where ``mask`` holds, or -1."""
+        if lo >= n:
+            return -1
+        j = lo + int(mask[lo:].argmax())
+        return j if mask[j] else -1
+
     if init is not None:
         started = bool(init["started"])
         done = bool(init["done"])
@@ -547,355 +607,111 @@ def run_kernel2_nonevery(
         }
 
     if done:
-        return [], _state([list_p for list_p in parts], started, True)
+        return [], _state([dict(p) for p in parts], started, True)
     if parts:
-        ia, fa = int(parts[0]["captured"][0][0]), int(parts[0]["first_ts"])
+        caps = [int(c[0]) if c else -1 for c in parts[0]["captured"]]
+        fa = int(parts[0]["first_ts"])
     elif started:
         # dead: the first attempt already failed — no match ever
         return [], _state([], True, False)
     else:
-        new_a = np.nonzero(mask_a[start_idx:])[0]
-        if not len(new_a):
+        ia = _first(masks[0], start_idx)
+        if ia < 0:
             return [], _state([], False, False)
-        ia = int(new_a[0]) + start_idx
+        caps = [-1] * k
+        caps[0] = ia
         fa = int(ts_vals[ia])
-    lo = max(ia + 1, start_idx)
+    filled = sum(1 for c in caps if c >= 0)
+    prev = caps[filled - 1]
+    complete = True
+    for s in range(filled, k):
+        if strict_after[s - 1]:
+            # the immediately-next buffer row decides (a surviving partial
+            # always ends at the buffer tail, so it is a new row on resume)
+            cand = prev + 1
+            if cand >= n:
+                complete = False
+                break
+            if not masks[s][cand]:
+                return [], _state([], True, False)  # strict breaker: dead
+        else:
+            cand = _first(masks[s], max(prev + 1, start_idx))
+            if cand < 0:
+                complete = False
+                break
+        if within_ms is not None and int(ts_vals[cand]) - fa > within_ms:
+            # the candidate row itself sits beyond the window — the row
+            # loop evicts the partial there: dead, no match ever
+            return [], _state([], True, False)
+        caps[s] = cand
+        prev = cand
+    if complete:
+        return [[[c] for c in caps]], _state([], True, True)
+    # incomplete: the window closing on the buffer tail kills the attempt
+    if within_ms is not None and n and int(ts_vals[-1]) - fa > within_ms:
+        return [], _state([], True, False)
+    filled = sum(1 for c in caps if c >= 0)
     pend = [{
-        "pos": 0, "captured": [[ia], []], "first_ts": fa, "last_ts": fa,
+        "pos": filled - 1,  # the row loop's lazy advance
+        "captured": [[c] if c >= 0 else [] for c in caps],
+        "first_ts": fa,
+        "last_ts": int(ts_vals[caps[filled - 1]]),
         "neg_deadline": None,
     }]
-    if strict:
-        # the immediately-next buffer row decides (a surviving partial is
-        # always armed at the buffer tail, so lo == ia + 1 on resume too)
-        if lo >= n:
-            return [], _state(pend, True, False)
-        if within_ms is not None and int(ts_vals[lo]) - fa > within_ms:
-            return [], _state([], True, False)  # evicted before the attempt
-        if bool(mask_b[lo]):
-            return [[[ia], [lo]]], _state([], True, True)
-        return [], _state([], True, False)  # strict breaker: dead forever
-    # relaxed '->': first b-row at position >= lo vs. the window-closing row
-    b_pos = (np.nonzero(mask_b[lo:])[0] + lo).astype(np.int64)
-    jb = int(b_pos[0]) if len(b_pos) else None
-    je = None
-    if within_ms is not None:
-        k = int(np.searchsorted(ts_vals, fa + within_ms, side="right"))
-        k = max(k, lo)
-        if k < n:
-            je = k
-    if jb is not None and (je is None or jb < je):
-        return [[[ia], [jb]]], _state([], True, True)
-    if je is not None:
-        return [], _state([], True, False)  # window closed first: dead
     return [], _state(pend, True, False)
 
 
-def run_kernel2_quant(
-    ts_vals,
-    mask_a,
-    mask_b,
-    start_idx: int,
-    init: dict | None,
-    within_ms: int | None,
-    min_count: int,
-    max_count: int | None,
-):
-    """Vectorized NFA for ``every a=A<n:m> -> b=B [within t]`` — the
-    quantified 2-step production shape (round 10, VERDICT r9 ask #5).
-    Exact ``_run_nfa`` semantics:
-
-    - every a-row arms a partial that captures itself; a partial extends
-      GREEDILY on each later a-row while below ``m`` (the row loop tries
-      ``_extend_match`` before completion, so extension beats completion
-      when one row matches both A and B), and the captured a-rows need
-      NOT be contiguous (the relaxed '->' keeps a partial alive across
-      non-matching rows);
-    - once ``>= n`` a-rows are captured, the first b-AND-NOT-a row
-      completes the match; after the ``m``-th a-row, ANY b-row does;
-    - ``within t``: the row loop evicts a partial at the first row (of
-      any kind) past ``first_ts + t`` while its b-capture remains, so a
-      completing row beyond the window means no match ever, and a
-      pending partial survives the batch iff the window still reaches
-      past the newest row;
-    - pending partials serialize at pos 0 (the row loop's lazy advance),
-      byte-equal to ``_run_nfa``'s state (pinned by
-      tests/test_kernel2_unit.py), so either engine resumes the other
-      across micro-batches.
-
-    Two ``searchsorted``s per completion boundary, vectorized across all
-    live partials; capture lists are materialized in Python only for
-    actual matches and batch-end survivors."""
-    import numpy as np
-
-    n_rows = len(ts_vals)
-    BIG = np.int64(n_rows)  # position sentinel: "no such row yet"
-    if init is not None:
-        pend = init["partials"]
-        started = bool(init["started"])
-    else:
-        pend, started = [], False
-    n_pend = len(pend)
-    pend_caps = [[int(j) for j in p["captured"][0]] for p in pend]
-    new_a = (np.nonzero(mask_a[start_idx:])[0] + start_idx).astype(np.int64)
-    n_new = len(new_a)
-    n_all = n_pend + n_new
-    empty_state = {
-        "partials": [], "spawners": [], "started": started, "done": False,
-    }
-    if not n_all:
-        return [], empty_state
-    # per-partial arrays, resumed first then fresh arms (= the row loop's
-    # pool order): c0 = captures held, nxt = index into new_a of the next
-    # capturable a-row (a fresh arm has already captured its arm row)
-    c0 = np.concatenate([
-        np.asarray([len(c) for c in pend_caps], dtype=np.int64),
-        np.ones(n_new, dtype=np.int64),
-    ])
-    nxt = np.concatenate([
-        np.zeros(n_pend, dtype=np.int64),
-        np.arange(1, n_new + 1, dtype=np.int64),
-    ])
-    first_ts = np.concatenate([
-        np.asarray([int(p["first_ts"]) for p in pend], dtype=np.int64),
-        ts_vals[new_a] if n_new else np.empty(0, dtype=np.int64),
-    ])
-    # scan_m1 = (first position this partial can complete at) - 1:
-    # resumed partials scan from start_idx, fresh arms from after their arm
-    scan_m1 = np.concatenate([
-        np.full(n_pend, start_idx - 1, dtype=np.int64),
-        new_a if n_new else np.empty(0, dtype=np.int64),
-    ])
-
-    def _boundary(target):
-        """Buffer position where each partial's capture count reaches
-        ``target`` (BIG if it never does; scan_m1 if already there)."""
-        need = target - c0
-        if n_new:
-            idx = nxt + need - 1
-            hit = (need > 0) & (idx < n_new)
-            pos = np.where(hit, new_a[np.clip(idx, 0, n_new - 1)], BIG)
-        else:
-            pos = np.full(n_all, BIG, dtype=np.int64)
-        return np.where(need <= 0, scan_m1, pos)
-
-    rmin = _boundary(np.int64(min_count))
-    if max_count is None:
-        rmax = np.full(n_all, BIG, dtype=np.int64)
-    else:
-        rmax = _boundary(np.int64(max_count))
-    # completion candidates: first b-and-not-a row AFTER reaching n (valid
-    # only while below m — at and beyond the m-th a, extension is closed
-    # and ANY b-row completes, the j2 arm)
-    b_only = (
-        np.nonzero((np.asarray(mask_b) & ~np.asarray(mask_a))[start_idx:])[0]
-        + start_idx
-    ).astype(np.int64)
-    b_any = (np.nonzero(mask_b[start_idx:])[0] + start_idx).astype(np.int64)
-    if len(b_only):
-        i1 = np.searchsorted(b_only, rmin, side="right")
-        j1 = np.where(i1 < len(b_only),
-                      b_only[np.minimum(i1, len(b_only) - 1)], BIG)
-        j1 = np.where((rmin < BIG) & (j1 < rmax), j1, BIG)
-    else:
-        j1 = np.full(n_all, BIG, dtype=np.int64)
-    if len(b_any):
-        i2 = np.searchsorted(b_any, rmax, side="right")
-        j2 = np.where((rmax < BIG) & (i2 < len(b_any)),
-                      b_any[np.minimum(i2, len(b_any) - 1)], BIG)
-    else:
-        j2 = np.full(n_all, BIG, dtype=np.int64)
-    jb = np.minimum(j1, j2)
-    ok = jb < BIG
-    if within_ms is not None:
-        safe = np.where(ok, jb, 0)
-        ok &= (ts_vals[safe] - first_ts) <= within_ms
-
-    def _caps(i, upto):
-        """Captured a-positions of partial i among rows < ``upto``."""
-        prior = pend_caps[i] if i < n_pend else [int(new_a[i - n_pend])]
-        room = (max_count - c0[i]) if max_count is not None else n_new
-        q = int(min(np.searchsorted(new_a, upto) - nxt[i], room))
-        if q > 0:
-            prior = prior + [int(j) for j in new_a[nxt[i]:nxt[i] + q]]
-        return prior
-
-    matches: list = []
-    oi = np.nonzero(ok)[0]
-    if len(oi):
-        # emission order mirrors the row loop: by completing row, then by
-        # pool (arming) order
-        order = np.lexsort((oi, jb[oi]))
-        for i in oi[order]:
-            matches.append([_caps(int(i), int(jb[i])), [int(jb[i])]])
-    # survivors: no completion row yet AND the within-window still reaches
-    # past the newest row (the row loop drops a partial at the first row
-    # beyond its window, whatever that row's type)
-    keep = jb == BIG
-    if within_ms is not None and n_rows:
-        keep &= (int(ts_vals[-1]) - first_ts) <= within_ms
-    partials = []
-    for i in np.nonzero(keep)[0]:
-        caps = _caps(int(i), int(BIG))
-        last = int(ts_vals[caps[-1]]) if caps else None
-        if i < n_pend and len(caps) == len(pend_caps[i]):
-            last = pend[i]["last_ts"]  # no new capture: keep stored ts
-        partials.append({
-            "pos": 0,
-            "captured": [caps, []],
-            "first_ts": int(first_ts[i]),
-            "last_ts": last,
-            "neg_deadline": None,
-        })
-    return matches, {
-        "partials": partials,
-        "spawners": [],
-        "started": started or bool(n_all),
-        "done": False,
-    }
-
-
-def run_kernel2_absence(
-    ts_vals,
-    mask_a,
-    mask_b,
-    start_idx: int,
-    init: dict | None,
-    within_ms: int | None,
-    for_ms: int,
-):
-    """Vectorized NFA for ``every a=A -> not B for t [within w]`` — the
-    absence production shape. Exact ``_run_nfa`` semantics:
-
-    - each a-match arms a partial with deadline ``a.ts + for_ms``;
-    - a b-row with ``ts <= deadline`` kills it;
-    - the first row (of ANY kind) with ``ts > deadline`` confirms the
-      absence and emits — the kernel itself never emits at a micro-batch
-      boundary (``at_close=False``); quiescent keys are confirmed by the
-      caller's watermark pass (:func:`quiescent_confirm`, round 10) once
-      the watermark passes the deadline;
-    - ``within w`` is INERT for this shape (as for the batch fast path):
-      only the a-row is captured, so the matched-event span is always
-      inside any window — a waiting partial is never window-evicted.
-
-    Per-partial outcome = whichever comes first positionally of the
-    killing b-row ``jk`` and the confirming row ``jc`` — two
-    ``searchsorted``s over the sorted buffer, vectorized across all armed
-    partials. State dict byte-equal to ``_run_nfa``'s (pinned by
-    tests/test_kernel2_unit.py)."""
-    import numpy as np
-
-    n = len(ts_vals)
-    if init is not None:
-        pend_pos = [int(p["captured"][0][0]) for p in init["partials"]]
-        pend_ts = [int(p["first_ts"]) for p in init["partials"]]
-        pend_pos1 = [int(p["pos"]) == 1 for p in init["partials"]]
-        started = bool(init["started"])
-    else:
-        pend_pos, pend_ts, pend_pos1, started = [], [], [], False
-    new_a = (np.nonzero(mask_a[start_idx:])[0] + start_idx).astype(np.int64)
-    a_pos = np.concatenate([np.asarray(pend_pos, dtype=np.int64), new_a])
-    a_ts = np.concatenate(
-        [np.asarray(pend_ts, dtype=np.int64), ts_vals[new_a]]
-    )
-    n_a = len(a_pos)
-    if not n_a:
-        return [], {
-            "partials": [], "spawners": [],
-            "started": started, "done": False,
-        }
-    # first row each partial gets to see: resumed partials scan from
-    # start_idx, fresh arms from the row after their a-row
-    lo = np.maximum(a_pos + 1, start_idx)
-    big = np.int64(n)  # sentinel: "no such row yet"
-    # jc: first row with ts > deadline (confirms the absence)
-    jc = np.searchsorted(ts_vals, a_ts + for_ms, side="right")
-    jc = np.maximum(jc, lo)
-    # jk: first b-row at position >= lo with ts <= deadline (kills).
-    # b-rows past the deadline don't kill — they confirm (jc <= them).
-    b_pos = np.nonzero(mask_b)[0].astype(np.int64)
-    if len(b_pos):
-        bi = np.searchsorted(b_pos, lo, side="left")
-        has_b = bi < len(b_pos)
-        cand = b_pos[np.minimum(bi, len(b_pos) - 1)]
-        kill_ok = has_b & (ts_vals[np.where(has_b, cand, 0)] <= a_ts + for_ms)
-        jk = np.where(kill_ok, cand, big)
-    else:
-        jk = np.full(n_a, big)
-    jc = np.where(jc < n, jc, big)
-    # outcome: a kill-row always precedes any confirm-row positionally
-    # (its ts is <= the deadline), so the two are mutually exclusive
-    match_ok = (jc < big) & (jk == big)
-    pending = (jc == big) & (jk == big)
-    matches: list = []
-    oi = np.nonzero(match_ok)[0]
-    if len(oi):
-        # emission order mirrors the row loop: by confirming row, then by
-        # partial age (the partials list stays in arming order)
-        order = np.lexsort((oi, jc[oi]))
-        for i in oi[order]:
-            matches.append([[int(a_pos[i])], []])
-    # survivors advance to the waiting-on-absence step (pos=1, deadline
-    # armed) as soon as ANY row after the arm was processed — exactly the
-    # row loop's lazy advance
-    partials = []
-    for i in np.nonzero(pending)[0]:
-        seen_row = lo[i] < n or (i < len(pend_pos1) and pend_pos1[i])
-        partials.append({
-            "pos": 1 if seen_row else 0,
-            "captured": [[int(a_pos[i])], []],
-            "first_ts": int(a_ts[i]),
-            "last_ts": int(a_ts[i]),
-            "neg_deadline": int(a_ts[i]) + for_ms if seen_row else None,
-        })
-    return matches, {
-        "partials": partials,
-        "spawners": [],
-        "started": started or bool(n_a),
-        "done": False,
-    }
-
-
-def run_kernel_chain(
+def run_kernel_chain_absence(
     ts_vals,
     masks: list,
     start_idx: int,
     init: dict | None,
     within_ms: int | None,
+    for_ms: int,
 ):
-    """Vectorized NFA for ``every e1=A1 -> e2=A2 -> ... -> ek=Ak
-    [within t]`` — the k-step relaxed funnel chain, any k >= 2 (late
-    round 8; k=3 landed first, then generalized). Exact ``_run_nfa``
-    semantics:
+    """Vectorized NFA for ``every e1=A1 -> ... -> e(k-1)=A(k-1) ->
+    not Ak for t [within w]``, any k >= 2 — the funnel-ABANDONMENT shape
+    (started the chain, then the final event did NOT happen within ``t``).
+    Composes the chain fill with the absence resolution, exact
+    ``_run_nfa`` (``at_close=False``) semantics:
 
-    - each A1-row arms a partial; stage by stage it captures the FIRST
-      later row matching the next element, and emits at the final
-      stage's row;
-    - ``within t``: the general NFA evicts a partial at the first row
-      (of any kind) beyond ``first_ts + t`` while a capture remains, so
-      ANY stage capture beyond the window means no match EVER — the
-      buffer is ts-sorted, so the gate is one comparison per candidate
-      and the survivor rule is ``ts[-1] - a_ts <= t``;
-    - pending state: a partial with j stages captured serializes at
-      ``pos`` j-1 (the row loop's lazy advance — a freshly-armed partial
-      sits at pos 0), byte-equal to ``_run_nfa`` and resumable by either
-      engine across micro-batches (pinned by tests/test_kernel2_unit.py).
+    - positive stages capture exactly like :func:`run_kernel_chain`
+      (``within`` gates every capture; an armed-absence partial is never
+      window-evicted — its captured span is already frozen, the round-8
+      `_needs_capture` contract);
+    - ``within w`` never evicts an armed partial, so at k=2 (only the
+      a-row is captured) it is inert;
+    - once the last positive stage captures at row b (ts_b), the absence
+      arms with deadline ``ts_b + for_ms``: an Ak-row at ``ts <=
+      deadline`` kills the partial; the first row (of ANY kind) with
+      ``ts > deadline`` confirms and emits — streaming never emits at a
+      micro-batch boundary, so confirmation always needs a later event;
+    - pending state: chain-stage partials at ``pos`` j-1, armed-absence
+      partials at ``pos`` k-1 with ``neg_deadline`` set once any row
+      after the arming capture was processed (the row loop's lazy
+      advance), byte-equal to ``_run_nfa``.
 
-    One ``searchsorted`` per stage, vectorized across every live partial
-    still needing that stage."""
+    Streaming-only: batch absence semantics additionally confirm at
+    stream close (``at_close=True``), so the batch path keeps the
+    general NFA for this shape (:func:`pattern_engine`)."""
     import numpy as np
 
-    k = len(masks)
+    k = len(masks)  # includes the negated final element
+    kp = k - 1      # positive stages
     n = len(ts_vals)
+    big = np.int64(n)
     if init is not None:
         pend = init["partials"]
         pend_ats = [int(p["first_ts"]) for p in pend]
         pend_caps = [
-            [int(c[0]) if c else -1 for c in p["captured"]] for p in pend
+            [int(c[0]) if c else -1 for c in p["captured"][:kp]]
+            for p in pend
         ]
+        pend_armed = [int(p["pos"]) == kp for p in pend]
         started = bool(init["started"])
     else:
-        pend_ats, pend_caps, started = [], [], False
-    new_a = (np.nonzero(masks[0][start_idx:])[0] + start_idx).astype(np.int64)
+        pend_ats, pend_caps, pend_armed, started = [], [], [], False
+    new_a = np.flatnonzero(masks[0][start_idx:]) + start_idx
     n_pend = len(pend_caps)
     n_a = n_pend + len(new_a)
     if not n_a:
@@ -906,62 +722,81 @@ def run_kernel_chain(
     a_ts = np.concatenate(
         [np.asarray(pend_ats, dtype=np.int64), ts_vals[new_a]]
     )
-    # cap[s][i] = buffer position captured for stage s by partial i
-    cap = np.full((k, n_a), -1, dtype=np.int64)
-    for i, caps in enumerate(pend_caps):
-        for s, c in enumerate(caps):
-            cap[s, i] = c
+    cap = np.full((kp, n_a), -1, dtype=np.int64)
+    if n_pend:
+        cap[:, :n_pend] = np.asarray(pend_caps, dtype=np.int64).T
     cap[0, n_pend:] = new_a
-    # stage-by-stage fill: the FIRST row matching stage s strictly after
-    # the stage s-1 capture, among new rows only (a resumed partial saw
-    # no stage-s match in the already-scanned prefix). A candidate
-    # beyond the within window stays -1: the row loop evicts the partial
-    # at that row, and the survivor rule below agrees
-    # (ts[-1] >= ts[cand] > a_ts + t).
-    for s in range(1, k):
-        need = (cap[s] < 0) & (cap[s - 1] >= 0)
-        if not need.any():
-            continue
-        new_s = (
-            np.nonzero(masks[s][start_idx:])[0] + start_idx
-        ).astype(np.int64)
-        if not len(new_s):
-            continue
-        si = np.searchsorted(new_s, cap[s - 1][need], side="right")
-        has = si < len(new_s)
-        cand = new_s[np.minimum(si, len(new_s) - 1)]
-        if within_ms is not None:
-            has &= (
-                ts_vals[np.where(has, cand, 0)] - a_ts[need]
-            ) <= within_ms
-        cap[s, need] = np.where(has, cand, -1)
-    ok = cap[k - 1] >= 0
+    # was the partial already at the armed-absence stage when resumed?
+    was_armed = np.zeros(n_a, dtype=bool)
+    was_armed[:n_pend] = np.asarray(pend_armed, dtype=bool)
+    for s in range(1, kp):
+        _fill_stage(cap, s, masks[s], start_idx, ts_vals, a_ts, within_ms)
+    armed = cap[kp - 1] >= 0
+    last_pos = cap[kp - 1]
+    # absence resolution, from the arming row:
+    # first row each armed partial gets to see — resumed armed partials
+    # scan from start_idx, newly-armed from the row after their capture
+    safe_last = np.where(armed, last_pos, 0)
+    deadline = ts_vals[safe_last] + for_ms
+    lo = np.where(
+        was_armed, np.int64(start_idx),
+        np.maximum(safe_last + 1, start_idx),
+    )
+    # jc: first row with ts > deadline (confirms the absence)
+    jc = np.searchsorted(ts_vals, deadline, side="right")
+    jc = np.maximum(jc, lo)
+    jc = np.where(jc < n, jc, big)
+    # jk: first Ak-row at position >= lo with ts <= deadline (kills)
+    neg_pos = np.nonzero(masks[k - 1])[0].astype(np.int64)
+    if len(neg_pos):
+        bi = np.searchsorted(neg_pos, lo, side="left")
+        has_b = bi < len(neg_pos)
+        candk = neg_pos[np.minimum(bi, len(neg_pos) - 1)]
+        kill_ok = has_b & (
+            ts_vals[np.where(has_b, candk, 0)] <= deadline
+        )
+        jk = np.where(kill_ok, candk, big)
+    else:
+        jk = np.full(n_a, big)
+    match_ok = armed & (jc < big) & (jk == big)
+    waiting = armed & (jc == big) & (jk == big)
     matches: list = []
-    oi = np.nonzero(ok)[0]
+    oi = np.nonzero(match_ok)[0]
     if len(oi):
-        # emission order mirrors the row loop: by completing row, then
-        # by partial age (the partials list stays in arming order)
-        order = np.lexsort((oi, cap[k - 1][oi]))
-        for i in oi[order]:
-            matches.append([[int(cap[s, i])] for s in range(k)])
-    keep = ~ok
+        # emission order mirrors the row loop: by confirming row, then
+        # by partial age; one tolist per stage, not one int() per cell
+        sel = oi[np.lexsort((oi, jc[oi]))]
+        cols = [[[x] for x in col] for col in cap[:, sel].tolist()]
+        cols.append([[] for _ in range(len(sel))])
+        matches = [list(t) for t in zip(*cols)]
+    # survivors: chain-stage partials still inside the window, plus
+    # armed-absence partials with no kill/confirm yet (never
+    # window-evicted — their captures are frozen)
+    chain_keep = ~armed & (cap[0] >= 0)
     if within_ms is not None and n:
-        # the general NFA drops a partial at the first row beyond its
-        # window, whatever that row's type
-        keep &= (int(ts_vals[-1]) - a_ts) <= within_ms
+        chain_keep &= (int(ts_vals[-1]) - a_ts) <= within_ms
     partials = []
-    for i in np.nonzero(keep)[0]:
-        filled = int(np.count_nonzero(cap[:, i] >= 0))
+    ki = np.flatnonzero(chain_keep | waiting)
+    for i, caps, fts in zip(
+        ki.tolist(), cap[:, ki].T.tolist(), a_ts[ki].tolist()
+    ):
+        filled = sum(c >= 0 for c in caps)
+        if waiting[i]:
+            # armed: pos advances to the absence step (deadline set) as
+            # soon as ANY row after the arming was processed — the row
+            # loop's lazy advance
+            seen_row = lo[i] < n or was_armed[i]
+            pos = kp if seen_row else kp - 1
+            nd = int(deadline[i]) if seen_row else None
+        else:
+            pos = filled - 1
+            nd = None
         partials.append({
-            # pos advances lazily in the row loop: j captures -> pos j-1
-            "pos": filled - 1,
-            "captured": [
-                [int(cap[s, i])] if cap[s, i] >= 0 else []
-                for s in range(k)
-            ],
-            "first_ts": int(a_ts[i]),
-            "last_ts": int(ts_vals[cap[filled - 1, i]]),
-            "neg_deadline": None,
+            "pos": pos,
+            "captured": [[c] if c >= 0 else [] for c in caps] + [[]],
+            "first_ts": fts,
+            "last_ts": int(ts_vals[caps[filled - 1]]),
+            "neg_deadline": nd,
         })
     return matches, {
         "partials": partials,
@@ -979,12 +814,12 @@ def run_kernel_chain_quants(
     init: dict | None,
     within_ms: int | None,
 ):
-    """Vectorized NFA for a k-step relaxed ``every`` chain with one OR MORE
-    quantified interior stages, no two adjacent:
+    """Vectorized NFA for a k-step relaxed ``every`` chain, any k >= 2, with
+    one OR MORE quantified stages, none last and no two adjacent:
     ``every e1=A1 -> ... -> q=Q<n:m> -> ... -> ek=Ak [within t]``
-    (late round 10; the multi-quant generalization covers shapes like
-    ``a<1:2> -> b -> c<1:2> -> d`` — each quantified stage runs its own
-    completion-boundary race against the plain stage that follows it).
+    (``every a<1:3> -> b`` up to shapes like ``a<1:2> -> b -> c<1:2> -> d``
+    — each quantified stage runs its own completion-boundary race against
+    the plain stage that follows it).
     ``quants`` is ``[(qpos, min_count, max_count), ...]`` sorted by qpos,
     every qpos in [0, k-2], qpos+1 never quantified. Exact ``_run_nfa``
     semantics per stage:
@@ -1065,26 +900,6 @@ def run_kernel_chain_quants(
             [c[-1] if c else -1 for c in st["prior"]], dtype=np.int64
         )
 
-    def _fill_stage(s):
-        """First stage-s match strictly after the stage s-1 capture, among
-        new rows, gated by the within window (run_kernel_chain's fill)."""
-        need = (cap[s] < 0) & (cap[s - 1] >= 0)
-        if not need.any():
-            return
-        new_s = (
-            np.nonzero(masks[s][start_idx:])[0] + start_idx
-        ).astype(np.int64)
-        if not len(new_s):
-            return
-        si = np.searchsorted(new_s, cap[s - 1][need], side="right")
-        has = si < len(new_s)
-        cand = new_s[np.minimum(si, len(new_s) - 1)]
-        if within_ms is not None:
-            has &= (
-                ts_vals[np.where(has, cand, 0)] - first_ts[need]
-            ) <= within_ms
-        cap[s, need] = np.where(has, cand, -1)
-
     def _race(s, qpos):
         """Capture PLAIN stage s for partials at quant stage ``qpos`` =
         s-1: the quant completion-boundary race (extension beats
@@ -1154,26 +969,31 @@ def run_kernel_chain_quants(
         if (s - 1) in qset:
             _race(s, s - 1)
         else:
-            _fill_stage(s)
+            _fill_stage(
+                cap, s, masks[s], start_idx, ts_vals, first_ts, within_ms
+            )
+
+    # this batch's capture count per quant stage and partial: the
+    # contiguous slice of Q-rows stops at the following stage's capture
+    # (race close) and at ``m`` total — one searchsorted per stage
+    for qpos, st in qst.items():
+        max_count = qset[qpos][1]
+        upto = np.where(cap[qpos + 1] >= 0, cap[qpos + 1], BIG)
+        cnt = np.searchsorted(st["new"], upto) - st["nxt"]
+        if max_count is not None:
+            cnt = np.minimum(cnt, max_count - st["c0"])
+        st["cnt"] = np.where(st["active"], cnt, 0).tolist()
+        st["nxt"] = st["nxt"].tolist()
 
     def _qcaps(i, qpos):
         """Quant-stage captures of partial i: prior runs + this batch's
-        contiguous slice, stopping at the following stage's capture (race
-        close) and at ``m`` total."""
+        slice."""
         st = qst[qpos]
-        if not st["active"][i]:
-            return list(st["prior"][i])
-        nxt, new_q = st["nxt"], st["new"]
-        max_count = qset[qpos][1]
-        upto = int(cap[qpos + 1, i]) if cap[qpos + 1, i] >= 0 else int(BIG)
-        room = (
-            (max_count - int(st["c0"][i])) if max_count is not None
-            else len(new_q)
-        )
-        cnt = int(min(np.searchsorted(new_q, upto) - nxt[i], room))
         caps = list(st["prior"][i])
+        cnt = st["cnt"][i]
         if cnt > 0:
-            caps += [int(x) for x in new_q[nxt[i]:nxt[i] + cnt]]
+            lo = st["nxt"][i]
+            caps += st["new"][lo:lo + cnt].tolist()
         return caps
 
     ok = cap[k - 1] >= 0
@@ -1216,285 +1036,6 @@ def run_kernel_chain_quants(
         "partials": partials,
         "spawners": [],
         "started": started or bool(n_all),
-        "done": False,
-    }
-
-
-def run_kernel_chain_quant(
-    ts_vals,
-    masks: list,
-    qpos: int,
-    start_idx: int,
-    init: dict | None,
-    within_ms: int | None,
-    min_count: int,
-    max_count: int | None,
-):
-    """Single-quant entry point (the shape that landed first — kept as the
-    named API the unit pins and single-quant dispatch use); delegates to
-    :func:`run_kernel_chain_quants`."""
-    return run_kernel_chain_quants(
-        ts_vals, masks, [(qpos, min_count, max_count)], start_idx, init,
-        within_ms,
-    )
-
-
-def run_kernel3(
-    ts_vals,
-    mask_a,
-    mask_b,
-    mask_c,
-    start_idx: int,
-    init: dict | None,
-    within_ms: int | None,
-):
-    """3-step relaxed every chain — the k=3 case of
-    :func:`run_kernel_chain` (kept as the named entry point the
-    dispatchers and the unit pin reference)."""
-    return run_kernel_chain(
-        ts_vals, [mask_a, mask_b, mask_c], start_idx, init, within_ms
-    )
-
-
-def run_kernel_chain_nonevery(
-    ts_vals,
-    masks: list,
-    start_idx: int,
-    init: dict | None,
-    within_ms: int | None,
-):
-    """Vectorized NFA for ``e1=A1 -> ... -> ek=Ak [within t]`` WITHOUT
-    ``every`` (late round 8) — the arm-once first-attempt contract
-    (PARITY.md, the round-7 fuzz-found semantics) generalized to k-step
-    chains: the single partial arms at the FIRST A1-match ever and
-    captures the first eligible row per stage; if the within-window
-    closes before the chain completes there is NO match ever (dead:
-    empty partials, ``started`` stays True so nothing re-arms). At most
-    one match per key, then ``done``.
-
-    Scalar logic (one partial) with one ``searchsorted`` per remaining
-    stage; state byte-equal to ``_run_nfa`` (tests/test_kernel2_unit.py)."""
-    import numpy as np
-
-    k = len(masks)
-    n = len(ts_vals)
-    if init is not None:
-        started = bool(init["started"])
-        done = bool(init["done"])
-        parts = init["partials"]
-    else:
-        started, done, parts = False, False, []
-
-    def _state(partials, started, done):
-        return {
-            "partials": partials, "spawners": [],
-            "started": started, "done": done,
-        }
-
-    if done:
-        return [], _state([dict(p) for p in parts], started, True)
-    if parts:
-        caps = [int(c[0]) if c else -1 for c in parts[0]["captured"]]
-        fa = int(parts[0]["first_ts"])
-    elif started:
-        # dead: the first attempt already failed — no match ever
-        return [], _state([], True, False)
-    else:
-        new_a = np.nonzero(masks[0][start_idx:])[0]
-        if not len(new_a):
-            return [], _state([], False, False)
-        caps = [-1] * k
-        caps[0] = int(new_a[0]) + start_idx
-        fa = int(ts_vals[caps[0]])
-    filled = sum(1 for c in caps if c >= 0)
-    prev = caps[filled - 1]
-    complete = True
-    for s in range(filled, k):
-        new_s = np.nonzero(masks[s][start_idx:])[0] + start_idx
-        j = int(np.searchsorted(new_s, prev, side="right"))
-        if j >= len(new_s):
-            complete = False
-            break
-        cand = int(new_s[j])
-        if within_ms is not None and int(ts_vals[cand]) - fa > within_ms:
-            # the candidate row itself sits beyond the window — the row
-            # loop evicts the partial there: dead, no match ever
-            return [], _state([], True, False)
-        caps[s] = cand
-        prev = cand
-    if complete:
-        return [[[c] for c in caps]], _state([], True, True)
-    # incomplete: the window closing on the buffer tail kills the attempt
-    if within_ms is not None and n and int(ts_vals[-1]) - fa > within_ms:
-        return [], _state([], True, False)
-    filled = sum(1 for c in caps if c >= 0)
-    pend = [{
-        "pos": filled - 1,  # the row loop's lazy advance
-        "captured": [[c] if c >= 0 else [] for c in caps],
-        "first_ts": fa,
-        "last_ts": int(ts_vals[caps[filled - 1]]),
-        "neg_deadline": None,
-    }]
-    return [], _state(pend, True, False)
-
-
-def run_kernel_chain_absence(
-    ts_vals,
-    masks: list,
-    start_idx: int,
-    init: dict | None,
-    within_ms: int | None,
-    for_ms: int,
-):
-    """Vectorized NFA for ``every e1=A1 -> ... -> e(k-1)=A(k-1) ->
-    not Ak for t`` — the funnel-ABANDONMENT shape (late round 8: started
-    the chain, then the final event did NOT happen within ``t``).
-    Composes the chain fill with the absence2 resolution, exact
-    ``_run_nfa`` (``at_close=False``) semantics:
-
-    - positive stages capture exactly like :func:`run_kernel_chain`
-      (``within`` gates every capture; an armed-absence partial is never
-      window-evicted — its captured span is already frozen, the round-8
-      `_needs_capture` contract);
-    - once the last positive stage captures at row b (ts_b), the absence
-      arms with deadline ``ts_b + for_ms``: an Ak-row at ``ts <=
-      deadline`` kills the partial; the first row (of ANY kind) with
-      ``ts > deadline`` confirms and emits — streaming never emits at a
-      micro-batch boundary, so confirmation always needs a later event;
-    - pending state: chain-stage partials at ``pos`` j-1, armed-absence
-      partials at ``pos`` k-1 with ``neg_deadline`` set once any row
-      after the arming capture was processed (the row loop's lazy
-      advance), byte-equal to ``_run_nfa``.
-
-    Streaming-only: batch absence semantics additionally confirm at
-    stream close (``at_close=True``), so the batch path keeps the
-    general NFA for this shape."""
-    import numpy as np
-
-    k = len(masks)  # includes the negated final element
-    kp = k - 1      # positive stages
-    n = len(ts_vals)
-    big = np.int64(n)
-    if init is not None:
-        pend = init["partials"]
-        pend_ats = [int(p["first_ts"]) for p in pend]
-        pend_caps = [
-            [int(c[0]) if c else -1 for c in p["captured"][:kp]]
-            for p in pend
-        ]
-        pend_armed = [int(p["pos"]) == kp for p in pend]
-        started = bool(init["started"])
-    else:
-        pend_ats, pend_caps, pend_armed, started = [], [], [], False
-    new_a = (np.nonzero(masks[0][start_idx:])[0] + start_idx).astype(np.int64)
-    n_pend = len(pend_caps)
-    n_a = n_pend + len(new_a)
-    if not n_a:
-        return [], {
-            "partials": [], "spawners": [],
-            "started": started, "done": False,
-        }
-    a_ts = np.concatenate(
-        [np.asarray(pend_ats, dtype=np.int64), ts_vals[new_a]]
-    )
-    cap = np.full((kp, n_a), -1, dtype=np.int64)
-    for i, caps in enumerate(pend_caps):
-        for s, c in enumerate(caps):
-            cap[s, i] = c
-    cap[0, n_pend:] = new_a
-    # was the partial already at the armed-absence stage when resumed?
-    was_armed = np.zeros(n_a, dtype=bool)
-    was_armed[:n_pend] = np.asarray(pend_armed, dtype=bool)
-    # positive-stage fill, identical to run_kernel_chain
-    for s in range(1, kp):
-        need = (cap[s] < 0) & (cap[s - 1] >= 0)
-        if not need.any():
-            continue
-        new_s = (
-            np.nonzero(masks[s][start_idx:])[0] + start_idx
-        ).astype(np.int64)
-        if not len(new_s):
-            continue
-        si = np.searchsorted(new_s, cap[s - 1][need], side="right")
-        has = si < len(new_s)
-        cand = new_s[np.minimum(si, len(new_s) - 1)]
-        if within_ms is not None:
-            has &= (
-                ts_vals[np.where(has, cand, 0)] - a_ts[need]
-            ) <= within_ms
-        cap[s, need] = np.where(has, cand, -1)
-    armed = cap[kp - 1] >= 0
-    last_pos = cap[kp - 1]
-    # absence resolution (the absence2 machinery, from the arming row):
-    # first row each armed partial gets to see — resumed armed partials
-    # scan from start_idx, newly-armed from the row after their capture
-    safe_last = np.where(armed, last_pos, 0)
-    deadline = ts_vals[safe_last] + for_ms
-    lo = np.where(
-        was_armed, np.int64(start_idx),
-        np.maximum(safe_last + 1, start_idx),
-    )
-    # jc: first row with ts > deadline (confirms the absence)
-    jc = np.searchsorted(ts_vals, deadline, side="right")
-    jc = np.maximum(jc, lo)
-    jc = np.where(jc < n, jc, big)
-    # jk: first Ak-row at position >= lo with ts <= deadline (kills)
-    neg_pos = np.nonzero(masks[k - 1])[0].astype(np.int64)
-    if len(neg_pos):
-        bi = np.searchsorted(neg_pos, lo, side="left")
-        has_b = bi < len(neg_pos)
-        candk = neg_pos[np.minimum(bi, len(neg_pos) - 1)]
-        kill_ok = has_b & (
-            ts_vals[np.where(has_b, candk, 0)] <= deadline
-        )
-        jk = np.where(kill_ok, candk, big)
-    else:
-        jk = np.full(n_a, big)
-    match_ok = armed & (jc < big) & (jk == big)
-    waiting = armed & (jc == big) & (jk == big)
-    matches: list = []
-    oi = np.nonzero(match_ok)[0]
-    if len(oi):
-        # emission order mirrors the row loop: by confirming row, then
-        # by partial age
-        order = np.lexsort((oi, jc[oi]))
-        for i in oi[order]:
-            matches.append(
-                [[int(cap[s, i])] for s in range(kp)] + [[]]
-            )
-    # survivors: chain-stage partials still inside the window, plus
-    # armed-absence partials with no kill/confirm yet (never
-    # window-evicted — their captures are frozen)
-    chain_keep = ~armed & (cap[0] >= 0)
-    if within_ms is not None and n:
-        chain_keep &= (int(ts_vals[-1]) - a_ts) <= within_ms
-    partials = []
-    for i in np.nonzero(chain_keep | waiting)[0]:
-        filled = int(np.count_nonzero(cap[:, i] >= 0))
-        if waiting[i]:
-            # armed: pos advances to the absence step (deadline set) as
-            # soon as ANY row after the arming was processed — the row
-            # loop's lazy advance (the absence2 rule)
-            seen_row = lo[i] < n or was_armed[i]
-            pos = kp if seen_row else kp - 1
-            nd = int(deadline[i]) if seen_row else None
-        else:
-            pos = filled - 1
-            nd = None
-        partials.append({
-            "pos": pos,
-            "captured": [
-                [int(cap[s, i])] if cap[s, i] >= 0 else []
-                for s in range(kp)
-            ] + [[]],
-            "first_ts": int(a_ts[i]),
-            "last_ts": int(ts_vals[cap[filled - 1, i]]),
-            "neg_deadline": nd,
-        })
-    return matches, {
-        "partials": partials,
-        "spawners": [],
-        "started": started or bool(n_a),
         "done": False,
     }
 
@@ -1997,15 +1538,15 @@ def compile_pattern(planner, q: A.Query):
                 disj = c if disj is None else (disj | c)
             u = u.filter(disj)
 
-    # k-step relaxed every chain (late round 8): the numpy kernel replaces
-    # the per-row loop in batch too. ``at_close`` is a no-op for this shape
-    # (no trailing optional/absence, so _can_close never fires), and the
-    # kernel's matches are pinned byte-equal to _run_nfa's — batch output
-    # is identical, just vectorized. 2-step shapes take the JVM fast path
-    # above before reaching here.
-    batch_shape = (
+    # the numpy kernels replace the per-row loop in batch too; their matches
+    # equal _run_nfa's, so batch output is identical, just vectorized
+    shape = (
         None if has_group
-        else kernel2_shape(elems_c, every, every_at, strict_after)
+        else kernel_shape(elems_c, every, every_at, strict_after)
+    )
+    _log.info(
+        "pattern engine (batch): %s",
+        "sql" if fast is not None else pattern_engine(shape, at_close=True),
     )
 
     # applyInPandas resolves every input column by name, which a field name
@@ -2023,35 +1564,10 @@ def compile_pattern(planner, q: A.Query):
                 fv = _vec(filt, pdf)
                 m = m & fv.to_numpy(dtype=bool, na_value=False) if hasattr(fv, "to_numpy") else (m & bool(fv))
             masks.append(m)
-        if batch_shape == "chain":
-            found, _ = run_kernel_chain(
-                pdf[TS_COL].to_numpy(), masks, 0, None, within_ms,
-            )
-        elif batch_shape == "plain_chain":
-            found, _ = run_kernel_chain_nonevery(
-                pdf[TS_COL].to_numpy(), masks, 0, None, within_ms,
-            )
-        elif batch_shape == "quant2":
-            # at_close is a no-op for this shape too (the trailing b is a
-            # required capture, so _can_close never fires on its partials)
-            found, _ = run_kernel2_quant(
-                pdf[TS_COL].to_numpy(), masks[0], masks[1], 0, None,
-                within_ms, elems_c[0].min_count, elems_c[0].max_count,
-            )
-        elif batch_shape == "chain_quant":
-            qs_ = [
-                (i, e.min_count, e.max_count)
-                for i, e in enumerate(elems_c)
-                if e.min_count != 1 or e.max_count != 1
-            ]
-            found, _ = run_kernel_chain_quants(
-                pdf[TS_COL].to_numpy(), masks, qs_, 0, None, within_ms,
-            )
-        else:
-            found = _run_nfa(
-                pdf, masks, raw_steps_c, strict_after, every, within_ms,
-                every_at=every_at,
-            )
+        found, _ = run_shape(
+            shape, pdf[TS_COL].to_numpy(), masks, raw_steps_c, strict_after,
+            every, every_at, within_ms,
+        )
         data: dict[str, list] = {n: [] for n in out_names}
         for cap in found:
             for ei, e in enumerate(elems_c):

@@ -57,16 +57,23 @@ class QueryManager:
         if query_id in self.queries:
             raise SiddhiError(f"plan '{query_id}' already exists")
         df = self.compile_fn(plan_text)  # fail-fast validation
+        self._start(query_id, plan_text, df)
+
+    def update(self, query_id: str, plan_text: str) -> None:
+        """Replace a plan. The new text compiles BEFORE the running plan
+        stops, so an update that fails to compile raises and leaves the
+        old plan running."""
+        df = self.compile_fn(plan_text)
+        self.delete(query_id)
+        self._start(query_id, plan_text, df)
+
+    def _start(self, query_id: str, plan_text: str, df: DataFrame) -> None:
         mq = ManagedQuery(plan_text, compiled_df=df)
         if self.sink_fn is not None and df.isStreaming:
             mq.query_handle = self.sink_fn(query_id, df)
         else:
             mq.query_handle = df
         self.queries[query_id] = mq
-
-    def update(self, query_id: str, plan_text: str) -> None:
-        self.delete(query_id)
-        self.add(query_id, plan_text)
 
     def delete(self, query_id: str) -> None:
         mq = self.queries.pop(query_id, None)

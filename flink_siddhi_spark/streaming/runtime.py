@@ -45,6 +45,7 @@ granularities stream via synthesized calendar-cron buckets (round 4).
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -62,18 +63,13 @@ from ..operators import windows as W
 from ..operators.pattern import (
     PK_COL,
     STREAM_COL,
-    _run_nfa,
     _vec,
-    kernel2_shape,
-    run_kernel2,
-    run_kernel2_absence,
-    run_kernel2_nonevery,
-    run_kernel2_quant,
-    run_kernel_chain,
-    run_kernel_chain_quants,
-    run_kernel_chain_absence,
-    run_kernel_chain_nonevery,
+    kernel_shape,
+    pattern_engine,
+    run_shape,
 )
+
+_log = logging.getLogger(__name__)
 
 # Streaming #window.sort / #window.frequent emit per-micro-batch SNAPSHOTS of
 # the window's retained contents; each output row carries the snapshot id and
@@ -1427,10 +1423,14 @@ class StreamingPlanner(BatchPlanner):
         purge = self.pattern_state_purge and multi and can_evict
         use_timeout = has_neg or purge
 
-        # vectorizable 2-step shape -> numpy kernel instead of the row loop
-        shape2 = (
+        # vectorizable shape -> numpy kernel instead of the row loop
+        shape = (
             None if has_group
-            else kernel2_shape(elems_c, every, every_at, strict_after)
+            else kernel_shape(elems_c, every, every_at, strict_after)
+        )
+        _log.info(
+            "pattern engine (streaming): %s",
+            pattern_engine(shape, at_close=False),
         )
 
         class _ColView(dict):
@@ -1621,72 +1621,10 @@ class StreamingPlanner(BatchPlanner):
                     if zpad is not None:
                         m = _np.concatenate([zpad, m])
                     masks.append(m)
-                # visit-size hybrid for the QUANT kernels (late round 10):
-                # their boundary-race pipelines carry a ~100-130µs fixed
-                # numpy cost per invocation, so on a small visit (few new
-                # rows × few live partials/arms) the general row loop is
-                # cheaper — measured crossover ≈ 128 row·partial units (the
-                # cheap every2/absence kernels always win and stay
-                # unconditional). Engine states are byte-equal
-                # (tests/test_kernel2_unit.py interop), so the choice is
-                # free to vary per visit.
-                run_shape = shape2
-                if shape2 in ("quant2", "chain_quant"):
-                    n_pend_ = len(init["partials"]) if init else 0
-                    n_arms_ = int(masks[0][start_idx:].sum())
-                    if (
-                        (n_total - start_idx) * (1 + n_pend_ + n_arms_) < 128
-                    ):
-                        run_shape = None  # row loop
-                if run_shape == "every2":
-                    found, nfa_st = run_kernel2(
-                        ts_arr, masks[0], masks[1], start_idx, init,
-                        within_ms, strict_after[0],
-                    )
-                elif run_shape == "plain2":
-                    found, nfa_st = run_kernel2_nonevery(
-                        ts_arr, masks[0], masks[1], start_idx, init,
-                        within_ms, strict_after[0],
-                    )
-                elif run_shape == "quant2":
-                    found, nfa_st = run_kernel2_quant(
-                        ts_arr, masks[0], masks[1], start_idx, init,
-                        within_ms, elems_c[0].min_count, elems_c[0].max_count,
-                    )
-                elif run_shape == "chain_quant":
-                    qs_ = [
-                        (i, e.min_count, e.max_count)
-                        for i, e in enumerate(elems_c)
-                        if e.min_count != 1 or e.max_count != 1
-                    ]
-                    found, nfa_st = run_kernel_chain_quants(
-                        ts_arr, masks, qs_, start_idx, init, within_ms,
-                    )
-                elif run_shape == "absence2":
-                    found, nfa_st = run_kernel2_absence(
-                        ts_arr, masks[0], masks[1], start_idx, init,
-                        within_ms, elems_c[1].for_ms,
-                    )
-                elif run_shape == "chain":
-                    found, nfa_st = run_kernel_chain(
-                        ts_arr, masks, start_idx, init, within_ms,
-                    )
-                elif run_shape == "plain_chain":
-                    found, nfa_st = run_kernel_chain_nonevery(
-                        ts_arr, masks, start_idx, init, within_ms,
-                    )
-                elif run_shape == "chain_absence":
-                    found, nfa_st = run_kernel_chain_absence(
-                        ts_arr, masks, start_idx, init, within_ms,
-                        elems_c[-1].for_ms,
-                    )
-                else:
-                    found, nfa_st = _run_nfa(
-                        None, masks, raw_steps_c, strict_after, every,
-                        within_ms, at_close=False, every_at=every_at,
-                        start_idx=start_idx, init=init, return_state=True,
-                        ts_vals=ts_arr,
-                    )
+                found, nfa_st = run_shape(
+                    shape, ts_arr, masks, raw_steps_c, strict_after, every,
+                    every_at, within_ms, start_idx, init, at_close=False,
+                )
 
             # timer-fired absence (round 10, VERDICT r9 ask #1): a partial
             # whose trailing 'not X for t' deadline the WATERMARK has passed

@@ -153,10 +153,10 @@ def main() -> int:
             ("quant_perkey_4batch", 8, None, QUANT_CQL),
             (f"quant_bucket{BUCKETS}_4batch", 8, BUCKETS, QUANT_CQL),
             # round 10: 1-batch rows separate the per-key-visit floor from
-            # kernel compute (quant2 kernel replaced the general NFA here)
+            # kernel compute (the quant kernel replaced the general NFA)
             ("quant_perkey_1batch", None, None, QUANT_CQL),
             (f"quant_bucket{BUCKETS}_1batch", None, BUCKETS, QUANT_CQL),
-            # absence2 kernel under the same matrix (fresh-session rows)
+            # absence kernel under the same matrix (fresh-session rows)
             ("absence_perkey_4batch", 8, None, ABSENCE_CQL),
             (f"absence_bucket{BUCKETS}_4batch", 8, BUCKETS, ABSENCE_CQL),
         ]

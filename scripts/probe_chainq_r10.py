@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
-"""Late-round-10 probe: 10M hot-key drain for the one-quant chain kernel
-(``run_kernel_chain_quant`` — ``every a -> b<1:2> -> c within t``), the
+"""Late-round-10 probe: 10M hot-key drain for the quant chain kernel
+(``run_kernel_chain_quants`` on ``every a -> b<1:2> -> c within t``), the
 shape that ran the general per-row NFA before the kernel landed.
 
 Same hot-key generator as probe_chain3_r9.py (user 1 at ~10%, 100k users,
 ts-ordered 10ms steps, 4 waves); error-anchored arming (5% of the stream)
-for comparability with that probe's quant2 cells.
+for comparability with that probe's quantified 2-step cells.
 
 Usage: python scripts/probe_chainq_r10.py [n_events] [buckets] [cells,csv]
 Cells: perkey_4batch, bucket{N}_4batch. One JSON line; summarize into

@@ -23,7 +23,7 @@ from flink_siddhi_spark.errors import UnsupportedFeatureException
 from .test_property_patterns_r7 import SCHEMA, _run_streaming
 
 CQLS = {
-    # every2 numpy kernel
+    # chain kernel (k=2)
     "followed_by": (
         "partition with (price of s) begin "
         "from every a = s[name == 'x'] -> b = s[name == 'y'] "
@@ -31,7 +31,7 @@ CQLS = {
         "select a.price as u, a.id as a_id, b.id as b_id "
         "insert into Out; end"
     ),
-    # absence2 kernel + absence-aware watermark eviction
+    # chain_absence kernel (k=2) + absence-aware watermark eviction
     "absence": (
         "partition with (price of s) begin "
         "from every a = s[name == 'x'] -> not s[name == 'y'] "
@@ -47,7 +47,7 @@ CQLS = {
         "select a.price as u, a.id as a_id, c.id as b_id "
         "insert into Out; end"
     ),
-    # general NFA (quantified first step)
+    # chain_quant kernel (k=2) on big visits, the row loop on small ones
     "quantifier": (
         "partition with (price of s) begin "
         "from every a = s[name == 'x']<1:2> -> b = s[name == 'y'] "
@@ -55,7 +55,7 @@ CQLS = {
         "select a.price as u, a[0].id as a_id, b.id as b_id "
         "insert into Out; end"
     ),
-    # plain2 arm-once kernel (first-attempt contract + done-seal)
+    # plain_chain arm-once kernel, k=2 (first-attempt contract + done-seal)
     "plain2": (
         "partition with (price of s) begin "
         "from a = s[name == 'x'] -> b = s[name == 'y'] "

@@ -1,9 +1,11 @@
-"""Pure-python equivalence pin: ``run_kernel2`` (the vectorized streaming
-kernel for ``every A (->|,) B [within t]``) must produce EXACTLY the same
-matches and the same serialized partial state as the general ``_run_nfa``
-row loop — including across simulated micro-batch continuations, where one
-engine's saved state seeds the other. No SparkSession: this is the fast
-diagnosis layer under the end-to-end streaming parity fuzz."""
+"""Pure-python equivalence pin: the four vectorized pattern kernels
+(``run_kernel_chain``, ``run_kernel_chain_nonevery``,
+``run_kernel_chain_absence``, ``run_kernel_chain_quants``) and the
+``run_shape`` dispatch over them must produce EXACTLY the same matches and
+the same serialized partial state as the general ``_run_nfa`` row loop —
+including across simulated micro-batch continuations, where one engine's
+saved state seeds the other. No SparkSession: this is the fast diagnosis
+layer under the end-to-end streaming parity fuzz."""
 
 import random
 
@@ -13,13 +15,12 @@ import pandas as pd
 from flink_siddhi_spark.operators.pattern import (
     TS_COL,
     _run_nfa,
-    kernel2_applicable,
-    kernel2_shape,
-    run_kernel2,
-    run_kernel2_absence,
-    run_kernel2_nonevery,
-    run_kernel2_quant,
-    run_kernel3,
+    kernel_shape,
+    run_kernel_chain,
+    run_kernel_chain_absence,
+    run_kernel_chain_nonevery,
+    run_kernel_chain_quants,
+    run_shape,
 )
 from flink_siddhi_spark.siddhiql import ast as A
 
@@ -73,10 +74,13 @@ def _run_general(ts, ma, mb, start, init, within, strict):
 
 
 def test_kernel2_matches_general_nfa_randomized():
+    """``every a (->|,) b [within t]`` through the ``run_shape`` dispatch
+    (the k=2 chain kernel) vs the general NFA, exact emission order and
+    full state."""
     rng = random.Random(7)
     elems = _elems()
-    assert kernel2_applicable(elems, True, None, [False])
-    assert kernel2_applicable(elems, True, None, [True])
+    assert kernel_shape(elems, True, None, [False]) == "chain"
+    assert kernel_shape(elems, True, None, [True]) == "chain"
     for trial in range(300):
         n = rng.randint(0, 30)
         ts = np.sort(
@@ -86,12 +90,17 @@ def test_kernel2_matches_general_nfa_randomized():
         mb = np.array([rng.random() < 0.3 for _ in range(n)], bool)
         within = rng.choice([None, 550, 1250])
         strict = rng.random() < 0.4
-        got_m, got_st = run_kernel2(ts, ma, mb, 0, None, within, strict)
+        got_m, got_st = run_shape(
+            "chain", ts, [ma, mb], elems, [strict], True, None, within,
+            at_close=False,
+        )
         want_m, want_st = _run_general(ts, ma, mb, 0, None, within, strict)
-        assert sorted(map(tuple, (map(tuple, m) for m in got_m))) == sorted(
-            map(tuple, (map(tuple, m) for m in want_m))
-        ), (trial, ts.tolist(), ma.tolist(), mb.tolist(), within, strict)
-        assert _state_key(got_st) == _state_key(want_st), (trial, within, strict)
+        assert got_m == want_m, (
+            trial, ts.tolist(), ma.tolist(), mb.tolist(), within, strict,
+        )
+        assert _state_key_full(got_st) == _state_key_full(want_st), (
+            trial, within, strict,
+        )
 
 
 def test_kernel2_state_interops_with_general_nfa():
@@ -112,11 +121,13 @@ def test_kernel2_state_interops_with_general_nfa():
         within = rng.choice([None, 750])
         strict = rng.random() < 0.4
         # batch 1 on each engine
-        k1, k_st = run_kernel2(ts[:n1], ma[:n1], mb[:n1], 0, None, within, strict)
+        k1, k_st = run_kernel_chain(
+            ts[:n1], [ma[:n1], mb[:n1]], [strict], 0, None, within
+        )
         g1, g_st = _run_general(ts[:n1], ma[:n1], mb[:n1], 0, None, within, strict)
         assert _state_key(k_st) == _state_key(g_st)
         # batch 2: kernel continues the GENERAL engine's state and vice versa
-        k2, _ = run_kernel2(ts, ma, mb, n1, g_st, within, strict)
+        k2, _ = run_kernel_chain(ts, [ma, mb], [strict], n1, g_st, within)
         g2, _ = _run_general(ts, ma, mb, n1, k_st, within, strict)
         norm = lambda ms: sorted(map(tuple, (map(tuple, m) for m in ms)))
         assert norm(k1) == norm(g1) and norm(k2) == norm(g2), (
@@ -124,113 +135,112 @@ def test_kernel2_state_interops_with_general_nfa():
         )
 
 
-# ------------------------------------------------- round-8 kernel shapes
-def test_kernel2_shape_classifier():
+def _el(alias, **kw):
+    return A.PatternElem(stream="s", alias=alias, **kw)
+
+
+def test_kernel_shape_classifier():
+    """The four-shape table, one rule for every k >= 2."""
     e2 = _elems()
-    assert kernel2_shape(e2, True, None, [False]) == "every2"
-    assert kernel2_shape(e2, True, None, [True]) == "every2"
-    assert kernel2_shape(e2, False, None, [False]) == "plain2"
-    assert kernel2_shape(e2, False, None, [True]) == "plain2"
+    e3 = e2 + [_el("c")]
+    e4 = e3 + [_el("d")]
+    # all-plain chains, any k and any mix of ',' / '->' = chain / plain_chain
+    for elems in (e2, e3, e4):
+        k = len(elems)
+        for strict in ([False] * (k - 1), [True] * (k - 1),
+                       [i % 2 == 0 for i in range(k - 1)]):
+            assert kernel_shape(elems, True, None, strict) == "chain"
+            assert kernel_shape(elems, False, None, strict) == "plain_chain"
+        assert kernel_shape(elems, True, 1, [False] * (k - 1)) is None
+    # relaxed every chain ending in `not X for t` = chain_absence, k >= 2
     ab = _abs_elems(500)
-    assert kernel2_shape(ab, True, None, [False]) == "absence2"
-    # not kernelizable: strict absence, no for_ms, non-every absence,
-    # mid-every, quantifiers
-    assert kernel2_shape(ab, True, None, [True]) is None
-    assert kernel2_shape(_abs_elems(None), True, None, [False]) is None
-    assert kernel2_shape(ab, False, None, [False]) is None
-    assert kernel2_shape(e2, True, 1, [False]) is None
-    # quantified first element = quant2 (round 10): every + relaxed only,
-    # min_count >= 1; strict / non-every / a* / a? keep the general NFA
-    q = [A.PatternElem(stream="s", alias="a", min_count=1, max_count=2),
-         A.PatternElem(stream="s", alias="b")]
-    assert kernel2_shape(q, True, None, [False]) == "quant2"
-    qp = [A.PatternElem(stream="s", alias="a", min_count=2, max_count=None),
-          A.PatternElem(stream="s", alias="b")]
-    assert kernel2_shape(qp, True, None, [False]) == "quant2"
-    assert kernel2_shape(q, True, None, [True]) is None
-    assert kernel2_shape(q, False, None, [False]) is None
-    q0 = [A.PatternElem(stream="s", alias="a", min_count=0, max_count=2),
-          A.PatternElem(stream="s", alias="b")]
-    assert kernel2_shape(q0, True, None, [False]) is None
-    qopt = [A.PatternElem(stream="s", alias="a", min_count=0, max_count=1),
-            A.PatternElem(stream="s", alias="b")]
-    assert kernel2_shape(qopt, True, None, [False]) is None
-    # quantified a with a QUANTIFIED or negated b stays on the NFA
-    qq = [A.PatternElem(stream="s", alias="a", min_count=1, max_count=2),
-          A.PatternElem(stream="s", alias="b", min_count=1, max_count=2)]
-    assert kernel2_shape(qq, True, None, [False]) is None
-    qn = [A.PatternElem(stream="s", alias="a", min_count=1, max_count=2),
-          A.PatternElem(stream="s", alias="b", negated=True, for_ms=500)]
-    assert kernel2_shape(qn, True, None, [False]) is None
-    # k-step relaxed every = chain (late round 8); strict / non-every /
-    # negated / quantified chains still fall to the general NFA
-    e3 = e2 + [A.PatternElem(stream="s", alias="c")]
-    assert kernel2_shape(e3, True, None, [False, False]) == "chain"
-    e4 = e3 + [A.PatternElem(stream="s", alias="d")]
-    assert kernel2_shape(e4, True, None, [False] * 3) == "chain"
-    assert kernel2_shape(e3, True, None, [True, False]) is None
-    assert kernel2_shape(e3, True, None, [False, True]) is None
-    # arm-once relaxed chain = plain_chain (late round 8)
-    assert kernel2_shape(e3, False, None, [False, False]) == "plain_chain"
-    assert kernel2_shape(e4, False, None, [False] * 3) == "plain_chain"
-    assert kernel2_shape(e3, False, None, [True, False]) is None
-    assert kernel2_shape(e3, True, 1, [False, False]) is None
-    # chain ending in `not X for t` = chain_absence (funnel abandonment);
-    # without for_ms, or quantified, still the general NFA
-    n3 = e2 + [A.PatternElem(stream="s", alias="c", negated=True, for_ms=500)]
-    assert kernel2_shape(n3, True, None, [False, False]) == "chain_absence"
-    n3b = e2 + [A.PatternElem(stream="s", alias="c", negated=True)]
-    assert kernel2_shape(n3b, True, None, [False, False]) is None
-    assert kernel2_shape(n3, False, None, [False, False]) is None
-    # a TRAILING quantifier still falls to the general NFA (its completion
-    # waits on stream close), but one quantified INTERIOR element in a
-    # k>=3 relaxed every-chain = chain_quant (late round 10)
-    q3 = e2 + [A.PatternElem(stream="s", alias="c", min_count=1, max_count=2)]
-    assert kernel2_shape(q3, True, None, [False, False]) is None
-    cq_mid = [
-        A.PatternElem(stream="s", alias="a"),
-        A.PatternElem(stream="s", alias="b", min_count=1, max_count=2),
-        A.PatternElem(stream="s", alias="c"),
-    ]
-    assert kernel2_shape(cq_mid, True, None, [False, False]) == "chain_quant"
-    cq_first = [
-        A.PatternElem(stream="s", alias="a", min_count=2, max_count=None),
-        A.PatternElem(stream="s", alias="b"),
-        A.PatternElem(stream="s", alias="c"),
-    ]
-    assert kernel2_shape(cq_first, True, None, [False, False]) == "chain_quant"
-    cq4 = [
-        A.PatternElem(stream="s", alias="a"),
-        A.PatternElem(stream="s", alias="b"),
-        A.PatternElem(stream="s", alias="q", min_count=1, max_count=3),
-        A.PatternElem(stream="s", alias="d"),
-    ]
-    assert kernel2_shape(cq4, True, None, [False] * 3) == "chain_quant"
-    # strict / non-every / min 0 / two quantified / mid-every keep the NFA
-    assert kernel2_shape(cq_mid, True, None, [True, False]) is None
-    assert kernel2_shape(cq_mid, False, None, [False, False]) is None
-    cq_opt = [
-        A.PatternElem(stream="s", alias="a"),
-        A.PatternElem(stream="s", alias="b", min_count=0, max_count=2),
-        A.PatternElem(stream="s", alias="c"),
-    ]
-    assert kernel2_shape(cq_opt, True, None, [False, False]) is None
-    cq_two = [
-        A.PatternElem(stream="s", alias="a", min_count=1, max_count=2),
-        A.PatternElem(stream="s", alias="b", min_count=1, max_count=2),
-        A.PatternElem(stream="s", alias="c"),
-    ]
-    assert kernel2_shape(cq_two, True, None, [False, False]) is None
-    assert kernel2_shape(cq_mid, True, 1, [False, False]) is None
-    # multiple NON-adjacent quants = chain_quant too (multi-quant kernel);
-    # adjacency (cq_two above) keeps the NFA
-    cq_multi = [
-        A.PatternElem(stream="s", alias="a", min_count=1, max_count=2),
-        A.PatternElem(stream="s", alias="b"),
-        A.PatternElem(stream="s", alias="c", min_count=2, max_count=None),
-        A.PatternElem(stream="s", alias="d"),
-    ]
-    assert kernel2_shape(cq_multi, True, None, [False] * 3) == "chain_quant"
+    n3 = e2 + [_el("c", negated=True, for_ms=500)]
+    assert kernel_shape(ab, True, None, [False]) == "chain_absence"
+    assert kernel_shape(n3, True, None, [False, False]) == "chain_absence"
+    # strict, bare `not X`, non-every, mid-every absence: general NFA
+    assert kernel_shape(ab, True, None, [True]) is None
+    assert kernel_shape(n3, True, None, [False, True]) is None
+    assert kernel_shape(_abs_elems(None), True, None, [False]) is None
+    assert kernel_shape(e2 + [_el("c", negated=True)], True, None,
+                        [False, False]) is None
+    assert kernel_shape(ab, False, None, [False]) is None
+    assert kernel_shape(n3, False, None, [False, False]) is None
+    assert kernel_shape(ab, True, 1, [False]) is None
+    # relaxed every chain with quantified stages (n >= 1), none last, no two
+    # adjacent = chain_quant, k >= 2
+    q = [_el("a", min_count=1, max_count=2), _el("b")]
+    qp = [_el("a", min_count=2, max_count=None), _el("b")]
+    cq_mid = [_el("a"), _el("b", min_count=1, max_count=2), _el("c")]
+    cq4 = [_el("a"), _el("b"), _el("q", min_count=1, max_count=3), _el("d")]
+    cq_multi = [_el("a", min_count=1, max_count=2), _el("b"),
+                _el("c", min_count=2, max_count=None), _el("d")]
+    for elems in (q, qp, cq_mid, cq4, cq_multi):
+        k = len(elems)
+        assert kernel_shape(elems, True, None, [False] * (k - 1)) == "chain_quant"
+        # strict quant chains, non-every, mid-every: general NFA
+        assert kernel_shape(elems, True, None, [True] + [False] * (k - 2)) is None
+        assert kernel_shape(elems, False, None, [False] * (k - 1)) is None
+        assert kernel_shape(elems, True, 1, [False] * (k - 1)) is None
+    # a* / a? (min 0), adjacent quants, a trailing quantifier, a quantified
+    # stage before an absence: general NFA
+    for elems in (
+        [_el("a", min_count=0, max_count=2), _el("b")],
+        [_el("a", min_count=0, max_count=1), _el("b")],
+        [_el("a"), _el("b", min_count=0, max_count=2), _el("c")],
+        [_el("a", min_count=1, max_count=2),
+         _el("b", min_count=1, max_count=2), _el("c")],
+        [_el("a", min_count=1, max_count=2), _el("b", min_count=1, max_count=2)],
+        e2 + [_el("c", min_count=1, max_count=2)],
+        [_el("a", min_count=1, max_count=2), _el("b", negated=True, for_ms=500)],
+    ):
+        assert kernel_shape(elems, True, None, [False] * (len(elems) - 1)) is None
+
+
+def test_plain_chain_at_close_is_a_no_op():
+    """Batch runs plain chains on the kernels, which never close-confirm:
+    sound because ``_run_nfa`` gives the same result at stream close
+    (``at_close=True``) as without it — a plain chain has no trailing
+    optional or absence. Absence chains do differ, so ``run_shape`` keeps
+    them on the row loop when ``at_close`` is set."""
+    rng = random.Random(47)
+    saw_close_match = False
+    for trial in range(300):
+        k = rng.choice([2, 3, 4])
+        every = rng.random() < 0.6
+        strict = [rng.random() < 0.5 for _ in range(k - 1)]
+        n = rng.randint(0, 30)
+        ts = np.sort(
+            np.array([rng.randint(0, 40) * 100 for _ in range(n)], np.int64)
+        )
+        masks = [
+            np.array([rng.random() < 0.35 for _ in range(n)], bool)
+            for _ in range(k)
+        ]
+        within = rng.choice([None, 850, 1650])
+        rows = pd.DataFrame({TS_COL: ts})
+        runs = [
+            _run_nfa(rows, masks, _elems_k(k), strict, every, within,
+                     at_close=close)
+            for close in (True, False)
+        ]
+        assert runs[0] == runs[1], (trial, k, every, strict, within)
+        # and run_shape at close equals the row loop at close
+        got, _ = run_shape(
+            kernel_shape(_elems_k(k), every, None, strict), ts, masks,
+            _elems_k(k), strict, every, None, within,
+        )
+        assert got == runs[0], (trial, k, every, strict, within)
+        # absence chains: at close, run_shape confirms like the row loop
+        ab = _elems_abs_k(k, 500)
+        rel = [False] * (k - 1)
+        want = _run_nfa(rows, masks, ab, rel, True, within, at_close=True)
+        got, _ = run_shape("chain_absence", ts, masks, ab, rel, True, None,
+                           within)
+        assert got == want, (trial, k, within)
+        saw_close_match |= want != _run_nfa(
+            rows, masks, ab, rel, True, within, at_close=False
+        )
+    assert saw_close_match  # the absence case really exercises close
 
 
 def _run_general_ne(ts, ma, mb, start, init, within, strict):
@@ -242,8 +252,8 @@ def _run_general_ne(ts, ma, mb, start, init, within, strict):
 
 
 def test_kernel2_nonevery_matches_general_nfa_randomized():
-    """plain2: the arm-once first-attempt contract (the round-7 fuzz-found
-    shape) — kernel vs general NFA on 450 randomized feeds, full state
+    """k=2 plain_chain: the arm-once first-attempt contract (the round-7
+    fuzz-found shape) — kernel vs general NFA on 450 randomized feeds, full state
     equality including started/done."""
     rng = random.Random(8)
     for trial in range(450):
@@ -255,7 +265,9 @@ def test_kernel2_nonevery_matches_general_nfa_randomized():
         mb = np.array([rng.random() < 0.3 for _ in range(n)], bool)
         within = rng.choice([None, 550, 1250])
         strict = rng.random() < 0.4
-        got_m, got_st = run_kernel2_nonevery(ts, ma, mb, 0, None, within, strict)
+        got_m, got_st = run_kernel_chain_nonevery(
+            ts, [ma, mb], [strict], 0, None, within
+        )
         want_m, want_st = _run_general_ne(ts, ma, mb, 0, None, within, strict)
         assert got_m == want_m, (trial, ts.tolist(), ma.tolist(), mb.tolist(),
                                  within, strict)
@@ -278,11 +290,15 @@ def test_kernel2_nonevery_state_interops_with_general_nfa():
         mb = np.array([rng.random() < 0.35 for _ in range(n1 + n2)], bool)
         within = rng.choice([None, 750])
         strict = rng.random() < 0.4
-        k1, k_st = run_kernel2_nonevery(ts[:n1], ma[:n1], mb[:n1], 0, None, within, strict)
+        k1, k_st = run_kernel_chain_nonevery(
+            ts[:n1], [ma[:n1], mb[:n1]], [strict], 0, None, within
+        )
         g1, g_st = _run_general_ne(ts[:n1], ma[:n1], mb[:n1], 0, None, within, strict)
         assert _state_key_full(k_st) == _state_key_full(g_st), (trial,)
         # batch 2: each engine continues the OTHER's state
-        k2, k_st2 = run_kernel2_nonevery(ts, ma, mb, n1, g_st, within, strict)
+        k2, k_st2 = run_kernel_chain_nonevery(
+            ts, [ma, mb], [strict], n1, g_st, within
+        )
         g2, g_st2 = _run_general_ne(ts, ma, mb, n1, k_st, within, strict)
         assert k1 == g1 and k2 == g2, (
             trial, ts.tolist(), ma.tolist(), mb.tolist(), within, strict,
@@ -299,7 +315,8 @@ def _run_general_abs(ts, ma, mb, start, init, within, for_ms):
 
 
 def test_kernel2_absence_matches_general_nfa_randomized():
-    """absence2: ``every a=A -> not B for t [within w]`` — kernel vs general
+    """k=2 chain_absence: ``every a=A -> not B for t [within w]`` through
+    ``run_shape`` (streaming, ``at_close=False``) — kernel vs general
     NFA on 450 randomized feeds, matches in emission order and full state
     equality (pos / neg_deadline / captured / first_ts)."""
     rng = random.Random(9)
@@ -312,7 +329,10 @@ def test_kernel2_absence_matches_general_nfa_randomized():
         mb = np.array([rng.random() < 0.3 for _ in range(n)], bool)
         within = rng.choice([None, 550, 1250, 2050])
         for_ms = rng.choice([0, 250, 750, 1500])
-        got_m, got_st = run_kernel2_absence(ts, ma, mb, 0, None, within, for_ms)
+        got_m, got_st = run_shape(
+            "chain_absence", ts, [ma, mb], _abs_elems(for_ms), [False], True,
+            None, within, at_close=False,
+        )
         want_m, want_st = _run_general_abs(ts, ma, mb, 0, None, within, for_ms)
         assert got_m == want_m, (trial, ts.tolist(), ma.tolist(), mb.tolist(),
                                  within, for_ms)
@@ -335,10 +355,14 @@ def test_kernel2_absence_state_interops_with_general_nfa():
         mb = np.array([rng.random() < 0.25 for _ in range(n1 + n2)], bool)
         within = rng.choice([None, 950])
         for_ms = rng.choice([250, 750])
-        k1, k_st = run_kernel2_absence(ts[:n1], ma[:n1], mb[:n1], 0, None, within, for_ms)
+        k1, k_st = run_kernel_chain_absence(
+            ts[:n1], [ma[:n1], mb[:n1]], 0, None, within, for_ms
+        )
         g1, g_st = _run_general_abs(ts[:n1], ma[:n1], mb[:n1], 0, None, within, for_ms)
         assert _state_key_full(k_st) == _state_key_full(g_st), (trial,)
-        k2, k_st2 = run_kernel2_absence(ts, ma, mb, n1, g_st, within, for_ms)
+        k2, k_st2 = run_kernel_chain_absence(
+            ts, [ma, mb], n1, g_st, within, for_ms
+        )
         g2, g_st2 = _run_general_abs(ts, ma, mb, n1, k_st, within, for_ms)
         assert k1 == g1 and k2 == g2, (
             trial, ts.tolist(), ma.tolist(), mb.tolist(), within, for_ms,
@@ -368,7 +392,7 @@ def test_kernel3_matches_general_nfa_randomized():
     emission order and full state equality (pos / captured / first_ts /
     last_ts / started)."""
     rng = random.Random(38)
-    assert kernel2_shape(_elems3(), True, None, [False, False]) == "chain"
+    assert kernel_shape(_elems3(), True, None, [False, False]) == "chain"
     for trial in range(450):
         n = rng.randint(0, 30)
         ts = np.sort(
@@ -378,7 +402,9 @@ def test_kernel3_matches_general_nfa_randomized():
         mb = np.array([rng.random() < 0.3 for _ in range(n)], bool)
         mc = np.array([rng.random() < 0.3 for _ in range(n)], bool)
         within = rng.choice([None, 550, 1250, 2050])
-        got_m, got_st = run_kernel3(ts, ma, mb, mc, 0, None, within)
+        got_m, got_st = run_kernel_chain(
+            ts, [ma, mb, mc], [False, False], 0, None, within
+        )
         want_m, want_st = _run_general3(ts, ma, mb, mc, 0, None, within)
         assert got_m == want_m, (trial, ts.tolist(), ma.tolist(), mb.tolist(),
                                  mc.tolist(), within)
@@ -404,12 +430,17 @@ def test_kernel3_state_interops_with_general_nfa():
         mb = np.array([rng.random() < 0.35 for _ in range(n1 + n2)], bool)
         mc = np.array([rng.random() < 0.35 for _ in range(n1 + n2)], bool)
         within = rng.choice([None, 750, 1550])
-        k1, k_st = run_kernel3(ts[:n1], ma[:n1], mb[:n1], mc[:n1], 0, None, within)
+        k1, k_st = run_kernel_chain(
+            ts[:n1], [ma[:n1], mb[:n1], mc[:n1]], [False, False], 0, None,
+            within,
+        )
         g1, g_st = _run_general3(ts[:n1], ma[:n1], mb[:n1], mc[:n1], 0, None, within)
         assert k1 == g1, (trial,)
         assert _state_key_full(k_st) == _state_key_full(g_st), (trial,)
         # batch 2: each engine continues the OTHER's state
-        k2, k_st2 = run_kernel3(ts, ma, mb, mc, n1, g_st, within)
+        k2, k_st2 = run_kernel_chain(
+            ts, [ma, mb, mc], [False, False], n1, g_st, within
+        )
         g2, g_st2 = _run_general3(ts, ma, mb, mc, n1, k_st, within)
         assert k2 == g2, (
             trial, ts.tolist(), ma.tolist(), mb.tolist(), mc.tolist(), within,
@@ -421,23 +452,28 @@ def _elems_k(k):
     return [A.PatternElem(stream="s", alias=f"e{i}") for i in range(k)]
 
 
-def _run_general_k(ts, masks, k, start, init, within):
+def _run_general_k(ts, masks, strict, start, init, within, every=True):
     rows = pd.DataFrame({TS_COL: ts})
     return _run_nfa(
-        rows, masks, _elems_k(k), [False] * (k - 1), True, within,
+        rows, masks, _elems_k(len(masks)), strict, every, within,
         at_close=False, start_idx=start, init=init, return_state=True,
     )
 
 
-def test_kernel_chain_matches_general_nfa_randomized():
-    """chain: the generalized k-step relaxed funnel (k=4 and k=5) — kernel
-    vs general NFA on randomized feeds, exact emission order and full
-    state equality across every stage of pending partials."""
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain
+def _rand_connectors(rng, k):
+    """',' (strict) or '->' (relaxed), drawn per connector."""
+    return [rng.random() < 0.5 for _ in range(k - 1)]
 
+
+def test_kernel_chain_matches_general_nfa_randomized():
+    """chain: ``every`` k-step chains, k in 2..5, each connector ',' or
+    '->' at random — kernel vs general NFA on randomized feeds, exact
+    emission order and full state equality across every stage of pending
+    partials, including strict partials waiting for their next row."""
     rng = random.Random(41)
     for trial in range(300):
-        k = rng.choice([4, 5])
+        k = rng.choice([2, 3, 4, 5])
+        strict = _rand_connectors(rng, k)
         n = rng.randint(0, 34)
         ts = np.sort(
             np.array([rng.randint(0, 40) * 100 for _ in range(n)], np.int64)
@@ -447,21 +483,20 @@ def test_kernel_chain_matches_general_nfa_randomized():
             for _ in range(k)
         ]
         within = rng.choice([None, 850, 1650, 2850])
-        got_m, got_st = run_kernel_chain(ts, masks, 0, None, within)
-        want_m, want_st = _run_general_k(ts, masks, k, 0, None, within)
-        assert got_m == want_m, (trial, k, ts.tolist(),
+        got_m, got_st = run_kernel_chain(ts, masks, strict, 0, None, within)
+        want_m, want_st = _run_general_k(ts, masks, strict, 0, None, within)
+        assert got_m == want_m, (trial, strict, ts.tolist(),
                                  [m.tolist() for m in masks], within)
         assert _state_key_full(got_st) == _state_key_full(want_st), (
-            trial, k, ts.tolist(), [m.tolist() for m in masks], within,
+            trial, strict, ts.tolist(), [m.tolist() for m in masks], within,
         )
 
 
 def test_kernel_chain_state_interops_with_general_nfa():
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain
-
     rng = random.Random(42)
     for trial in range(150):
-        k = rng.choice([4, 5])
+        k = rng.choice([2, 3, 4, 5])
+        strict = _rand_connectors(rng, k)
         n1, n2 = rng.randint(1, 15), rng.randint(1, 15)
         t1 = np.sort(np.array([rng.randint(0, 20) * 100 for _ in range(n1)], np.int64))
         t2 = np.sort(np.array(
@@ -475,17 +510,19 @@ def test_kernel_chain_state_interops_with_general_nfa():
         ]
         within = rng.choice([None, 1050, 2250])
         m1 = [m[:n1] for m in masks]
-        k1, k_st = run_kernel_chain(ts[:n1], m1, 0, None, within)
-        g1, g_st = _run_general_k(ts[:n1], m1, k, 0, None, within)
-        assert k1 == g1, (trial, k)
-        assert _state_key_full(k_st) == _state_key_full(g_st), (trial, k)
+        k1, k_st = run_kernel_chain(ts[:n1], m1, strict, 0, None, within)
+        g1, g_st = _run_general_k(ts[:n1], m1, strict, 0, None, within)
+        assert k1 == g1, (trial, strict)
+        assert _state_key_full(k_st) == _state_key_full(g_st), (trial, strict)
         # batch 2: each engine continues the OTHER's state
-        k2, k_st2 = run_kernel_chain(ts, masks, n1, g_st, within)
-        g2, g_st2 = _run_general_k(ts, masks, k, n1, k_st, within)
+        k2, k_st2 = run_kernel_chain(ts, masks, strict, n1, g_st, within)
+        g2, g_st2 = _run_general_k(ts, masks, strict, n1, k_st, within)
         assert k2 == g2, (
-            trial, k, ts.tolist(), [m.tolist() for m in masks], within,
+            trial, strict, ts.tolist(), [m.tolist() for m in masks], within,
         )
-        assert _state_key_full(k_st2) == _state_key_full(g_st2), (trial, k)
+        assert _state_key_full(k_st2) == _state_key_full(g_st2), (
+            trial, strict,
+        )
 
 
 def _elems_abs_k(k, for_ms):
@@ -508,8 +545,6 @@ def test_kernel_chain_absence_matches_general_nfa_randomized():
     the funnel-abandonment shape. Kernel vs general NFA on randomized
     feeds (k=3 and k=4), exact emission order and full state equality
     across chain-stage AND armed-absence partials."""
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_absence
-
     rng = random.Random(43)
     for trial in range(400):
         k = rng.choice([3, 4])
@@ -538,8 +573,6 @@ def test_kernel_chain_absence_matches_general_nfa_randomized():
 
 
 def test_kernel_chain_absence_state_interops_with_general_nfa():
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_absence
-
     rng = random.Random(44)
     for trial in range(200):
         k = rng.choice([3, 4])
@@ -573,23 +606,15 @@ def test_kernel_chain_absence_state_interops_with_general_nfa():
         )
 
 
-def _run_general_plain_k(ts, masks, k, start, init, within):
-    rows = pd.DataFrame({TS_COL: ts})
-    return _run_nfa(
-        rows, masks, _elems_k(k), [False] * (k - 1), False, within,
-        at_close=False, start_idx=start, init=init, return_state=True,
-    )
-
-
 def test_kernel_chain_nonevery_matches_general_nfa_randomized():
-    """plain_chain: the arm-once first-attempt contract generalized to
-    k-step chains (k=3/4) — kernel vs general NFA, full state equality
-    incl. started/done and the dead state (failed attempt, no re-arm)."""
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_nonevery
-
+    """plain_chain: the arm-once first-attempt contract on k-step chains,
+    k in 2..5, each connector ',' or '->' at random — kernel vs general
+    NFA, full state equality incl. started/done and the dead state (failed
+    attempt: strict breaker or closed window, no re-arm)."""
     rng = random.Random(45)
     for trial in range(400):
-        k = rng.choice([3, 4])
+        k = rng.choice([2, 3, 4, 5])
+        strict = _rand_connectors(rng, k)
         n = rng.randint(0, 30)
         ts = np.sort(
             np.array([rng.randint(0, 40) * 100 for _ in range(n)], np.int64)
@@ -599,21 +624,24 @@ def test_kernel_chain_nonevery_matches_general_nfa_randomized():
             for _ in range(k)
         ]
         within = rng.choice([None, 850, 1650])
-        got_m, got_st = run_kernel_chain_nonevery(ts, masks, 0, None, within)
-        want_m, want_st = _run_general_plain_k(ts, masks, k, 0, None, within)
-        assert got_m == want_m, (trial, k, within, ts.tolist(),
+        got_m, got_st = run_kernel_chain_nonevery(
+            ts, masks, strict, 0, None, within
+        )
+        want_m, want_st = _run_general_k(
+            ts, masks, strict, 0, None, within, every=False
+        )
+        assert got_m == want_m, (trial, strict, within, ts.tolist(),
                                  [m.tolist() for m in masks])
         assert _state_key_full(got_st) == _state_key_full(want_st), (
-            trial, k, within, ts.tolist(), [m.tolist() for m in masks],
+            trial, strict, within, ts.tolist(), [m.tolist() for m in masks],
         )
 
 
 def test_kernel_chain_nonevery_state_interops_with_general_nfa():
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_nonevery
-
     rng = random.Random(46)
     for trial in range(200):
-        k = rng.choice([3, 4])
+        k = rng.choice([2, 3, 4, 5])
+        strict = _rand_connectors(rng, k)
         n1, n2 = rng.randint(1, 14), rng.randint(1, 14)
         t1 = np.sort(np.array([rng.randint(0, 20) * 100 for _ in range(n1)], np.int64))
         t2 = np.sort(np.array(
@@ -627,19 +655,29 @@ def test_kernel_chain_nonevery_state_interops_with_general_nfa():
         ]
         within = rng.choice([None, 1050])
         m1 = [m[:n1] for m in masks]
-        k1, k_st = run_kernel_chain_nonevery(ts[:n1], m1, 0, None, within)
-        g1, g_st = _run_general_plain_k(ts[:n1], m1, k, 0, None, within)
-        assert k1 == g1, (trial, k)
-        assert _state_key_full(k_st) == _state_key_full(g_st), (trial, k)
-        k2, k_st2 = run_kernel_chain_nonevery(ts, masks, n1, g_st, within)
-        g2, g_st2 = _run_general_plain_k(ts, masks, k, n1, k_st, within)
-        assert k2 == g2, (
-            trial, k, within, ts.tolist(), [m.tolist() for m in masks],
+        k1, k_st = run_kernel_chain_nonevery(
+            ts[:n1], m1, strict, 0, None, within
         )
-        assert _state_key_full(k_st2) == _state_key_full(g_st2), (trial, k)
+        g1, g_st = _run_general_k(
+            ts[:n1], m1, strict, 0, None, within, every=False
+        )
+        assert k1 == g1, (trial, strict)
+        assert _state_key_full(k_st) == _state_key_full(g_st), (trial, strict)
+        k2, k_st2 = run_kernel_chain_nonevery(
+            ts, masks, strict, n1, g_st, within
+        )
+        g2, g_st2 = _run_general_k(
+            ts, masks, strict, n1, k_st, within, every=False
+        )
+        assert k2 == g2, (
+            trial, strict, within, ts.tolist(), [m.tolist() for m in masks],
+        )
+        assert _state_key_full(k_st2) == _state_key_full(g_st2), (
+            trial, strict,
+        )
 
 
-# ------------------------------------------------- round-10 quant2 shape
+# ------------------------------------------ k=2 chain_quant (`a<n:m> -> b`)
 def _q_elems(n, m):
     return [
         A.PatternElem(stream="s", alias="a", min_count=n, max_count=m),
@@ -656,7 +694,7 @@ def _run_general_quant(ts, ma, mb, start, init, within, n, m):
 
 
 def test_kernel2_quant_matches_general_nfa_randomized():
-    """quant2 (`every a<n:m> -> b [within t]`, round 10): kernel vs general
+    """k=2 chain_quant (`every a<n:m> -> b [within t]`): kernel vs general
     NFA on 600 randomized feeds with OVERLAPPING a/b masks (greedy
     extension beats completion when one row matches both), full state
     equality including last_ts. Exact match lists, not sorted — emission
@@ -672,7 +710,9 @@ def test_kernel2_quant_matches_general_nfa_randomized():
         within = rng.choice([None, 550, 1250])
         n = rng.randint(1, 3)
         m = rng.choice([n, n + 1, n + 2, None])
-        got_m, got_st = run_kernel2_quant(ts, ma, mb, 0, None, within, n, m)
+        got_m, got_st = run_kernel_chain_quants(
+            ts, [ma, mb], [(0, n, m)], 0, None, within
+        )
         want_m, want_st = _run_general_quant(ts, ma, mb, 0, None, within, n, m)
         assert got_m == want_m, (
             trial, n, m, within, ts.tolist(), ma.tolist(), mb.tolist(),
@@ -702,13 +742,16 @@ def test_kernel2_quant_state_interops_with_general_nfa():
         within = rng.choice([None, 750, 1500])
         n = rng.randint(1, 3)
         m = rng.choice([n, n + 2, None])
-        k1, k_st = run_kernel2_quant(ts[:n1], ma[:n1], mb[:n1], 0, None,
-                                     within, n, m)
+        k1, k_st = run_kernel_chain_quants(
+            ts[:n1], [ma[:n1], mb[:n1]], [(0, n, m)], 0, None, within
+        )
         g1, g_st = _run_general_quant(ts[:n1], ma[:n1], mb[:n1], 0, None,
                                       within, n, m)
         assert k1 == g1, (trial, n, m)
         assert _state_key_full(k_st) == _state_key_full(g_st), (trial, n, m)
-        k2, k_st2 = run_kernel2_quant(ts, ma, mb, n1, g_st, within, n, m)
+        k2, k_st2 = run_kernel_chain_quants(
+            ts, [ma, mb], [(0, n, m)], n1, g_st, within
+        )
         g2, g_st2 = _run_general_quant(ts, ma, mb, n1, k_st, within, n, m)
         assert k2 == g2, (
             trial, n, m, within, ts.tolist(), ma.tolist(), mb.tolist(),
@@ -741,8 +784,6 @@ def test_kernel_chain_quant_matches_general_nfa_randomized():
     the quant stage and the next), every qpos in [0, k-2], full state
     equality including last_ts. Exact match lists — emission order is
     part of the contract."""
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_quant
-
     rng = random.Random(61)
     for trial in range(600):
         k = rng.choice([3, 3, 4])
@@ -758,8 +799,8 @@ def test_kernel_chain_quant_matches_general_nfa_randomized():
         within = rng.choice([None, 850, 1650])
         n = rng.randint(1, 3)
         m = rng.choice([n, n + 1, n + 2, None])
-        got_m, got_st = run_kernel_chain_quant(
-            ts, masks, qpos, 0, None, within, n, m
+        got_m, got_st = run_kernel_chain_quants(
+            ts, masks, [(qpos, n, m)], 0, None, within
         )
         want_m, want_st = _run_general_chainq(
             ts, masks, k, qpos, n, m, 0, None, within
@@ -778,8 +819,6 @@ def test_kernel_chain_quant_state_interops_with_general_nfa():
     """Batch 1 through one engine, batch 2 through the OTHER — the shared
     partial format continues identically across resumed prefix-stage,
     mid-quant, and suffix-stage partials."""
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_quant
-
     rng = random.Random(62)
     for trial in range(400):
         k = rng.choice([3, 3, 4])
@@ -801,8 +840,8 @@ def test_kernel_chain_quant_state_interops_with_general_nfa():
         n = rng.randint(1, 3)
         m = rng.choice([n, n + 2, None])
         m1 = [mk[:n1] for mk in masks]
-        k1, k_st = run_kernel_chain_quant(
-            ts[:n1], m1, qpos, 0, None, within, n, m
+        k1, k_st = run_kernel_chain_quants(
+            ts[:n1], m1, [(qpos, n, m)], 0, None, within
         )
         g1, g_st = _run_general_chainq(
             ts[:n1], m1, k, qpos, n, m, 0, None, within
@@ -811,8 +850,8 @@ def test_kernel_chain_quant_state_interops_with_general_nfa():
         assert _state_key_full(k_st) == _state_key_full(g_st), (
             trial, k, qpos, n, m,
         )
-        k2, k_st2 = run_kernel_chain_quant(
-            ts, masks, qpos, n1, g_st, within, n, m
+        k2, k_st2 = run_kernel_chain_quants(
+            ts, masks, [(qpos, n, m)], n1, g_st, within
         )
         g2, g_st2 = _run_general_chainq(
             ts, masks, k, qpos, n, m, n1, k_st, within
@@ -866,8 +905,6 @@ def test_kernel_chain_multiquant_matches_general_nfa_randomized():
     kernel vs general NFA on 600 randomized feeds with overlapping
     masks, 1-2 non-adjacent quant stages over k in {4,5}, full state
     equality including last_ts."""
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_quants
-
     rng = random.Random(71)
     for trial in range(600):
         k = rng.choice([4, 4, 5])
@@ -901,8 +938,6 @@ def test_kernel_chain_multiquant_state_interops_with_general_nfa():
     """Batch 1 through one engine, batch 2 through the OTHER, across
     resumed prefix / mid-quant-1 / between-quants / mid-quant-2 / suffix
     partial states."""
-    from flink_siddhi_spark.operators.pattern import run_kernel_chain_quants
-
     rng = random.Random(72)
     for trial in range(400):
         k = rng.choice([4, 4, 5])

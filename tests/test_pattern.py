@@ -191,8 +191,8 @@ def test_partitioned_pattern_on_events(cep, spark, sf_dir):
 
 
 def test_three_step_every_batch_kernel(cep, spark):
-    """late round 8: the batch path dispatches `every A -> B -> C [within]`
-    to run_kernel3 (match_group's vectorized branch). Deterministic feed
+    """The batch path runs `every A -> B -> C [within]` on the chain
+    kernel (run_kernel_chain through run_shape). Deterministic feed
     with hand-computed expectations: each armed partial captures the FIRST
     later b then the FIRST c after that b; within bounds the full span."""
     rows = [
@@ -226,8 +226,9 @@ def test_three_step_every_batch_kernel(cep, spark):
 
 
 def test_chain_quant_mid_kernel_and_null_index(cep, spark):
-    # late round 10: one quantified INTERIOR stage dispatches
-    # run_kernel_chain_quant on the batch path. Two arms per 'a':
+    # one quantified INTERIOR stage = the chain_quant shape on the batch
+    # path (run_shape runs a key this small on the row loop, which the
+    # kernel is pinned equal to). Two arms per 'a':
     #  a1 (id=1@1s): b@2s captured, completion c@3s -> one b, b[1] NULL
     #  a2 (id=1@4s): b@5s and b@6s captured (greedy below m=2), c@7s
     # b[1] past the captured count must be NULL (Siddhi semantics; was an
@@ -247,3 +248,50 @@ def test_chain_quant_mid_kernel_and_null_index(cep, spark):
     ).returns("Out")
     got = sorted((r.an, r.b0, r.b1, r.cn) for r in out.collect())
     assert got == [("a1", "b1", None, "c1"), ("a2", "b2", "b3", "c2")]
+
+
+def test_pattern_engine_is_logged_once_per_compile(spark, tmp_path, caplog):
+    """Compiling a pattern logs which engine runs it — the JVM ``sql`` fast
+    path, a numpy kernel shape, or the ``nfa`` row loop — once, batch and
+    streaming alike; no job runs, so nothing logs per visit."""
+    import logging
+
+    caplog.set_level(logging.INFO, logger="flink_siddhi_spark")
+    rows = [(1, "x", 1.0, 1000), (2, "y", 1.0, 2000), (3, "z", 1.0, 3000)]
+    schema = "id int, name string, price double, timestamp long"
+    (tmp_path / "in").mkdir()
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
+    two = "every a = s[name == 'x'] -> b = s[name == 'y']"
+    three = two + " -> c = s[name == 'z']"
+    strict3 = "every a = s[name == 'x'] , b = s[name == 'y'] , c = s[name == 'z']"
+    absent = two + " -> not s[name == 'z'] for 1 sec"
+    group = "every a = s[name == 'x'] and b = s[name == 'y'] -> c = s[name == 'z']"
+    cases = [
+        ("batch", two, "sql"),
+        ("batch", three, "chain"),
+        ("batch", strict3, "chain"),
+        ("batch", absent, "nfa"),  # batch confirms absence at stream close
+        ("batch", group, "nfa"),
+        ("streaming", two, "chain"),
+        ("streaming", absent, "chain_absence"),
+        ("streaming", group, "nfa"),
+    ]
+    for mode, pattern, engine in cases:
+        cep = SiddhiCEP(spark)
+        if mode == "batch":
+            cep.define("s", make_events(spark, rows), "id", "name", "price",
+                       "timestamp", ts_field="timestamp")
+        else:
+            cep.register_stream("s", stream, "id", "name", "price",
+                                "timestamp", ts_field="timestamp")
+        caplog.clear()
+        cep.from_("s").cql(
+            f"from {pattern} select a.id as a_id insert into Out"
+        ).returns("Out")
+        got = [
+            r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("pattern engine")
+        ]
+        assert got == [f"pattern engine ({mode}): {engine}"], (
+            mode, pattern, got,
+        )

@@ -312,3 +312,54 @@ def test_streaming_plain_chain_first_attempt_across_batches(spark):
         for r in _batch_collect(spark, rows, PLAIN_CHAIN_CQL)
     )
     assert got == want, want
+
+
+STRICT_CHAIN_CQL = (
+    "partition with (price of s) begin "
+    "from every a = s[name == 'x'] , b = s[name == 'y'] , c = s[name == 'z'] "
+    "within 6500 milliseconds "
+    "select a.price as u, a.id as a_id, b.id as b_id, c.id as c_id "
+    "insert into Out; end"
+)
+
+
+def test_streaming_strict_chain_across_batches(spark):
+    """``every a , b , c within t`` on the chain kernel's strict
+    connectors, streamed in 3 micro-batches whose boundaries fall inside
+    strict steps: a partial whose next row has not arrived waits across the
+    boundary, and one whose next row arrives and does not match (or lies
+    outside the window) dies. Equals batch ``cql()`` row for row."""
+    rows = [
+        (0, "x", 1_000, 1),
+        (10, "x", 1_000, 2),
+        (11, "x", 2_000, 2),   # key 2: kills the partial armed at id 10
+        # -- boundary: key 1's x and key 2's second x wait for their y
+        (1, "y", 2_000, 1),
+        (2, "z", 3_000, 1),    # key 1 match (0, 1, 2)
+        (3, "x", 4_000, 1),
+        (4, "y", 5_000, 1),
+        (12, "y", 3_000, 2),
+        # -- boundary: key 1's (3, 4) and key 2's (11, 12) wait for their z
+        (5, "w", 6_000, 1),    # strict breaker: (3, 4) dies
+        (6, "x", 7_000, 1),
+        (7, "y", 8_000, 1),
+        (8, "z", 15_000, 1),   # beyond the window of (6, 7): dies
+        (13, "z", 4_000, 2),   # key 2 match (11, 12, 13)
+        (14, "x", 5_000, 2),
+        (15, "y", 6_000, 2),   # still pending at the end
+    ]
+    batches = [rows[:3], rows[3:8], rows[8:]]
+    root = tempfile.mkdtemp(prefix="sc3_")
+    try:
+        got = sorted(
+            (int(r.u), r.a_id, r.b_id, r.c_id)
+            for r in _run_streaming(spark, batches, STRICT_CHAIN_CQL, root)
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert got == [(1, 0, 1, 2), (2, 11, 12, 13)], got
+    want = sorted(
+        (int(r.u), r.a_id, r.b_id, r.c_id)
+        for r in _batch_collect(spark, rows, STRICT_CHAIN_CQL)
+    )
+    assert got == want, want

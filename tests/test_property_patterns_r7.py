@@ -367,24 +367,25 @@ def _run_streaming(spark, batches, cql, tmp_root, **cep_kwargs):
 )
 def test_streaming_batch_parity_fuzz(spark, shape):
     """20 randomized feeds per shape, split across 3 micro-batches, streamed
-    through the NFA (kernel path for followed_by/strict/three_step, general
-    loop for quantifier) and compared row-for-row with the batch operator on
-    the same events. followed_by and three_step additionally inject a LATE x
-    (in-window, out-of-order across batches) — the one late-arrival class
-    whose eager emission is order-independent, exercising the full-rerun
-    fallback (and, for three_step, the round-8 kernel3 resume of
+    through ``run_shape`` (the chain kernel for followed_by/strict and the
+    k-step chains, the chain_quant kernel or the row loop by visit size for
+    the quantified shapes) and compared row-for-row with the batch operator
+    on the same events. followed_by and three_step additionally inject a
+    LATE x (in-window, out-of-order across batches) — the one late-arrival
+    class whose eager emission is order-independent, exercising the
+    full-rerun fallback (and, for three_step, the chain kernel's resume of
     general-NFA state).
 
-    Round 9 (VERDICT r8 ask #5) extends the sweep to the k>=3 shapes that
-    fall to the GENERAL NFA (no vectorized kernel): strict chains
-    (`a , b , c[, d]`), quantified chains (`a<1:2> -> b -> c[ -> d]` — the
-    4-step one quantified at TWO stages with an overlapping predicate), and
-    an and-group prefix (`a and b -> c`). All carry `within` so watermark
-    eviction is active mid-feed (spans are ~6x the window); they stay
-    in-order across batches (strict/quantified semantics are
-    order-DEPENDENT under eager emission — PARITY.md deviation 17 — so late
-    injection would assert a contract the engine intentionally does not
-    make), exercising the general NFA's cross-batch resume at k>=3."""
+    The k>=3 arms cover strict chains (`a , b , c[, d]` — the chain
+    kernel's strict connectors), quantified chains (`a<1:2> -> b -> c[ ->
+    d]` — the 4-step one quantified at TWO stages with an overlapping
+    predicate), and an and-group prefix (`a and b -> c`, the only arm on
+    the GENERAL NFA). All carry `within` so watermark eviction is active
+    mid-feed (spans are ~6x the window); they stay in-order across batches
+    (strict/quantified semantics are order-DEPENDENT under eager emission —
+    PARITY.md deviation 17 — so late injection would assert a contract the
+    engine intentionally does not make), exercising each engine's
+    cross-batch resume at k>=3."""
     import random
 
     rng = random.Random(hash(shape) & 0xFFFF)
@@ -427,7 +428,8 @@ def test_streaming_batch_parity_fuzz(spark, shape):
             "select a.price as u, c.id as a_id, d.id as b_id "
             "insert into Out; end"
         ),
-        # ---- round-9 general-NFA arms (no kernel classifies these) ----
+        # ---- k>=3 arms: strict chains (chain kernel), quantified chains
+        # (chain_quant), and-group prefix (general NFA) ----
         "strict_chain3": (
             "partition with (price of s) begin "
             "from every a = s[name == 'x'] , b = s[name == 'y'] "

@@ -141,6 +141,45 @@ def test_query_manager_lifecycle(spark, sf_dir):
     assert "bad" not in qm.queries
 
 
+def test_query_manager_bad_update_keeps_running_plan():
+    """An update whose CQL does not compile raises and leaves the running
+    plan in place, handle and all; a good update then replaces it."""
+    from flink_siddhi_spark.errors import SiddhiParserException
+    from flink_siddhi_spark.siddhiql.parser import parse_query
+    from flink_siddhi_spark.streaming.query_manager import QueryManager
+
+    class Plan:
+        isStreaming = True
+
+        def __init__(self, text):
+            self.text = text
+
+    class Handle:
+        stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+    def compile_fn(plan_text):
+        parse_query(plan_text)
+        return Plan(plan_text)
+
+    good = "from s[price > 1.0] select id insert into Out"
+    qm = QueryManager(compile_fn, sink_fn=lambda qid, df: Handle())
+    qm.add("p1", good)
+    handle = qm.queries["p1"].query_handle
+    with pytest.raises(SiddhiParserException):
+        qm.update("p1", "from s[price > ] select insert into")
+    assert qm.queries["p1"].query_handle is handle
+    assert not handle.stopped
+    assert qm.queries["p1"].plan_text == good
+    newer = "from s[price > 2.0] select id insert into Out"
+    qm.update("p1", newer)
+    assert handle.stopped
+    assert qm.queries["p1"].plan_text == newer
+    assert qm.queries["p1"].query_handle is not handle
+
+
 def test_streaming_group_agg_update(spark, tmp_path):
     rows = [(i % 2, "e", float(i), 1000 * i) for i in range(10)]
     path = write_events(spark, tmp_path / "in4", rows)
