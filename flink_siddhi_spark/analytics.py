@@ -764,12 +764,10 @@ def funnel_stream(
     formats differ between modes, so pick at query creation."""
     import json as _json
 
-    from typing import Iterator
-
-    import pandas as pd
-
     from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from .streaming.bucketing import keyed_state
 
     if len(steps) < 2:
         raise ValueError("funnel needs at least two steps")
@@ -792,29 +790,32 @@ def funnel_stream(
     )
     state_schema = T.StructType([T.StructField("buf", T.StringType())])
 
-    def _advance(key, buf, wm):
-        return _funnel_advance(key, buf, wm, steps, horizon)
-
-    def _key_cycle(key, buf, idx, ms, wm):
-        """One key's visit: merge new (step_idx, ms) arrays into the sorted
-        buffer, advance episodes at the watermark. Returns
-        ``(rows, buf, next_fire_ms | None)`` — None means the key's state
-        is drained. Shared by the per-key and bucketed group modes."""
-        if idx is not None and len(idx):
-            dirty = False
-            for i in range(len(steps)):
-                sel = idx == i
-                if sel.any():
-                    buf[i].extend(ms[sel].tolist())
-                    dirty = True
-            if dirty:
-                # _advance bisects: sorted is the state invariant. Stored
-                # state is already sorted, so timsort sees two runs — ~O(n)
-                for b in buf:
-                    b.sort()
-        rows, buf = _advance(key, buf, wm)
+    def step(key, rows, state):
+        """One key's visit: merge new (step_idx, ms) rows into the sorted
+        buffer, advance episodes at the watermark, drop drained state."""
+        buf = (
+            _json.loads(state.get[0])
+            if state.exists
+            else [[] for _ in steps]
+        )
+        if len(rows):
+            # events arrive pre-decoded JVM-side as (step_idx, ms) — no
+            # pd.to_datetime / per-row dict per key (the round-7 profiling:
+            # per-key-visit pandas machinery is the streaming floor)
+            idx, ms = rows.col("__i"), rows.col("__m")
+            for i, b in enumerate(buf):
+                b.extend(ms[idx == i].tolist())
+        # _funnel_advance bisects: sorted is the state invariant. Stored
+        # state is already sorted (pre-round-8 state was arrival-ordered),
+        # so timsort sees two runs — ~O(n)
+        for b in buf:
+            b.sort()
+        wm = state.getCurrentWatermarkMs()
+        out, buf = _funnel_advance(key, buf, wm, steps, horizon)
         if not any(buf):
-            return rows, buf, None
+            if state.exists:
+                state.remove()
+            return out
         if buf[0]:
             # fire when the watermark passes the open episode's horizon
             # (clamped above the current watermark — SS rejects a timeout
@@ -823,147 +824,9 @@ def funnel_stream(
         else:
             # anchorless events: dead once the watermark passes them
             fire = max(max(x for b in buf for x in b) + 1, wm + 1)
-        return rows, buf, fire
-
-    def proc(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-
-        buf = (
-            _json.loads(state.get[0])
-            if state.exists
-            else [[] for _ in steps]
-        )
-        # state written by pre-round-8 code was arrival-ordered; a resumed
-        # key whose first visit is a timeout fire (no new rows → dirty
-        # never set) must not bisect an unsorted buffer. Timsort on the
-        # already-sorted post-r8 state is ~O(n).
-        for b in buf:
-            b.sort()
-        idx = ms = None
-        if not state.hasTimedOut:
-            # events arrive pre-decoded JVM-side as (step_idx, ms) — no
-            # pd.to_datetime / per-row dict in the per-key path (the
-            # round-7 profiling: per-key-visit pandas machinery is the
-            # streaming floor)
-            idxs, mss = [], []
-            for pdf in pdfs:
-                if len(pdf):
-                    idxs.append(pdf["__i"].to_numpy())
-                    mss.append(pdf["__m"].to_numpy())
-            if idxs:
-                idx = _np.concatenate(idxs) if len(idxs) > 1 else idxs[0]
-                ms = _np.concatenate(mss) if len(mss) > 1 else mss[0]
-        wm = state.getCurrentWatermarkMs()
-        rows, buf, fire = _key_cycle(key, buf, idx, ms, wm)
-        if fire is not None:
-            state.update((_json.dumps(buf),))
-            state.setTimeoutTimestamp(fire)
-        elif state.exists:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[user_col, "step_idx", "step", "t_ms"]
-            )
-
-    bucket_state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("pks", T.ArrayType(T.StringType())),
-            T.StructField("bufs", T.ArrayType(T.StringType())),
-            T.StructField("fires", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def proc_bucket(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Bucketed mode (round 9): one GroupState visit serves every
-        member key — keys with new rows plus stored keys whose own fire
-        time passed the watermark. Advancement is watermark-determined, so
-        visiting a key at a sibling's trigger emits the same rows it would
-        have emitted on its own timer. The bucket timer is the min over
-        member fire times; untouched keys' buffers pass through unparsed.
-        """
-        import numpy as _np
-
-        if state.exists:
-            stored_n, pks, bufs, fires = state.get
-            if stored_n != key_buckets:
-                # key->bucket routing changed: old state would sit in
-                # buckets its keys no longer hash to — silent wrong
-                # results. Fail loudly instead.
-                raise RuntimeError(
-                    f"key_buckets changed across restart (checkpoint has "
-                    f"{stored_n}, query asks {key_buckets}); bucket count "
-                    "is fixed at the checkpoint's creation — use a new "
-                    "checkpoint"
-                )
-            st = {k: [b, f] for k, b, f in zip(pks, bufs, fires)}
-        else:
-            st = {}
-        per_key: dict = {}
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            codes, uniq = pd.factorize(pdf[user_col], use_na_sentinel=False)
-            idx_all = pdf["__i"].to_numpy()
-            ms_all = pdf["__m"].to_numpy()
-            order = _np.argsort(codes, kind="stable")
-            bounds = _np.searchsorted(
-                codes[order], _np.arange(len(uniq) + 1)
-            )
-            keys_py = uniq.tolist()
-            for i in range(len(keys_py)):
-                sl = order[bounds[i]:bounds[i + 1]]
-                kenc = _json.dumps(keys_py[i])
-                prev = per_key.get(kenc)
-                if prev is None:
-                    per_key[kenc] = [idx_all[sl], ms_all[sl]]
-                else:
-                    prev[0] = _np.concatenate([prev[0], idx_all[sl]])
-                    prev[1] = _np.concatenate([prev[1], ms_all[sl]])
-        wm = state.getCurrentWatermarkMs()
-        due = [
-            k for k, v in st.items()
-            if v[1] <= wm and k not in per_key
-        ]
-        out_rows = []
-        for kenc in [*per_key, *due]:
-            arr = per_key.get(kenc)
-            prev = st.get(kenc)
-            buf = (
-                _json.loads(prev[0]) if prev is not None
-                else [[] for _ in steps]
-            )
-            rows, buf, fire = _key_cycle(
-                (_json.loads(kenc),), buf,
-                arr[0] if arr is not None else None,
-                arr[1] if arr is not None else None, wm,
-            )
-            out_rows.extend(rows)
-            if fire is None:
-                st.pop(kenc, None)
-            else:
-                st[kenc] = [_json.dumps(buf), int(fire)]
-        if st:
-            ks = list(st)
-            state.update((
-                key_buckets,
-                ks,
-                [st[k][0] for k in ks],
-                [st[k][1] for k in ks],
-            ))
-            state.setTimeoutTimestamp(
-                max(min(st[k][1] for k in ks), wm + 1)
-            )
-        elif state.exists:
-            state.remove()
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows, columns=[user_col, "step_idx", "step", "t_ms"]
-            )
+        state.update((_json.dumps(buf),))
+        state.setTimeoutTimestamp(fire)
+        return out
 
     idx_expr = F.lit(None).cast("int")
     for i, s in reversed(list(enumerate(steps))):
@@ -978,31 +841,9 @@ def funnel_stream(
             F.unix_millis(F.col(ts_col).cast("timestamp")).alias("__m"),
         )
     )
-    if key_buckets:
-        if not isinstance(
-            user_t,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-             T.FloatType, T.DoubleType, T.StringType, T.BooleanType),
-        ):
-            raise ValueError(
-                f"key_buckets: user column '{user_col}' of type "
-                f"{user_t.simpleString()} — bucketed keys must be "
-                "numeric/string/boolean"
-            )
-        return (
-            base.withColumn(
-                "__bucket",
-                F.pmod(F.xxhash64(F.col(user_col)), F.lit(key_buckets)),
-            )
-            .groupBy("__bucket")
-            .applyInPandasWithState(
-                proc_bucket, out_schema, bucket_state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return base.groupBy(user_col).applyInPandasWithState(
-        proc, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state(
+        base, [user_col], step, out_schema, state_schema,
+        GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 
 
@@ -1073,12 +914,12 @@ def attribution_stream(
     idle-source caveat — see funnel_stream)."""
     import json as _json
 
-    from typing import Iterator
-
     import pandas as pd
 
     from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from .streaming.bucketing import keyed_state
 
     horizon = int(horizon_ms)
     touch_set = set(touch_types)
@@ -1099,27 +940,36 @@ def attribution_stream(
     ]
     state_schema = T.StructType([T.StructField("buf", T.StringType())])
 
-    def _key_cycle(key_val, touches, pending, new_rows, wm):
-        """One key's visit: ingest decoded event dicts, credit every
-        finalized conversion, prune stale touches. Returns
-        ``(rows, touches, pending, fire | None)`` — None means drained.
-        Shared by the per-key and bucketed group modes."""
+    def step(key, rows, state):
+        """One key's visit: ingest the new touches and conversions, credit
+        every finalized conversion, prune stale touches, drop drained
+        state."""
         import bisect as _bisect
 
-        if new_rows:
-            new_t = []
-            for d in new_rows:
-                tp = d["t"]
-                # ids ride json natively (int/str), keeping the batch
-                # twin's lexicographic (ts, id) tie-break
-                if tp in touch_set:
-                    new_t.append((d["m"], d["i"], tp))
-                elif tp == conversion_type:
-                    pending.append((d["m"], d["i"]))
-            if new_t:
-                touches.extend(new_t)
-                touches.sort()
-        rows, still = [], []
+        if state.exists:
+            t_raw, p_raw = _json.loads(state.get[0])
+            # tuples, not lists: bisect compares the probe tuple against
+            # entries, and a 3-tuple equal to the 2-tuple probe in (ts, id)
+            # sorts AFTER it — exactly the strictly-below contract
+            touches = [tuple(t) for t in t_raw]
+            pending = [tuple(c) for c in p_raw]
+        else:
+            touches, pending = [], []
+        new_t = []
+        for s in rows.col("__row").tolist():
+            d = _json.loads(s)
+            tp = d["t"]
+            # ids ride json natively (int/str), keeping the batch twin's
+            # lexicographic (ts, id) tie-break
+            if tp in touch_set:
+                new_t.append((d["m"], d["i"], tp))
+            elif tp == conversion_type:
+                pending.append((d["m"], d["i"]))
+        if new_t:
+            touches.extend(new_t)
+            touches.sort()
+        wm = state.getCurrentWatermarkMs()
+        out, still = [], []
         for cms, cid in pending:
             if cms >= wm:  # a touch at this exact ts could still arrive
                 still.append((cms, cid))
@@ -1131,9 +981,9 @@ def attribution_stream(
             best = touches[j - 1] if j else None
             if best is not None and cms - best[0] > horizon:
                 best = None
-            rows.append(
+            out.append(
                 (
-                    cid, key_val, pd.Timestamp(cms, unit="ms"),
+                    cid, key[0], pd.Timestamp(cms, unit="ms", tz="UTC"),
                     best[1] if best else None,
                     best[2] if best else None,
                     (cms - best[0]) if best else None,
@@ -1148,7 +998,9 @@ def attribution_stream(
             if k:
                 touches = touches[k:]
         if not (pending or touches):
-            return rows, touches, pending, None
+            if state.exists:
+                state.remove()
+            return out
         if pending:
             # fire when the watermark passes the earliest pending
             # conversion, finalizing it (clamped above the watermark —
@@ -1157,123 +1009,9 @@ def attribution_stream(
         else:
             # touches alone: dead once the horizon passes them all
             fire = max(touches[-1][0] + horizon + 1, wm + 1)
-        return rows, touches, pending, fire
-
-    def proc(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            t_raw, p_raw = _json.loads(state.get[0])
-            # tuples, not lists: bisect compares the probe tuple against
-            # entries, and a 3-tuple equal to the 2-tuple probe in (ts, id)
-            # sorts AFTER it — exactly the strictly-below contract
-            touches = [tuple(t) for t in t_raw]
-            pending = [tuple(c) for c in p_raw]
-        else:
-            touches, pending = [], []
-        new_rows = []
-        if not state.hasTimedOut:
-            loads = _json.loads
-            for pdf in pdfs:
-                if len(pdf):
-                    new_rows.extend(
-                        loads(s) for s in pdf["__row"].tolist()
-                    )
-        wm = state.getCurrentWatermarkMs()
-        rows, touches, pending, fire = _key_cycle(
-            key[0], touches, pending, new_rows, wm
-        )
-        if fire is not None:
-            state.update((_json.dumps([touches, pending]),))
-            state.setTimeoutTimestamp(fire)
-        elif state.exists:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    bucket_state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("pks", T.ArrayType(T.StringType())),
-            T.StructField("bufs", T.ArrayType(T.StringType())),
-            T.StructField("fires", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def proc_bucket(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-
-        if state.exists:
-            stored_n, pks, bufs, fires = state.get
-            if stored_n != key_buckets:
-                # key->bucket routing changed: old state would sit in
-                # buckets its keys no longer hash to — silent wrong
-                # results. Fail loudly instead.
-                raise RuntimeError(
-                    f"key_buckets changed across restart (checkpoint has "
-                    f"{stored_n}, query asks {key_buckets}); bucket count "
-                    "is fixed at the checkpoint's creation — use a new "
-                    "checkpoint"
-                )
-            st = {k: [b, f] for k, b, f in zip(pks, bufs, fires)}
-        else:
-            st = {}
-        loads = _json.loads
-        per_key: dict = {}
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            codes, uniq = pd.factorize(pdf[user_col], use_na_sentinel=False)
-            strs = pdf["__row"].to_numpy()
-            order = _np.argsort(codes, kind="stable")
-            bounds = _np.searchsorted(
-                codes[order], _np.arange(len(uniq) + 1)
-            )
-            keys_py = uniq.tolist()
-            for i in range(len(keys_py)):
-                lst = per_key.setdefault(_json.dumps(keys_py[i]), [])
-                lst.extend(
-                    loads(s)
-                    for s in strs[order[bounds[i]:bounds[i + 1]]].tolist()
-                )
-        wm = state.getCurrentWatermarkMs()
-        due = [
-            k for k, v in st.items() if v[1] <= wm and k not in per_key
-        ]
-        out_rows = []
-        for kenc in [*per_key, *due]:
-            prev = st.get(kenc)
-            if prev is not None:
-                t_raw, p_raw = loads(prev[0])
-                touches = [tuple(t) for t in t_raw]
-                pending = [tuple(c) for c in p_raw]
-            else:
-                touches, pending = [], []
-            rows, touches, pending, fire = _key_cycle(
-                loads(kenc), touches, pending, per_key.get(kenc, []), wm
-            )
-            out_rows.extend(rows)
-            if fire is None:
-                st.pop(kenc, None)
-            else:
-                st[kenc] = [_json.dumps([touches, pending]), int(fire)]
-        if st:
-            ks = list(st)
-            state.update((
-                key_buckets,
-                ks,
-                [st[k][0] for k in ks],
-                [st[k][1] for k in ks],
-            ))
-            state.setTimeoutTimestamp(
-                max(min(st[k][1] for k in ks), wm + 1)
-            )
-        elif state.exists:
-            state.remove()
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_cols)
+        state.update((_json.dumps([touches, pending]),))
+        state.setTimeoutTimestamp(fire)
+        return out
 
     base = (
         df.withWatermark(ts_col, watermark)
@@ -1293,31 +1031,9 @@ def attribution_stream(
             ).alias("__row"),
         )
     )
-    if key_buckets:
-        if not isinstance(
-            user_t,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-             T.FloatType, T.DoubleType, T.StringType, T.BooleanType),
-        ):
-            raise ValueError(
-                f"key_buckets: user column '{user_col}' of type "
-                f"{user_t.simpleString()} — bucketed keys must be "
-                "numeric/string/boolean"
-            )
-        return (
-            base.withColumn(
-                "__bucket",
-                F.pmod(F.xxhash64(F.col(user_col)), F.lit(key_buckets)),
-            )
-            .groupBy("__bucket")
-            .applyInPandasWithState(
-                proc_bucket, out_schema, bucket_state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return base.groupBy(user_col).applyInPandasWithState(
-        proc, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state(
+        base, [user_col], step, out_schema, state_schema,
+        GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 
 
@@ -1393,12 +1109,10 @@ def transitions_stream(
     carry a no-timer sentinel so they are revisited on data only."""
     import json as _json
 
-    from typing import Iterator
-
-    import pandas as pd
-
     from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from .streaming.bucketing import keyed_state
 
     out_schema = T.StructType(
         [
@@ -1410,145 +1124,36 @@ def transitions_stream(
         ]
     )
     state_schema = T.StructType([T.StructField("buf", T.StringType())])
-    # "no timer" sentinel for the bucketed fires array: an anchor-only key
-    # is revisited on new data only, never due by time
-    _NO_FIRE = (1 << 62)
 
-    def _key_cycle(key_val, anchor, buf, wm):
+    def step(key, rows, state):
         """One key's visit: sort the merged buffer, finalize the prefix
-        below the watermark, chain pairs from the anchor. Returns
-        ``(rows, anchor, rest, fire_ms | None)`` — None means no timer
-        (anchor-only state, revisited on data only). Shared by both group
-        modes."""
+        below the watermark, chain pairs from the anchor. Anchor-only
+        state arms no timer: the key is revisited on new data only."""
+        anchor, buf = (
+            _json.loads(state.get[0]) if state.exists else (None, [])
+        )
+        # packed single-json-column input (the round-7/8 streaming
+        # treatment): ids ride json natively, so string ids keep the batch
+        # twin's lexicographic (ts, id) tie-break
+        for s in rows.col("__row").tolist():
+            d = _json.loads(s)
+            buf.append((d["m"], d["i"], d["t"]))
         buf.sort(key=lambda e: (e[0], e[1]))
-        rows = []
-        rest = []
+        wm = state.getCurrentWatermarkMs()
+        out, rest = [], []
         for e in buf:
             if e[0] < wm and not rest:
                 # final: ordered after every already-final event, and no
                 # future arrival can precede it
                 if anchor is not None:
-                    rows.append((key_val, anchor[2], e[2], e[0], e[1]))
+                    out.append((key[0], anchor[2], e[2], e[0], e[1]))
                 anchor = e
             else:
                 rest.append(e)
-        fire = (
-            max(max(e[0] for e in rest) + 1, wm + 1) if rest else None
-        )
-        return rows, anchor, rest, fire
-
-    def proc(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        anchor, buf = (
-            _json.loads(state.get[0]) if state.exists else (None, [])
-        )
-        if not state.hasTimedOut:
-            loads = _json.loads
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                # packed single-json-column input (the round-7/8 streaming
-                # treatment): ids ride json natively, so string ids keep
-                # the batch twin's lexicographic (ts, id) tie-break
-                for s in pdf["__row"].tolist():
-                    d = loads(s)
-                    buf.append((d["m"], d["i"], d["t"]))
-        wm = state.getCurrentWatermarkMs()
-        rows, anchor, rest, fire = _key_cycle(key[0], anchor, buf, wm)
         state.update((_json.dumps([anchor, rest]),))
-        if fire is not None:
-            state.setTimeoutTimestamp(fire)
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[user_col, "from_type", "to_type", "to_ms", "to_id"],
-            )
-
-    bucket_state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("pks", T.ArrayType(T.StringType())),
-            T.StructField("bufs", T.ArrayType(T.StringType())),
-            T.StructField("fires", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def proc_bucket(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-
-        if state.exists:
-            stored_n, pks, bufs, fires = state.get
-            if stored_n != key_buckets:
-                # key->bucket routing changed: old state would sit in
-                # buckets its keys no longer hash to — silent wrong
-                # results. Fail loudly instead.
-                raise RuntimeError(
-                    f"key_buckets changed across restart (checkpoint has "
-                    f"{stored_n}, query asks {key_buckets}); bucket count "
-                    "is fixed at the checkpoint's creation — use a new "
-                    "checkpoint"
-                )
-            st = {k: [b, f] for k, b, f in zip(pks, bufs, fires)}
-        else:
-            st = {}
-        loads = _json.loads
-        per_key: dict = {}
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            codes, uniq = pd.factorize(pdf[user_col], use_na_sentinel=False)
-            strs = pdf["__row"].to_numpy()
-            order = _np.argsort(codes, kind="stable")
-            bounds = _np.searchsorted(
-                codes[order], _np.arange(len(uniq) + 1)
-            )
-            keys_py = uniq.tolist()
-            for i in range(len(keys_py)):
-                lst = per_key.setdefault(_json.dumps(keys_py[i]), [])
-                for s in strs[order[bounds[i]:bounds[i + 1]]].tolist():
-                    d = loads(s)
-                    lst.append((d["m"], d["i"], d["t"]))
-        wm = state.getCurrentWatermarkMs()
-        due = [
-            k for k, v in st.items() if v[1] <= wm and k not in per_key
-        ]
-        out_rows = []
-        for kenc in [*per_key, *due]:
-            prev = st.get(kenc)
-            if prev is not None:
-                anchor, buf = loads(prev[0])
-            else:
-                anchor, buf = None, []
-            buf.extend(per_key.get(kenc, []))
-            rows, anchor, rest, fire = _key_cycle(
-                loads(kenc), anchor, buf, wm
-            )
-            out_rows.extend(rows)
-            st[kenc] = [
-                _json.dumps([anchor, rest]),
-                _NO_FIRE if fire is None else int(fire),
-            ]
-        if st:
-            ks = list(st)
-            state.update((
-                key_buckets,
-                ks,
-                [st[k][0] for k in ks],
-                [st[k][1] for k in ks],
-            ))
-            real = [st[k][1] for k in ks if st[k][1] != _NO_FIRE]
-            if real:
-                state.setTimeoutTimestamp(max(min(real), wm + 1))
-        elif state.exists:
-            state.remove()
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=[user_col, "from_type", "to_type", "to_ms", "to_id"],
-            )
+        if rest:
+            state.setTimeoutTimestamp(max(max(e[0] for e in rest) + 1, wm + 1))
+        return out
 
     base = (
         df.withWatermark(ts_col, watermark)
@@ -1565,32 +1170,9 @@ def transitions_stream(
             ).alias("__row"),
         )
     )
-    if key_buckets:
-        user_t = df.schema[user_col].dataType
-        if not isinstance(
-            user_t,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-             T.FloatType, T.DoubleType, T.StringType, T.BooleanType),
-        ):
-            raise ValueError(
-                f"key_buckets: user column '{user_col}' of type "
-                f"{user_t.simpleString()} — bucketed keys must be "
-                "numeric/string/boolean"
-            )
-        return (
-            base.withColumn(
-                "__bucket",
-                F.pmod(F.xxhash64(F.col(user_col)), F.lit(key_buckets)),
-            )
-            .groupBy("__bucket")
-            .applyInPandasWithState(
-                proc_bucket, out_schema, bucket_state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-    return base.groupBy(user_col).applyInPandasWithState(
-        proc, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state(
+        base, [user_col], step, out_schema, state_schema,
+        GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 
 
@@ -1632,20 +1214,19 @@ def retention_pairs_stream(
     (epoch_ms // 86_400_000), matching ``to_date`` under the repo's
     pinned UTC session timezone.
 
-    ``key_buckets=N`` (round 10, VERDICT r9 ask #3) runs the UNCHANGED
-    per-key proc through the generic bucketed adapter
-    (streaming/bucketing.py): one Arrow group + GroupState visit serves
-    ~users/N users, amortizing the fixed per-key-visit machinery on
-    high-cardinality user spaces; semantics-invisible (PARITY.md
-    deviation 18)."""
+    ``key_buckets=N`` (round 10) runs the same step per member key of a
+    hash bucket (streaming/bucketing.py): one Arrow group + GroupState
+    visit serves ~users/N users, amortizing the fixed per-key-visit
+    machinery on high-cardinality user spaces; semantics-invisible
+    (PARITY.md deviation 18)."""
     import json as _json
-
-    from typing import Iterator
 
     import pandas as pd
 
     from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from .streaming.bucketing import keyed_state
 
     DAY = 86_400_000
     out_schema = T.StructType(
@@ -1657,31 +1238,28 @@ def retention_pairs_stream(
     )
     state_schema = T.StructType([T.StructField("buf", T.StringType())])
 
-    def proc(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, rows, state):
         cohort, emitted, pending = (
             _json.loads(state.get[0]) if state.exists else (None, [], [])
         )
         emitted, pending = set(emitted), set(pending)
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                ms = (
-                    pd.to_datetime(pdf[ts_col]).astype("int64") // 1_000_000
-                ).tolist()
-                for m in ms:
-                    d = int(m) // DAY
-                    pending.add(d)
-                    if cohort is None or d < cohort:
-                        cohort = d
+        if len(rows):
+            ms = (
+                pd.to_datetime(rows.col(ts_col)).astype("int64") // 1_000_000
+            ).tolist()
+            for m in ms:
+                d = int(m) // DAY
+                pending.add(d)
+                if cohort is None or d < cohort:
+                    cohort = d
         wm = state.getCurrentWatermarkMs()
-        rows = []
+        out = []
         # cohort is FINAL once the watermark passes its day start: any
         # earlier event would be below the watermark and dropped
         if cohort is not None and wm > cohort * DAY:
             for d in sorted(pending):
                 if d not in emitted:
-                    rows.append((key[0], cohort, d))
+                    out.append((key[0], cohort, d))
                     emitted.add(d)
             pending = set()
             # days below the watermark cannot re-arrive — forget them
@@ -1692,22 +1270,12 @@ def retention_pairs_stream(
         if pending and cohort is not None:
             # flush pendings when the watermark finalizes the cohort
             state.setTimeoutTimestamp(max(cohort * DAY + 1, wm + 1))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[user_col, "cohort_day_num", "day_num"]
-            )
+        return out
 
     base = df.withWatermark(ts_col, watermark).select(user_col, ts_col)
-    if key_buckets:
-        from .streaming.bucketing import bucketed_stateful
-
-        return bucketed_stateful(
-            base, [user_col], key_buckets, proc, out_schema,
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    return base.groupBy(user_col).applyInPandasWithState(
-        proc, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return keyed_state(
+        base, [user_col], step, out_schema, state_schema,
+        GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 
 

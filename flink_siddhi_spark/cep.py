@@ -60,8 +60,8 @@ class SiddhiCEP:
         # visit cost over ~keys/N keys per Arrow group. Set for key-heavy
         # workloads (>=10^5 active keys); see README "operating envelope".
         # window_key_buckets does the same for the per-key stateful window
-        # lowerings (length/lengthBatch/timeLength/time/unique) via the
-        # generic adapter in streaming/bucketing.py.
+        # lowerings (length/lengthBatch/timeLength/time/unique); both run
+        # through the keyed-state runner in streaming/bucketing.py.
         self.pattern_key_buckets = pattern_key_buckets
         self.window_key_buckets = window_key_buckets
         # round 10: opt-in state GC for evictable every-patterns — remove a

@@ -8,8 +8,8 @@ matched against the history by event time, so an event carries the right
 row that was current AT ITS TIMESTAMP — not whatever arrived last
 (point-in-time correctness that a snapshot join cannot give).
 
-Shape: tag both streams, union by name, ``applyInPandasWithState`` keyed on
-the join key. State = the last ``max_history`` right rows per key (pickled,
+Shape: tag both streams, union by name, keyed state on the join key
+(streaming/bucketing.py). State = the last ``max_history`` right rows per key (pickled,
 lossless — same serde as the snapshot windows). Per batch: append right
 arrivals to the history, then binary-search each left event's timestamp —
 O(|batch| log |history|) per key, bounded state.
@@ -26,14 +26,14 @@ Caveats (documented contract):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
+
+from .bucketing import keyed_state
 
 _SIDE = "__asof_side"  # 0 = right, 1 = left
 
@@ -52,13 +52,11 @@ def streaming_asof_enrich(
     ``right_ts <= left_ts`` per ``on`` key. Returns the left columns plus
     the (nullable) payload columns.
 
-    ``key_buckets=N`` (round 10, VERDICT r9 ask #3) runs the UNCHANGED
-    per-key proc through the generic bucketed adapter
-    (streaming/bucketing.py — the pickled history rides the adapter's
-    base64 wrapper): one Arrow group + GroupState visit serves ~keys/N
-    keys, amortizing the fixed per-key-visit machinery on
-    high-cardinality key spaces; semantics-invisible (PARITY.md
-    deviation 18)."""
+    ``key_buckets=N`` (round 10) runs the same step per member key of a
+    hash bucket (streaming/bucketing.py): one Arrow group + GroupState
+    visit serves ~keys/N keys, amortizing the fixed per-key-visit
+    machinery on high-cardinality key spaces; semantics-invisible
+    (PARITY.md deviation 18)."""
     if payload is None:
         payload = [c for c in right.columns if c not in (on, right_ts)]
 
@@ -90,7 +88,7 @@ def streaming_asof_enrich(
     left_cols = list(left.columns)
     rcols = [f"__r_{c}" for c in payload]
 
-    def proc(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def step(key, rows, state):
         import pickle
 
         hist = (
@@ -98,7 +96,7 @@ def streaming_asof_enrich(
             if state.exists
             else pd.DataFrame(columns=["__ts"] + rcols)
         )
-        batch = pd.concat(list(pdfs), ignore_index=True)
+        batch = rows.frame()
         new_right = batch[batch[_SIDE] == 0][["__ts"] + rcols]
         if len(new_right):
             # avoid concat-with-empty dtype deprecation: an empty history
@@ -116,24 +114,19 @@ def streaming_asof_enrich(
             state.update((pickle.dumps(hist),))
         lrows = batch[batch[_SIDE] == 1]
         if not len(lrows):
-            yield pd.DataFrame(columns=[f.name for f in out_fields])
-            return
+            return None
         # searchsorted(side='right') - 1 = index of the latest history row
         # with __ts <= event ts (-1 = none)
         idx = hist["__ts"].to_numpy().searchsorted(lrows["__ts"].to_numpy(), side="right") - 1
-        out = lrows[left_cols].reset_index(drop=True)
-        for c in payload:
-            vals = hist[f"__r_{c}"].reset_index(drop=True)
-            out[c] = [vals.iloc[i] if i >= 0 else None for i in idx]
-        yield out
+        payloads = [hist[f"__r_{c}"].tolist() for c in payload]
+        return [
+            (*left, *[(p[i] if i >= 0 else None) for p in payloads])
+            for left, i in zip(
+                lrows[left_cols].itertuples(index=False, name=None), idx.tolist()
+            )
+        ]
 
-    if key_buckets:
-        from .bucketing import bucketed_stateful
-
-        return bucketed_stateful(
-            u, [on], key_buckets, proc, out_schema,
-            GroupStateTimeout.NoTimeout,
-        )
-    return u.groupBy(F.col(on)).applyInPandasWithState(
-        proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        u, [on], step, out_schema, state_schema,
+        GroupStateTimeout.NoTimeout, key_buckets,
     )

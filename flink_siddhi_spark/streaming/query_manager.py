@@ -11,6 +11,7 @@ JSON control events (streaming/control.py).
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass, field
 from typing import Callable, Optional
@@ -19,6 +20,8 @@ from pyspark.sql import DataFrame
 
 from ..errors import SiddhiError
 from .control import MetadataControlEvent, OperationControlEvent, from_json
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -51,6 +54,9 @@ class QueryManager:
         self.sink_fn = sink_fn
         self.checkpoint_root = checkpoint_root
         self.queries: dict[str, ManagedQuery] = {}
+        # (raw event, error) for every control event a control stream
+        # could not apply; the stream goes on with the next event
+        self.rejected: list[tuple[str, Exception]] = []
 
     # ------------------------------------------------------------ operations
     def add(self, query_id: str, plan_text: str) -> None:
@@ -253,12 +259,23 @@ def attach_control_stream(
     data-path collect.
 
     ``order_col`` (e.g. a sequence number) fixes apply order within a batch.
+    An event that fails to apply (malformed JSON, a plan that does not
+    compile, an unknown query id) is logged as a WARNING and appended to
+    ``manager.rejected`` as ``(raw, error)``; the events after it still
+    apply and the control query keeps running.
     Returns the started StreamingQuery managing the control feed."""
 
     def apply_batch(batch_df, _batch_id):
         b = batch_df.orderBy(order_col) if order_col is not None else batch_df
         for row in b.select(value_col).collect():
-            manager.on_control_json(row[0])
+            try:
+                manager.on_control_json(row[0])
+            except Exception as e:
+                _log.warning(
+                    "control event rejected: %r: %s", row[0], e,
+                    exc_info=True,
+                )
+                manager.rejected.append((row[0], e))
 
     w = control_df.writeStream.foreachBatch(apply_batch)
     if checkpoint is not None:

@@ -46,14 +46,14 @@ granularities stream via synthesized calendar-cron buckets (round 4).
 from __future__ import annotations
 
 import logging
-from typing import Iterator, Optional
+from typing import Optional
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..errors import SiddhiPlannerException, UnsupportedFeatureException
 from ..plans.expr import ExprCompiler
@@ -68,6 +68,7 @@ from ..operators.pattern import (
     pattern_engine,
     run_shape,
 )
+from .bucketing import keyed_state
 
 _log = logging.getLogger(__name__)
 
@@ -187,10 +188,11 @@ class StreamingPlanner(BatchPlanner):
         # key-heavy amortization (round 9): when set, pattern queries group
         # by pmod(xxhash64(key), N) instead of the raw key, multiplexing
         # ~keys/N keys through ONE Arrow group + GroupState visit per
-        # micro-batch. The per-key compute is unchanged (the same _key_step
-        # runs per key inside the bucket); what's amortized is the fixed
-        # per-key-VISIT machinery (~280us/visit measured: Arrow group slice,
-        # GroupState proto round-trip) that dominates drains over 10^5 keys.
+        # micro-batch. The per-key compute is unchanged (the keyed-state
+        # driver runs the same step per member key); what's amortized is
+        # the fixed per-key-VISIT machinery (~280us/visit measured: Arrow
+        # group slice, GroupState proto round-trip) that dominates drains
+        # over 10^5 keys.
         # Checkpoint state formats differ between modes — pick at plan time.
         if pattern_key_buckets is not None and pattern_key_buckets < 1:
             raise SiddhiPlannerException(
@@ -198,9 +200,8 @@ class StreamingPlanner(BatchPlanner):
             )
         self.pattern_key_buckets = pattern_key_buckets
         # same lever for the per-key stateful WINDOW lowerings
-        # (length/lengthBatch/timeLength/time/unique) via the generic
-        # adapter in streaming/bucketing.py — the per-key procs run
-        # unchanged against a per-key GroupState shim inside the bucket
+        # (length/lengthBatch/timeLength/time/unique), through the same
+        # keyed-state runner (streaming/bucketing.py)
         if window_key_buckets is not None and window_key_buckets < 1:
             raise SiddhiPlannerException(
                 f"window_key_buckets must be >= 1, got {window_key_buckets}"
@@ -314,10 +315,10 @@ class StreamingPlanner(BatchPlanner):
         ord_cols = [c for c in ord_cols if c in out_cols]
         state_schema = T.StructType([T.StructField("ord", T.StringType())])
 
-        def proc(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        def step(key, rows, state):
             import json as _json
 
-            rows = pd.concat([p[out_cols] for p in pdfs], ignore_index=True)
+            rows = rows.frame()[out_cols]
             rows = rows.sort_values(ord_cols, kind="mergesort").reset_index(drop=True)
 
             def ord_of(i):
@@ -334,30 +335,21 @@ class StreamingPlanner(BatchPlanner):
 
             if first:
                 if state.exists:
-                    yield rows.iloc[0:0]
-                    return
+                    return None
                 state.update(("1",))
-                yield rows.iloc[[0]]
-                return
+                return list(rows.iloc[[0]].itertuples(index=False, name=None))
             cand = len(rows) - 1
             cand_ord = ord_of(cand)
             if state.exists:
                 (stored,) = state.get
                 if _json.loads(stored) >= cand_ord:
-                    yield rows.iloc[0:0]
-                    return
+                    return None
             state.update((_json.dumps(cand_ord),))
-            yield rows.iloc[[cand]]
+            return list(rows.iloc[[cand]].itertuples(index=False, name=None))
 
-        if self.window_key_buckets:
-            from .bucketing import bucketed_stateful
-
-            return bucketed_stateful(
-                df, keys, self.window_key_buckets, proc, out_schema,
-                GroupStateTimeout.NoTimeout,
-            )
-        return df.groupBy(*[F.col(k) for k in keys]).applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        return keyed_state(
+            df, keys, step, out_schema, state_schema,
+            GroupStateTimeout.NoTimeout, self.window_key_buckets,
         )
 
     def _streaming_retention_snapshot(
@@ -409,10 +401,10 @@ class StreamingPlanner(BatchPlanner):
             stored = _pickle.loads(bytes(blob))
             return stored[like.columns]
 
-        def proc(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        def step(key, rows, state):
             import pickle as _pickle
 
-            new = pd.concat([p[out_cols] for p in pdfs], ignore_index=True)
+            new = rows.frame()[out_cols]
             snap = 0
             if state.exists:
                 blob, snap = state.get
@@ -424,10 +416,10 @@ class StreamingPlanner(BatchPlanner):
             retained = retained.sort_values(by, ascending=ascending, kind="mergesort")
             snap += 1
             state.update((_pickle.dumps(rows.reset_index(drop=True)), snap))
-            out = retained.reset_index(drop=True).copy()
-            out[SNAPSHOT_COL] = snap
-            out[SNAPSHOT_COL] = out[SNAPSHOT_COL].astype("int32")
-            yield out
+            return [
+                (*r, snap)
+                for r in retained[out_cols].itertuples(index=False, name=None)
+            ]
 
         if pkey:
             keys = [pkey]
@@ -435,8 +427,9 @@ class StreamingPlanner(BatchPlanner):
             W.warn_global_order(f"streaming #window.{si.window.name} (global retained set)")
             df = df.withColumn("__gk", F.lit(1))
             keys = ["__gk"]
-        return df.groupBy(*keys).applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        return keyed_state(
+            df, keys, step, out_schema, state_schema,
+            GroupStateTimeout.NoTimeout, None,
         )
 
     def _streaming_retained_agg(
@@ -506,11 +499,11 @@ class StreamingPlanner(BatchPlanner):
         # planner holds the catalog's DataFrames — unpicklable on executors)
         agg_over = StreamingPlanner._agg_over
 
-        def proc(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        def step(key, rows, state):
             import math as _math
             import pickle as _pickle
 
-            new = pd.concat([p[out_cols] for p in pdfs], ignore_index=True)
+            new = rows.frame()[out_cols]
             snap = 0
             if state.exists:
                 blob, snap = state.get
@@ -559,7 +552,7 @@ class StreamingPlanner(BatchPlanner):
                 # its aggregates present — only the pathological
                 # no-count, null-key, all-null-agg group is ambiguous).
                 recs.append([None] * (len(out_names) - 1) + [snap])
-            yield pd.DataFrame(recs, columns=out_names)
+            return recs
 
         if pkey:
             keys = [pkey]
@@ -569,8 +562,9 @@ class StreamingPlanner(BatchPlanner):
             )
             df = df.withColumn("__gk", F.lit(1))
             keys = ["__gk"]
-        return df.groupBy(*keys).applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        return keyed_state(
+            df, keys, step, out_schema, state_schema,
+            GroupStateTimeout.NoTimeout, None,
         )
 
     def _streaming_agg(self, df: DataFrame, q: A.Query, si: A.SingleInput, resolver) -> DataFrame:
@@ -844,6 +838,18 @@ class StreamingPlanner(BatchPlanner):
             return len(set(xs))
         raise AssertionError(kind)
 
+    def _keyed_window(self, df, key_names, step, out_schema, state_schema):
+        """The count/time window lowerings' keyed state: one state key per
+        ``key_names`` combination (bucketed by ``window_key_buckets``), or
+        one global key when the query has no group keys."""
+        if not key_names:
+            df = df.withColumn("__gk", F.lit(0))
+        return keyed_state(
+            df, key_names or ["__gk"], step, out_schema, state_schema,
+            GroupStateTimeout.NoTimeout,
+            self.window_key_buckets if key_names else None,
+        )
+
     def _streaming_length_batch(
         self, df: DataFrame, q: A.Query, si: A.SingleInput, key_names: list[str]
     ) -> DataFrame:
@@ -862,32 +868,26 @@ class StreamingPlanner(BatchPlanner):
         )
         out_schema = T.StructType(out_fields)
         state_schema = T.StructType([T.StructField("buffer", T.ArrayType(T.StringType()))])
-        key_struct = [T.StructField(k, field_types[k]) for k in key_names]
 
         ts_in_df = TS_COL in df.columns
         sort_cols = ([TS_COL] if ts_in_df else []) + value_cols
         carry_cols = sort_cols  # what each buffered row needs
         plan_c, key_names_c, n_c = plan, key_names, n
 
-        def proc(key, pdfs, state: GroupState):
+        def step(key, rows, state):
             import json as _json
             import math
 
             buffer = list(state.get[0]) if state.exists else []
-            rows = []
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                if not carry_cols:  # pure count(): row presence is the datum
-                    rows.extend("[]" for _ in range(len(pdf)))
-                    continue
-                part = pdf[carry_cols].sort_values(by=sort_cols)
-                rows.extend(
+            if not carry_cols:  # pure count(): row presence is the datum
+                buffer.extend("[]" for _ in range(len(rows)))
+            elif len(rows):
+                part = rows.frame()[carry_cols].sort_values(by=sort_cols)
+                buffer.extend(
                     _json.dumps([None if (isinstance(v, float) and math.isnan(v)) else v
                                  for v in r])
                     for r in part.itertuples(index=False, name=None)
                 )
-            buffer.extend(rows)
             out = []
             while len(buffer) >= n_c:
                 chunk = [_json.loads(s) for s in buffer[:n_c]]
@@ -918,24 +918,9 @@ class StreamingPlanner(BatchPlanner):
                         rec.append(len({v for v in vals[col] if v is not None}))
                 out.append(rec)
             state.update((buffer,))
-            if out:
-                yield pd.DataFrame(out, columns=[f.name for f in out_fields])
+            return out
 
-        if key_names and self.window_key_buckets:
-            from .bucketing import bucketed_stateful
-
-            return bucketed_stateful(
-                df, key_names, self.window_key_buckets, proc, out_schema,
-                GroupStateTimeout.NoTimeout,
-            )
-        if key_names:
-            grouped = df.groupBy(*[F.col(k) for k in key_names])
-        else:
-            df = df.withColumn("__gk", F.lit(0))
-            grouped = df.groupBy("__gk")
-        return grouped.applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+        return self._keyed_window(df, key_names, step, out_schema, state_schema)
 
     def _streaming_sliding_length(
         self, df: DataFrame, q: A.Query, si: A.SingleInput, key_names: list[str],
@@ -968,13 +953,12 @@ class StreamingPlanner(BatchPlanner):
         sort_cols = ([TS_COL] if ts_in_df else []) + carry
         carry_cols = sort_cols
         plan_c, key_names_c, n_c = plan, key_names, n
-        out_names = [f.name for f in out_fields]
         agg_over = StreamingPlanner._agg_over
 
         ts_idx = carry_cols.index(ts_field) if t_ms is not None else None
         t_ms_c = t_ms
 
-        def proc(key, pdfs, state: GroupState):
+        def step(key, rows, state):
             import json as _json
             import math
 
@@ -982,10 +966,8 @@ class StreamingPlanner(BatchPlanner):
 
             ring = list(state.get[0]) if state.exists else []
             out = []
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                part = pdf[carry_cols].sort_values(by=sort_cols)
+            if len(rows):
+                part = rows.frame()[carry_cols].sort_values(by=sort_cols)
                 for r in part.itertuples(index=False, name=None):
                     row = [
                         None if (isinstance(v, float) and math.isnan(v))
@@ -1019,24 +1001,9 @@ class StreamingPlanner(BatchPlanner):
                             rec.append(agg_over(kind, [v for v in xs if v is not None]))
                     out.append(rec)
             state.update((ring,))
-            if out:
-                yield pd.DataFrame(out, columns=out_names)
+            return out
 
-        if key_names and self.window_key_buckets:
-            from .bucketing import bucketed_stateful
-
-            return bucketed_stateful(
-                df, key_names, self.window_key_buckets, proc, out_schema,
-                GroupStateTimeout.NoTimeout,
-            )
-        if key_names:
-            grouped = df.groupBy(*[F.col(k) for k in key_names])
-        else:
-            df = df.withColumn("__gk", F.lit(0))
-            grouped = df.groupBy("__gk")
-        return grouped.applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+        return self._keyed_window(df, key_names, step, out_schema, state_schema)
 
     def _streaming_sliding_time(
         self, df: DataFrame, q: A.Query, si: A.SingleInput, key_names: list[str],
@@ -1070,10 +1037,9 @@ class StreamingPlanner(BatchPlanner):
         sort_cols = [TS_COL] + carry
         carry_cols = sort_cols  # ts is element 0 of every buffered row
         plan_c, key_names_c, t_c = plan, key_names, int(t_ms)
-        out_names = [f.name for f in out_fields]
         agg_over = StreamingPlanner._agg_over
 
-        def proc(key, pdfs, state: GroupState):
+        def step(key, rows, state):
             import json as _json
             import math
 
@@ -1083,10 +1049,8 @@ class StreamingPlanner(BatchPlanner):
             else:
                 buf, max_ts = [], None
             out = []
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                part = pdf[carry_cols].sort_values(by=sort_cols)
+            if len(rows):
+                part = rows.frame()[carry_cols].sort_values(by=sort_cols)
                 for r in part.itertuples(index=False, name=None):
                     row = [None if (isinstance(v, float) and math.isnan(v)) else v
                            for v in r]
@@ -1115,24 +1079,9 @@ class StreamingPlanner(BatchPlanner):
                             rec.append(agg_over(kind, [v for v in xs if v is not None]))
                     out.append(rec)
             state.update(([_json.dumps(r) for r in buf], max_ts if max_ts is not None else 0))
-            if out:
-                yield pd.DataFrame(out, columns=out_names)
+            return out
 
-        if key_names and self.window_key_buckets:
-            from .bucketing import bucketed_stateful
-
-            return bucketed_stateful(
-                df, key_names, self.window_key_buckets, proc, out_schema,
-                GroupStateTimeout.NoTimeout,
-            )
-        if key_names:
-            grouped = df.groupBy(*[F.col(k) for k in key_names])
-        else:
-            df = df.withColumn("__gk", F.lit(0))
-            grouped = df.groupBy("__gk")
-        return grouped.applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+        return self._keyed_window(df, key_names, step, out_schema, state_schema)
 
     # ------------------------------------------------- streaming aggregation
     def _compile_agg_read(self, q: A.Query) -> DataFrame:
@@ -1274,9 +1223,9 @@ class StreamingPlanner(BatchPlanner):
         df, _ = self.stream_df(stream)
         df = self._with_watermark(df, schema)
         pk = q.partition_by or {}
-        if pk:
-            df = df.withColumn(PK_COL, F.col(pk[stream]))
-        else:
+        # state key: the partition attribute itself, or one constant key
+        key_col = pk[stream] if pk else PK_COL
+        if not pk:
             df = df.withColumn(PK_COL, F.lit(0))
         df = df.withColumn(STREAM_COL, F.lit(stream))
 
@@ -1354,7 +1303,7 @@ class StreamingPlanner(BatchPlanner):
             pos[f] = i + 1
             pack_exprs.append(c.alias(f"__c{i + 1}"))
         pack_keys = [f"__c{i}" for i in range(len(pack_exprs))]
-        sel = [F.col(PK_COL)]
+        sel = [F.col(key_col)]
         if "__event_time" in df.columns:
             sel.append(F.col("__event_time"))
         sel.append(
@@ -1470,9 +1419,10 @@ class StreamingPlanner(BatchPlanner):
             older arrivals (state rows then track active keys, not
             lifetime keys).
 
-            This is the only compute in the stateful pattern operator —
-            shared verbatim by the per-key and bucketed (multi-key Arrow
-            group) modes, so cross-mode parity is structural, not tested-in.
+            This is the only compute in the stateful pattern operator: its
+            step runs it once per key in both group modes of the keyed-state
+            driver (per key, or per member key of a hash bucket), so
+            cross-mode parity is structural, not tested-in.
             """
             import hashlib as _hashlib
             import json as _json
@@ -1701,35 +1651,37 @@ class StreamingPlanner(BatchPlanner):
                 removable,
             )
 
-        def _emit_into(data, new_caps, rows):
-            """Append the new matches' output cells into the accumulator."""
+        def _emit(new_caps, rows):
+            """The new matches as output rows (out_schema order)."""
             import datetime as _dt
 
-            def _cell(fname: str, j: int):
-                v = rows[j][pos[fname]]
+            def _cell(fname: str, row):
+                v = row[pos[fname]]
                 if v is None:
                     return None
                 if fname in dt_us_fields:
-                    return pd.Timestamp(v, unit="us")
+                    return pd.Timestamp(v, unit="us", tz="UTC")
                 if fname in date_fields:
                     return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
                 return v
 
+            out = []
             for cap in new_caps:
+                rec = []
                 for ei, e in enumerate(elems_c):
                     if e.negated:
                         continue
+                    picked = [rows[j] for j in cap[ei]]
                     for fname in field_names[e.alias]:
-                        cname = col_of[(e.alias, fname)]
-                        vals = [_cell(fname, j) for j in cap[ei]]
+                        vals = [_cell(fname, r) for r in picked]
                         if collection[e.alias]:
-                            data[cname].append(vals)
+                            rec.append(vals)
                         else:
-                            data[cname].append(vals[0] if vals else None)
+                            rec.append(vals[0] if vals else None)
+                out.append(tuple(rec))
+            return out
 
-        def proc(
-            key, pdfs: Iterator[pd.DataFrame], state: GroupState
-        ) -> Iterator[pd.DataFrame]:
+        def step(key, rows, state):
             import json as _json
 
             if state.hasTimedOut and not has_neg:
@@ -1737,10 +1689,8 @@ class StreamingPlanner(BatchPlanner):
                 # whole buffer evictable and every partial stale — drop the
                 # key without decoding anything (for non-absence patterns a
                 # timed-out visit can never emit)
-                for _ in pdfs:
-                    pass
                 state.remove()
-                return
+                return None
             if state.exists:
                 seen, buf_json, nfa_json = state.get
                 seen = list(seen)
@@ -1750,27 +1700,23 @@ class StreamingPlanner(BatchPlanner):
                 # peek the seal BEFORE decoding the batch: a sealed key's
                 # later batches must stay no-ops (no per-row json work)
                 if _json.loads(nfa_json)["st"]["done"]:
-                    for _ in pdfs:
-                        pass
                     if buf_json != "[]":
                         state.update((seen, "[]", nfa_json))
-                    return
+                    return None
             # the buffer lives as a sorted LIST OF ROW ARRAYS — no pandas in
             # the per-key hot path (a pandas multi-column sort alone costs
             # ~1.3ms FIXED per call; at 100k keys/batch that dominated the
-            # round-7 streaming probe)
-            new_rows = []
+            # round-7 streaming probe). A timer-fired visit (key quiescent,
+            # watermark passed a pending absence deadline or the GC
+            # horizon) carries no rows; _key_step's quiescent pass does the
+            # confirmation/drain work.
             loads = _json.loads
-            for pdf in pdfs:
-                if len(pdf):
-                    for s in pdf["__row"].tolist():
-                        d = loads(s)
-                        new_rows.append([d[k] for k in pack_keys])
-            # a timer-fired visit (key quiescent, watermark passed a pending
-            # absence deadline or the GC horizon) carries no rows;
-            # _key_step's quiescent pass does the confirmation/drain work
+            new_rows = [
+                [d[k] for k in pack_keys]
+                for d in map(loads, rows.col("__row").tolist())
+            ]
             wm = state.getCurrentWatermarkMs()
-            seen, buf2, nfa2, rows, new_caps, changed, timer, removable = (
+            seen, buf2, nfa2, buf_rows, new_caps, changed, timer, removable = (
                 _key_step(seen, buf_json, nfa_json, new_rows, wm)
             )
             if removable:
@@ -1786,201 +1732,23 @@ class StreamingPlanner(BatchPlanner):
                     # goes silent (a timestamp at/below the watermark is
                     # rejected, hence the clamp)
                     state.setTimeoutTimestamp(max(timer, wm + 1))
-            if not new_caps:
-                return  # no output build for no-match keys (the common case)
-            data = {n: [] for n in out_names}
-            _emit_into(data, new_caps, rows)
-            yield pd.DataFrame(data, columns=out_names, dtype=object)
+            if new_caps:
+                return _emit(new_caps, buf_rows)
+            return None
 
-        n_buckets = self.pattern_key_buckets
-        if n_buckets:
-            # ---- bucketed mode (round 9, VERDICT r8 ask #1): group by
-            # pmod(xxhash64(key), N) and demultiplex the member keys inside
-            # ONE Arrow group. Each key still runs the identical _key_step;
-            # the ~280us fixed per-key-VISIT machinery (Arrow slice +
-            # GroupState proto round-trip, the profiled floor on 10^5-key
-            # drains) is paid once per BUCKET instead of once per key.
-            # Bucket state = four parallel string arrays (pks are
-            # json-encoded scalars); untouched keys' blobs pass through
-            # with ZERO json work.
-            if pk:
-                pk_t = field_types.get(pk[stream])
-                if not isinstance(pk_t, _NUM_T + (T.StringType, T.BooleanType)):
-                    raise UnsupportedFeatureException(
-                        f"pattern_key_buckets: partition key '{pk[stream]}' "
-                        f"of type {pk_t.simpleString()} — bucketed keys must "
-                        "be numeric/string/boolean"
-                    )
-            bucket_state_schema = T.StructType(
-                [
-                    T.StructField("n", T.LongType()),
-                    T.StructField("pks", T.ArrayType(T.StringType())),
-                    T.StructField("seens", T.ArrayType(T.StringType())),
-                    T.StructField("bufs", T.ArrayType(T.StringType())),
-                    T.StructField("nfas", T.ArrayType(T.StringType())),
-                    # per-key next action instant (ms; -1 = none): earliest
-                    # pending absence confirmation or GC horizon — a
-                    # parallel long array like the funnel twins' fire-times,
-                    # so due keys are found with zero json work
-                    T.StructField("deads", T.ArrayType(T.LongType())),
-                ]
-            )
-
-            def proc_bucket(
-                key, pdfs: Iterator[pd.DataFrame], state: GroupState
-            ) -> Iterator[pd.DataFrame]:
-                import json as _json
-
-                import numpy as _np
-
-                if state.exists:
-                    stored_n, pks, seens, bufs, nfas, deads = state.get
-                    if stored_n != n_buckets:
-                        # key->bucket routing changed: old state would sit
-                        # in buckets its keys no longer hash to — silent
-                        # wrong results. Fail loudly instead.
-                        raise RuntimeError(
-                            f"pattern_key_buckets changed across restart "
-                            f"(checkpoint has {stored_n}, query asks "
-                            f"{n_buckets}); bucket count is fixed at the "
-                            "checkpoint's creation — use a new checkpoint"
-                        )
-                    st = {
-                        k: [s, b, nf, dl]
-                        for k, s, b, nf, dl in zip(
-                            pks, seens, bufs, nfas, deads
-                        )
-                    }
-                else:
-                    st = {}
-                loads = _json.loads
-                # group arriving packed rows by their TRUE key, preserving
-                # per-key arrival order (stable argsort over factorize codes
-                # — no per-row python until the decode the per-key mode pays
-                # anyway)
-                per_key: dict = {}
-                for pdf in pdfs:
-                    if not len(pdf):
-                        continue
-                    codes, uniq = pd.factorize(
-                        pdf[PK_COL], use_na_sentinel=False
-                    )
-                    strs = pdf["__row"].to_numpy()
-                    order = _np.argsort(codes, kind="stable")
-                    bounds = _np.searchsorted(
-                        codes[order], _np.arange(len(uniq) + 1)
-                    )
-                    keys_py = uniq.tolist()
-                    for i in range(len(keys_py)):
-                        lst = per_key.setdefault(
-                            _json.dumps(keys_py[i]), []
-                        )
-                        for s in strs[order[bounds[i]:bounds[i + 1]]].tolist():
-                            d = loads(s)
-                            lst.append([d[k] for k in pack_keys])
-                wm = state.getCurrentWatermarkMs()
-                data = None
-                for kenc, new_rows in per_key.items():
-                    prev = st.get(kenc)
-                    if prev is None:
-                        seen, buf_json, nfa_json = [], None, None
-                    else:
-                        seen = loads(prev[0])
-                        buf_json, nfa_json = prev[1], prev[2]
-                    (seen, buf2, nfa2, rows, new_caps, changed, timer,
-                     removable) = _key_step(
-                        seen, buf_json, nfa_json, new_rows, wm
-                    )
-                    if removable:
-                        st.pop(kenc, None)
-                    elif changed or prev is None:
-                        st[kenc] = [
-                            _json.dumps(seen), buf2, nfa2,
-                            -1 if timer is None else timer,
-                        ]
-                    if new_caps:
-                        if data is None:
-                            data = {n: [] for n in out_names}
-                        _emit_into(data, new_caps, rows)
-                if use_timeout and wm > 0 and not has_neg:
-                    # purge-only sweep: a passed horizon means the member
-                    # key is drained — drop its arrays entry with zero
-                    # decode work (non-absence timed-out visits never emit)
-                    for kenc in [
-                        k for k, rec in st.items()
-                        if k not in per_key and 0 <= rec[3] <= wm
-                    ]:
-                        st.pop(kenc, None)
-                elif use_timeout and wm > 0:
-                    # timer-fired sweep (round 10): member keys the batch
-                    # did NOT visit but whose next action instant (absence
-                    # confirmation or GC horizon) the watermark has passed —
-                    # the deads array finds them with zero blob parsing
-                    for kenc in [
-                        k for k, rec in st.items()
-                        if k not in per_key and rec[3] >= 0 and wm >= rec[3]
-                    ]:
-                        rec = st[kenc]
-                        (seen, buf2, nfa2, rows, new_caps, changed, timer,
-                         removable) = _key_step(
-                            loads(rec[0]), rec[1], rec[2], [], wm
-                        )
-                        if removable:
-                            st.pop(kenc, None)
-                        else:
-                            st[kenc] = [
-                                _json.dumps(seen), buf2, nfa2,
-                                -1 if timer is None else timer,
-                            ]
-                        if new_caps:
-                            if data is None:
-                                data = {n: [] for n in out_names}
-                            _emit_into(data, new_caps, rows)
-                if st:
-                    ks = list(st)
-                    state.update(
-                        (
-                            n_buckets,
-                            ks,
-                            [st[k][0] for k in ks],
-                            [st[k][1] for k in ks],
-                            [st[k][2] for k in ks],
-                            [st[k][3] for k in ks],
-                        )
-                    )
-                    if use_timeout:
-                        bucket_t = min(
-                            (st[k][3] for k in ks if st[k][3] >= 0),
-                            default=None,
-                        )
-                        if bucket_t is not None:
-                            state.setTimeoutTimestamp(max(bucket_t, wm + 1))
-                elif state.exists:
-                    state.remove()  # every member key drained: drop the row
-                if data is not None:
-                    yield pd.DataFrame(data, columns=out_names, dtype=object)
-
-            df = df.withColumn(
-                "__bucket",
-                F.pmod(F.xxhash64(F.col(PK_COL)), F.lit(n_buckets)),
-            )
-            # absence patterns and evictable every-patterns run under
-            # EventTimeTimeout: quiescent keys confirm 'not X for t' from
-            # the timer once the watermark passes the deadline (Siddhi
-            # fires these from its scheduler — round 10, VERDICT r9 ask
-            # #1), and drained keys are GC'd at the eviction horizon so
-            # state tracks active keys, not lifetime keys
-            result = df.groupBy("__bucket").applyInPandasWithState(
-                proc_bucket, out_schema, bucket_state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout if use_timeout
-                else GroupStateTimeout.NoTimeout,
-            )
-        else:
-            result = df.groupBy(PK_COL).applyInPandasWithState(
-                proc, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout if use_timeout
-                else GroupStateTimeout.NoTimeout,
-            )
+        # absence patterns and evictable every-patterns run under
+        # EventTimeTimeout: quiescent keys confirm 'not X for t' from the
+        # timer once the watermark passes the deadline (Siddhi fires these
+        # from its scheduler), and drained keys are GC'd at the eviction
+        # horizon so state tracks active keys, not lifetime keys.
+        # pattern_key_buckets multiplexes ~keys/N keys through one Arrow
+        # group + GroupState visit (streaming/bucketing.py).
+        result = keyed_state(
+            df, [key_col], step, out_schema, state_schema,
+            GroupStateTimeout.EventTimeTimeout if use_timeout
+            else GroupStateTimeout.NoTimeout,
+            self.pattern_key_buckets,
+        )
 
         singles = [e for e in elems if not e.negated]
 

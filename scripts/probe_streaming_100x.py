@@ -7,8 +7,11 @@ quadratic; this is the streaming analogue: it validates state-store
 behavior (peak state rows, per-batch latency, ev/s) at 100x the bench
 volume under key skew.
 
-Usage: python scripts/probe_streaming_100x.py [n_events] [n_batches]
-Writes one JSON line per op; summarize into SCALE.md §streaming-at-100x.
+Usage: python scripts/probe_streaming_100x.py [n_events] [n_batches] [cells]
+``cells`` is a comma-separated list of drain tags to run (e.g.
+``funnel_stream_bucketed,attribution_stream_bucketed``); the others are
+reported as skipped. Writes one JSON line per op; summarize into SCALE.md
+§streaming-at-100x.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import functions as F
 
 N_EVENTS = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
 N_BATCHES = int(sys.argv[2]) if len(sys.argv) > 2 else 4
+ONLY = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
 
 def _gen(spark, root: str) -> str:
@@ -61,6 +65,8 @@ def _gen(spark, root: str) -> str:
 
 
 def _drain(plan_df, root: str, tag: str, n: int) -> dict:
+    if ONLY is not None and tag not in ONLY:
+        return {"skipped": True}
     t0 = time.time()
     q = (
         plan_df.writeStream.format("noop")
@@ -70,10 +76,10 @@ def _drain(plan_df, root: str, tag: str, n: int) -> dict:
     )
     q.awaitTermination(3600)
     dt = time.time() - t0
-    peak_state = 0
-    batches = 0
+    peak_state, batches, out_rows = 0, 0, 0
     for p in q.recentProgress:
         batches += 1
+        out_rows += p.get("sink", {}).get("numOutputRows", 0) or 0
         for so in p.get("stateOperators", []):
             peak_state = max(peak_state, so.get("numRowsTotal", 0))
     return {
@@ -81,6 +87,7 @@ def _drain(plan_df, root: str, tag: str, n: int) -> dict:
         "events_per_sec": int(n / dt),
         "peak_state_rows": peak_state,
         "micro_batches": batches,
+        "sink_rows": out_rows,
     }
 
 

@@ -506,9 +506,12 @@ def test_bucketed_count_change_fails_loudly(spark, tmp_path):
 
 
 def test_bucketed_rejects_unsupported_key_type(spark):
-    """A timestamp-typed partition key cannot json-encode as a bucket-state
-    key — fail at plan time, not inside a worker."""
+    """A timestamp-typed key cannot json-encode as a bucket-state key —
+    fail at plan time, naming the key attribute, not inside a worker. One
+    check in the keyed-state runner serves patterns and the twins."""
     from pyspark.sql import functions as F
+
+    from flink_siddhi_spark.analytics import funnel_stream
 
     df = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
@@ -521,9 +524,18 @@ def test_bucketed_rejects_unsupported_key_type(spark):
     )
     cep = SiddhiCEP(spark, pattern_key_buckets=4)
     cep.register_stream("s", df, "id", "tkey", "price", "ts", ts_field="ts")
-    with pytest.raises(UnsupportedFeatureException, match="bucketed keys"):
+    with pytest.raises(UnsupportedFeatureException, match="bucketed keys") as ei:
         cep.from_("s").cql(
             "partition with (tkey of s) begin "
             "from every a = s[price > 1] -> b = s[price > 2] "
             "select a.id as a_id insert into Out; end"
         ).returns("Out")
+    assert "'tkey'" in str(ei.value)
+    events = df.select(
+        F.col("tkey").alias("user_id"),
+        F.col("tkey").alias("ts"),
+        F.lit("view").alias("event_type"),
+    )
+    with pytest.raises(UnsupportedFeatureException, match="bucketed keys") as ei:
+        funnel_stream(events, ["view", "buy"], 60_000, key_buckets=4)
+    assert "'user_id'" in str(ei.value)

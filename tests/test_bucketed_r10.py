@@ -1,9 +1,8 @@
 """Round-10 bucketed-key parity (VERDICT r9 ask #3): the LAST un-bucketed
 per-key stateful surfaces — ``retention_pairs_stream`` (per-user cohort
-anchor state) and the streaming as-of join (pickled per-key history, riding
-the generic adapter's base64 wrapper) — run through
-``streaming/bucketing.bucketed_stateful`` with the UNCHANGED per-key procs.
-Parity contract: bucketed == per-key == batch."""
+anchor state) and the streaming as-of join (pickled per-key history) — run
+through ``streaming/bucketing.keyed_state`` with the same per-key step in
+both group modes. Parity contract: bucketed == per-key == batch."""
 
 import datetime as dt
 

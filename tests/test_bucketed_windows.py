@@ -1,7 +1,7 @@
-"""Round-9: generic bucketed adapter (streaming/bucketing.py) for the
-per-key stateful WINDOW lowerings — the UNCHANGED per-key proc runs
+"""Round-9: bucketed mode of the keyed-state runner (streaming/bucketing.py)
+for the per-key stateful WINDOW lowerings — the same per-key step runs
 against a GroupState shim inside pmod(xxhash64(keys), N) buckets. These
-tests pin the adapter against the SAME fixed expectations the per-key
+tests pin the bucketed mode against the SAME fixed expectations the per-key
 tests assert, across >= 2 micro-batches (bucket-state carry), plus
 multi-column keys and the bucket-count restart guard inherited from the
 shared schema.
@@ -105,3 +105,20 @@ def test_bucketed_window_multicolumn_key(spark, tmp_path):
     got_bk = _run(spark, tmp_path, "mc_bk", cql, ROWS1, ROWS2, 3)
     got_pk = _run(spark, tmp_path, "mc_pk", cql, ROWS1, ROWS2, None)
     assert got_bk == got_pk and len(got_bk) == 6
+
+
+def test_window_orders_the_whole_key_visit(spark, tmp_path):
+    """A key's rows can reach the stateful step in several Arrow chunks
+    (two rows each here) and out of event-time order; the window orders
+    the key's whole visit, not each chunk, so both group modes cut
+    lengthBatch chunks in event-time order."""
+    cql, want = CASES["length_batch"]
+    rows1 = list(reversed(ROWS1))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        got_pk = _run(spark, tmp_path, "chunk_pk", cql, rows1, ROWS2, None)
+        got_bk = _run(spark, tmp_path, "chunk_bk", cql, rows1, ROWS2, 2)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert got_pk == want, got_pk
+    assert got_bk == want, got_bk

@@ -1,10 +1,12 @@
-"""Round-11 (VERDICT r10 item 8): the generic bucketing adapter's pickle
+"""Round-11 (VERDICT r10 item 8): the keyed-state runner's pickle
 state-blob format must be guarded by Spark's state-schema compatibility
 check — a checkpoint written under one blob column type cannot be resumed
 under another SILENTLY; the resume must fail loudly. This pins the
 documented claim in SCALE.md §'adapter blobs json -> pickle' (the r10
 format change made pre-change checkpoints unreadable BY CONSTRUCTION, not
-unreadable-by-luck)."""
+unreadable-by-luck). Every bucketed operator shares the one bucket state
+format, so the guard is pinned for a retention twin and a bucketed
+pattern plan alike."""
 
 import datetime as dt
 
@@ -28,15 +30,27 @@ SCHEMA = T.StructType([
 ])
 
 
-def _drain(spark, src_dir, ck, out_dir, key_buckets=4):
-    from flink_siddhi_spark.analytics import retention_pairs_stream
+def _bucketed_plan(plan, stream):
+    if plan == "retention":
+        from flink_siddhi_spark.analytics import retention_pairs_stream
 
+        return retention_pairs_stream(stream, watermark="5 days", key_buckets=4)
+    from flink_siddhi_spark import SiddhiCEP
+
+    cep = SiddhiCEP(spark=stream.sparkSession, pattern_key_buckets=4)
+    cep.register_stream("s", stream, "event_id", "ts", "user_id", ts_field="ts")
+    return cep.from_("s").cql(
+        "partition with (user_id of s) begin "
+        "from every a = s[event_id > 0] -> b = s[event_id > 0] "
+        "select a.event_id as a_id, b.event_id as b_id insert into Out; end"
+    ).returns("Out")
+
+
+def _drain(spark, src_dir, ck, out_dir, plan):
     stream = (
         spark.readStream.format("parquet").schema(SCHEMA).load(str(src_dir))
     )
-    out = retention_pairs_stream(
-        stream, watermark="5 days", key_buckets=key_buckets
-    )
+    out = _bucketed_plan(plan, stream)
     q = (
         out.writeStream.format("json")
         .option("path", str(out_dir))
@@ -48,7 +62,10 @@ def _drain(spark, src_dir, ck, out_dir, key_buckets=4):
     return q
 
 
-def test_bucketed_blob_format_change_fails_loudly(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("plan", ["retention", "pattern"])
+def test_bucketed_blob_format_change_fails_loudly(
+    spark, tmp_path, monkeypatch, plan
+):
     src = tmp_path / "in_fmt"
     ck = tmp_path / "ck_fmt"
     out_dir = tmp_path / "out_fmt"
@@ -56,7 +73,7 @@ def test_bucketed_blob_format_change_fails_loudly(spark, tmp_path, monkeypatch):
         "overwrite"
     ).parquet(str(src))
     # phase 1: checkpoint written under the CURRENT format (binary blobs)
-    _drain(spark, src, ck, out_dir)
+    _drain(spark, src, ck, out_dir, plan)
 
     # phase 2: the same logical query recompiled under the json-era blob
     # column type (array<string>) resuming the binary-blob checkpoint must
@@ -74,12 +91,12 @@ def test_bucketed_blob_format_change_fails_loudly(spark, tmp_path, monkeypatch):
     ])
     monkeypatch.setattr(B, "BUCKET_STATE_SCHEMA", old_schema)
     with pytest.raises(Exception) as ei:
-        _drain(spark, src, ck, out_dir)
+        _drain(spark, src, ck, out_dir, plan)
     msg = str(ei.value)
     assert "chema" in msg or "ompatib" in msg, msg[:500]
 
     # and the unchanged format RESUMES cleanly from the same checkpoint
     monkeypatch.undo()
-    _drain(spark, src, ck, out_dir)
+    _drain(spark, src, ck, out_dir, plan)
     n = spark.read.json(str(out_dir)).count()
     assert n >= 0  # drained without error; rows land incrementally

@@ -413,10 +413,13 @@ def test_streaming_state_restored_across_restart(spark, tmp_path):
     assert run() == [(1, 10.0), (2, 30.0), (3, 50.0)]
 
 
-def test_control_events_from_stream(spark, sf_dir, tmp_path):
+def test_control_events_from_stream(spark, sf_dir, tmp_path, caplog):
     # verdict item 5: control events arrive on a real STREAM (reference:
     # SiddhiStream.java:126-140 / SiddhiCEPITCase.java:466 dynamic pattern) —
-    # a json file stream drives QueryManager.on_control_json via foreachBatch
+    # a json file stream drives QueryManager.on_control_json via foreachBatch.
+    # A malformed event between two good ones is logged and skipped: both
+    # good events apply and the control query keeps running.
+    import logging
     import os
 
     from flink_siddhi_spark.sources.tables import load_table
@@ -446,7 +449,8 @@ def test_control_events_from_stream(spark, sf_dir, tmp_path):
                 "p1": "from events[value > 90.0] select event_id insert into O1",
                 "p2": "from events select event_type, count() as n group by event_type insert into O2",
             }))}),
-        json.dumps({"seq": 1, "value": to_json(OperationControlEvent("DISABLE_QUERY", "p1"))}),
+        json.dumps({"seq": 1, "value": '{"type": "MetadataControlEvent", '}),
+        json.dumps({"seq": 2, "value": to_json(OperationControlEvent("DISABLE_QUERY", "p1"))}),
     ]
     src = tmp_path / "control_in"
     os.makedirs(src)
@@ -456,11 +460,19 @@ def test_control_events_from_stream(spark, sf_dir, tmp_path):
         spark.readStream.schema("seq long, value string").json(str(src))
     )
     qm = QueryManager(compile_fn)
+    caplog.set_level(logging.WARNING, logger="flink_siddhi_spark")
     q = attach_control_stream(
         qm, stream, order_col="seq",
         checkpoint=str(tmp_path / "ck_control"), available_now=True,
     )
     q.awaitTermination(60)
+    assert q.exception() is None
+    assert [raw for raw, _ in qm.rejected] == ['{"type": "MetadataControlEvent", ']
+    assert any(
+        r.levelno == logging.WARNING and r.name.startswith("flink_siddhi_spark")
+        and "control event rejected" in r.getMessage()
+        for r in caplog.records
+    )
     assert set(qm.queries) == {"p1", "p2"}
     assert qm.queries["p1"].enabled is False
     assert qm.queries["p2"].enabled is True
