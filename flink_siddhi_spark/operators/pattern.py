@@ -1412,6 +1412,56 @@ def _try_fast_path(planner, q: A.Query, u: DataFrame, elems, tags, valid,
     return a_sel.join(b_sel, F.expr(cond), "inner").selectExpr(*out)
 
 
+def pattern_output(elems, schemas: dict):
+    """The match table's columns and select resolver, shared by the batch
+    and the streaming pattern operators: one column per (non-negated
+    element x field of its stream), named ``alias__field``, an array for a
+    collection element. ``resolve`` maps a select reference onto it:
+    ``a.f``, ``a[i].f`` (collections only; null past the captured count)
+    or a bare field (the first element carrying it).
+
+    Returns ``(out_fields, col_of, field_names, collection, resolve)``."""
+    singles = [e for e in elems if not e.negated]
+    out_fields: list[T.StructField] = []
+    col_of: dict[tuple[str, str], str] = {}
+    for e in singles:
+        sch = schemas[e.stream]
+        types = {f.name: f.dataType for f in sch.df.schema.fields}
+        for fname in sch.fields:
+            out_name = f"{e.alias}__{fname}"
+            col_of[(e.alias, fname)] = out_name
+            dtype = types[fname]
+            out_fields.append(T.StructField(
+                out_name, T.ArrayType(dtype) if e.is_collection else dtype, True,
+            ))
+    field_names = {e.alias: schemas[e.stream].fields for e in singles}
+    collection = {e.alias: e.is_collection for e in singles}
+
+    def resolve(ref: A.Ref) -> Column:
+        if ref.stream is not None:
+            key = (ref.stream, ref.name)
+            if key not in col_of:
+                raise SiddhiPlannerException(
+                    f"unknown pattern reference {ref.stream}.{ref.name}"
+                )
+            c = F.col(col_of[key])
+            if collection.get(ref.stream, False):
+                idx = ref.index if ref.index is not None else 0
+                # F.get: null past the captured count (Siddhi returns null
+                # for an absent indexed binding; ANSI getItem would throw)
+                return F.get(c, idx)
+            if ref.index is not None:
+                raise SiddhiPlannerException(f"{ref.stream} is not a collection")
+            return c
+        for e in singles:
+            if ref.name in field_names[e.alias]:
+                c = F.col(col_of[(e.alias, ref.name)])
+                return F.get(c, 0) if collection[e.alias] else c
+        raise SiddhiPlannerException(f"unknown column '{ref.name}' after pattern")
+
+    return out_fields, col_of, field_names, collection, resolve
+
+
 def compile_pattern(planner, q: A.Query):
     """Compile a pattern query input. Returns (df, resolver, fields)."""
     p: A.PatternInput = q.input
@@ -1492,24 +1542,9 @@ def compile_pattern(planner, q: A.Query):
     u_names = [*first, *[n for n, _ in union_fields if n not in first], STREAM_COL, PK_COL]
     valid = {STREAM_COL, TS_COL, PK_COL, *seen}
 
-    # output schema: per element x per field of its stream
-    out_fields: list[T.StructField] = []
-    col_of: dict[tuple[str, str], str] = {}
-    for e in elems:
-        if e.negated:
-            continue
-        sch = schemas[e.stream]
-        for fname in sch.fields:
-            dtype = dict((f.name, f.dataType) for f in sch.df.schema.fields)[fname]
-            out_name = f"{e.alias}__{fname}"
-            col_of[(e.alias, fname)] = out_name
-            out_fields.append(
-                T.StructField(
-                    out_name,
-                    T.ArrayType(dtype) if e.is_collection else dtype,
-                    True,
-                )
-            )
+    out_fields, col_of, field_names, collection, resolve = pattern_output(
+        elems, schemas
+    )
     out_schema = T.StructType(out_fields)
 
     sort_cols = [TS_COL] + [n for n, _ in union_fields]
@@ -1518,8 +1553,6 @@ def compile_pattern(planner, q: A.Query):
     every = p.every
     every_at = p.every_at
     within_ms = p.within_ms
-    field_names = {e.alias: schemas[e.stream].fields for e in elems if not e.negated}
-    collection = {e.alias: e.is_collection for e in elems if not e.negated}
     filters = [(tags[e.stream], e.filter) for e in elems]
     out_names = [f.name for f in out_fields]
 
@@ -1606,30 +1639,5 @@ def compile_pattern(planner, q: A.Query):
             .groupBy(PK_COL)
             .applyInPandas(match_group, schema=out_schema)
         )
-
-    # resolver for select over the match table
-    singles = [e for e in elems if not e.negated]
-
-    def resolve(ref: A.Ref) -> Column:
-        if ref.stream is not None:
-            key = (ref.stream, ref.name)
-            if key not in col_of:
-                raise SiddhiPlannerException(
-                    f"unknown pattern reference {ref.stream}.{ref.name}"
-                )
-            c = F.col(col_of[key])
-            if collection.get(ref.stream, False):
-                idx = ref.index if ref.index is not None else 0
-                # F.get: null past the captured count (Siddhi returns null
-                # for an absent indexed binding; ANSI getItem would throw)
-                return F.get(c, idx)
-            if ref.index is not None:
-                raise SiddhiPlannerException(f"{ref.stream} is not a collection")
-            return c
-        for e in singles:
-            if ref.name in field_names[e.alias]:
-                c = F.col(col_of[(e.alias, ref.name)])
-                return F.get(c, 0) if collection[e.alias] else c
-        raise SiddhiPlannerException(f"unknown column '{ref.name}' after pattern")
 
     return result, resolve, out_names

@@ -23,6 +23,10 @@ from .control import MetadataControlEvent, OperationControlEvent, from_json
 
 _log = logging.getLogger(__name__)
 
+# ensure_running restarts a plan whose sink died with an error at most this
+# many times in a row; the next error leaves it stopped and failed
+MAX_RESTARTS = 3
+
 
 @dataclass
 class ManagedQuery:
@@ -33,6 +37,11 @@ class ManagedQuery:
     # enable()/restart: re-enabling then only pays the StreamingQuery start
     # (checkpoint resume), not a reparse + replan of the CQL text
     compiled_df: Optional[DataFrame] = None
+    # the last error the plan's sink died with, the restarts since its last
+    # clean run, and whether ensure_running gave up on it
+    error: Optional[BaseException] = None
+    restarts: int = 0
+    failed: bool = False
 
 
 class QueryManager:
@@ -75,11 +84,21 @@ class QueryManager:
 
     def _start(self, query_id: str, plan_text: str, df: DataFrame) -> None:
         mq = ManagedQuery(plan_text, compiled_df=df)
+        self._launch(query_id, mq)
+        self.queries[query_id] = mq
+
+    def _launch(self, query_id: str, mq: ManagedQuery) -> None:
+        """Start the plan's sink off the plan compiled at add()/update(): a
+        stopped StreamingQuery restarts from its checkpoint off the SAME
+        logical plan, so a restart pays only the sink start, never a
+        reparse."""
+        df = mq.compiled_df
+        if df is None:
+            df = mq.compiled_df = self.compile_fn(mq.plan_text)
         if self.sink_fn is not None and df.isStreaming:
             mq.query_handle = self.sink_fn(query_id, df)
         else:
             mq.query_handle = df
-        self.queries[query_id] = mq
 
     def delete(self, query_id: str) -> None:
         mq = self.queries.pop(query_id, None)
@@ -98,40 +117,47 @@ class QueryManager:
         mq = self.queries.get(query_id)
         if mq is None or mq.enabled:
             return
-        # reuse the plan compiled at add()/update(): a stopped StreamingQuery
-        # restarts from its checkpoint off the SAME logical plan, so re-enable
-        # pays only the sink start, never a reparse
-        df = mq.compiled_df
-        if df is None:
-            df = self.compile_fn(mq.plan_text)
-            mq.compiled_df = df
-        if self.sink_fn is not None and df.isStreaming:
-            mq.query_handle = self.sink_fn(query_id, df)
-        else:
-            mq.query_handle = df
+        self._launch(query_id, mq)
         mq.enabled = True
+        mq.restarts, mq.failed = 0, False
 
     def ensure_running(self) -> None:
         """Restart every ENABLED plan whose sink is not currently active
         (e.g. an availableNow sink that drained and terminated). Public
         drain-loop API: callers should use this + :meth:`drain` instead of
-        reaching into ``queries``/``query_handle``."""
+        reaching into ``queries``/``query_handle``.
+
+        A sink that died with an error is logged as a WARNING and its error
+        kept on ``ManagedQuery.error``; it is restarted at most
+        :data:`MAX_RESTARTS` times in a row, then left stopped with
+        ``failed`` set (``disable``/``enable`` or ``update`` start it
+        afresh)."""
         if self.sink_fn is None:
             return
         for qid, mq in self.queries.items():
-            if mq.enabled and (
-                mq.query_handle is None
-                or (
-                    hasattr(mq.query_handle, "isActive")
-                    and not mq.query_handle.isActive
-                )
+            h = mq.query_handle
+            if not mq.enabled or mq.failed or (
+                h is not None and (not hasattr(h, "isActive") or h.isActive)
             ):
-                df = mq.compiled_df
-                if df is None:
-                    df = self.compile_fn(mq.plan_text)
-                    mq.compiled_df = df
-                if df.isStreaming:
-                    mq.query_handle = self.sink_fn(qid, df)
+                continue
+            err = h.exception() if hasattr(h, "exception") else None
+            if err is None:
+                mq.restarts = 0
+            else:
+                mq.error = err
+                if mq.restarts >= MAX_RESTARTS:
+                    mq.failed = True
+                    _log.warning(
+                        "plan %r failed after %d restarts, left stopped: %s",
+                        qid, mq.restarts, err,
+                    )
+                    continue
+                mq.restarts += 1
+                _log.warning(
+                    "plan %r failed, restart %d of %d: %s",
+                    qid, mq.restarts, MAX_RESTARTS, err,
+                )
+            self._launch(qid, mq)
 
     def drain(self, timeout_secs: float = 120.0) -> None:
         """Block until every running sink terminates (availableNow sinks) or

@@ -38,16 +38,28 @@ last/first-event state; ``sort``/``frequent``/``lossyFrequent`` stream as
 per-micro-batch SNAPSHOTS of the retained contents (each row tagged
 ``__snapshot``; max id = current contents — PARITY.md §15); ``delay``
 shifts the event-time columns row-wise and ``batch()`` passes rows
-through. Aggregates over retention windows and order/limit are batch-only
-— the planner raises a clear error. Month/year incremental-aggregation
-granularities stream via synthesized calendar-cron buckets (round 4).
+through. Aggregates over a retention window re-aggregate the revised
+retained set per micro-batch under the same ``__snapshot`` contract;
+order/limit are batch-only — the planner raises a clear error. Month/year
+incremental-aggregation granularities stream via synthesized
+calendar-cron buckets (round 4).
+
+The stateful aggregating operators (lengthBatch, length, timeLength, time
+and the retained-set aggregate) differ only in window membership. Each
+decodes a visit's rows once (``_decode_rows``), builds every output row
+with one ``_record``, and aggregates with one ``_agg_over``, which applies
+the batch null contract: ``first``/``last`` keep a null first/last value,
+the other aggregates skip nulls and read NULL over no values.
 """
 
 from __future__ import annotations
 
+import json
 import logging
+import pickle
 from typing import Optional
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -66,6 +78,7 @@ from ..operators.pattern import (
     _vec,
     kernel_shape,
     pattern_engine,
+    pattern_output,
     run_shape,
 )
 from .bucketing import keyed_state
@@ -156,6 +169,100 @@ def _retain(rows: pd.DataFrame, spec: dict):
         )
         return rows, rows
     return rows, rows  # batch / delay: everything
+
+
+# the retention operators' state: the retained rows as a PICKLED DataFrame
+# (BinaryType), not JSON — to_json round-trips lose float precision beyond
+# 10 significant digits and sub-ms timestamp resolution, which would let
+# restored rows diverge from the batch-mode result (PARITY.md §15); pickle
+# preserves values and dtypes exactly
+_RETAINED_STATE_SCHEMA = T.StructType(
+    [T.StructField("rows", T.BinaryType()), T.StructField("snap", T.IntegerType())]
+)
+
+
+def _retained_step(rows, state, out_cols: list, ord_cols: list, spec: dict):
+    """The retention operators' shared state transition for one key:
+    restore the stored rows, append the visit's, sort by the batch total
+    order, apply the retention rules and store what they keep under the
+    next snapshot id. Returns ``(retained, snap)``."""
+    frame = rows.frame()[out_cols]
+    snap = 0
+    if state.exists:
+        blob, snap = state.get
+        stored = pickle.loads(bytes(blob))[out_cols]
+        frame = pd.concat([stored, frame], ignore_index=True)
+    frame = frame.sort_values(ord_cols, kind="mergesort").reset_index(drop=True)
+    kept, retained = _retain(frame, spec)
+    snap += 1
+    state.update((pickle.dumps(kept.reset_index(drop=True)), snap))
+    return retained, snap
+
+
+def _py(v):
+    if isinstance(v, np.generic):
+        v = v.item()
+    return None if isinstance(v, float) and v != v else v
+
+
+def _decode_rows(frame: pd.DataFrame, cols: list, sort_cols: list) -> list:
+    """A visit's rows as python lists over ``cols``, ordered by
+    ``sort_cols``: NaN becomes None and numpy scalars python values, so a
+    row is json-encodable exactly as the window states store it."""
+    if not cols:  # pure count(): row presence is the datum
+        return [[] for _ in range(len(frame))]
+    if not len(frame):
+        return []
+    frame = frame.sort_values(sort_cols, kind="mergesort")
+    return [
+        [_py(v) for v in r]
+        for r in frame[cols].itertuples(index=False, name=None)
+    ]
+
+
+def _agg_over(kind: str, values: list):
+    """One aggregate over a window's raw column values, nulls included,
+    under the batch contract: ``first``/``last`` are the window's
+    first/last value even when it is null (batch ``min_by``/``max_by`` and
+    ``F.first``/``F.last`` over the frame); the others skip nulls, and
+    ``sum``/``avg``/``min``/``max`` over no values are None."""
+    if kind == "first":
+        return values[0] if values else None
+    if kind == "last":
+        return values[-1] if values else None
+    xs = [v for v in values if v is not None]
+    if kind == "distinctcount":
+        return len(set(xs))
+    if not xs:
+        return None
+    if kind == "sum":
+        return sum(xs)
+    if kind == "avg":
+        return float(sum(xs)) / len(xs)
+    if kind == "min":
+        return min(xs)
+    if kind == "max":
+        return max(xs)
+    raise AssertionError(kind)
+
+
+def _record(plan, key, key_names, carry_cols, cur, window_rows) -> list:
+    """One output row of a stateful window operator: each ``plan`` item
+    (out_name, kind, col) evaluated over the state key ``key`` (the values
+    of ``key_names``), the arriving row ``cur`` and the window's rows —
+    ``cur`` and each window row a list in ``carry_cols`` order."""
+    rec = []
+    for _, kind, col in plan:
+        if kind == "key":
+            rec.append(key[key_names.index(col)])
+        elif kind == "cur":
+            rec.append(cur[carry_cols.index(col)])
+        elif kind == "count":
+            rec.append(len(window_rows))
+        else:
+            i = carry_cols.index(col)
+            rec.append(_agg_over(kind, [w[i] for w in window_rows]))
+    return rec
 
 
 class StreamingPlanner(BatchPlanner):
@@ -309,10 +416,7 @@ class StreamingPlanner(BatchPlanner):
             raise SiddhiPlannerException(f"#window.{si.window.name} needs key attribute(s)")
         out_cols = [c for c in df.columns if c != "__event_time"]
         out_schema = T.StructType([f for f in df.schema.fields if f.name in out_cols])
-        ord_cols = ([TS_COL] if schema.ts_field is not None else []) + [
-            f for f in schema.fields if f != schema.ts_field
-        ]
-        ord_cols = [c for c in ord_cols if c in out_cols]
+        ord_cols = [c for c in self.ord_cols_for(schema) if c in out_cols]
         state_schema = T.StructType([T.StructField("ord", T.StringType())])
 
         def step(key, rows, state):
@@ -370,65 +474,39 @@ class StreamingPlanner(BatchPlanner):
         ``partition with`` the state lives under one global key —
         single-task by semantic necessity, mirroring the batch global-order
         constraint (warn_global_order fires)."""
-        wname = si.window.name.lower()
         out_cols = [c for c in df.columns if c != "__event_time"]
-        ord_cols = ([TS_COL] if schema.ts_field is not None else []) + [
-            f for f in schema.fields if f != schema.ts_field
-        ]
-        ord_cols = [c for c in ord_cols if c in out_cols]
+        ord_cols = [c for c in self.ord_cols_for(schema) if c in out_cols]
         out_schema = T.StructType(
             [f for f in df.schema.fields if f.name in out_cols]
             + [T.StructField(SNAPSHOT_COL, T.IntegerType())]
-        )
-        # state blob is a PICKLED DataFrame (BinaryType), not JSON: to_json
-        # round-trips lose float precision beyond 10 significant digits and
-        # sub-ms timestamp resolution, which would let restored rows diverge
-        # from the batch-mode result (breaking the PARITY.md §15 "final
-        # snapshot equals batch result" contract); pickle preserves values
-        # and dtypes exactly.
-        state_schema = T.StructType(
-            [T.StructField("rows", T.BinaryType()), T.StructField("snap", T.IntegerType())]
         )
         spec = _retention_spec(si.window, schema, out_cols, ord_cols)
         by = spec["sort_by"] or ord_cols
         ascending = spec["sort_asc"] or [True] * len(by)
 
-        def _restore(blob, like: pd.DataFrame) -> pd.DataFrame:
-            import pickle as _pickle
-
-            # lossless: dtypes (incl. nullable ints and tz-aware datetimes)
-            # and values come back exactly as stored — no coercion needed.
-            stored = _pickle.loads(bytes(blob))
-            return stored[like.columns]
-
         def step(key, rows, state):
-            import pickle as _pickle
-
-            new = rows.frame()[out_cols]
-            snap = 0
-            if state.exists:
-                blob, snap = state.get
-                rows = pd.concat([_restore(blob, new), new], ignore_index=True)
-            else:
-                rows = new
-            rows = rows.sort_values(ord_cols, kind="mergesort").reset_index(drop=True)
-            rows, retained = _retain(rows, spec)
+            retained, snap = _retained_step(rows, state, out_cols, ord_cols, spec)
             retained = retained.sort_values(by, ascending=ascending, kind="mergesort")
-            snap += 1
-            state.update((_pickle.dumps(rows.reset_index(drop=True)), snap))
             return [
                 (*r, snap)
                 for r in retained[out_cols].itertuples(index=False, name=None)
             ]
 
+        return self._retained_state(
+            df, pkey, f"#window.{si.window.name}", step, out_schema
+        )
+
+    def _retained_state(self, df, pkey, what, step, out_schema) -> DataFrame:
+        """A retention operator's keyed state: one state key per
+        ``partition with`` value, or one global key (single-task)."""
         if pkey:
             keys = [pkey]
         else:
-            W.warn_global_order(f"streaming #window.{si.window.name} (global retained set)")
+            W.warn_global_order(f"streaming {what} (global retained set)")
             df = df.withColumn("__gk", F.lit(1))
             keys = ["__gk"]
         return keyed_state(
-            df, keys, step, out_schema, state_schema,
+            df, keys, step, out_schema, _RETAINED_STATE_SCHEMA,
             GroupStateTimeout.NoTimeout, None,
         )
 
@@ -480,67 +558,30 @@ class StreamingPlanner(BatchPlanner):
             q, key_names, field_types, allow_cur=False,
             what=f"#window.{wname} retained-set aggregation",
         )
-        out_fields = out_fields + [T.StructField(SNAPSHOT_COL, T.IntegerType())]
-        out_schema = T.StructType(out_fields)
-        out_names = [f.name for f in out_fields]
-        out_cols = [c for c in df.columns if c != "__event_time"]
-        ord_cols = ([TS_COL] if schema.ts_field is not None else []) + [
-            f for f in schema.fields if f != schema.ts_field
-        ]
-        ord_cols = [c for c in ord_cols if c in out_cols]
-        state_schema = T.StructType(
-            [T.StructField("rows", T.BinaryType()), T.StructField("snap", T.IntegerType())]
+        out_schema = T.StructType(
+            out_fields + [T.StructField(SNAPSHOT_COL, T.IntegerType())]
         )
+        out_cols = [c for c in df.columns if c != "__event_time"]
+        ord_cols = [c for c in self.ord_cols_for(schema) if c in out_cols]
         # retention parameters: ONE shared parse + compute with the row
         # snapshots (_retention_spec/_retain) so the two operators cannot
         # drift apart.
         spec = _retention_spec(si.window, schema, out_cols, ord_cols)
-        # plain-function alias: the proc closure must not capture self (the
-        # planner holds the catalog's DataFrames — unpicklable on executors)
-        agg_over = StreamingPlanner._agg_over
+        cols = key_names + [c for c in carry if c not in key_names]
+        n_keys = len(key_names)
 
         def step(key, rows, state):
-            import math as _math
-            import pickle as _pickle
-
-            new = rows.frame()[out_cols]
-            snap = 0
-            if state.exists:
-                blob, snap = state.get
-                stored = _pickle.loads(bytes(blob))[new.columns]
-                rows = pd.concat([stored, new], ignore_index=True)
-            else:
-                rows = new
-            rows = rows.sort_values(ord_cols, kind="mergesort").reset_index(drop=True)
-            rows, retained = _retain(rows, spec)
-            retained = retained.sort_values(ord_cols, kind="mergesort").reset_index(drop=True)
-            snap += 1
-            state.update((_pickle.dumps(rows.reset_index(drop=True)), snap))
-
-            def clean(series):
-                return [
-                    v for v in (x.item() if hasattr(x, "item") else x for x in series)
-                    if v is not None and not (isinstance(v, float) and _math.isnan(v))
-                ]
-
+            retained, snap = _retained_step(rows, state, out_cols, ord_cols, spec)
+            decoded = _decode_rows(retained, cols, ord_cols)
+            groups = {(): decoded}
             if key_names:
-                groups = list(retained.groupby(key_names, sort=False, dropna=False))
-            else:
-                groups = [((), retained)]
-            recs = []
-            for gkey, g in groups:
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                rec = []
-                for out_name, kind, col in plan:
-                    if kind == "key":
-                        rec.append(gkey[key_names.index(col)])
-                    elif kind == "count":
-                        rec.append(len(g))
-                    else:
-                        rec.append(agg_over(kind, clean(g[col])))
-                rec.append(snap)
-                recs.append(rec)
+                groups = {}
+                for r in decoded:
+                    groups.setdefault(tuple(r[:n_keys]), []).append(r)
+            recs = [
+                _record(plan, gkey, key_names, cols, None, g) + [snap]
+                for gkey, g in groups.items()
+            ]
             if not recs:
                 # an empty GROUPED revision (the retained set aggregates to
                 # zero groups — e.g. lossyFrequent where no combo clears
@@ -551,20 +592,11 @@ class StreamingPlanner(BatchPlanner):
                 # selecting the max snapshot (a real group row always has
                 # its aggregates present — only the pathological
                 # no-count, null-key, all-null-agg group is ambiguous).
-                recs.append([None] * (len(out_names) - 1) + [snap])
+                recs.append([None] * len(out_fields) + [snap])
             return recs
 
-        if pkey:
-            keys = [pkey]
-        else:
-            W.warn_global_order(
-                f"streaming #window.{wname} aggregation (global retained set)"
-            )
-            df = df.withColumn("__gk", F.lit(1))
-            keys = ["__gk"]
-        return keyed_state(
-            df, keys, step, out_schema, state_schema,
-            GroupStateTimeout.NoTimeout, None,
+        return self._retained_state(
+            df, pkey, f"#window.{wname} aggregation", step, out_schema
         )
 
     def _streaming_agg(self, df: DataFrame, q: A.Query, si: A.SingleInput, resolver) -> DataFrame:
@@ -819,25 +851,6 @@ class StreamingPlanner(BatchPlanner):
             )
         return plan, carry, out_fields
 
-    @staticmethod
-    def _agg_over(kind: str, xs: list):
-        """One aggregate value over a window's non-null column values."""
-        if kind == "sum":
-            return sum(xs) if xs else None
-        if kind == "avg":
-            return float(sum(xs)) / len(xs) if xs else None
-        if kind == "min":
-            return min(xs) if xs else None
-        if kind == "max":
-            return max(xs) if xs else None
-        if kind == "first":
-            return xs[0] if xs else None
-        if kind == "last":
-            return xs[-1] if xs else None
-        if kind == "distinctcount":
-            return len(set(xs))
-        raise AssertionError(kind)
-
     def _keyed_window(self, df, key_names, step, out_schema, state_schema):
         """The count/time window lowerings' keyed state: one state key per
         ``key_names`` combination (bucketed by ``window_key_buckets``), or
@@ -866,61 +879,24 @@ class StreamingPlanner(BatchPlanner):
         plan, value_cols, out_fields = self._plan_stateful_items(
             q, key_names, field_types, allow_cur=False, what="lengthBatch"
         )
-        out_schema = T.StructType(out_fields)
         state_schema = T.StructType([T.StructField("buffer", T.ArrayType(T.StringType()))])
-
-        ts_in_df = TS_COL in df.columns
-        sort_cols = ([TS_COL] if ts_in_df else []) + value_cols
-        carry_cols = sort_cols  # what each buffered row needs
-        plan_c, key_names_c, n_c = plan, key_names, n
+        # what each buffered row carries, also its sort order
+        carry_cols = ([TS_COL] if TS_COL in df.columns else []) + value_cols
 
         def step(key, rows, state):
-            import json as _json
-            import math
-
-            buffer = list(state.get[0]) if state.exists else []
-            if not carry_cols:  # pure count(): row presence is the datum
-                buffer.extend("[]" for _ in range(len(rows)))
-            elif len(rows):
-                part = rows.frame()[carry_cols].sort_values(by=sort_cols)
-                buffer.extend(
-                    _json.dumps([None if (isinstance(v, float) and math.isnan(v)) else v
-                                 for v in r])
-                    for r in part.itertuples(index=False, name=None)
-                )
-            out = []
-            while len(buffer) >= n_c:
-                chunk = [_json.loads(s) for s in buffer[:n_c]]
-                buffer = buffer[n_c:]
-                vals = {c: [row[carry_cols.index(c)] for row in chunk] for c in value_cols}
-                rec = []
-                for out_name, kind, col in plan_c:
-                    if kind == "key":
-                        rec.append(key[key_names_c.index(col)])
-                    elif kind == "count":
-                        rec.append(n_c)
-                    elif kind == "sum":
-                        rec.append(sum(v for v in vals[col] if v is not None))
-                    elif kind == "avg":
-                        xs = [v for v in vals[col] if v is not None]
-                        rec.append(float(sum(xs)) / len(xs) if xs else None)
-                    elif kind == "min":
-                        xs = [v for v in vals[col] if v is not None]
-                        rec.append(min(xs) if xs else None)
-                    elif kind == "max":
-                        xs = [v for v in vals[col] if v is not None]
-                        rec.append(max(xs) if xs else None)
-                    elif kind == "first":
-                        rec.append(vals[col][0])
-                    elif kind == "last":
-                        rec.append(vals[col][-1])
-                    elif kind == "distinctcount":
-                        rec.append(len({v for v in vals[col] if v is not None}))
-                out.append(rec)
-            state.update((buffer,))
+            buf = [json.loads(s) for s in state.get[0]] if state.exists else []
+            buf.extend(_decode_rows(rows.frame(), carry_cols, carry_cols))
+            cut = len(buf) - len(buf) % n
+            out = [
+                _record(plan, key, key_names, carry_cols, None, buf[i:i + n])
+                for i in range(0, cut, n)
+            ]
+            state.update(([json.dumps(r) for r in buf[cut:]],))
             return out
 
-        return self._keyed_window(df, key_names, step, out_schema, state_schema)
+        return self._keyed_window(
+            df, key_names, step, T.StructType(out_fields), state_schema
+        )
 
     def _streaming_sliding_length(
         self, df: DataFrame, q: A.Query, si: A.SingleInput, key_names: list[str],
@@ -947,63 +923,30 @@ class StreamingPlanner(BatchPlanner):
         )
         if t_ms is not None and ts_field not in carry:
             carry.append(ts_field)
-        out_schema = T.StructType(out_fields)
         state_schema = T.StructType([T.StructField("ring", T.ArrayType(T.StringType()))])
-        ts_in_df = TS_COL in df.columns
-        sort_cols = ([TS_COL] if ts_in_df else []) + carry
-        carry_cols = sort_cols
-        plan_c, key_names_c, n_c = plan, key_names, n
-        agg_over = StreamingPlanner._agg_over
-
+        carry_cols = ([TS_COL] if TS_COL in df.columns else []) + carry
         ts_idx = carry_cols.index(ts_field) if t_ms is not None else None
-        t_ms_c = t_ms
 
         def step(key, rows, state):
-            import json as _json
-            import math
-
-            import numpy as _np
-
-            ring = list(state.get[0]) if state.exists else []
+            ring = [json.loads(s) for s in state.get[0]] if state.exists else []
             out = []
-            if len(rows):
-                part = rows.frame()[carry_cols].sort_values(by=sort_cols)
-                for r in part.itertuples(index=False, name=None):
-                    row = [
-                        None if (isinstance(v, float) and math.isnan(v))
-                        else (v.item() if isinstance(v, _np.generic) else v)
-                        for v in r
-                    ]  # numpy scalars (int64!) are not JSON-serializable
-                    ring.append(_json.dumps(row))
-                    if len(ring) > n_c:
+            for row in _decode_rows(rows.frame(), carry_cols, carry_cols):
+                ring.append(row)
+                if len(ring) > n:
+                    ring.pop(0)
+                if t_ms is not None:
+                    # hybrid window: drop entries older than t relative to
+                    # the arriving event (the ring is in ts order)
+                    lo = int(row[ts_idx]) - t_ms
+                    while ring and (ring[0][ts_idx] is None or int(ring[0][ts_idx]) <= lo):
                         ring.pop(0)
-                    if t_ms_c is not None:
-                        # hybrid window: drop entries older than t relative
-                        # to the arriving event (ring is in ts order)
-                        cur_ts = int(row[ts_idx])
-                        while ring:
-                            head = _json.loads(ring[0])
-                            if head[ts_idx] is None or int(head[ts_idx]) <= cur_ts - t_ms_c:
-                                ring.pop(0)
-                            else:
-                                break
-                    win = [_json.loads(s) for s in ring]
-                    rec = []
-                    for out_name, kind, col in plan_c:
-                        if kind == "key":
-                            rec.append(key[key_names_c.index(col)])
-                        elif kind == "cur":
-                            rec.append(row[carry_cols.index(col)])
-                        elif kind == "count":
-                            rec.append(len(win))
-                        else:
-                            xs = [w[carry_cols.index(col)] for w in win]
-                            rec.append(agg_over(kind, [v for v in xs if v is not None]))
-                    out.append(rec)
-            state.update((ring,))
+                out.append(_record(plan, key, key_names, carry_cols, row, ring))
+            state.update(([json.dumps(r) for r in ring],))
             return out
 
-        return self._keyed_window(df, key_names, step, out_schema, state_schema)
+        return self._keyed_window(
+            df, key_names, step, T.StructType(out_fields), state_schema
+        )
 
     def _streaming_sliding_time(
         self, df: DataFrame, q: A.Query, si: A.SingleInput, key_names: list[str],
@@ -1027,61 +970,42 @@ class StreamingPlanner(BatchPlanner):
         plan, carry, out_fields = self._plan_stateful_items(
             q, key_names, field_types, allow_cur=True, what="time window"
         )
-        out_schema = T.StructType(out_fields)
         state_schema = T.StructType([
             T.StructField("buffer", T.ArrayType(T.StringType())),
             T.StructField("max_ts", T.LongType()),
         ])
         if TS_COL not in df.columns:
             raise SiddhiPlannerException("#window.time needs the stream's ts_field")
-        sort_cols = [TS_COL] + carry
-        carry_cols = sort_cols  # ts is element 0 of every buffered row
-        plan_c, key_names_c, t_c = plan, key_names, int(t_ms)
-        agg_over = StreamingPlanner._agg_over
+        carry_cols = [TS_COL] + carry  # ts is element 0 of every buffered row
+        t_ms = int(t_ms)
 
         def step(key, rows, state):
-            import json as _json
-            import math
-
             if state.exists:
                 stored, max_ts = state.get
-                buf = [_json.loads(s) for s in stored]
+                buf = [json.loads(s) for s in stored]
             else:
                 buf, max_ts = [], None
             out = []
-            if len(rows):
-                part = rows.frame()[carry_cols].sort_values(by=sort_cols)
-                for r in part.itertuples(index=False, name=None):
-                    row = [None if (isinstance(v, float) and math.isnan(v)) else v
-                           for v in r]
-                    ts = int(row[0])
-                    max_ts = ts if max_ts is None else max(max_ts, ts)
-                    # insert in event-time order (late rows land mid-buffer)
-                    k = len(buf)
-                    while k > 0 and buf[k - 1][0] > ts:
-                        k -= 1
-                    buf.insert(k, row)
-                    # evict rows that can never appear in a future window
-                    lo = max_ts - t_c
-                    while buf and buf[0][0] < lo:
-                        buf.pop(0)
-                    win = [w for w in buf if ts - t_c <= w[0] <= ts]
-                    rec = []
-                    for out_name, kind, col in plan_c:
-                        if kind == "key":
-                            rec.append(key[key_names_c.index(col)])
-                        elif kind == "cur":
-                            rec.append(row[carry_cols.index(col)])
-                        elif kind == "count":
-                            rec.append(len(win))
-                        else:
-                            xs = [w[carry_cols.index(col)] for w in win]
-                            rec.append(agg_over(kind, [v for v in xs if v is not None]))
-                    out.append(rec)
-            state.update(([_json.dumps(r) for r in buf], max_ts if max_ts is not None else 0))
+            for row in _decode_rows(rows.frame(), carry_cols, carry_cols):
+                ts = int(row[0])
+                max_ts = ts if max_ts is None else max(max_ts, ts)
+                # insert in event-time order (late rows land mid-buffer)
+                k = len(buf)
+                while k > 0 and buf[k - 1][0] > ts:
+                    k -= 1
+                buf.insert(k, row)
+                # evict rows that can never appear in a future window
+                lo = max_ts - t_ms
+                while buf and buf[0][0] < lo:
+                    buf.pop(0)
+                win = [w for w in buf if ts - t_ms <= w[0] <= ts]
+                out.append(_record(plan, key, key_names, carry_cols, row, win))
+            state.update(([json.dumps(r) for r in buf], max_ts if max_ts is not None else 0))
             return out
 
-        return self._keyed_window(df, key_names, step, out_schema, state_schema)
+        return self._keyed_window(
+            df, key_names, step, T.StructType(out_fields), state_schema
+        )
 
     # ------------------------------------------------- streaming aggregation
     def _compile_agg_read(self, q: A.Query) -> DataFrame:
@@ -1143,41 +1067,6 @@ class StreamingPlanner(BatchPlanner):
         return self._select_rowwise(df, q, resolver, list(df.columns))
 
     # ------------------------------------------------------- streaming pattern
-    def compile_plan(self, plan_text: str) -> dict[str, DataFrame]:
-        """Compile a multi-query execution plan over streaming sources.
-
-        Mirrors the batch ExecutionSiddhiStream chaining contract (cep.py):
-        each ``insert into`` output is registered into the catalog so later
-        queries can consume it, and multi-query fan-in into the same output
-        unions by name. Everything composes into one streaming DAG per
-        terminal output — attach one sink per returned entry. Table DML needs
-        streaming/tables.py (foreachBatch) and is rejected here.
-        """
-        from ..schema import StreamSchema
-        from ..siddhiql.parser import parse
-
-        plan = parse(plan_text)
-        outputs: dict[str, DataFrame] = {}
-        for q in plan.queries:
-            if q.dml is not None or (
-                q.insert_into is not None
-                and q.insert_into in self.catalog
-                and self.catalog[q.insert_into].is_table
-            ):
-                raise UnsupportedFeatureException(
-                    "table DML in a streaming plan: use streaming/tables.py "
-                    "(foreachBatch continuous DML)"
-                )
-            df = self.compile_query(q)
-            if q.insert_into:
-                if q.insert_into in outputs:
-                    df = outputs[q.insert_into].unionByName(df)
-                outputs[q.insert_into] = df
-                self.catalog[q.insert_into] = StreamSchema(
-                    q.insert_into, df, list(df.columns)
-                )
-        return outputs
-
     def compile_query(self, q: A.Query) -> DataFrame:
         if isinstance(q.input, A.PatternInput):
             streams = {
@@ -1231,21 +1120,9 @@ class StreamingPlanner(BatchPlanner):
 
         fields = list(schema.fields)
         field_types = {f.name: f.dataType for f in schema.df.schema.fields}
-        out_fields = []
-        col_of = {}
-        for e in elems:
-            if e.negated:
-                continue
-            for fname in fields:
-                out_name = f"{e.alias}__{fname}"
-                col_of[(e.alias, fname)] = out_name
-                out_fields.append(
-                    T.StructField(
-                        out_name,
-                        T.ArrayType(field_types[fname]) if e.is_collection else field_types[fname],
-                        True,
-                    )
-                )
+        out_fields, _, field_names, collection, resolve = pattern_output(
+            elems, {stream: schema}
+        )
         out_schema = T.StructType(out_fields)
         out_names = [f.name for f in out_fields]
         # buffer state = ONE json blob of row arrays, stored SORTED. ``seen``
@@ -1265,8 +1142,6 @@ class StreamingPlanner(BatchPlanner):
         every, within_ms = p.every, p.within_ms
         every_at = p.every_at
         filters = [(e.stream, e.filter) for e in elems]
-        field_names = {e.alias: fields for e in elems if not e.negated}
-        collection = {e.alias: e.is_collection for e in elems if not e.negated}
         max_buffer = self.max_buffer_per_key
 
         # --- row packing (round 7): ship each event to the stateful operator
@@ -1749,23 +1624,5 @@ class StreamingPlanner(BatchPlanner):
             else GroupStateTimeout.NoTimeout,
             self.pattern_key_buckets,
         )
-
-        singles = [e for e in elems if not e.negated]
-
-        def resolve(ref: A.Ref) -> Column:
-            if ref.stream is not None:
-                key = (ref.stream, ref.name)
-                if key not in col_of:
-                    raise SiddhiPlannerException(f"unknown pattern reference {ref.stream}.{ref.name}")
-                c = F.col(col_of[key])
-                if collection.get(ref.stream, False):
-                    # F.get: null past the captured count (Siddhi semantics)
-                    return F.get(c, ref.index if ref.index is not None else 0)
-                return c
-            for e in singles:
-                if ref.name in field_names[e.alias]:
-                    c = F.col(col_of[(e.alias, ref.name)])
-                    return F.get(c, 0) if collection[e.alias] else c
-            raise SiddhiPlannerException(f"unknown column '{ref.name}' after pattern")
 
         return self._select_rowwise(result, q, resolve, out_names)

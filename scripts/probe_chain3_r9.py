@@ -63,9 +63,14 @@ QUANT_CQL = (
 
 def _gen(spark, root: str) -> str:
     """Same generator as probe_streaming_100x: ts-ordered 10ms steps, hot
-    key user 1 at ~10%, rest over 100k users, types cycling so the chain
-    has arms at every stage."""
+    key user 1 at ~10%, rest over 100k users, each user's type cycling
+    with the 100k-id block so the chain has arms at every stage."""
     src = os.path.join(root, "in")
+    # a user's events are 100k ids apart, so the event type follows the
+    # 100k-id block: each user walks view -> click -> purchase -> view ...
+    # (a type from the id itself would repeat for every user, as 100k is a
+    # multiple of the type cycle)
+    block = F.floor(F.col("id") / 100_000)
     per = N_EVENTS // N_WAVES
     for b in range(N_WAVES):
         df = (
@@ -74,10 +79,10 @@ def _gen(spark, root: str) -> str:
                 F.col("id").alias("event_id"),
                 F.when(F.col("id") % 10 == 0, F.lit(1))
                 .otherwise((F.col("id") % 100_000) + 10).alias("user_id"),
-                F.when(F.col("id") % 20 == 19, F.lit("error"))
-                .when(F.col("id") % 5 == 0, F.lit("view"))
-                .when(F.col("id") % 5 == 1, F.lit("click"))
-                .when(F.col("id") % 5 == 2, F.lit("purchase"))
+                F.when(block % 20 == 19, F.lit("error"))
+                .when(block % 5 == 0, F.lit("view"))
+                .when(block % 5 == 1, F.lit("click"))
+                .when(block % 5 == 2, F.lit("purchase"))
                 .otherwise(F.lit("view")).alias("event_type"),
                 (F.col("id") % 97).cast("double").alias("value"),
                 (F.lit(1_700_000_000_000) + F.col("id") * 10).alias("ts_ms"),

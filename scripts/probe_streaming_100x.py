@@ -36,10 +36,15 @@ ONLY = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 def _gen(spark, root: str) -> str:
     """10M synthetic events, ts-ordered at 10ms steps (~28h span), user_id
     skewed: every 10th event lands on user 1 (the hot key, ~1M events);
-    the rest spread over 100k users. Event types cycle so every op has
-    matches: view/click/purchase feed the funnel + attribution +
-    NFA(error->purchase); errors at 5%."""
+    the rest spread over 100k users. Each user's event type cycles with
+    the 100k-id block so every op has matches: view/click/purchase feed
+    the funnel + attribution + NFA(error->purchase); errors at 5%."""
     src = os.path.join(root, "in")
+    # a user's events are 100k ids apart, so the event type follows the
+    # 100k-id block: each user walks view -> click -> purchase -> view ...
+    # (a type from the id itself would repeat for every user, as 100k is a
+    # multiple of the type cycle)
+    block = F.floor(F.col("id") / 100_000)
     per = N_EVENTS // N_BATCHES
     for b in range(N_BATCHES):
         df = (
@@ -48,10 +53,10 @@ def _gen(spark, root: str) -> str:
                 F.col("id").alias("event_id"),
                 F.when(F.col("id") % 10 == 0, F.lit(1))
                 .otherwise((F.col("id") % 100_000) + 10).alias("user_id"),
-                F.when(F.col("id") % 20 == 19, F.lit("error"))
-                .when(F.col("id") % 5 == 0, F.lit("view"))
-                .when(F.col("id") % 5 == 1, F.lit("click"))
-                .when(F.col("id") % 5 == 2, F.lit("purchase"))
+                F.when(block % 20 == 19, F.lit("error"))
+                .when(block % 5 == 0, F.lit("view"))
+                .when(block % 5 == 1, F.lit("click"))
+                .when(block % 5 == 2, F.lit("purchase"))
                 .otherwise(F.lit("view")).alias("event_type"),
                 (F.col("id") % 97).cast("double").alias("value"),
                 (F.lit(1_700_000_000_000) + F.col("id") * 10).alias("ts_ms"),

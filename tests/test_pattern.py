@@ -295,3 +295,19 @@ def test_pattern_engine_is_logged_once_per_compile(spark, tmp_path, caplog):
         assert got == [f"pattern engine ({mode}): {engine}"], (
             mode, pattern, got,
         )
+    # both modes resolve select references through one resolver: an index
+    # into a non-collection element is a plan-time error in each
+    from flink_siddhi_spark.errors import SiddhiPlannerException
+
+    for mode in ("batch", "streaming"):
+        cep = SiddhiCEP(spark)
+        if mode == "batch":
+            cep.define("s", make_events(spark, rows), "id", "name", "price",
+                       "timestamp", ts_field="timestamp")
+        else:
+            cep.register_stream("s", stream, "id", "name", "price",
+                                "timestamp", ts_field="timestamp")
+        with pytest.raises(SiddhiPlannerException, match="a is not a collection"):
+            cep.from_("s").cql(
+                f"from {two} select a[1].id as a_id insert into Out"
+            )

@@ -180,6 +180,61 @@ def test_query_manager_bad_update_keeps_running_plan():
     assert qm.queries["p1"].query_handle is not handle
 
 
+def test_query_manager_failed_plan_restarts_bounded(caplog):
+    """ensure_running restarts a drained sink; a sink that died with an
+    error is logged, keeps its error, and is restarted at most
+    MAX_RESTARTS times in a row before it is left stopped and failed."""
+    import logging
+
+    from flink_siddhi_spark.streaming.query_manager import (
+        MAX_RESTARTS,
+        QueryManager,
+    )
+
+    class Plan:
+        isStreaming = True
+
+    class Handle:
+        isActive = True
+        err = None
+
+        def exception(self):
+            return self.err
+
+        def stop(self):
+            pass
+
+    started = []
+
+    def sink_fn(qid, df):
+        started.append(Handle())
+        return started[-1]
+
+    caplog.set_level(logging.WARNING, logger="flink_siddhi_spark")
+    qm = QueryManager(lambda text: Plan(), sink_fn=sink_fn)
+    qm.add("p1", "from s select id insert into Out")
+    mq = qm.queries["p1"]
+    started[-1].isActive = False  # drained cleanly: restarted, no error
+    qm.ensure_running()
+    assert len(started) == 2 and mq.error is None
+    for i in range(MAX_RESTARTS + 1):
+        started[-1].isActive = False
+        started[-1].err = RuntimeError(f"boom {i}")
+        qm.ensure_running()
+        assert str(mq.error) == f"boom {i}"
+    assert len(started) == 2 + MAX_RESTARTS
+    assert mq.failed and str(mq.error) == f"boom {MAX_RESTARTS}"
+    qm.ensure_running()  # a failed plan stays stopped
+    assert len(started) == 2 + MAX_RESTARTS
+    warned = [r.getMessage() for r in caplog.records
+              if r.levelno == logging.WARNING]
+    assert len(warned) == MAX_RESTARTS + 1
+    assert f"boom {MAX_RESTARTS}" in warned[-1] and "left stopped" in warned[-1]
+    qm.disable("p1")
+    qm.enable("p1")  # an explicit re-enable starts it afresh
+    assert not mq.failed and len(started) == 3 + MAX_RESTARTS
+
+
 def test_streaming_group_agg_update(spark, tmp_path):
     rows = [(i % 2, "e", float(i), 1000 * i) for i in range(10)]
     path = write_events(spark, tmp_path / "in4", rows)
@@ -590,12 +645,12 @@ def test_streaming_chained_queries(spark, tmp_path):
     cep = SiddhiCEP(spark)
     cep.register_stream("s", file_stream(spark, path, EVENT_SCHEMA),
                         "id", "name", "price", "timestamp", ts_field="timestamp")
-    planner = StreamingPlanner(cep.catalog, cep.extensions)
-    outs = planner.compile_plan(
+    outs = cep.from_("s").cql(
         "from s[price >= 3.0] select id, price, timestamp insert into Mid "
         "from Mid select id, count() as n, sum(price) as total group by id insert into Out"
-    )
+    ).outputs
     assert set(outs) == {"Mid", "Out"}
+    assert outs["Out"].isStreaming
     q = to_memory(outs["Out"], "m_chain", checkpoint=str(tmp_path / "ck_chain"),
                   output_mode="complete")
     q.awaitTermination(60)
@@ -612,11 +667,10 @@ def test_streaming_fan_in(spark, tmp_path):
     cep = SiddhiCEP(spark)
     cep.register_stream("s", file_stream(spark, path, EVENT_SCHEMA),
                         "id", "name", "price", "timestamp", ts_field="timestamp")
-    planner = StreamingPlanner(cep.catalog, cep.extensions)
-    outs = planner.compile_plan(
+    outs = cep.from_("s").cql(
         "from s[id < 2] select id, price insert into Out "
         "from s[id > 7] select id, price insert into Out"
-    )
+    ).outputs
     q = to_memory(outs["Out"], "m_fan", checkpoint=str(tmp_path / "ck_fan"))
     q.awaitTermination(60)
     got = sorted((r.id, r.price) for r in spark.sql("select * from m_fan").collect())
@@ -1281,19 +1335,21 @@ def test_streaming_unique_window_revised_aggregate(spark, tmp_path):
 
 
 def test_streaming_batch_window_revised_aggregate(spark, tmp_path):
-    # #window.batch retains everything: running aggregate, grouped by name
-    rows1 = [(1, "a", 1.0, 1000), (2, "b", 2.0, 2000)]
+    # #window.batch retains everything: running aggregate, grouped by name.
+    # a's leading null price is its first value (the batch contract) while
+    # max skips it
+    rows1 = [(0, "a", None, 500), (1, "a", 1.0, 1000), (2, "b", 2.0, 2000)]
     rows2 = [(3, "a", 3.0, 3000)]
     snaps, bset = _retained_agg_parity(
         spark, tmp_path, "batch_agg",
-        "from s#window.batch() select name, count() as n, max(price) as hi "
-        "group by name insert into Out",
+        "from s#window.batch() select name, count() as n, max(price) as hi, "
+        "first(price) as f group by name insert into Out",
         rows1, rows2,
     )
     assert snaps[max(snaps)] == bset
     assert snaps[max(snaps)] == {
-        (("hi", 3.0), ("n", 2), ("name", "a")),
-        (("hi", 2.0), ("n", 1), ("name", "b")),
+        (("f", None), ("hi", 3.0), ("n", 3), ("name", "a")),
+        (("f", 2.0), ("hi", 2.0), ("n", 1), ("name", "b")),
     }
 
 
