@@ -231,9 +231,7 @@ def minhash_lsh_pairs(
     # signature table on both sides, and without this the shingle-explode
     # md5 pipeline (the expensive part) would execute twice
     sig = sig.localCheckpoint(eager=False)
-    rpb = num_hashes // bands
-    sig_cols = [f"sig_{j}" for j in range(num_hashes)]
-    # candidates come from a banded self-EQUI-join on (band, bucket) — the
+    # candidates come from a banded self-EQUI-join on the band key — the
     # same shape as simhash_hamming_pairs: hash shuffle on the bucket key,
     # per-candidate scoring as 8 codegen'd column comparisons. (An earlier
     # implementation grouped each bucket into ONE collect_list array and
@@ -241,31 +239,7 @@ def minhash_lsh_pairs(
     # duplicate density because the expansion runs on the interpreted
     # expression path, and a viral bucket materializes as a single in-memory
     # array, a memory cliff the join shape does not have.)
-    #
-    # Signature narrowing (round 11, VERDICT r10 item 7 / guide §2.3
-    # "narrower types"): strictly INSIDE this function the 8-hex-char sig
-    # strings become bigints via conv(sig,16,10) — fixed-width lowercase
-    # hex is order- and equality-isomorphic to its numeric value, so the
-    # agreement count (and est_jaccard) is unchanged while each shuffled
-    # sig cell drops from ~20 B (string) to 8 B. The band bucket becomes a
-    # struct of the band's narrowed sig VALUES instead of an md5 over the
-    # hex concat: bucket equality is then EXACT tuple equality (the LSH
-    # definition md5 merely approximated), ~16 B vs a 32-hex string, and
-    # the per-row md5-per-band disappears. All-null signatures (shingle-
-    # less docs) behave identically: null slots count 0 matches either
-    # way. The hex output contract of minhash_signatures/dedup_minhash_sig
-    # is untouched.
-    nsig = sig.selectExpr(
-        f"{sql_ident(id_col)} AS id",
-        *[f"CAST(conv({c}, 16, 10) AS BIGINT) AS {c}" for c in sig_cols],
-    )
-    band_structs = ", ".join(
-        f"named_struct('band', {bnd}, "
-        + ", ".join(f"'k{i}', {sig_cols[bnd * rpb + i]}" for i in range(rpb))
-        + ")"
-        for bnd in range(bands)
-    )
-    ex = nsig.selectExpr("id", *sig_cols, f"explode(array({band_structs})) AS b")
+    ex = _lsh_banded(sig, id_col, num_hashes, bands)
     cond = "a.b = b.b AND a.id < b.id"
     if max_bucket is not None:
         # per-(band, bucket) size + min id: oversize buckets keep only the
@@ -275,21 +249,73 @@ def minhash_lsh_pairs(
         )
         ex = ex.join(stats, "b")
         cond += f" AND (a.__bn <= {max_bucket} OR a.id = a.__bmin)"
-    matches = " + ".join(
-        f"CASE WHEN a.sig_{j} = b.sig_{j} THEN 1 ELSE 0 END"
-        for j in range(num_hashes)
-    )
     # score BEFORE dropDuplicates: the agreement filter is cheap codegen and
     # shrinks the dedup shuffle from |candidates| to |true pairs|
     return (
         ex.alias("a").join(ex.alias("b"), F.expr(cond))
         .selectExpr(
             "a.id AS id_a", "b.id AS id_b",
-            f"round(({matches}) / {float(num_hashes)!r}D, 6) AS est_jaccard",
+            _est_jaccard_sql(num_hashes),
         )
         .filter(f"est_jaccard >= {float(threshold)!r}D")
         .dropDuplicates(["id_a", "id_b"])
     )
+
+
+def _lsh_banded(sig: DataFrame, id_col: str, num_hashes: int,
+                bands: int) -> DataFrame:
+    """(id, sig_0..sig_{k-1}, b): one row per (doc, band) of a
+    ``minhash_signatures`` table, the ONE banding every LSH path joins on.
+
+    The 8-hex-char sig strings become bigints via conv(sig,16,10) —
+    fixed-width lowercase hex is order- and equality-isomorphic to its
+    numeric value, so the agreement count (and est_jaccard) is unchanged
+    while each shuffled sig cell drops from ~20 B (string) to 8 B. The
+    band key ``b`` is a struct of the band index and the band's narrowed
+    sig VALUES: bucket equality is EXACT tuple equality (a hash over the
+    hex concat merely approximates it) at ~16-24 B a key, and no row
+    pays a per-band hash. Shingle-less docs (null signatures) get no
+    rows: a struct of nulls is a valid join key that would pair them
+    with each other."""
+    rpb = num_hashes // bands
+    sig_cols = [f"sig_{j}" for j in range(num_hashes)]
+    return (
+        sig.filter(F.col("sig_0").isNotNull())
+        .selectExpr(
+            f"{sql_ident(id_col)} AS id",
+            *[f"{_sig_bigint(c)} AS {c}" for c in sig_cols],
+        )
+        .selectExpr(
+            "id", *sig_cols,
+            f"explode(array({', '.join(_band_keys(sig_cols, bands, rpb))})) AS b",
+        )
+    )
+
+
+def _sig_bigint(sig: str) -> str:
+    """SQL: an 8-hex-char MinHash slot as the bigint of the same value."""
+    return f"CAST(conv({sig}, 16, 10) AS BIGINT)"
+
+
+def _band_keys(sigs: list, bands: int, rpb: int) -> list:
+    """SQL band keys over bigint signature slots ``sigs``: band ``b`` is
+    ``named_struct('band', b, 'k0', sig, ...)`` over its ``rpb`` slots."""
+    return [
+        f"named_struct('band', {b}, "
+        + ", ".join(f"'k{i}', {sigs[b * rpb + i]}" for i in range(rpb))
+        + ")"
+        for b in range(bands)
+    ]
+
+
+def _est_jaccard_sql(num_hashes: int) -> str:
+    """SQL: the fraction of agreeing signature slots between join sides
+    ``a`` and ``b``, rounded to 6 decimals, as ``est_jaccard``."""
+    matches = " + ".join(
+        f"CASE WHEN a.sig_{j} = b.sig_{j} THEN 1 ELSE 0 END"
+        for j in range(num_hashes)
+    )
+    return f"round(({matches}) / {float(num_hashes)!r}D, 6) AS est_jaccard"
 
 
 def simhash(df: DataFrame, bits: int = 16, text_col: str = "text",
@@ -837,29 +863,37 @@ def _cc_fused_fn(max_iterations: int, pair_limit: int):
 FUSED_CC_PAIR_LIMIT = 5_000_000
 
 
-def dedup_clusters(
-    pairs: DataFrame, max_iterations: int = 20, fused: bool = True
-) -> DataFrame:
+def _cc_not_converged(max_iterations: int) -> RuntimeError:
+    return RuntimeError(
+        f"dedup_clusters did not converge in max_iterations="
+        f"{max_iterations} rounds: the pair graph has a component of "
+        f"diameter > {max_iterations} (labels still changed in the last "
+        "round). Raise max_iterations — each extra round costs one "
+        "edges-join + groupBy-min."
+    )
+
+
+def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     """Connected components over a duplicate-pair graph: each doc maps to the
     minimum id reachable through pair edges (the cluster's canonical id).
 
     Input: (id_a, id_b) pair rows (e.g. from minhash_lsh_pairs). Output:
     (doc_id, cluster_id).
 
-    ``fused=True`` (default since the optimization round): the whole
-    propagation loop runs in ONE Arrow task over the pair table — the pair
-    graph is |near-dup pairs|-bounded (a small fraction of the corpus under
-    LSH banding + caps), so the per-round Spark machinery (edges⋈labels
-    join, groupBy-min, eager localCheckpoint, convergence-probe count = ~3
-    jobs x rounds) costs far more than the propagation itself. The fused
+    The whole propagation loop runs in ONE Arrow task over the pair
+    table — the pair graph is |near-dup pairs|-bounded (a small fraction
+    of the corpus under LSH banding + caps), so the per-round Spark
+    machinery (edges⋈labels join, groupBy-min, eager localCheckpoint,
+    convergence-probe count = ~3 jobs x rounds) costs far more than the
+    propagation itself. The fused
     task runs the identical per-round min-label algorithm (numpy segment
     mins), so labels and the non-convergence raise are equal by
     construction; one job materializes it, one trivial probe reads the
     convergence flag. The fused engine is size-guarded (round 11): the
     task aborts past ``FUSED_CC_PAIR_LIMIT`` arriving pair rows with an
     ``__overflow`` sentinel (bounding its memory and read volume) and the
-    call re-routes to the distributed loop automatically — ``fused=False``
-    forces that loop for pair graphs beyond one task's memory:
+    call re-routes to the distributed loop, for pair graphs beyond one
+    task's memory:
 
     Distributed shape: iterative min-label propagation — each round joins
     labels across edges and keeps the per-node min; converges in O(graph
@@ -879,38 +913,28 @@ def dedup_clusters(
         raise ValueError(
             f"max_iterations must be >= 1, got {max_iterations}"
         )
-    if fused:
-        id_t = dict(pairs.select("id_a", "id_b").dtypes)["id_a"]
-        labeled = (
-            pairs.select("id_a", "id_b")
-            .repartition(1)
-            .mapInPandas(
-                _cc_fused_fn(max_iterations, FUSED_CC_PAIR_LIMIT),
-                f"node {id_t}, label {id_t}, "
-                "__exceeded boolean, __overflow boolean",
-            )
-            .localCheckpoint(eager=True)
+    id_t = dict(pairs.select("id_a", "id_b").dtypes)["id_a"]
+    labeled = (
+        pairs.select("id_a", "id_b")
+        .repartition(1)
+        .mapInPandas(
+            _cc_fused_fn(max_iterations, FUSED_CC_PAIR_LIMIT),
+            f"node {id_t}, label {id_t}, "
+            "__exceeded boolean, __overflow boolean",
         )
-        probe = labeled.select("__exceeded", "__overflow").first()
-        if probe is not None and probe["__overflow"]:
-            # auto-fallback (round 11, VERDICT r10 item 4): the pair graph
-            # exceeded FUSED_CC_PAIR_LIMIT, so the fused task aborted
-            # before buffering it — run the distributed loop instead
-            fused = False
-        else:
-            if probe is not None and probe["__exceeded"]:
-                raise RuntimeError(
-                    f"dedup_clusters did not converge in max_iterations="
-                    f"{max_iterations} rounds: the pair graph has a "
-                    f"component of diameter > {max_iterations} (labels "
-                    "still changed in the last round). Raise "
-                    "max_iterations — each extra round costs one "
-                    "edges-join + groupBy-min."
-                )
-            return labeled.select(
-                F.col("node").alias("doc_id"),
-                F.col("label").alias("cluster_id"),
-            )
+        .localCheckpoint(eager=True)
+    )
+    probe = labeled.select("__exceeded", "__overflow").first()
+    if probe is None or not probe["__overflow"]:
+        if probe is not None and probe["__exceeded"]:
+            raise _cc_not_converged(max_iterations)
+        return labeled.select(
+            F.col("node").alias("doc_id"),
+            F.col("label").alias("cluster_id"),
+        )
+    # auto-fallback (round 11, VERDICT r10 item 4): the pair graph
+    # exceeded FUSED_CC_PAIR_LIMIT, so the fused task aborted before
+    # buffering it — run the distributed loop instead
     p = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
     edges = (
         p.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -956,13 +980,7 @@ def dedup_clusters(
     if not converged and new_labels is not None and (
         new_labels.filter(F.col("label") != F.col("__own")).limit(1).count() > 0
     ):
-        raise RuntimeError(
-            f"dedup_clusters did not converge in max_iterations="
-            f"{max_iterations} rounds: the pair graph has a component of "
-            f"diameter > {max_iterations} (labels still changed in the last "
-            "round). Raise max_iterations — each extra round costs one "
-            "edges-join + groupBy-min."
-        )
+        raise _cc_not_converged(max_iterations)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -1423,22 +1441,6 @@ def semantic_dedup(
     )
 
 
-def _band_structs(sig_cols: list, bands: int, rpb: int) -> Column:
-    """Array of (band, md5-bucket) structs over a MinHash signature row —
-    shared by the self-join and cross-corpus LSH paths."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(bnd).alias("band"),
-                F.md5(
-                    F.concat_ws("|", *[F.col(c) for c in sig_cols[bnd * rpb:(bnd + 1) * rpb]])
-                ).alias("bucket"),
-            )
-            for bnd in range(bands)
-        ]
-    )
-
-
 def minhash_lsh_pairs_cross(
     left: DataFrame, right: DataFrame, num_hashes: int = 8, bands: int = 4,
     threshold: float = 0.5, text_col: str = "text", id_col: str = "doc_id",
@@ -1450,32 +1452,22 @@ def minhash_lsh_pairs_cross(
     paraphrased or truncated benchmark leaks; MinHash similarity catches
     them).
 
-    Same hash family and banding as ``minhash_lsh_pairs``; candidates come
-    from ONE shuffle equi-join on (band, bucket) between the two banded
-    signature tables — when the right side is a benchmark suite (small), AQE
-    turns it into a broadcast join and the big side never shuffles. Returns
-    (id_l, id_r, est_jaccard >= threshold)."""
-    rpb = num_hashes // bands
-    sig_cols = [f"sig_{j}" for j in range(num_hashes)]
-
-    def banded(sig: DataFrame, out_id: str, out_sigs: str) -> DataFrame:
-        return sig.withColumn("__b", F.explode(_band_structs(sig_cols, bands, rpb))).select(
-            F.col(id_col).alias(out_id),
-            F.array(*[F.col(c) for c in sig_cols]).alias(out_sigs),
-            F.col("__b.band").alias("band"),
-            F.col("__b.bucket").alias("bucket"),
-        )
-
-    bl = banded(minhash_signatures(left, num_hashes, text_col, id_col, n), "id_l", "sl")
-    br = banded(minhash_signatures(right, num_hashes, text_col, id_col, n), "id_r", "sr")
-    cand = bl.join(br, ["band", "bucket"]).dropDuplicates(["id_l", "id_r"])
-    matches = F.size(
-        F.filter(F.zip_with("sl", "sr", lambda a, b: a == b), lambda v: v)
-    )
+    Same hash family, banding and scoring as ``minhash_lsh_pairs``
+    (``_lsh_banded``); candidates come from ONE shuffle equi-join on the
+    band key between the two banded signature tables — when the right
+    side is a benchmark suite (small), AQE turns it into a broadcast join
+    and the big side never shuffles. Returns (id_l, id_r, est_jaccard >=
+    threshold)."""
+    bl = _lsh_banded(minhash_signatures(left, num_hashes, text_col, id_col, n),
+                     id_col, num_hashes, bands)
+    br = _lsh_banded(minhash_signatures(right, num_hashes, text_col, id_col, n),
+                     id_col, num_hashes, bands)
     return (
-        cand.withColumn("est_jaccard", F.round(matches / F.lit(float(num_hashes)), 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_l", "id_r", "est_jaccard")
+        bl.alias("a").join(br.alias("b"), F.expr("a.b = b.b"))
+        .selectExpr("a.id AS id_l", "b.id AS id_r",
+                    _est_jaccard_sql(num_hashes))
+        .filter(f"est_jaccard >= {float(threshold)!r}D")
+        .dropDuplicates(["id_l", "id_r"])
     )
 
 
@@ -1507,25 +1499,25 @@ def streaming_semantic_dedup(
     import pickle
 
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from ..streaming.bucketing import keyed_state
 
     tagged = df.withColumn("__bucket", sign_bucket(emb_col, planes))
     out_schema = T.StructType([f for f in df.schema.fields])
     state_schema = T.StructType([T.StructField("reps", T.BinaryType())])
     in_cols = [f.name for f in df.schema.fields]
 
-    def fn(key, pdfs, state):
+    def step(key, rows, state):
         if state.exists:
             reps = pickle.loads(state.get[0])
         else:
             reps = None  # (n_reps, dim) unit rows
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(id_col, kind="mergesort").reset_index(drop=True)
+        frame = rows.frame().sort_values(id_col, kind="mergesort")
         keep_mask = []
-        for emb in rows[emb_col]:
+        for emb in frame[emb_col]:
             v = np.asarray(emb, dtype=np.float64)
             nv = np.linalg.norm(v)
             if nv == 0.0:
@@ -1542,11 +1534,14 @@ def streaming_semantic_dedup(
                 reps = np.vstack([reps, u])
         if reps is not None:
             state.update((pickle.dumps(reps),))
-        yield rows.loc[keep_mask, in_cols]
+        return list(
+            frame.loc[keep_mask, in_cols].itertuples(index=False, name=None)
+        )
 
-    return tagged.groupBy("__bucket").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    # per key (the bucket), so the checkpoint keeps the ``reps binary``
+    # state schema
+    return keyed_state(tagged, ["__bucket"], step, out_schema, state_schema,
+                       GroupStateTimeout.NoTimeout, None)
 
 
 def streaming_contamination_gate(
@@ -1575,28 +1570,30 @@ def streaming_contamination_gate(
     sigb = minhash_signatures(bench, num_hashes, text_col, id_col, n)
     sig_cols = [f"sig_{j}" for j in range(num_hashes)]
 
-    def bucket_expr(prefix_cols: list) -> list:
+    def band_keys(sigs: list) -> list:
+        # the _lsh_banded keys, one column per band; null for shingle-less
+        # docs, which therefore never match
+        keys = _band_keys([_sig_bigint(c) for c in sigs], bands, rpb)
         return [
-            F.md5(F.concat_ws("|", *prefix_cols[b * rpb:(b + 1) * rpb]))
-            for b in range(bands)
+            F.expr(f"CASE WHEN {sigs[0]} IS NOT NULL THEN {k} END").alias(f"__bk{b}")
+            for b, k in enumerate(keys)
         ]
 
     # ONE banded bucket table for the whole benchmark (signatures computed
     # once, not once per band), cached so each per-band broadcast build
     # reads the materialized result instead of re-running the md5 pipeline
     banded = (
-        sigb.filter(F.col("sig_0").isNotNull())
-        .withColumn("__b", F.explode(_band_structs(sig_cols, bands, rpb)))
-        .groupBy(F.col("__b.band").alias("__band"), F.col("__b.bucket").alias("__bucket"))
-        .agg(F.min(id_col).alias("__bid"))
+        _lsh_banded(sigb, id_col, num_hashes, bands)
+        .groupBy("b")
+        .agg(F.min("id").alias("__bid"))
         .persist()
     )
     bench_bands = []
     for b in range(bands):
         bench_bands.append(
             F.broadcast(
-                banded.filter(F.col("__band") == b).select(
-                    F.col("__bucket").alias(f"__bk{b}"),
+                banded.filter(F.col("b.band") == b).select(
+                    F.col("b").alias(f"__bk{b}"),
                     F.col("__bid").alias(f"__bench_{b}"),
                 )
             )
@@ -1633,27 +1630,16 @@ def streaming_contamination_gate(
         out = out.select(
             "*", *[sig_of[j].alias(f"__sig{j}") for j in range(num_hashes)]
         ).drop("__hs")
-        row_sigs = [F.col(f"__sig{j}") for j in range(num_hashes)]
-        row_buckets = bucket_expr(row_sigs)
-        for b in range(bands):
-            out = out.withColumn(
-                f"__bk{b}", F.when(row_sigs[0].isNotNull(), row_buckets[b])
-            )
-        out = out.drop(*[f"__sig{j}" for j in range(num_hashes)])
+        out = out.select(
+            "*", *band_keys([f"__sig{j}" for j in range(num_hashes)])
+        ).drop(*[f"__sig{j}" for j in range(num_hashes)])
     else:
         # batch side: the codegen path — signatures via the exploded
         # top-level-md5 pipeline (whole-stage codegen, ~10x the HOF fold),
-        # bucket columns derived on the signature table, flags joined back
+        # band keys derived on the signature table, flags joined back
         # by id. Same flags as the streaming fold (asserted in tests).
         sigt = minhash_signatures(stream, num_hashes, text_col, id_col, n)
-        bb = bucket_expr([F.col(c) for c in sig_cols])
-        flags = sigt.select(
-            F.col(id_col),
-            *[
-                F.when(F.col("sig_0").isNotNull(), bb[b]).alias(f"__bk{b}")
-                for b in range(bands)
-            ],
-        )
+        flags = sigt.select(F.col(id_col), *band_keys(sig_cols))
         out = stream.join(flags, id_col, "left")
     for b in range(bands):
         out = out.join(bench_bands[b], f"__bk{b}", "left")

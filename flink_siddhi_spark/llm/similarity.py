@@ -395,7 +395,7 @@ def _merge_rank(local: DataFrame, k: int) -> DataFrame:
 
 def _integral_ids(df: DataFrame, col: str) -> bool:
     """True when ``col`` is an integral type an int64 can hold — the numpy
-    engines ship ids through Arrow as int64 (and widen output ids to
+    scorers ship ids through Arrow as int64 (and widen output ids to
     bigint); any other id type falls back to the type-agnostic join
     engines."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
@@ -403,6 +403,15 @@ def _integral_ids(df: DataFrame, col: str) -> bool:
     return isinstance(
         df.schema[col].dataType, (ByteType, ShortType, IntegerType, LongType)
     )
+
+
+def _id_field(df: DataFrame, col: str):
+    """The encoders' output id field: integral ids widen to bigint, any
+    other type passes through the Arrow pass unchanged."""
+    from pyspark.sql import types as T
+
+    t = T.LongType() if _integral_ids(df, col) else df.schema[col].dataType
+    return T.StructField(col, t)
 
 
 def _np_round6(arr):
@@ -780,14 +789,11 @@ def _pq_assign_partials(X, U, cb64m, m: int, sub: int) -> list:
     """One Lloyd assignment pass over a row block: per (subspace, code)
     member counts + exact int64 1e-12-unit sums. Row-independent — the
     same float64 dimension-order accumulation per (row, code) cell no
-    matter how rows are blocked, so per-Arrow-batch and whole-sample
-    invocations produce identical partials. Shared verbatim by the
-    ``jobs`` and ``fused`` training engines (bit-identity by construction).
+    matter how rows are blocked.
 
     Integer sums are chunked at 8,192 rows and merged as unbounded python
-    ints — exactly the driver-reduce arithmetic of the ``jobs`` engine.
-    int64 safety: a chunk sum is <= 8,192 * |v| * 1e12 units, so the safe
-    bound is |v| < ~1e3 per coordinate (int64 max ~9.2e18) — ample for
+    ints. int64 safety: a chunk sum is <= 8,192 * |v| * 1e12 units, so the
+    safe bound is |v| < ~1e3 per coordinate (int64 max ~9.2e18) — ample for
     O(1)-normalized embeddings, and the same bound the pre-chunking
     whole-batch numpy sum carried."""
     import numpy as np
@@ -819,7 +825,7 @@ def _pq_assign_partials(X, U, cb64m, m: int, sub: int) -> list:
 def _pq_reduce_means(partials, cb: list, m: int, sub: int) -> list:
     """Merge assignment partials (python-int exact) and emit the next
     codebook under the HALF_UP integer-unit mean contract; codes that lose
-    every member keep their previous centroid. Shared by both engines."""
+    every member keep their previous centroid."""
     from decimal import Decimal
 
     agg: dict = {}
@@ -852,7 +858,6 @@ def pq_train_codebook(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     train_cap: int = 65_536,
-    engine: str = "fused",
     dim: int | None = None,
 ) -> list:
     """Per-subspace Lloyd k-means codebook training for product
@@ -872,8 +877,8 @@ def pq_train_codebook(
         FAISS trains on a bounded sample for the same reason);
       - init: the first ``n_codes`` sample vectors by id (no RNG);
       - assignment: the SAME round-6 squared-L2 argmin with first-minimum
-        code-id tiebreak that ``pq_encode`` uses (numpy fold, bit-identical
-        to the JVM expression fold — pytest pins the engines equal);
+        code-id tiebreak that ``pq_encode`` uses (per-dimension float64
+        fold, the DuckDB replay's left fold);
       - update: per-(subspace, code, dimension) means via exact
         DECIMAL(38,12) sums of round-12 inputs (order-independent — a
         float sum would drift with partitioning); the mean is HALF_UP to
@@ -886,38 +891,29 @@ def pq_train_codebook(
         never shrinks — PQ needs the full code space);
       - fixed ``n_iter`` (no data-dependent stopping).
 
-    Scale shape (round 8, VERDICT r7 ask #6): each iteration is ONE fused
-    Arrow-batched pass over the (bounded) sample that assigns AND emits
-    per-batch partial sums — <= partitions * m * n_codes skinny rows of
-    exact int64 1e-12 units (``_np_units12``) — reduced to the codebook in
-    the driver with unbounded python ints. The previous shape (assignment
-    pass emitting n*m rows + a Spark decimal aggregate) paid n*dim
-    BigDecimal round/cast/add ops per iteration (~4M at train_cap) in the
-    unvectorized decimal aggregate; the fused pass is pure numpy and cut
-    the kmeans 100x floor 33.2s -> ~11s. Partial sums in exact integer
-    units are associative, so the result is bit-identical to the old
-    decimal aggregate (pinned by test_llm_ops' oracle gates at both SFs).
-    The full corpus is only read by the later encode pass.
+    Scale shape (round 8, VERDICT r7 ask #6): each iteration assigns AND
+    sums in numpy — per (subspace, code) partial sums of exact int64 1e-12
+    units (``_np_units12``), reduced with unbounded python ints. A Spark
+    decimal aggregate paid n*dim BigDecimal round/cast/add ops per
+    iteration (~4M at train_cap); the numpy pass cut the kmeans 100x floor
+    33.2s -> ~11s. Sums in exact integer units are associative, so the
+    result is bit-identical to that decimal aggregate (pinned by
+    test_llm_ops' oracle gates at both SFs). The full corpus is only read
+    by the later encode pass.
 
-    Engines (round 10, guide §1.2 — the fixed-latency cut): the bounded
-    sample is a TakeOrdered result, i.e. ONE partition no matter the corpus
-    size, so the per-iteration Spark jobs were already serial single-task
-    passes paying ~0.15s of driver round-trip each (init collect +
-    n_iter mapInPandas collects, cProfile). ``engine="fused"`` (default)
-    runs init + every Lloyd iteration inside ONE mapInPandas task over
-    that partition and emits the final codebook (n_codes skinny rows, one
-    job total); ``engine="jobs"`` keeps the per-iteration-job loop as the
-    cross-validation reference (pytest pins the engines bit-equal). Both
-    engines share `_pq_assign_partials` / `_pq_reduce_means` verbatim, so
-    the arithmetic is identical by construction."""
+    Single task (round 10, guide §1.2 — the fixed-latency cut): the
+    bounded sample is a TakeOrdered result, i.e. ONE partition no matter
+    the corpus size, so per-iteration Spark jobs would be serial
+    single-task passes paying ~0.15s of driver round-trip each. Init and
+    every Lloyd iteration run inside ONE mapInPandas task over that
+    partition, which emits the final codebook (n_codes skinny rows, one
+    job total). The DuckDB oracle (``_pq_trained_ctes``) replays the
+    whole training loop as unrolled CTEs."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    if engine not in ("fused", "jobs"):
-        raise ValueError(f"pq: unknown training engine {engine!r} "
-                         "(expected 'fused' or 'jobs')")
     if dim is None:
         dim = _dim_of(corpus, emb_col)
     if dim is None:
@@ -930,101 +926,47 @@ def pq_train_codebook(
         .orderBy(id_col)
         .limit(train_cap)
     )
-    if engine == "fused":
-        cb_schema = T.StructType(
-            [
-                T.StructField("c", T.IntegerType()),
-                T.StructField("v", T.ArrayType(T.DoubleType())),
-            ]
-        )
-
-        def train_all(batches):
-            embs = []
-            ids = []
-            for pdf in batches:
-                if len(pdf):
-                    embs.extend(list(pdf[emb_col]))
-                    ids.extend(pdf[id_col].tolist())
-            if not embs:
-                return
-            order = np.argsort(np.asarray(ids), kind="stable")
-            X = _np_emb_matrix([embs[i] for i in order], dim)
-            # init: first n_codes sample vectors by id, from the RAW
-            # collected values — matching the jobs engine's exact-double
-            # collect. Building from X would narrow array<double> inputs
-            # through float32, and a code that stays empty through the
-            # last iteration emits its init centroid verbatim.
-            cb = [
-                [float(v) for v in embs[order[i]]]
-                for i in range(min(n_codes, X.shape[0]))
-            ]
-            U = _np_units12(X)  # exact round-12 units, int64
-            for _ in range(n_iter):
-                cb64m = np.asarray(
-                    [np.asarray(c, dtype=np.float64) for c in cb]
-                )
-                partials = _pq_assign_partials(X, U, cb64m, m, sub)
-                cb = _pq_reduce_means(partials, cb, m, sub)
-            yield pd.DataFrame(
-                {"c": list(range(len(cb))), "v": cb}
-            )
-
-        rows = sample.coalesce(1).mapInPandas(train_all, cb_schema).collect()
-        if not rows:
-            raise ValueError("pq: empty corpus — no codebook vectors")
-        return [list(r["v"]) for r in sorted(rows, key=lambda r: r["c"])]
-
-    sample = sample.localCheckpoint(eager=False)
-    cb = [
-        [float(v) for v in r[emb_col]]
-        for r in sample.orderBy(id_col).limit(n_codes).select(emb_col).collect()
-    ]
-    if not cb:
-        raise ValueError("pq: empty corpus — no codebook vectors")
-    part_schema = T.StructType(
+    cb_schema = T.StructType(
         [
-            T.StructField("j", T.IntegerType()),
             T.StructField("c", T.IntegerType()),
-            T.StructField("n", T.LongType()),
+            T.StructField("v", T.ArrayType(T.DoubleType())),
         ]
-        + [T.StructField(f"s{d}", T.LongType()) for d in range(sub)]
     )
-    for _ in range(n_iter):
-        cb64m = np.asarray([np.asarray(c, dtype=np.float64) for c in cb])
 
-        def assign_stats(batches, cb64m=cb64m):
-            for pdf in batches:
-                X = _np_emb_matrix(pdf[emb_col], dim)
-                if not X.shape[0]:
-                    continue
-                U = _np_units12(X)  # exact round-12 units, int64
-                rows = _pq_assign_partials(X, U, cb64m, m, sub)
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=[f.name for f in part_schema.fields]
-                    )
-
-        parts = sample.mapInPandas(assign_stats, part_schema).collect()
-        # driver reduce over <= partitions * m * n_codes partial rows with
-        # unbounded python ints (no float division anywhere)
-        cb = _pq_reduce_means(
-            [[r["j"], r["c"], r["n"]] + [r[f"s{d}"] for d in range(sub)]
-             for r in parts],
-            cb, m, sub,
+    def train_all(batches):
+        embs = []
+        ids = []
+        for pdf in batches:
+            if len(pdf):
+                embs.extend(list(pdf[emb_col]))
+                ids.extend(pdf[id_col].tolist())
+        if not embs:
+            return
+        order = np.argsort(np.asarray(ids), kind="stable")
+        X = _np_emb_matrix([embs[i] for i in order], dim)
+        # init: first n_codes sample vectors by id, from the RAW
+        # values. Building from X would narrow array<double> inputs
+        # through float32, and a code that stays empty through the
+        # last iteration emits its init centroid verbatim.
+        cb = [
+            [float(v) for v in embs[order[i]]]
+            for i in range(min(n_codes, X.shape[0]))
+        ]
+        U = _np_units12(X)  # exact round-12 units, int64
+        for _ in range(n_iter):
+            cb64m = np.asarray(
+                [np.asarray(c, dtype=np.float64) for c in cb]
+            )
+            partials = _pq_assign_partials(X, U, cb64m, m, sub)
+            cb = _pq_reduce_means(partials, cb, m, sub)
+        yield pd.DataFrame(
+            {"c": list(range(len(cb))), "v": cb}
         )
-    return cb
 
-
-def _pq_sqdist_sql(emb_col: str, cent: list, j: int, sub: int) -> str:
-    """round-6 squared L2 between subvector j of ``emb_col`` and a literal
-    centroid subvector, as a left-fold SQL string (one server-side parse,
-    same grouping as the DuckDB oracle's list_reduce)."""
-    terms = []
-    for d in range(sub):
-        i = j * sub + d
-        t = f"(CAST({emb_col}[{i}] AS DOUBLE) - {float(cent[i])!r}D)"
-        terms.append(f"{t} * {t}")
-    return f"round(0.0D + {' + '.join(terms)}, 6)"
+    rows = sample.coalesce(1).mapInPandas(train_all, cb_schema).collect()
+    if not rows:
+        raise ValueError("pq: empty corpus — no codebook vectors")
+    return [list(r["v"]) for r in sorted(rows, key=lambda r: r["c"])]
 
 
 def pq_encode(
@@ -1034,7 +976,6 @@ def pq_encode(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     codebook: list | None = None,
-    engine: str = "auto",
     keep: tuple | list | None = None,
     dim: int | None = None,
 ) -> DataFrame:
@@ -1056,13 +997,12 @@ def pq_encode(
     codebook is deterministic seed vectors, so a DuckDB oracle replays
     codes and reconstruction exactly.
 
-    ``engine="numpy"`` (default for integral ids) computes the argmin in
-    one Arrow-batched mapInPandas pass with per-dimension fold accumulation
-    — bit-identical to the JVM fold (the literal-expression form parses
-    and evaluates interpreted at ~100 KB of SQL; measured 12s plan build +
-    7s eval vs ~1s total for numpy at sf0.01). ``engine="expr"`` keeps the
-    pure-Catalyst literal projection as the cross-validation reference
-    (pytest pins the two engines' outputs equal)."""
+    The argmin runs in one Arrow-batched mapInPandas pass with
+    per-dimension fold accumulation — the DuckDB oracle's left fold, op
+    for op (a literal Catalyst projection parses and evaluates interpreted
+    at ~100 KB of SQL; measured 12s plan build + 7s eval vs ~1s total for
+    numpy at sf0.01). Integral ids come out as bigint; any other id type
+    passes through unchanged."""
     if dim is None:
         dim = _dim_of(corpus, emb_col)
     if dim is None:
@@ -1081,38 +1021,9 @@ def pq_encode(
     if bad:
         raise ValueError(
             f"pq_encode: keep column(s) {bad} collide with the output "
-            "columns 'codes'/'recon' or the internal __c<j> temporaries"
+            "columns 'codes'/'recon' or the reserved __c<j> names"
         )
-    if engine == "auto":
-        engine = "numpy" if _integral_ids(corpus, id_col) else "expr"
-    if engine == "numpy":
-        return _pq_encode_numpy(corpus, cb, m, sub, emb_col, id_col, kept)
-    code_exprs = []
-    recon_exprs = []
-    for j in range(m):
-        structs = ", ".join(
-            f"named_struct('d', {_pq_sqdist_sql(emb_col, cb[c], j, sub)}, 'c', {c})"
-            for c in range(len(cb))
-        )
-        code_exprs.append(f"array_min(array({structs})).c AS __c{j}")
-        arrays = ", ".join(
-            "array("
-            + ", ".join(
-                f"CAST({float(cb[c][j * sub + d])!r}D AS FLOAT)"
-                for d in range(sub)
-            )
-            + ")"
-            for c in range(len(cb))
-        )
-        recon_exprs.append(f"element_at(array({arrays}), __c{j} + 1)")
-    in_cols = [id_col, emb_col] + [c for c in kept if c != emb_col]
-    coded = corpus.selectExpr(*in_cols, *code_exprs)
-    return coded.selectExpr(
-        id_col,
-        f"array({', '.join(f'__c{j}' for j in range(m))}) AS codes",
-        f"flatten(array({', '.join(recon_exprs)})) AS recon",
-        *kept,
-    )
+    return _pq_encode_numpy(corpus, cb, m, sub, emb_col, id_col, kept)
 
 
 def _pq_encode_numpy(
@@ -1175,7 +1086,7 @@ def _pq_encode_numpy(
     in_schema = {f.name: f.dataType for f in corpus.schema.fields}
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            _id_field(corpus, id_col),
             T.StructField("codes", T.ArrayType(T.IntegerType())),
             T.StructField("recon", T.ArrayType(T.FloatType())),
         ]
@@ -1392,18 +1303,16 @@ def ivfpq_topk(
     )
 
 
-def _sq_stats_numpy(corpus: DataFrame, dim, emb_col: str):
+def _sq_stats_numpy(corpus: DataFrame, emb_col: str):
     """Per-dimension corpus (min, max) via ONE Arrow-batched partial-stats
     pass merged on the driver — value-identical to the 2*dim-expression
     Catalyst aggregate (min/max only SELECT an existing float32-widened
     value, no arithmetic), but skips analyzing + compiling a 128-wide
     aggregate, a fixed ~1.3s of driver latency at any scale (round 10,
     guide §1.2/§4.2). NaN replays Spark's ordering (NaN sorts greatest):
-    max is NaN when any value is, min ignores NaN unless all are.
-
-    ``dim`` may be None (round 11, VERDICT r10 item 9): the width falls
-    out of the collected stats row (len(mn)), so callers no longer need
-    the separate one-row ``_dim_of`` probe job before this pass."""
+    max is NaN when any value is, min ignores NaN unless all are. The
+    width falls out of the collected stats row (len(mn)), so no separate
+    one-row ``_dim_of`` probe job runs before this pass."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -1413,7 +1322,7 @@ def _sq_stats_numpy(corpus: DataFrame, dim, emb_col: str):
 
         mn = mx = has_nan = None
         for pdf in batches:
-            X = _np_emb_matrix(pdf[emb_col], dim or 0)
+            X = _np_emb_matrix(pdf[emb_col], 0)
             if not X.shape[0]:
                 continue
             bn = np.isnan(X).any(axis=0)
@@ -1455,13 +1364,12 @@ def sq_encode(
     corpus: DataFrame,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
-    engine: str = "auto",
-    dim: int | None = None,
 ) -> DataFrame:
     """int8 scalar quantization (SQ8): per-DIMENSION affine quantization to
     0..255 against corpus min/max — the other standard ANN compression
     next to PQ (4x at float32, higher fidelity than PQ's 32x; FAISS's
-    SQ8 shape). Returns (id, codes array<int>, recon array<float>).
+    SQ8 shape). Returns (id, codes array<int>, recon array<float>);
+    integral ids come out as bigint, any other id type unchanged.
 
     Deterministic: code_d = floor((x_d - min_d) * 255 / (max_d - min_d)
     + 0.5) — floor(v + 0.5), NOT round(v, 0): Spark rounds the double's
@@ -1474,59 +1382,21 @@ def sq_encode(
     The float32 narrowing is part of the contract: every scoring engine
     (numpy Arrow path, JVM fold, DuckDB REAL) then sees identical bits.
 
-    Scale shape: ONE 1-row min/max aggregate (2 x dim values, map-side
-    partials); encode + reconstruction are a map-only pass — the corpus
-    never shuffles. ``engine="numpy"`` (default for integral ids) does
-    the pass in Arrow batches against the driver-collected stats row
-    (elementwise float64 numpy is the identical IEEE op sequence);
-    ``engine="expr"`` keeps the pure-Catalyst projection as the
-    cross-validation reference (pytest pins them equal) — at dim=64 its
-    64-wide when/floor expression tree runs interpreted at ~1.8 ms/row,
-    the same lesson as the PQ encode."""
-    if dim is None:
-        dim = _dim_of(corpus, emb_col)
-    if dim is None:
-        raise ValueError("sq: empty corpus — no quantization range")
-    if engine == "auto":
-        engine = "numpy" if _integral_ids(corpus, id_col) else "expr"
-    if engine == "numpy":
-        # one partial-stats Arrow pass (value-identical to the Catalyst
-        # aggregate below; see _sq_stats_numpy) — the 2*dim-expression agg
-        # is kept as the expr engine's cross-validation reference
-        mns, mxs = _sq_stats_numpy(corpus, dim, emb_col)
-        return _sq_encode_numpy(corpus, mns, mxs, dim, emb_col, id_col)
-    stats = corpus.agg(
-        *[
-            f(F.col(emb_col)[d].cast("double")).alias(f"__{nm}{d}")
-            for d in range(dim)
-            for nm, f in (("mn", F.min), ("mx", F.max))
-        ]
-    )
-    enc = corpus.select(id_col, emb_col).crossJoin(F.broadcast(stats))
-    codes, recon = [], []
-    for d in range(dim):
-        x = F.col(emb_col)[d].cast("double")
-        mn, mx = F.col(f"__mn{d}"), F.col(f"__mx{d}")
-        rng = mx - mn
-        code = F.when(rng > 0, F.floor((x - mn) * 255.0 / rng + 0.5)).otherwise(
-            F.lit(0)
-        ).cast("int")
-        codes.append(code)
-        recon.append((mn + (code.cast("double") * rng) / 255.0).cast("float"))
-    return enc.select(
-        F.col(id_col),
-        F.array(*codes).alias("codes"),
-        F.array(*recon).alias("recon"),
-    )
+    Scale shape: ONE partial-stats Arrow pass (``_sq_stats_numpy``) yields
+    the per-dimension min/max and the width; encode + reconstruction are
+    a map-only Arrow pass against that driver-collected stats row — the
+    corpus never shuffles (a 64-wide when/floor Catalyst projection runs
+    interpreted at ~1.8 ms/row, the same lesson as the PQ encode)."""
+    return _sq_encode_with_dim(corpus, emb_col, id_col)[0]
 
 
 def _sq_encode_numpy(
     corpus: DataFrame, mns: list, mxs: list, dim: int, emb_col: str, id_col: str
 ) -> DataFrame:
-    """Arrow-batched SQ8 encoder: elementwise float64 numpy replays the
-    exact IEEE sequence of the Catalyst projection — (x - mn) * 255 / rng,
-    floor(+0.5), mn + (code * rng) / 255, float32 narrowing — so codes and
-    reconstructions are bit-identical to the expression engine."""
+    """Arrow-batched SQ8 encoder: elementwise float64 numpy computes the
+    contract's exact IEEE sequence — (x - mn) * 255 / rng, floor(+0.5),
+    mn + (code * rng) / 255, float32 narrowing — the DuckDB replay's
+    expression grouping term for term."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -1558,7 +1428,7 @@ def _sq_encode_numpy(
 
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            _id_field(corpus, id_col),
             T.StructField("codes", T.ArrayType(T.IntegerType())),
             T.StructField("recon", T.ArrayType(T.FloatType())),
         ]
@@ -1568,17 +1438,10 @@ def _sq_encode_numpy(
 
 def _sq_encode_with_dim(corpus: DataFrame, emb_col: str, id_col: str):
     """``sq_encode`` plus the encoded width in ONE stats job (round 11,
-    VERDICT r10 item 9 — job-count cut on the composed chains): on the
-    numpy engine the width falls out of the stats row itself, so the
-    separate one-row ``_dim_of`` probe job disappears; the expr engine
-    (non-integral ids) keeps the probe, which its Catalyst aggregate
-    needs up front anyway."""
-    if _integral_ids(corpus, id_col):
-        mns, mxs = _sq_stats_numpy(corpus, None, emb_col)
-        dim = len(mns)
-        return _sq_encode_numpy(corpus, mns, mxs, dim, emb_col, id_col), dim
-    dim = _dim_of(corpus, emb_col)
-    return sq_encode(corpus, emb_col, id_col, engine="expr", dim=dim), dim
+    VERDICT r10 item 9 — job-count cut on the composed chains)."""
+    mns, mxs = _sq_stats_numpy(corpus, emb_col)
+    dim = len(mns)
+    return _sq_encode_numpy(corpus, mns, mxs, dim, emb_col, id_col), dim
 
 
 def sq_topk(

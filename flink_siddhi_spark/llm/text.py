@@ -589,7 +589,6 @@ def textrank_keywords(
     min_count: int = 5,
     top_n: int = 50,
     text_col: str = "text",
-    fused: bool = True,
 ) -> DataFrame:
     """Corpus keywords by TextRank: PageRank over the directed bigram
     co-occurrence graph (edge u→v weighted by adjacency count, edges below
@@ -605,9 +604,8 @@ def textrank_keywords(
     iteration is then bit-identical in any engine and any partitioning —
     the DuckDB oracle unrolls the same 10 iterations as chained CTEs.
 
-    Scale shape (``fused=True``, the default since the optimization round):
-    ONE distributed pass builds the pruned bigram edge table (the only
-    corpus-scale work — explode + hash aggregate), then the whole
+    Scale shape: ONE distributed pass builds the pruned bigram edge table
+    (the only corpus-scale work — explode + hash aggregate), then the whole
     ``n_iter``-round loop runs in a single Arrow task over that edge table
     (vocab²-bounded after the min_count cut; the distributed loop already
     assumed the |vocab| rank table broadcasts, and a pruned n_xy>=5 bigram
@@ -618,11 +616,9 @@ def textrank_keywords(
     ``_textrank_fused_fn``). The fused engine is size-guarded (round 11):
     the task aborts past ``FUSED_TEXTRANK_EDGE_LIMIT`` arriving edges
     with an ``__overflow`` sentinel (bounding its memory and read volume)
-    and the call re-routes to the distributed loop automatically;
-    ``fused=False`` forces the distributed per-iteration loop for graphs
-    too large for one task:
-    each iteration is one edge⋈ranks join (ranks = |vocab| rows — AQE
-    broadcasts it), a hash aggregate onto the in-neighbor key, and a left
+    and the call re-routes to the distributed per-iteration loop for
+    graphs too large for one task: each iteration is one edge⋈ranks join
+    (ranks = |vocab| rows — AQE broadcasts it), a hash aggregate onto the in-neighbor key, and a left
     join back to the node list; ranks are localCheckpointed per round so
     the loop's lineage stays flat (same pattern as dedup_clusters' label
     propagation). Only the scalar node count touches the driver."""
@@ -643,27 +639,24 @@ def textrank_keywords(
         .agg(F.count(F.lit(1)).alias("n_xy"))
         .filter(F.col("n_xy") >= min_count)
     )
-    if fused:
-        # size guard (round 11, VERDICT r10 item 4): the fused task
-        # aborts past FUSED_TEXTRANK_EDGE_LIMIT arriving edges with an
-        # __overflow sentinel (it stops consuming and never buffers the
-        # over-limit table); the driver probes the one-row flag off the
-        # checkpointed result and re-routes to the distributed loop. In
-        # the common case the count rides rows the task read anyway —
-        # the only added cost is the probe's checkpoint scan.
-        ranks = bi.repartition(1).mapInPandas(
-            _textrank_fused_fn(damping, n_iter, FUSED_TEXTRANK_EDGE_LIMIT),
-            "w string, r double, __overflow boolean",
-        ).localCheckpoint(eager=True)
-        probe = ranks.select("__overflow").first()
-        if probe is not None and probe["__overflow"]:
-            fused = False
-        else:
-            return (
-                ranks.orderBy(F.desc("r"), "w")
-                .limit(top_n)
-                .select(F.col("w").alias("word"), F.col("r").alias("score"))
-            )
+    # size guard (round 11, VERDICT r10 item 4): the fused task aborts
+    # past FUSED_TEXTRANK_EDGE_LIMIT arriving edges with an __overflow
+    # sentinel (it stops consuming and never buffers the over-limit
+    # table); the driver probes the one-row flag off the checkpointed
+    # result and re-routes to the distributed loop. In the common case the
+    # count rides rows the task read anyway — the only added cost is the
+    # probe's checkpoint scan.
+    ranks = bi.repartition(1).mapInPandas(
+        _textrank_fused_fn(damping, n_iter, FUSED_TEXTRANK_EDGE_LIMIT),
+        "w string, r double, __overflow boolean",
+    ).localCheckpoint(eager=True)
+    probe = ranks.select("__overflow").first()
+    if probe is None or not probe["__overflow"]:
+        return (
+            ranks.orderBy(F.desc("r"), "w")
+            .limit(top_n)
+            .select(F.col("w").alias("word"), F.col("r").alias("score"))
+        )
     nodes = (
         bi.select(F.col("w1").alias("w"))
         .union(bi.select(F.col("w2").alias("w")))

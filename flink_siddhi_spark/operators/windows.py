@@ -213,7 +213,7 @@ def add_bucket(
             # Round 10: the candidate trees are rendered as ONE SQL string
             # parsed server-side (same expressions) — building them as
             # Column ops paid ~6 py4j round-trips per node at plan time
-            # (the dot()/_pq_sqdist_sql lesson).
+            # (the dot() lesson).
             residues, tod = arg
             ems = f"`{ts_col}`"
             day = f"FLOOR({ems} / 86400000)"
@@ -256,7 +256,7 @@ def add_bucket(
         # Round 10: the per-month candidate trees are rendered as ONE SQL
         # string parsed server-side (identical expressions node-for-node) —
         # the Column form paid ~6 py4j round-trips per expression node at
-        # plan time, ~0.8s for a 2-dayspec schedule (the dot()/_pq_sqdist_sql
+        # plan time, ~0.8s for a 2-dayspec schedule (the dot()
         # lesson; equality pinned by the cron unit suite + the family oracle)
         dayspecs, hh, mm, ss, months, jback = arg
         ems = f"`{ts_col}`"

@@ -52,10 +52,12 @@ ABSENCE_CQL = (
 # probe) — the general NFA iterates partials per row, so arming density is
 # its scale axis; an all-views quantifier on the hot key (every hot event
 # arming) is documented as out of the row-loop's envelope (SCALE.md §R9).
+# A user's error and its next purchase are 3,000 s apart (hot key:
+# 2,000.1 s), so the window is 1 hour: a shorter one never matches.
 QUANT_CQL = (
     "partition with (user_id of events) begin "
     "from every a = events[event_type == 'error']<1:2> "
-    "  -> p = events[event_type == 'purchase'] within 10 min "
+    "  -> p = events[event_type == 'purchase'] within 1 hour "
     "select a[0].user_id as user_id, p.event_id as purchase_id "
     "insert into Out; end"
 )
@@ -121,6 +123,12 @@ def _run(spark, src, schema, root, tag, files_per_trigger, buckets,
         out_rows += p.get("sink", {}).get("numOutputRows", 0) or 0
         for so in p.get("stateOperators", []):
             peak_state = max(peak_state, so.get("numRowsTotal", 0))
+    if out_rows == 0:
+        # a pattern that never completes drains fast and measures nothing
+        raise RuntimeError(
+            f"cell {tag}: the query emitted no rows in {batches} "
+            "micro-batches — its drain time is not a throughput number"
+        )
     return {
         "sec": round(dt, 2),
         "events_per_sec": int(N_EVENTS / dt),

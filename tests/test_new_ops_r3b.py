@@ -84,6 +84,95 @@ def test_minhash_cross_no_pairs_when_disjoint(spark):
     assert minhash_lsh_pairs_cross(train, bench, threshold=0.3).count() == 0
 
 
+_LSH_BASE = "the quick brown fox jumps over the lazy dog near the river bank"
+
+
+def _lsh_corpus(spark):
+    """Near-duplicates of one sentence (one word swapped per copy), an
+    exact copy, unrelated docs and three shingle-less docs (1, 2, 5)."""
+    words = _LSH_BASE.split()
+    rows = [(1, "a b"), (2, "x y"), (5, "q"), (10, _LSH_BASE), (11, _LSH_BASE)]
+    for i in range(6):
+        w = list(words)
+        w[2 * i] = f"swap{i}"
+        rows.append((20 + i, " ".join(w)))
+    rows += [
+        (40, "spark catalyst plans shuffle stages across executor tasks"),
+        (41, "spark catalyst plans shuffle stages across executor slots"),
+        (42, "completely unrelated words about gardening in early spring"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_minhash_lsh_shingleless_docs_never_pair(spark):
+    """Docs without shingles have null signatures; a band key built from
+    nulls must not make them candidates of each other (or of themselves)
+    at threshold 0.0, on any of the three LSH paths."""
+    from flink_siddhi_spark.llm.dedup import (
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_cross,
+        streaming_contamination_gate,
+    )
+
+    docs = _lsh_corpus(spark)
+    empty = {1, 2, 5}
+    self_pairs = {(r.id_a, r.id_b) for r in
+                  minhash_lsh_pairs(docs, threshold=0.0).collect()}
+    cross_pairs = {(r.id_l, r.id_r) for r in
+                   minhash_lsh_pairs_cross(docs, docs, threshold=0.0).collect()}
+    assert (10, 11) in self_pairs and (10, 10) in cross_pairs
+    assert not {i for p in self_pairs for i in p} & empty, self_pairs
+    assert not {i for p in cross_pairs for i in p} & empty, cross_pairs
+    flags = streaming_contamination_gate(docs, docs, keep_contaminated=True)
+    got = {r.doc_id: r.contaminated for r in flags.collect()}
+    assert [got[i] for i in sorted(empty)] == [False, False, False]
+
+
+def test_minhash_cross_self_equals_self_join(spark):
+    # one banding and one score: the cross path over (docs, docs), upper
+    # triangle only, is the self-join's pair set with the same estimates
+    from flink_siddhi_spark.llm.dedup import (
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_cross,
+    )
+
+    docs = _lsh_corpus(spark)
+    for threshold in (0.0, 0.5):
+        want = sorted(
+            (r.id_a, r.id_b, r.est_jaccard)
+            for r in minhash_lsh_pairs(docs, threshold=threshold).collect()
+        )
+        got = sorted(
+            (r.id_l, r.id_r, r.est_jaccard)
+            for r in minhash_lsh_pairs_cross(docs, docs, threshold=threshold)
+            .filter("id_l < id_r").collect()
+        )
+        assert got == want and len(want) >= 10, (threshold, got, want)
+
+
+def test_contamination_gate_flags_equal_cross_candidates(spark):
+    # the gate flags exactly the train docs sharing a band key with a
+    # benchmark doc: the id_l set of the cross path at threshold 0.0
+    from flink_siddhi_spark.llm.dedup import (
+        minhash_lsh_pairs_cross,
+        streaming_contamination_gate,
+    )
+
+    docs = _lsh_corpus(spark)
+    bench = docs.filter("doc_id IN (1, 10, 23, 40)").withColumn(
+        "doc_id", docs.doc_id + 1000
+    )
+    train = docs.filter("doc_id < 40 OR doc_id = 42")
+    flagged = {
+        r.doc_id for r in
+        streaming_contamination_gate(train, bench, keep_contaminated=True)
+        .filter("contaminated").collect()
+    }
+    cand = {r.id_l for r in
+            minhash_lsh_pairs_cross(train, bench, threshold=0.0).collect()}
+    assert flagged == cand and {10, 11, 23} <= cand, (flagged, cand)
+
+
 # ---- exact length percentiles --------------------------------------------
 
 def test_length_percentiles_match_numpy(spark):

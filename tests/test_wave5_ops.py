@@ -240,6 +240,54 @@ def _four_cluster_embs(spark, n_per=50, dim=64, sigma=0.15):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+def _duck_embeddings(df, emb_type="FLOAT[]"):
+    """A DuckDB connection whose ``embeddings`` table holds ``df``'s
+    (vec_id, embedding) rows — the table the DuckDB replays in
+    ``__spark_entry__`` read."""
+    import duckdb
+    import pandas as pd
+
+    rows = df.select("vec_id", "embedding").collect()
+    src = pd.DataFrame({
+        "vec_id": [r.vec_id for r in rows],
+        "embedding": [[float(v) for v in r.embedding] for r in rows],
+    })
+    con = duckdb.connect()
+    con.register("src", src)
+    con.execute(
+        "CREATE TABLE embeddings AS SELECT CAST(vec_id AS BIGINT) vec_id, "
+        f"CAST(embedding AS {emb_type}) embedding FROM src"
+    )
+    return con
+
+
+def _duck_codes(con, ctes: str, enc: str = "enc") -> dict:
+    """vec_id -> codes list from a PQ replay chain's ``enc`` CTE."""
+    return {
+        vid: list(codes) for vid, codes in con.execute(
+            f"WITH {ctes} SELECT vec_id, list(code ORDER BY j) "
+            f"FROM {enc} GROUP BY vec_id"
+        ).fetchall()
+    }
+
+
+def _duck_recon(con, ctes: str) -> dict:
+    """vec_id -> recon list from a replay chain's ``xh`` CTE."""
+    return {
+        vid: [float(v) for v in recon] for vid, recon in
+        con.execute(f"WITH {ctes} SELECT vec_id, recon FROM xh").fetchall()
+    }
+
+
+def _assert_encoding(enc_df, codes: dict, recon: dict):
+    got = {r.vec_id: r for r in enc_df.collect()}
+    assert set(got) == set(recon) and len(got) > 0
+    for vid, r in got.items():
+        if codes is not None:
+            assert list(r.codes) == codes[vid], vid
+        assert [float(v) for v in r.recon] == recon[vid], vid
+
+
 def test_pq_trained_codebook_recall_gate(spark):
     """round-6 (VERDICT r5 ask #4): per-subspace k-means codebooks at real
     sizes (256 entries) lift PQ recall@10 past 0.7 on the 4-cluster
@@ -280,8 +328,10 @@ def test_pq_trained_codebook_recall_gate(spark):
 
 def test_pq_train_codebook_determinism_contract(spark):
     """Training is partition-independent (DECIMAL(38,12) sums, fixed
-    iterations, id-seeded init) and its codebook feeds BOTH encode engines
-    to bit-identical codes/reconstructions."""
+    iterations, id-seeded init); the codebook and the encode on it equal
+    the DuckDB replay of training + encode bit for bit."""
+    import __spark_entry__ as E
+
     from flink_siddhi_spark.llm.similarity import pq_encode, pq_train_codebook
 
     embs = _four_cluster_embs(spark, n_per=25)
@@ -293,50 +343,96 @@ def test_pq_train_codebook_determinism_contract(spark):
     seeds = [r.embedding for r in
              embs.orderBy("vec_id").limit(32).select("embedding").collect()]
     assert cb1 != [[float(v) for v in s] for s in seeds]
-    a = {r.vec_id: r for r in
-         pq_encode(embs, codebook=cb1, engine="numpy").collect()}
-    b = {r.vec_id: r for r in
-         pq_encode(embs, codebook=cb1, engine="expr").collect()}
-    assert set(a) == set(b)
-    for vid in a:
-        assert list(a[vid].codes) == list(b[vid].codes), vid
-        assert list(a[vid].recon) == list(b[vid].recon), vid
+    con = _duck_embeddings(embs)
+    ctes = E._pq_trained_ctes(8, 32, 2, 64)
+    assert cb1 == [
+        [float(v) for v in ce] for _c, ce in
+        con.execute(f"WITH {ctes} SELECT c, ce FROM cb2 ORDER BY c").fetchall()
+    ]
+    _assert_encoding(pq_encode(embs, codebook=cb1),
+                     _duck_codes(con, ctes), _duck_recon(con, ctes))
 
 
-def test_pq_engines_identical(spark):
-    # the numpy mapInPandas encoder and the pure-Catalyst literal projection
-    # must agree bit-for-bit: codes AND float32 reconstructions
+def test_pq_encode_matches_duckdb_replay(spark):
+    # the seed-codebook encoder against the oracle's replay chain: codes
+    # AND float32 reconstructions, bit for bit
+    import __spark_entry__ as E
+
     from flink_siddhi_spark.llm.similarity import pq_encode
 
     embs = _embs_df(spark)
-    a = {r.vec_id: r for r in pq_encode(embs, engine="numpy").collect()}
-    b = {r.vec_id: r for r in pq_encode(embs, engine="expr").collect()}
-    assert set(a) == set(b) and len(a) == embs.count()
-    for vid in a:
-        assert list(a[vid].codes) == list(b[vid].codes), vid
-        assert list(a[vid].recon) == list(b[vid].recon), vid
+    con = _duck_embeddings(embs)
+    ctes = E._pq_xh_ctes(8, 16, 64)
+    _assert_encoding(pq_encode(embs), _duck_codes(con, ctes),
+                     _duck_recon(con, ctes))
+    assert pq_encode(embs).count() == embs.count()
 
 
 def test_pq_encode_keep_passthrough(spark):
     """round 8: ``keep=`` carries input columns through the zero-shuffle
-    encode pass verbatim on BOTH engines — the residual IVF-PQ path relies
-    on this to avoid re-attaching the embedding/coarse columns with a
-    corpus-scale join. codes/recon must be unchanged by keep."""
+    encode pass verbatim — the residual IVF-PQ path relies on this to
+    avoid re-attaching the embedding/coarse columns with a corpus-scale
+    join. codes/recon must be unchanged by keep."""
     from flink_siddhi_spark.llm.similarity import pq_encode
 
     embs = _embs_df(spark)
     raw = {r.vec_id: list(r.embedding) for r in embs.collect()}
-    base = {r.vec_id: r for r in pq_encode(embs, engine="numpy").collect()}
-    for engine in ("numpy", "expr"):
-        got = {r.vec_id: r for r in
-               pq_encode(embs, engine=engine, keep=("embedding",)).collect()}
-        assert set(got) == set(raw)
-        for vid, r in got.items():
-            assert [float(v) for v in r.embedding] == raw[vid], (engine, vid)
-            assert list(r.codes) == list(base[vid].codes), (engine, vid)
-            assert list(r.recon) == list(base[vid].recon), (engine, vid)
-        cols = pq_encode(embs, engine=engine, keep=("embedding",)).columns
-        assert cols == ["vec_id", "codes", "recon", "embedding"], cols
+    base = {r.vec_id: r for r in pq_encode(embs).collect()}
+    kept = pq_encode(embs, keep=("embedding",))
+    got = {r.vec_id: r for r in kept.collect()}
+    assert set(got) == set(raw)
+    for vid, r in got.items():
+        assert [float(v) for v in r.embedding] == raw[vid], vid
+        assert list(r.codes) == list(base[vid].codes), vid
+        assert list(r.recon) == list(base[vid].recon), vid
+    assert kept.columns == ["vec_id", "codes", "recon", "embedding"], kept.columns
+
+
+def test_quantizers_keep_non_integral_ids(spark):
+    """String and decimal ids ride the same Arrow encoders: codes,
+    reconstructions and ranks equal the bigint-id run id for id, and the
+    output keeps the input id type (integral ids come out as bigint)."""
+    from pyspark.sql import functions as F
+
+    from flink_siddhi_spark.llm.similarity import pq_encode, pq_topk, sq_encode
+
+    embs = _embs_df(spark)
+    q = embs.filter("vec_id < 5")
+    as_int = {
+        "string": lambda v: int(v[1:]),
+        "decimal(12,2)": int,
+    }
+    want_enc = {
+        fn.__name__: {r.vec_id: (list(r.codes), list(r.recon))
+                      for r in fn(embs).collect()}
+        for fn in (pq_encode, sq_encode)
+    }
+    want_rank = sorted(
+        (r.query_id, r.rank, r.neighbor_id, r.cos)
+        for r in pq_topk(embs, q, k=5).collect()
+    )
+    narrow = embs.withColumn("vec_id", F.col("vec_id").cast("int"))
+    assert dict(pq_encode(narrow).dtypes)["vec_id"] == "bigint"
+    assert dict(sq_encode(narrow).dtypes)["vec_id"] == "bigint"
+    for typ, back in as_int.items():
+        if typ == "string":
+            conv = F.format_string("v%05d", F.col("vec_id"))
+        else:
+            conv = F.col("vec_id").cast(typ)
+        ce, cq = embs.withColumn("vec_id", conv), q.withColumn("vec_id", conv)
+        for fn in (pq_encode, sq_encode):
+            enc = fn(ce)
+            assert dict(enc.dtypes)["vec_id"] == typ, (fn.__name__, enc.dtypes)
+            got = {back(r.vec_id): (list(r.codes), list(r.recon))
+                   for r in enc.collect()}
+            assert got == want_enc[fn.__name__], (typ, fn.__name__)
+        top = pq_topk(ce, cq, k=5)
+        assert dict(top.dtypes)["neighbor_id"] == typ, top.dtypes
+        got_rank = sorted(
+            (back(r.query_id), r.rank, back(r.neighbor_id), r.cos)
+            for r in top.collect()
+        )
+        assert got_rank == want_rank, typ
 
 
 def test_pq_encode_keep_collision_rejected(spark):
@@ -352,42 +448,58 @@ def test_pq_encode_keep_collision_rejected(spark):
             pq_encode(embs.withColumn(bad, embs.vec_id), keep=(bad,))
 
 
-def test_pq_train_engines_bit_identical(spark):
-    """Round-10 optimization: the fused single-job trainer (init + every
-    Lloyd iteration in one task over the single-partition bounded sample)
-    must match the per-iteration-job loop bit-for-bit — same init, same
-    assignment partials, same HALF_UP integer-unit means, same empty-code
-    keep-previous, same n_codes>rows truncation, same empty-corpus raise."""
+def test_pq_train_matches_duckdb_replay(spark):
+    """The single-task trainer (init + every Lloyd iteration in one task
+    over the single-partition bounded sample) against the unrolled DuckDB
+    replay: same init, assignment, HALF_UP integer-unit means and
+    empty-code keep-previous, bit for bit."""
+    import __spark_entry__ as E
+
     from flink_siddhi_spark.llm.similarity import pq_train_codebook
 
     embs = _four_cluster_embs(spark, n_per=25)
+    con = _duck_embeddings(embs)
     for m, nc, it in [(8, 32, 2), (1, 8, 3)]:
-        a = pq_train_codebook(embs, m, nc, it, engine="jobs")
-        b = pq_train_codebook(embs, m, nc, it, engine="fused")
-        assert a == b, (m, nc, it)
-    # sample smaller than n_codes: codebook truncates identically
+        want = [
+            [float(v) for v in ce] for _c, ce in con.execute(
+                f"WITH {E._pq_trained_ctes(m, nc, it, 64)} "
+                f"SELECT c, ce FROM cb{it} ORDER BY c"
+            ).fetchall()
+        ]
+        assert pq_train_codebook(embs, m, nc, it) == want, (m, nc, it)
+
+
+def test_pq_train_tiny_sample_and_empty_corpus(spark):
+    """A sample smaller than n_codes truncates the codebook to the sample:
+    each vector is its own code's only member, so each centroid is that
+    vector's HALF_UP round-12 value. An empty corpus raises."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from flink_siddhi_spark.llm.similarity import pq_train_codebook
+
+    embs = _four_cluster_embs(spark, n_per=25)
     tiny = embs.filter("vec_id < 5")
-    assert (
-        pq_train_codebook(tiny, 1, 8, 2, engine="jobs")
-        == pq_train_codebook(tiny, 1, 8, 2, engine="fused")
-    )
-    # both engines raise the documented error on an empty corpus
-    empty = embs.filter("vec_id < 0")
-    for eng in ("jobs", "fused"):
-        with pytest.raises(ValueError, match="empty"):
-            pq_train_codebook(empty, 1, 4, 1, engine=eng)
-    # unknown engine values must not silently fall through to "jobs"
-    with pytest.raises(ValueError, match="engine"):
-        pq_train_codebook(embs, 1, 4, 1, engine="fuse")
+    vecs = [r.embedding for r in tiny.orderBy("vec_id").collect()]
+    q12 = Decimal("1e-12")
+    want = [
+        [float(Decimal(repr(float(v))).quantize(q12, ROUND_HALF_UP))
+         for v in vec]
+        for vec in vecs
+    ]
+    got = pq_train_codebook(tiny, 1, 8, 2)
+    assert len(got) == 5 and got == want
+    with pytest.raises(ValueError, match="pq: empty corpus"):
+        pq_train_codebook(embs.filter("vec_id < 0"), 1, 4, 1)
 
 
-def test_pq_train_engines_bit_identical_double_empty_code(spark):
+def test_pq_train_double_empty_code_keeps_exact_init(spark):
     """ADVICE r10 high: array<double> inputs with a code that stays EMPTY
-    through the last iteration emit the init centroid verbatim — the fused
-    engine must build that init from the raw collected doubles, not the
+    through the last iteration emit the init centroid verbatim — the
+    trainer must build that init from the raw doubles, not the
     float32-narrowed numpy matrix (the __res residual column of the IVF-PQ
-    path is array<double>). Vector 0 is duplicated as vector 1 so init
-    entry 1 never wins an assignment and survives to the output."""
+    path is array<double>). Vector 0 is duplicated as vector 1, so init
+    entry 1 ties entry 0 everywhere, never wins an assignment (first
+    minimum) and survives to the output; code 0 takes all three vectors."""
     from flink_siddhi_spark.llm.similarity import pq_train_codebook
 
     # values chosen to NOT be float32-representable
@@ -397,11 +509,13 @@ def test_pq_train_engines_bit_identical_double_empty_code(spark):
         [(0, v0), (1, v0), (2, v2)],
         "vec_id bigint, embedding array<double>",
     )
-    a = pq_train_codebook(df, 1, 2, 1, engine="jobs")
-    b = pq_train_codebook(df, 1, 2, 1, engine="fused")
-    assert a == b
-    # the empty code's centroid is the EXACT double init value
-    assert b[1] == v0
+    # code 0: HALF_UP round-12 mean of the float32-narrowed members
+    # (0.020409191027 * 2 + 3.141592741013) / 3 and
+    # (1.723190069199 * 2 - 2.718281745911) / 3, in exact 1e-12 units
+    assert pq_train_codebook(df, 1, 2, 1) == [
+        [1.060803707689, 0.242699464162],
+        v0,  # the empty code's centroid is the EXACT double init value
+    ]
 
 
 def test_pq_codebook_vectors_encode_to_themselves(spark):
@@ -733,18 +847,25 @@ def test_last_touch_same_timestamp_tiebreak(spark):
     assert (r.touch_id, r.ms_since_touch) == (1, 0)
 
 
-def test_sq_encode_engines_bit_identical(spark):
-    # numpy Arrow encoder == pure-Catalyst projection: codes AND float32
-    # reconstructions (elementwise float64 numpy is the same IEEE sequence)
+def test_sq_encode_matches_duckdb_replay(spark):
+    # the Arrow SQ8 encoder against the oracle's replay chain: float32
+    # reconstructions from ``xh`` and codes from the same ``st`` stats
+    import __spark_entry__ as E
+
     from flink_siddhi_spark.llm.similarity import sq_encode
 
     embs = _embs_df(spark)
-    a = {r.vec_id: r for r in sq_encode(embs, engine="numpy").collect()}
-    b = {r.vec_id: r for r in sq_encode(embs, engine="expr").collect()}
-    assert set(a) == set(b)
-    for v in a:
-        assert list(a[v].codes) == list(b[v].codes), v
-        assert list(a[v].recon) == list(b[v].recon), v
+    con = _duck_embeddings(embs)
+    ctes = E._sq_xh_ctes(64)
+    x = "CAST(e.embedding[st.d + 1] AS DOUBLE)"
+    codes = {
+        vid: list(c) for vid, c in con.execute(
+            f"WITH {ctes} SELECT e.vec_id, list(CASE WHEN mx - mn > 0 THEN "
+            f"CAST(floor(({x} - mn) * 255.0 / (mx - mn) + 0.5) AS INT) "
+            "ELSE 0 END ORDER BY st.d) FROM embeddings e, st GROUP BY e.vec_id"
+        ).fetchall()
+    }
+    _assert_encoding(sq_encode(embs), codes, _duck_recon(con, ctes))
 
 
 def test_streaming_sq_encode_matches_batch(spark, tmp_path):
