@@ -893,8 +893,9 @@ def quality_budget_select(
     if token_budget < 0:
         raise ValueError("token_budget must be >= 0")
     q = quality_score(df, text_col).select(id_col, "n_words", "quality")
-    ordered = [F.col("quality").desc(), F.col(id_col).asc()]
-    withsum = running_sum(q, ordered, F.col("n_words"), "cum_tokens")
+    # quality DESC NULLS LAST, then id ASC, as ascending SQL keys
+    ordered = ["quality IS NULL", "-quality", f"`{id_col}`"]
+    withsum = running_sum(q, ordered, "n_words", "cum_tokens")
     return (
         withsum.filter(F.col("cum_tokens") <= token_budget)
         .select(

@@ -12,8 +12,6 @@
 
 from __future__ import annotations
 
-import re as _re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1014,14 +1012,11 @@ def pq_encode(
         corpus, n_codes, emb_col, id_col
     )
     kept = [c for c in (keep or ()) if c != id_col]
-    bad = [
-        c for c in kept
-        if c in ("codes", "recon") or _re.fullmatch(r"__c\d+", c)
-    ]
+    bad = [c for c in kept if c in ("codes", "recon")]
     if bad:
         raise ValueError(
             f"pq_encode: keep column(s) {bad} collide with the output "
-            "columns 'codes'/'recon' or the reserved __c<j> names"
+            "columns 'codes'/'recon'"
         )
     return _pq_encode_numpy(corpus, cb, m, sub, emb_col, id_col, kept)
 

@@ -32,10 +32,12 @@ Batch-mode semantics (the oracle-checked contract):
 
 from __future__ import annotations
 
+import itertools
 import logging
 import operator
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -59,8 +61,11 @@ _BIN = {
 }
 
 
-def _vec(e: A.Expr, pdf: pd.DataFrame):
-    """Vectorized filter evaluation over a pandas frame (no per-row Python)."""
+def _vec(e: A.Expr, cols):
+    """Vectorized filter evaluation (no per-row Python) over ``cols``, a
+    mapping from column name to numpy array. Nulls read as pandas reads
+    them: an ordering comparison with a null operand is False,
+    ``and``/``or``/``not`` take a null as False, and ``x % 0`` is null."""
     if isinstance(e, A.Literal):
         return e.value
     if isinstance(e, A.Ref):
@@ -68,26 +73,88 @@ def _vec(e: A.Expr, pdf: pd.DataFrame):
             raise SiddhiPlannerException(
                 f"pattern element filters use bare attributes, got {e.stream}.{e.name}"
             )
-        if e.name not in pdf.columns:
+        if e.name not in cols:
             raise SiddhiPlannerException(f"unknown attribute '{e.name}' in pattern filter")
-        return pdf[e.name]
+        return cols[e.name]
     if isinstance(e, A.Binary):
-        l, r = _vec(e.left, pdf), _vec(e.right, pdf)
+        l, r = _vec(e.left, cols), _vec(e.right, cols)
         if e.op == "and":
-            return l & r
+            return _truth(l) & _truth(r)
         if e.op == "or":
-            return l | r
+            return _truth(l) | _truth(r)
+        if e.op in ("<", "<=", ">", ">="):
+            return _ordered(_BIN[e.op], l, r)
+        if e.op == "%" and np.any(np.equal(r, 0)):
+            # x % 0 reads null as in pandas and SQL (numpy's integer mod gives 0)
+            zero = np.equal(r, 0)
+            return np.where(zero, np.nan, l % np.where(zero, 1, r))
         return _BIN[e.op](l, r)
     if isinstance(e, A.Unary):
-        v = _vec(e.expr, pdf)
-        return ~v if e.op == "not" else -v
+        v = _vec(e.expr, cols)
+        return np.logical_not(_truth(v)) if e.op == "not" else -v
     if isinstance(e, A.IsNull):
-        v = _vec(e.expr, pdf)
-        isna = v.isna() if hasattr(v, "isna") else pd.isna(v)
-        return ~isna if e.negated else isna
+        isna = pd.isna(_vec(e.expr, cols))
+        return np.logical_not(isna) if e.negated else isna
     raise UnsupportedFeatureException(
         f"expression {type(e).__name__} not supported in pattern filters"
     )
+
+
+def _truth(v):
+    """A filter value as booleans, a null reading False (a scalar stays a
+    scalar and broadcasts)."""
+    if not isinstance(v, np.ndarray):
+        return not pd.isna(v) and bool(v)
+    return v if v.dtype == bool else np.where(pd.isna(v), False, v).astype(bool)
+
+
+def _ordered(op, l, r):
+    """``l op r`` for an ordering ``op``, False where an operand is null:
+    numpy raises on ``None`` in an object array (float NaN already
+    compares False)."""
+    if l is None or r is None:
+        return False
+    objs = [v for v in (l, r) if isinstance(v, np.ndarray) and v.dtype == object]
+    null = np.logical_or.reduce([pd.isna(v) for v in objs]) if objs else None
+    if null is None or not null.any():
+        return op(l, r)
+    keep = ~null
+    out = np.zeros(len(keep), dtype=bool)
+    out[keep] = op(*(v[keep] if isinstance(v, np.ndarray) else v for v in (l, r)))
+    return out
+
+
+class LazyColumns(dict):
+    """Column name -> numpy array over ``names``, each made by ``decode``
+    on its first lookup, so a filter pays only for the columns it reads."""
+
+    def __init__(self, names, decode):
+        super().__init__()
+        self.names, self.decode = names, decode
+
+    def __contains__(self, name):
+        return name in self.names
+
+    def __missing__(self, name):
+        arr = self[name] = self.decode(name)
+        return arr
+
+
+def element_masks(elems, cols, n: int, start_idx: int = 0, tags=None) -> list:
+    """Each flat element's boolean mask over the ``n`` rows of ``cols``,
+    for batch and streaming alike. With ``tags`` (stream -> tag) an element
+    also tests its stream's tag in ``cols[STREAM_COL]``. ``start_idx``
+    leading False values pad each mask: a resumed region's old prefix is
+    only reached through saved captures."""
+    base = np.ones(n, dtype=bool)
+    pad = np.zeros(start_idx, dtype=bool) if start_idx else None
+    masks = []
+    for e in elems:
+        m = base if tags is None else cols[STREAM_COL] == tags[e.stream]
+        if e.filter is not None:
+            m = m & _truth(_vec(e.filter, cols))
+        masks.append(m if pad is None else np.concatenate([pad, m]))
+    return masks
 
 
 @dataclass
@@ -395,8 +462,6 @@ def run_shape(
     loop). Every kernel's matches and serialized state equal ``_run_nfa``'s
     (pinned by tests/test_kernel2_unit.py), so the engine may change from
     one micro-batch to the next: small quant visits run the row loop."""
-    import numpy as np
-
     engine = pattern_engine(shape, at_close)
     if engine == "chain_quant":
         n_pend = len(init["partials"]) if init else 0
@@ -438,8 +503,6 @@ def _fill_stage(cap, s, mask, start_idx, ts_vals, first_ts, within_ms):
     already-scanned prefix). A candidate beyond the within window stays
     -1: the row loop evicts the partial at that row, and the kernels'
     survivor rule agrees (ts[-1] >= ts[cand] > first_ts + t)."""
-    import numpy as np
-
     new_s = np.flatnonzero(mask[start_idx:]) + start_idx
     if not len(new_s):
         return
@@ -481,8 +544,6 @@ def run_kernel_chain(
     One ``searchsorted`` per relaxed stage and one gather per strict
     stage, vectorized across every live partial still needing that
     stage."""
-    import numpy as np
-
     k = len(masks)
     n = len(ts_vals)
     if init is not None:
@@ -694,8 +755,6 @@ def run_kernel_chain_absence(
     Streaming-only: batch absence semantics additionally confirm at
     stream close (``at_close=True``), so the batch path keeps the
     general NFA for this shape (:func:`pattern_engine`)."""
-    import numpy as np
-
     k = len(masks)  # includes the negated final element
     kp = k - 1      # positive stages
     n = len(ts_vals)
@@ -842,8 +901,6 @@ def run_kernel_chain_quants(
 
     One ``searchsorted`` per plain stage plus two per quant completion
     boundary, vectorized across every live partial."""
-    import numpy as np
-
     k = len(masks)
     n_rows = len(ts_vals)
     BIG = np.int64(n_rows)
@@ -1412,15 +1469,56 @@ def _try_fast_path(planner, q: A.Query, u: DataFrame, elems, tags, valid,
     return a_sel.join(b_sel, F.expr(cond), "inner").selectExpr(*out)
 
 
+@dataclass
+class PatternFront:
+    """A pattern as both operators plan it: the normalized steps, the FLAT
+    elements (captures, masks and output columns are per flat element;
+    the NFA reads the steps for and/or groups), their streams in first-use
+    order, the strict-connector flags and the kernel shape."""
+
+    steps: list[_Step]
+    elems: list[A.PatternElem]
+    streams: list[str]
+    strict_after: list[bool]
+    has_group: bool
+    shape: str | None
+
+    def log_engine(self, mode: str, sql: bool = False) -> None:
+        """One INFO record per compile naming the engine: ``sql`` (the JVM
+        fast path), a kernel shape or ``nfa``; batch treats the end of the
+        data as stream close."""
+        engine = "sql" if sql else pattern_engine(self.shape, mode == "batch")
+        _log.info("pattern engine (%s): %s", mode, engine)
+
+
+def pattern_front(p: A.PatternInput) -> PatternFront:
+    """Validate and normalize a pattern for either operator: check
+    ``every`` placement, flatten and/or groups, alias each flat element
+    (its stream name, else ``e<i>``) and classify the kernel shape."""
+    validate_every_at(p)
+    steps, elems = normalize_steps(p.elems)
+    used = set()
+    for i, e in enumerate(elems):
+        if e.alias is None:
+            e.alias = e.stream if e.stream not in used else f"e{i}"
+        used.add(e.alias)
+    streams = list(dict.fromkeys(e.stream for e in elems))
+    strict_after = [c == "," for c in p.connectors]
+    has_group = len(elems) != len(p.elems)
+    shape = None if has_group else kernel_shape(elems, p.every, p.every_at, strict_after)
+    return PatternFront(steps, elems, streams, strict_after, has_group, shape)
+
+
 def pattern_output(elems, schemas: dict):
     """The match table's columns and select resolver, shared by the batch
     and the streaming pattern operators: one column per (non-negated
     element x field of its stream), named ``alias__field``, an array for a
     collection element. ``resolve`` maps a select reference onto it:
     ``a.f``, ``a[i].f`` (collections only; null past the captured count)
-    or a bare field (the first element carrying it).
+    or a bare field (the first element carrying it). ``emit`` builds the
+    match table's columns from the matches.
 
-    Returns ``(out_fields, col_of, field_names, collection, resolve)``."""
+    Returns ``(out_schema, col_of, field_names, resolve, emit)``."""
     singles = [e for e in elems if not e.negated]
     out_fields: list[T.StructField] = []
     col_of: dict[tuple[str, str], str] = {}
@@ -1459,29 +1557,33 @@ def pattern_output(elems, schemas: dict):
                 return F.get(c, 0) if collection[e.alias] else c
         raise SiddhiPlannerException(f"unknown column '{ref.name}' after pattern")
 
-    return out_fields, col_of, field_names, collection, resolve
+    def emit(found: list, take) -> list[list]:
+        """The matches ``found`` (each flat element's captured row
+        positions per match) as the match table's columns, in
+        ``out_fields`` order. ONE ``take(field, positions) -> list`` call
+        gathers each (element, field) across all matches; a single element
+        without a capture reads null, a collection element a list."""
+        cols = []
+        for ei, e in enumerate(elems):
+            if e.negated:
+                continue
+            picks = [cap[ei] for cap in found]
+            idx = [j for pick in picks for j in pick]
+            ends = list(itertools.accumulate(map(len, picks)))
+            for fname in field_names[e.alias]:
+                vals = take(fname, idx)
+                cut = [vals[b - len(pk):b] for b, pk in zip(ends, picks)]
+                cols.append(cut if e.is_collection else [c[0] if c else None for c in cut])
+        return cols
+
+    return T.StructType(out_fields), col_of, field_names, resolve, emit
 
 
 def compile_pattern(planner, q: A.Query):
     """Compile a pattern query input. Returns (df, resolver, fields)."""
     p: A.PatternInput = q.input
-    validate_every_at(p)
-    raw_steps = p.elems
-    # validate + flatten and/or groups; NFA captures are per FLAT element
-    _, elems = normalize_steps(raw_steps)
-    has_group = len(elems) != len(raw_steps)
-    # assign aliases (flat elems share object identity with raw_steps' elems)
-    used = set()
-    for i, e in enumerate(elems):
-        if e.alias is None:
-            e.alias = e.stream if e.stream not in used else f"e{i}"
-        used.add(e.alias)
-    strict_after = [c == "," for c in p.connectors]
-
-    streams = []
-    for e in elems:
-        if e.stream not in streams:
-            streams.append(e.stream)
+    front = pattern_front(p)
+    elems, streams, strict_after = front.elems, front.streams, front.strict_after
     schemas = {s: planner.stream_schema(s) for s in streams}
     dfs = {}
     for s in streams:
@@ -1542,21 +1644,12 @@ def compile_pattern(planner, q: A.Query):
     u_names = [*first, *[n for n, _ in union_fields if n not in first], STREAM_COL, PK_COL]
     valid = {STREAM_COL, TS_COL, PK_COL, *seen}
 
-    out_fields, col_of, field_names, collection, resolve = pattern_output(
-        elems, schemas
-    )
-    out_schema = T.StructType(out_fields)
+    out_schema, col_of, field_names, resolve, emit = pattern_output(elems, schemas)
 
     sort_cols = [TS_COL] + [n for n, _ in union_fields]
-    elems_c = elems
-    raw_steps_c = raw_steps
-    every = p.every
-    every_at = p.every_at
-    within_ms = p.within_ms
-    filters = [(tags[e.stream], e.filter) for e in elems]
-    out_names = [f.name for f in out_fields]
+    out_names = out_schema.names
 
-    fast = None if has_group else _try_fast_path(
+    fast = None if front.has_group else _try_fast_path(
         planner, q, u, elems, tags, valid, strict_after, col_of, field_names,
         sort_cols,
     )
@@ -1573,14 +1666,7 @@ def compile_pattern(planner, q: A.Query):
 
     # the numpy kernels replace the per-row loop in batch too; their matches
     # equal _run_nfa's, so batch output is identical, just vectorized
-    shape = (
-        None if has_group
-        else kernel_shape(elems_c, every, every_at, strict_after)
-    )
-    _log.info(
-        "pattern engine (batch): %s",
-        "sql" if fast is not None else pattern_engine(shape, at_close=True),
-    )
+    front.log_engine("batch", sql=fast is not None)
 
     # applyInPandas resolves every input column by name, which a field name
     # holding a backtick cannot pass: the union's fields travel under
@@ -1590,33 +1676,16 @@ def compile_pattern(planner, q: A.Query):
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf.columns = u_names
         pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-        masks = []
-        for tag, filt in filters:
-            m = (pdf[STREAM_COL] == tag).to_numpy()
-            if filt is not None:
-                fv = _vec(filt, pdf)
-                m = m & fv.to_numpy(dtype=bool, na_value=False) if hasattr(fv, "to_numpy") else (m & bool(fv))
-            masks.append(m)
+        cols = LazyColumns(u_names, lambda c: pdf[c].to_numpy())
+        masks = element_masks(elems, cols, len(pdf), tags=tags)
         found, _ = run_shape(
-            shape, pdf[TS_COL].to_numpy(), masks, raw_steps_c, strict_after,
-            every, every_at, within_ms,
+            front.shape, cols[TS_COL], masks, p.elems, strict_after,
+            p.every, p.every_at, p.within_ms,
         )
-        data: dict[str, list] = {n: [] for n in out_names}
-        for cap in found:
-            for ei, e in enumerate(elems_c):
-                if e.negated:
-                    continue
-                idxs = cap[ei]
-                for fname in field_names[e.alias]:
-                    cname = col_of[(e.alias, fname)]
-                    vals = [pdf[fname].iloc[j] for j in idxs]
-                    if collection[e.alias]:
-                        data[cname].append(vals)
-                    else:
-                        data[cname].append(vals[0] if vals else None)
+        data = emit(found, lambda f, idx: pdf[f].take(idx).tolist())
         # dtype=object keeps empty/None-bearing columns Arrow-castable (a
         # default-constructed empty frame would be float64 -> timestamp cast error)
-        return pd.DataFrame(data, columns=out_names, dtype=object)
+        return pd.DataFrame(dict(zip(out_names, data)), columns=out_names, dtype=object)
 
     if fast is not None:
         result = fast

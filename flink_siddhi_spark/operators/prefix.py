@@ -1,6 +1,6 @@
 """Distributed global prefix sums / row numbers.
 
-A global ``Window.orderBy`` (no partitionBy) funnels the entire dataset
+A global window ``ORDER BY`` (no ``PARTITION BY``) funnels the entire dataset
 through ONE task — the classic single-partition Exchange that stops scaling
 long before 100 TB. These helpers compute the same totals distributively:
 
@@ -20,18 +20,15 @@ Round 11 (VERDICT r10 item 5 — py4j plan-construction latency): when every
 order key and the value are passed as SQL TEXT, the whole pipeline is
 rendered as a handful of server-side parses (``selectExpr`` with window
 functions in-string) instead of ~10 py4j round-trips per Column node.
-String order keys are SQL expressions sorted ASCENDING — a descending key
-must be passed as a negating expression (e.g. ``-__mark``) or through the
-legacy Column path (``F.col(...).desc()``), which remains for callers
-whose keys are not string-renderable. Both paths build node-identical
-Project/Window/Aggregate expressions, so results are byte-equal.
+Order keys are SQL expressions sorted ASCENDING — a descending key is
+passed as a negating expression (e.g. ``-__mark``), and a null placement
+other than Spark's ascending default as a leading ``x IS NULL`` key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 _PID = "__pfx_pid"
 _VAL = "__pfx_val"
@@ -40,64 +37,40 @@ _OFF = "__pfx_off"
 _TOT = "__pfx_tot"
 
 
-def running_sum(df: DataFrame, ord_cols: list, value, out: str) -> DataFrame:
-    """Inclusive running sum of ``value`` in the total order given by
-    ``ord_cols``, distributed. ``ord_cols`` entries are either SQL
-    expression strings (sorted ASCENDING — negate for descending) or
-    Column sort expressions; ``value`` is a SQL expression string or a
-    Column. All-string inputs take the server-side-parse fast path."""
-    if all(isinstance(c, str) for c in ord_cols) and isinstance(value, str):
-        order_by = ", ".join(ord_cols)
-        part = (
-            df.repartitionByRange(*[F.expr(c) for c in ord_cols])
-            .selectExpr(
-                "*",
-                f"spark_partition_id() AS {_PID}",
-                f"({value}) AS {_VAL}",
-            )
-            .selectExpr(
-                "*",
-                f"sum({_VAL}) OVER (PARTITION BY {_PID} ORDER BY {order_by} "
-                f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-                f"AS {_LOC}",
-            )
-        )
-        totals = part.groupBy(_PID).agg(F.expr(f"sum({_VAL}) AS {_TOT}"))
-        # exclusive cumsum over n_partitions rows — single-task but tiny
-        offsets = totals.selectExpr(
-            _PID,
-            f"coalesce(sum({_TOT}) OVER (ORDER BY {_PID} "
-            f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) "
-            f"AS {_OFF}",
-        )
-        res = part.join(F.broadcast(offsets), _PID)
-        keep = [f"`{c}`" for c in df.columns]
-        return res.selectExpr(*keep, f"({_LOC} + {_OFF}) AS {out}")
-    cols = [F.col(c) if isinstance(c, str) else c for c in ord_cols]
+def running_sum(df: DataFrame, ord_cols: list[str], value: str, out: str) -> DataFrame:
+    """Inclusive running sum of the SQL expression ``value`` in the total
+    order given by ``ord_cols`` (SQL expression strings, each sorted
+    ASCENDING — negate for descending), distributed."""
+    order_by = ", ".join(ord_cols)
     part = (
-        df.repartitionByRange(*cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .withColumn(_VAL, value)
+        df.repartitionByRange(*[F.expr(c) for c in ord_cols])
+        .selectExpr(
+            "*",
+            f"spark_partition_id() AS {_PID}",
+            f"({value}) AS {_VAL}",
+        )
+        .selectExpr(
+            "*",
+            f"sum({_VAL}) OVER (PARTITION BY {_PID} ORDER BY {order_by} "
+            f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
+            f"AS {_LOC}",
+        )
     )
-    w = (
-        Window.partitionBy(_PID)
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    part = part.withColumn(_LOC, F.sum(_VAL).over(w))
-    totals = part.groupBy(_PID).agg(F.sum(_VAL).alias(_TOT))
+    totals = part.groupBy(_PID).agg(F.expr(f"sum({_VAL}) AS {_TOT}"))
     # exclusive cumsum over n_partitions rows — single-task but tiny
-    woff = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        _OFF, F.coalesce(F.sum(_TOT).over(woff), F.lit(0))
-    ).select(_PID, _OFF)
+    offsets = totals.selectExpr(
+        _PID,
+        f"coalesce(sum({_TOT}) OVER (ORDER BY {_PID} "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) "
+        f"AS {_OFF}",
+    )
     res = part.join(F.broadcast(offsets), _PID)
-    return res.withColumn(out, F.col(_LOC) + F.col(_OFF)).drop(_PID, _VAL, _LOC, _OFF)
+    keep = [f"`{c}`" for c in df.columns]
+    return res.selectExpr(*keep, f"({_LOC} + {_OFF}) AS {out}")
 
 
-def global_row_number(df: DataFrame, ord_cols: list, out: str) -> DataFrame:
-    """1-based global row number in the total order of ``ord_cols`` (which
-    must be a deterministic total order for stable results), distributed."""
-    if all(isinstance(c, str) for c in ord_cols):
-        return running_sum(df, [f"`{c}`" for c in ord_cols], "1", out)
-    return running_sum(df, ord_cols, F.lit(1), out)
+def global_row_number(df: DataFrame, ord_cols: list[str], out: str) -> DataFrame:
+    """1-based global row number in the total order of the column names
+    ``ord_cols`` (which must be a deterministic total order for stable
+    results), distributed."""
+    return running_sum(df, [f"`{c}`" for c in ord_cols], "1", out)

@@ -54,6 +54,8 @@ the other aggregates skip nulls and read NULL over no values.
 
 from __future__ import annotations
 
+import datetime
+import hashlib
 import json
 import logging
 import pickle
@@ -75,15 +77,17 @@ from ..operators import windows as W
 from ..operators.pattern import (
     PK_COL,
     STREAM_COL,
-    _vec,
-    kernel_shape,
-    pattern_engine,
+    LazyColumns,
+    element_masks,
+    pattern_front,
     pattern_output,
     run_shape,
 )
 from .bucketing import keyed_state
 
 _log = logging.getLogger(__name__)
+
+_EPOCH_DAY = datetime.date(1970, 1, 1)
 
 # Streaming #window.sort / #window.frequent emit per-micro-batch SNAPSHOTS of
 # the window's retained contents; each output row carries the snapshot id and
@@ -316,9 +320,6 @@ class StreamingPlanner(BatchPlanner):
         self.window_key_buckets = window_key_buckets
 
     # ------------------------------------------------------------------ utils
-    def _event_time_col(self, schema) -> Optional[str]:
-        return schema.ts_field
-
     def _with_watermark(self, df: DataFrame, schema) -> DataFrame:
         if schema.ts_field is None or not df.isStreaming:
             return df
@@ -1080,32 +1081,16 @@ class StreamingPlanner(BatchPlanner):
 
     def _streaming_pattern(self, q: A.Query) -> DataFrame:
         """Per-key NFA over state-buffered rows (applyInPandasWithState)."""
-        from ..operators.pattern import (
-            normalize_steps,
-            quiescent_confirm,
-            validate_every_at,
-        )
+        from ..operators.pattern import quiescent_confirm
 
         p: A.PatternInput = q.input
-        validate_every_at(p)
-        raw_steps = p.elems
-        # flatten and/or groups exactly as batch compile_pattern does (round
-        # 9 — the andor3 parity fuzz arm found streaming groups crashed at
-        # plan time): captures, masks, and output columns are per FLAT
-        # element; the NFA consumes the raw step list for group semantics
-        steps_norm, elems = normalize_steps(raw_steps)
-        has_group = len(elems) != len(raw_steps)
-        used = set()
-        for i, e in enumerate(elems):
-            if e.alias is None:
-                e.alias = e.stream if e.stream not in used else f"e{i}"
-            used.add(e.alias)
-        strict_after = [c == "," for c in p.connectors]
-        if len({e.stream for e in elems}) != 1:
+        front = pattern_front(p)
+        elems, strict_after = front.elems, front.strict_after
+        if len(front.streams) != 1:
             raise UnsupportedFeatureException(
                 "streaming patterns over multiple streams: union the streams first"
             )
-        stream = elems[0].stream
+        stream = front.streams[0]
         schema = self.stream_schema(stream)
         if schema.ts_field is None:
             raise SiddhiPlannerException(f"pattern stream '{stream}' needs a ts_field")
@@ -1120,11 +1105,7 @@ class StreamingPlanner(BatchPlanner):
 
         fields = list(schema.fields)
         field_types = {f.name: f.dataType for f in schema.df.schema.fields}
-        out_fields, _, field_names, collection, resolve = pattern_output(
-            elems, {stream: schema}
-        )
-        out_schema = T.StructType(out_fields)
-        out_names = [f.name for f in out_fields]
+        out_schema, _, _, resolve, emit = pattern_output(elems, {stream: schema})
         # buffer state = ONE json blob of row arrays, stored SORTED. ``seen``
         # holds content-hashes of already-emitted matches: a running count
         # would re-emit old matches (and drop new ones) whenever an
@@ -1137,11 +1118,7 @@ class StreamingPlanner(BatchPlanner):
                 T.StructField("nfa", T.StringType()),
             ]
         )
-        elems_c = elems
-        raw_steps_c = raw_steps
-        every, within_ms = p.every, p.within_ms
-        every_at = p.every_at
-        filters = [(e.stream, e.filter) for e in elems]
+        every, every_at, within_ms = p.every, p.every_at, p.within_ms
         max_buffer = self.max_buffer_per_key
 
         # --- row packing (round 7): ship each event to the stateful operator
@@ -1158,17 +1135,16 @@ class StreamingPlanner(BatchPlanner):
         )
         pos = {TS_COL: 0}
         pack_exprs = [F.col(TS_COL).cast("long").alias("__c0")]
-        dt_us_fields: set = set()
-        date_fields: set = set()
+        unpack: dict = {}  # field -> its packed value back as an output cell
         for i, f in enumerate(fields):
             t = field_types[f]
             c = F.col(f)
             if isinstance(t, (T.TimestampType, T.TimestampNTZType)):
                 c = F.unix_micros(c.cast("timestamp"))
-                dt_us_fields.add(f)
+                unpack[f] = lambda v: pd.Timestamp(v, unit="us", tz="UTC")
             elif isinstance(t, T.DateType):
                 c = F.datediff(c, F.lit("1970-01-01"))
-                date_fields.add(f)
+                unpack[f] = lambda v: _EPOCH_DAY + datetime.timedelta(days=v)
             elif not isinstance(t, _NUM_T + (T.StringType, T.BooleanType)):
                 raise UnsupportedFeatureException(
                     f"streaming pattern over field '{f}' of type "
@@ -1201,25 +1177,6 @@ class StreamingPlanner(BatchPlanner):
                 for p, d in sort_pd
             )
 
-        # columns the element filters actually read (masks build arrays for
-        # just these)
-        def _ref_names(x, out):
-            if isinstance(x, A.Ref):
-                out.add(x.name)
-            elif isinstance(x, A.Binary):
-                _ref_names(x.left, out)
-                _ref_names(x.right, out)
-            elif isinstance(x, A.Unary):
-                _ref_names(x.expr, out)
-            elif isinstance(x, A.IsNull):
-                _ref_names(x.expr, out)
-
-        ref_cols: set = set()
-        for _, filt in filters:
-            if filt is not None:
-                _ref_names(filt, ref_cols)
-        ref_cols = sorted(ref_cols)
-
         # Watermark eviction (round 8: now covers absence patterns too) is
         # sound only when arming is per-row (`every`, no mid-every): the
         # out-of-order fallback is a FULL RE-RUN over the buffer, and for
@@ -1247,38 +1204,22 @@ class StreamingPlanner(BatchPlanner):
         purge = self.pattern_state_purge and multi and can_evict
         use_timeout = has_neg or purge
 
-        # vectorizable shape -> numpy kernel instead of the row loop
-        shape = (
-            None if has_group
-            else kernel_shape(elems_c, every, every_at, strict_after)
-        )
-        _log.info(
-            "pattern engine (streaming): %s",
-            pattern_engine(shape, at_close=False),
-        )
+        front.log_engine("streaming")
 
-        class _ColView(dict):
-            """Minimal pdf-like over numpy column arrays for ``_vec``."""
+        def decode(region, c):
+            """Column ``c`` of the buffered rows ``region`` as the numpy
+            array a filter reads: strings as objects, every other type as
+            int64, or float64 once a null or a fraction shows."""
+            vals = [r[pos[c]] for r in region]
+            if isinstance(field_types.get(c), T.StringType):
+                return np.asarray(vals, dtype=object)
+            try:
+                return np.asarray(vals, dtype=np.int64)
+            except (TypeError, ValueError):
+                return np.asarray(vals, dtype=np.float64)
 
-            @property
-            def columns(self):
-                return list(self.keys())
-
-        def _mask_bool(fv):
-            import numpy as _np
-
-            if hasattr(fv, "to_numpy"):  # pandas Series
-                return fv.to_numpy(dtype=bool, na_value=False)
-            arr = _np.asarray(fv)
-            if arr.dtype == object or arr.dtype.kind == "f":
-                return _np.where(pd.isna(arr), False, arr).astype(bool)
-            return arr.astype(bool)
-
-        ref_pos = [(c, pos[c]) for c in ref_cols]
-        ref_numeric = {
-            c: not isinstance(field_types.get(c), T.StringType)
-            for c in ref_cols
-        }
+        # a dry run over no rows: a bad filter fails the plan, not a worker
+        element_masks(elems, LazyColumns(pos, lambda c: decode([], c)), 0)
 
         def _key_step(seen, buf_json, nfa_json, new_rows, wm):
             """ONE key's state transition for one micro-batch: merge decoded
@@ -1299,16 +1240,11 @@ class StreamingPlanner(BatchPlanner):
             driver (per key, or per member key of a hash bucket), so
             cross-mode parity is structural, not tested-in.
             """
-            import hashlib as _hashlib
-            import json as _json
-
-            import numpy as _np
-
             if buf_json is None:
                 nfa, rows = None, []
             else:
-                rows = _json.loads(buf_json)
-                nfa = _json.loads(nfa_json)
+                rows = json.loads(buf_json)
+                nfa = json.loads(nfa_json)
             if not multi and nfa is not None and nfa["st"]["done"]:
                 # sealed: an arm-once pattern emits at most one match ever;
                 # once emitted the buffer is dead weight and late arrivals
@@ -1348,8 +1284,8 @@ class StreamingPlanner(BatchPlanner):
                 rows.extend(new_rows)
                 rows.sort(key=sort_key)
                 start_idx, init = 0, None
-            ts_arr = _np.fromiter(
-                (r[0] for r in rows), dtype=_np.int64, count=len(rows)
+            ts_arr = np.fromiter(
+                (r[0] for r in rows), dtype=np.int64, count=len(rows)
             )
             if can_evict and wm > 0:
                 # rows below (watermark - within) can never join a NEW match:
@@ -1376,7 +1312,7 @@ class StreamingPlanner(BatchPlanner):
                     ]
                     if live:
                         floor = min(floor, min(live))
-                k = int(_np.searchsorted(ts_arr, floor))
+                k = int(np.searchsorted(ts_arr, floor))
                 if k > 0:
                     buf_mutated = True
                     rows = rows[k:]
@@ -1420,34 +1356,10 @@ class StreamingPlanner(BatchPlanner):
                 # old prefix is only indexed via partials' captured
                 # positions, never re-tested, so it pads as False
                 region = rows[start_idx:] if start_idx else rows
-                masks = []
-                if any(filt is not None for _, filt in filters):
-                    view = {}
-                    for c, p_ in ref_pos:
-                        vals = [r[p_] for r in region]
-                        if ref_numeric[c]:
-                            try:
-                                arr = _np.asarray(vals, dtype=_np.int64)
-                            except (TypeError, ValueError):
-                                arr = _np.asarray(vals, dtype=_np.float64)
-                        else:
-                            arr = _np.asarray(vals, dtype=object)
-                        view[c] = arr
-                    view = _ColView(view)
-                base = _np.ones(len(region), dtype=bool)
-                zpad = (
-                    _np.zeros(start_idx, dtype=bool) if start_idx else None
-                )
-                for _, filt in filters:
-                    if filt is None:
-                        m = base
-                    else:
-                        m = base & _mask_bool(_vec(filt, view))
-                    if zpad is not None:
-                        m = _np.concatenate([zpad, m])
-                    masks.append(m)
+                cols = LazyColumns(pos, lambda c: decode(region, c))
+                masks = element_masks(elems, cols, len(region), start_idx)
                 found, nfa_st = run_shape(
-                    shape, ts_arr, masks, raw_steps_c, strict_after, every,
+                    front.shape, ts_arr, masks, p.elems, strict_after, every,
                     every_at, within_ms, start_idx, init, at_close=False,
                 )
 
@@ -1464,7 +1376,7 @@ class StreamingPlanner(BatchPlanner):
                 # wm=0 (no watermark yet) confirms nothing but still
                 # surfaces the pending deadline so the timer arms in batch 1
                 extra, nfa_st, pend = quiescent_confirm(
-                    nfa_st, steps_norm, wm, multi
+                    nfa_st, front.steps, wm, multi
                 )
                 if extra:
                     confirmed = True
@@ -1473,10 +1385,10 @@ class StreamingPlanner(BatchPlanner):
             # identity = the captured rows' CONTENT (buffer positions shift
             # as rows arrive/evict, so indices are not stable across batches)
             def match_key(cap):
-                payload = _json.dumps(
+                payload = json.dumps(
                     [[rows[j] for j in idxs] for idxs in cap]
                 )
-                return _hashlib.md5(payload.encode()).hexdigest()
+                return hashlib.md5(payload.encode()).hexdigest()
 
             seen_set = set(seen)
             new_caps = []
@@ -1517,8 +1429,8 @@ class StreamingPlanner(BatchPlanner):
                 )
             return (
                 seen,
-                _json.dumps(rows),
-                _json.dumps({"hwm": hwm, "st": nfa_st}),
+                json.dumps(rows),
+                json.dumps({"hwm": hwm, "st": nfa_st}),
                 rows,
                 new_caps,
                 True,
@@ -1526,39 +1438,13 @@ class StreamingPlanner(BatchPlanner):
                 removable,
             )
 
-        def _emit(new_caps, rows):
-            """The new matches as output rows (out_schema order)."""
-            import datetime as _dt
-
-            def _cell(fname: str, row):
-                v = row[pos[fname]]
-                if v is None:
-                    return None
-                if fname in dt_us_fields:
-                    return pd.Timestamp(v, unit="us", tz="UTC")
-                if fname in date_fields:
-                    return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
-                return v
-
-            out = []
-            for cap in new_caps:
-                rec = []
-                for ei, e in enumerate(elems_c):
-                    if e.negated:
-                        continue
-                    picked = [rows[j] for j in cap[ei]]
-                    for fname in field_names[e.alias]:
-                        vals = [_cell(fname, r) for r in picked]
-                        if collection[e.alias]:
-                            rec.append(vals)
-                        else:
-                            rec.append(vals[0] if vals else None)
-                out.append(tuple(rec))
-            return out
+        def take(rows, fname, idx):
+            """The picked buffered rows' ``fname`` values as output cells."""
+            p_, conv = pos[fname], unpack.get(fname)
+            vals = [rows[j][p_] for j in idx]
+            return vals if conv is None else [v if v is None else conv(v) for v in vals]
 
         def step(key, rows, state):
-            import json as _json
-
             if state.hasTimedOut and not has_neg:
                 # purge timer fired: the last-armed horizon guarantees the
                 # whole buffer evictable and every partial stale — drop the
@@ -1574,7 +1460,7 @@ class StreamingPlanner(BatchPlanner):
             if not multi and nfa_json is not None:
                 # peek the seal BEFORE decoding the batch: a sealed key's
                 # later batches must stay no-ops (no per-row json work)
-                if _json.loads(nfa_json)["st"]["done"]:
+                if json.loads(nfa_json)["st"]["done"]:
                     if buf_json != "[]":
                         state.update((seen, "[]", nfa_json))
                     return None
@@ -1585,7 +1471,7 @@ class StreamingPlanner(BatchPlanner):
             # watermark passed a pending absence deadline or the GC
             # horizon) carries no rows; _key_step's quiescent pass does the
             # confirmation/drain work.
-            loads = _json.loads
+            loads = json.loads
             new_rows = [
                 [d[k] for k in pack_keys]
                 for d in map(loads, rows.col("__row").tolist())
@@ -1608,7 +1494,8 @@ class StreamingPlanner(BatchPlanner):
                     # rejected, hence the clamp)
                     state.setTimeoutTimestamp(max(timer, wm + 1))
             if new_caps:
-                return _emit(new_caps, buf_rows)
+                cols = emit(new_caps, lambda f, idx: take(buf_rows, f, idx))
+                return list(zip(*cols))
             return None
 
         # absence patterns and evictable every-patterns run under
@@ -1625,4 +1512,4 @@ class StreamingPlanner(BatchPlanner):
             self.pattern_key_buckets,
         )
 
-        return self._select_rowwise(result, q, resolve, out_names)
+        return self._select_rowwise(result, q, resolve, out_schema.names)

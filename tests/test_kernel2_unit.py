@@ -980,3 +980,37 @@ def test_kernel_chain_multiquant_state_interops_with_general_nfa():
         assert _state_key_full(k_st2) == _state_key_full(g_st2), (
             trial, k, quants,
         )
+
+
+def test_element_masks_read_null_ordering_operands_false():
+    """The one element-mask function over numpy columns: an all-None object
+    column reads False under every ordering operator (numpy alone raises on
+    None), ``==`` and ``!=`` keep numpy's null results, integer ``x % 0``
+    is null, and a resumed region's ``start_idx`` prefix pads as False."""
+    from flink_siddhi_spark.operators.pattern import LazyColumns, element_masks
+
+    def elem(filt):
+        return A.PatternElem(stream="s", filter=filt)
+
+    arrays = {
+        "name": np.array([None] * 3, dtype=object),
+        "v": np.array([1.0, np.nan, 3.0]),
+        "k": np.array([4, 5, 6]),
+    }
+    cols = LazyColumns(set(arrays), arrays.__getitem__)
+    name, lit = A.Ref(None, "name"), A.Literal("b", "string")
+    for op in ("<", "<=", ">", ">="):
+        for left, right in ((name, lit), (lit, name)):
+            [m] = element_masks([elem(A.Binary(op, left, right))], cols, 3)
+            assert m.dtype == bool and not m.any(), op
+    mod0 = A.Binary("%", A.Ref(None, "k"), A.Literal(0, "int"))
+    eq, ne, gt, mod = element_masks(
+        [elem(A.Binary("==", name, lit)), elem(A.Binary("!=", name, lit)),
+         elem(A.Binary(">", A.Ref(None, "v"), A.Literal(1, "int"))),
+         elem(A.Binary("==", mod0, A.Literal(0, "int")))],
+        cols, 3, start_idx=2,
+    )
+    assert eq.tolist() == [False] * 5
+    assert ne.tolist() == [False, False, True, True, True]
+    assert gt.tolist() == [False, False, False, False, True]
+    assert mod.tolist() == [False] * 5

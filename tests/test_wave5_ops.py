@@ -436,16 +436,19 @@ def test_quantizers_keep_non_integral_ids(spark):
 
 
 def test_pq_encode_keep_collision_rejected(spark):
-    # keep names that collide with the output columns or the expr engine's
-    # __c<j> temporaries would produce duplicate/ambiguous columns
+    # keep names that collide with the output columns would produce
+    # duplicate/ambiguous columns; any other name passes through unchanged
     import pytest
 
     from flink_siddhi_spark.llm.similarity import pq_encode
 
     embs = _embs_df(spark)
-    for bad in ("codes", "recon", "__c0", "__c7"):
+    for bad in ("codes", "recon"):
         with pytest.raises(ValueError, match="collide"):
             pq_encode(embs.withColumn(bad, embs.vec_id), keep=(bad,))
+    out = pq_encode(embs.withColumn("__c0", embs.vec_id * 10), keep=("__c0",))
+    assert "__c0" in out.columns
+    assert all(r["__c0"] == r["vec_id"] * 10 for r in out.collect())
 
 
 def test_pq_train_matches_duckdb_replay(spark):
