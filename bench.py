@@ -479,7 +479,9 @@ def _streaming_throughput_bench(spark, sf_dir: str) -> dict:
             within_ms=3_600_000, watermark="1 hour",
         ),
     }
-    out: dict = {"n_events": n_events}
+    # "warmup": "full" marks rows measured after the untimed warmup pass
+    # below; rows without it (BENCH_r10 and earlier) are not comparable
+    out: dict = {"n_events": n_events, "warmup": "full"}
     try:
         # untimed FULL warmup pass of the four 100k plans (round 11): with
         # the section running first in a fresh session, the first timed

@@ -762,8 +762,6 @@ def funnel_stream(
     on key-heavy streams (>= 10^5 active users). Episode content is
     unchanged (advancement is watermark-determined); checkpoint state
     formats differ between modes, so pick at query creation."""
-    import json as _json
-
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -788,16 +786,11 @@ def funnel_stream(
             T.StructField("t_ms", T.LongType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
 
     def step(key, rows, state):
         """One key's visit: merge new (step_idx, ms) rows into the sorted
         buffer, advance episodes at the watermark, drop drained state."""
-        buf = (
-            _json.loads(state.get[0])
-            if state.exists
-            else [[] for _ in steps]
-        )
+        buf = state.get if state.exists else [[] for _ in steps]
         if len(rows):
             # events arrive pre-decoded JVM-side as (step_idx, ms) — no
             # pd.to_datetime / per-row dict per key (the round-7 profiling:
@@ -806,8 +799,7 @@ def funnel_stream(
             for i, b in enumerate(buf):
                 b.extend(ms[idx == i].tolist())
         # _funnel_advance bisects: sorted is the state invariant. Stored
-        # state is already sorted (pre-round-8 state was arrival-ordered),
-        # so timsort sees two runs — ~O(n)
+        # state is already sorted, so timsort sees two runs — ~O(n)
         for b in buf:
             b.sort()
         wm = state.getCurrentWatermarkMs()
@@ -824,7 +816,7 @@ def funnel_stream(
         else:
             # anchorless events: dead once the watermark passes them
             fire = max(max(x for b in buf for x in b) + 1, wm + 1)
-        state.update((_json.dumps(buf),))
+        state.update(buf)
         state.setTimeoutTimestamp(fire)
         return out
 
@@ -842,7 +834,7 @@ def funnel_stream(
         )
     )
     return keyed_state(
-        base, [user_col], step, out_schema, state_schema,
+        base, [user_col], step, out_schema,
         GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 
@@ -906,8 +898,7 @@ def attribution_stream(
     (2) The per-conversion credit scan is a ``bisect`` over the SORTED
     touch list instead of an O(touches) sweep — the hot key holds tens of
     thousands of in-horizon touches and each batch finalizes thousands of
-    conversions, so the sweep was quadratic in the hot key's rate. State
-    json format is unchanged (sorted order is a valid instance of it).
+    conversions, so the sweep was quadratic in the hot key's rate.
 
     NB: the type filter is pushed below the watermark node, so the
     watermark advances on touch/conversion events only (the SS
@@ -938,23 +929,16 @@ def attribution_stream(
         "conversion_id", user_col, "conversion_ts", "touch_id",
         "touch_type", "ms_since_touch",
     ]
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
 
     def step(key, rows, state):
         """One key's visit: ingest the new touches and conversions, credit
         every finalized conversion, prune stale touches, drop drained
-        state."""
+        state. Touches are (ts, id, type) tuples: bisect compares the
+        (ts, id) probe against them, and a 3-tuple equal to the probe in
+        (ts, id) sorts AFTER it — exactly the strictly-below contract."""
         import bisect as _bisect
 
-        if state.exists:
-            t_raw, p_raw = _json.loads(state.get[0])
-            # tuples, not lists: bisect compares the probe tuple against
-            # entries, and a 3-tuple equal to the 2-tuple probe in (ts, id)
-            # sorts AFTER it — exactly the strictly-below contract
-            touches = [tuple(t) for t in t_raw]
-            pending = [tuple(c) for c in p_raw]
-        else:
-            touches, pending = [], []
+        touches, pending = state.get if state.exists else ([], [])
         new_t = []
         for s in rows.col("__row").tolist():
             d = _json.loads(s)
@@ -1009,7 +993,7 @@ def attribution_stream(
         else:
             # touches alone: dead once the horizon passes them all
             fire = max(touches[-1][0] + horizon + 1, wm + 1)
-        state.update((_json.dumps([touches, pending]),))
+        state.update((touches, pending))
         state.setTimeoutTimestamp(fire)
         return out
 
@@ -1032,7 +1016,7 @@ def attribution_stream(
         )
     )
     return keyed_state(
-        base, [user_col], step, out_schema, state_schema,
+        base, [user_col], step, out_schema,
         GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 
@@ -1123,15 +1107,12 @@ def transitions_stream(
             T.StructField("to_id", df.schema[id_col].dataType),
         ]
     )
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
 
     def step(key, rows, state):
         """One key's visit: sort the merged buffer, finalize the prefix
         below the watermark, chain pairs from the anchor. Anchor-only
         state arms no timer: the key is revisited on new data only."""
-        anchor, buf = (
-            _json.loads(state.get[0]) if state.exists else (None, [])
-        )
+        anchor, buf = state.get if state.exists else (None, [])
         # packed single-json-column input (the round-7/8 streaming
         # treatment): ids ride json natively, so string ids keep the batch
         # twin's lexicographic (ts, id) tie-break
@@ -1150,7 +1131,7 @@ def transitions_stream(
                 anchor = e
             else:
                 rest.append(e)
-        state.update((_json.dumps([anchor, rest]),))
+        state.update((anchor, rest))
         if rest:
             state.setTimeoutTimestamp(max(max(e[0] for e in rest) + 1, wm + 1))
         return out
@@ -1171,7 +1152,7 @@ def transitions_stream(
         )
     )
     return keyed_state(
-        base, [user_col], step, out_schema, state_schema,
+        base, [user_col], step, out_schema,
         GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 
@@ -1219,8 +1200,6 @@ def retention_pairs_stream(
     visit serves ~users/N users, amortizing the fixed per-key-visit
     machinery on high-cardinality user spaces; semantics-invisible
     (PARITY.md deviation 18)."""
-    import json as _json
-
     import pandas as pd
 
     from pyspark.sql import types as T
@@ -1236,13 +1215,11 @@ def retention_pairs_stream(
             T.StructField("day_num", T.LongType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("buf", T.StringType())])
 
     def step(key, rows, state):
         cohort, emitted, pending = (
-            _json.loads(state.get[0]) if state.exists else (None, [], [])
+            state.get if state.exists else (None, set(), set())
         )
-        emitted, pending = set(emitted), set(pending)
         if len(rows):
             ms = (
                 pd.to_datetime(rows.col(ts_col)).astype("int64") // 1_000_000
@@ -1264,9 +1241,7 @@ def retention_pairs_stream(
             pending = set()
             # days below the watermark cannot re-arrive — forget them
             emitted = {d for d in emitted if d >= wm // DAY}
-        state.update((
-            _json.dumps([cohort, sorted(emitted), sorted(pending)]),
-        ))
+        state.update((cohort, emitted, pending))
         if pending and cohort is not None:
             # flush pendings when the watermark finalizes the cohort
             state.setTimeoutTimestamp(max(cohort * DAY + 1, wm + 1))
@@ -1274,7 +1249,7 @@ def retention_pairs_stream(
 
     base = df.withWatermark(ts_col, watermark).select(user_col, ts_col)
     return keyed_state(
-        base, [user_col], step, out_schema, state_schema,
+        base, [user_col], step, out_schema,
         GroupStateTimeout.EventTimeTimeout, key_buckets,
     )
 

@@ -1485,7 +1485,7 @@ def streaming_semantic_dedup(
     Documented per-mode survivor semantics, same as exact dedup.
 
     State per bucket: up to ``max_reps`` unit-normalized rep embeddings in
-    one pickled ndarray blob (lossless float32); per-row cost is one
+    one ndarray (stored losslessly); per-row cost is one
     matvec against <= max_reps reps — vectorized per micro-batch. Keyed on
     the bucket, so state shards across executors with bucket cardinality
     (2^planes); rows within a batch are processed in ``id_col`` order for
@@ -1496,8 +1496,6 @@ def streaming_semantic_dedup(
             "streaming_semantic_dedup expects a streaming DataFrame; use "
             "semantic_dedup for batch corpora"
         )
-    import pickle
-
     import numpy as np
 
     from pyspark.sql import types as T
@@ -1507,14 +1505,10 @@ def streaming_semantic_dedup(
 
     tagged = df.withColumn("__bucket", sign_bucket(emb_col, planes))
     out_schema = T.StructType([f for f in df.schema.fields])
-    state_schema = T.StructType([T.StructField("reps", T.BinaryType())])
     in_cols = [f.name for f in df.schema.fields]
 
     def step(key, rows, state):
-        if state.exists:
-            reps = pickle.loads(state.get[0])
-        else:
-            reps = None  # (n_reps, dim) unit rows
+        reps = state.get if state.exists else None  # (n_reps, dim) unit rows
         frame = rows.frame().sort_values(id_col, kind="mergesort")
         keep_mask = []
         for emb in frame[emb_col]:
@@ -1533,14 +1527,12 @@ def streaming_semantic_dedup(
             elif len(reps) < max_reps:
                 reps = np.vstack([reps, u])
         if reps is not None:
-            state.update((pickle.dumps(reps),))
+            state.update(reps)
         return list(
             frame.loc[keep_mask, in_cols].itertuples(index=False, name=None)
         )
 
-    # per key (the bucket), so the checkpoint keeps the ``reps binary``
-    # state schema
-    return keyed_state(tagged, ["__bucket"], step, out_schema, state_schema,
+    return keyed_state(tagged, ["__bucket"], step, out_schema,
                        GroupStateTimeout.NoTimeout, None)
 
 

@@ -63,8 +63,8 @@ _BIN = {
 
 def _vec(e: A.Expr, cols):
     """Vectorized filter evaluation (no per-row Python) over ``cols``, a
-    mapping from column name to numpy array. Nulls read as pandas reads
-    them: an ordering comparison with a null operand is False,
+    mapping from column name to numpy array. Nulls read as SQL filters
+    read them: a comparison with a null operand is False,
     ``and``/``or``/``not`` take a null as False, and ``x % 0`` is null."""
     if isinstance(e, A.Literal):
         return e.value
@@ -82,8 +82,8 @@ def _vec(e: A.Expr, cols):
             return _truth(l) & _truth(r)
         if e.op == "or":
             return _truth(l) | _truth(r)
-        if e.op in ("<", "<=", ">", ">="):
-            return _ordered(_BIN[e.op], l, r)
+        if e.op in ("==", "!=", "<", "<=", ">", ">="):
+            return _compare(_BIN[e.op], l, r)
         if e.op == "%" and np.any(np.equal(r, 0)):
             # x % 0 reads null as in pandas and SQL (numpy's integer mod gives 0)
             zero = np.equal(r, 0)
@@ -108,14 +108,30 @@ def _truth(v):
     return v if v.dtype == bool else np.where(pd.isna(v), False, v).astype(bool)
 
 
-def _ordered(op, l, r):
-    """``l op r`` for an ordering ``op``, False where an operand is null:
-    numpy raises on ``None`` in an object array (float NaN already
-    compares False)."""
+def _compare(op, l, r):
+    """``l op r`` for a comparison ``op``, False where an operand is null
+    (None, NaN or NaT), as in SQL. numpy already reads a NaN or NaT operand
+    as False under every comparison but ``!=``, and a None as False under
+    ``==`` with a scalar, so only the other cases build a null mask: ``!=``,
+    None under an ordering (numpy raises) and None == None."""
     if l is None or r is None:
         return False
-    objs = [v for v in (l, r) if isinstance(v, np.ndarray) and v.dtype == object]
-    null = np.logical_or.reduce([pd.isna(v) for v in objs]) if objs else None
+    if op is operator.ne:
+        kinds = "fOMm"
+    elif op is operator.eq and not (
+        isinstance(l, np.ndarray) and isinstance(r, np.ndarray)
+    ):
+        kinds = ""
+    else:
+        kinds = "O"
+    nullable = [
+        v for v in (l, r)
+        if isinstance(v, np.ndarray) and v.dtype.kind in kinds
+    ]
+    null = (
+        np.logical_or.reduce([pd.isna(v) for v in nullable])
+        if nullable else None
+    )
     if null is None or not null.any():
         return op(l, r)
     keep = ~null

@@ -9,8 +9,8 @@ row that was current AT ITS TIMESTAMP — not whatever arrived last
 (point-in-time correctness that a snapshot join cannot give).
 
 Shape: tag both streams, union by name, keyed state on the join key
-(streaming/bucketing.py). State = the last ``max_history`` right rows per key (pickled,
-lossless — same serde as the snapshot windows). Per batch: append right
+(streaming/bucketing.py). State = the last ``max_history`` right rows per key, as
+one DataFrame (the runner stores it losslessly). Per batch: append right
 arrivals to the history, then binary-search each left event's timestamp —
 O(|batch| log |history|) per key, bounded state.
 
@@ -64,7 +64,6 @@ def streaming_asof_enrich(
         T.StructField(c, right.schema[c].dataType, True) for c in payload
     ]
     out_schema = T.StructType(out_fields)
-    state_schema = T.StructType([T.StructField("hist", T.BinaryType())])
 
     l_tagged = left.select(
         *[F.col(c) for c in left.columns],
@@ -89,11 +88,8 @@ def streaming_asof_enrich(
     rcols = [f"__r_{c}" for c in payload]
 
     def step(key, rows, state):
-        import pickle
-
         hist = (
-            pickle.loads(bytes(state.get[0]))
-            if state.exists
+            state.get if state.exists
             else pd.DataFrame(columns=["__ts"] + rcols)
         )
         batch = rows.frame()
@@ -111,7 +107,7 @@ def streaming_asof_enrich(
             # "latest write wins" dimension-update semantics
             hist = hist.sort_values("__ts", kind="mergesort").tail(max_history)
             hist = hist.reset_index(drop=True)
-            state.update((pickle.dumps(hist),))
+            state.update(hist)
         lrows = batch[batch[_SIDE] == 1]
         if not len(lrows):
             return None
@@ -127,6 +123,5 @@ def streaming_asof_enrich(
         ]
 
     return keyed_state(
-        u, [on], step, out_schema, state_schema,
-        GroupStateTimeout.NoTimeout, key_buckets,
+        u, [on], step, out_schema, GroupStateTimeout.NoTimeout, key_buckets,
     )

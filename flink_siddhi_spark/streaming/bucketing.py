@@ -3,27 +3,36 @@
 Each operator writes one ``step(key, rows, state) -> list[tuple]``: ``key``
 is the key tuple, ``rows`` the key's arriving rows for this visit
 (:class:`KeyRows`: ``len(rows)``, ``rows.col(name)`` as a numpy array,
-``rows.frame()`` as a pandas frame), ``state`` a GroupState. The returned
-tuples are output rows in ``out_schema`` order. :func:`keyed_state` runs
-the step in one of two group modes:
+``rows.frame()`` as a pandas frame), ``state`` the key's state. The
+returned tuples are output rows in ``out_schema`` order.
+
+The state contract is the same in both group modes: ``state`` is a
+:class:`_KeyState` with ``exists`` / ``get`` / ``update`` / ``remove`` /
+``hasTimedOut`` / ``getCurrentWatermarkMs`` / ``setTimeoutTimestamp``.
+``state.get`` returns exactly the Python object the step last passed to
+``state.update`` (any picklable object: lists, tuples, sets, dicts, numpy
+arrays, DataFrames), so a step declares no schema and encodes nothing.
+This module alone decides the checkpoint format: each key's object is one
+pickle protocol-5 blob, written only when the visit called ``update`` —
+a visit that reads its state and leaves it alone writes nothing.
+:func:`keyed_state` runs the step in one of two group modes:
 
 - per key (``buckets`` unset): ``groupBy(keys).applyInPandasWithState``;
-  ``state`` is Spark's own GroupState and the operator's ``state_schema``
-  is the checkpoint format.
+  Spark's GroupState holds the blob under :data:`KEY_STATE_SCHEMA`, and
+  the shim's ``update`` / ``remove`` / timer reach it after the step.
 - per bucket (``buckets=N``): ``groupBy(pmod(xxhash64(keys), N))``; one
   Arrow group + GroupState visit serves ~keys/N member keys, amortizing
   the fixed ~280µs per-key-visit machinery (Arrow slice, GroupState proto
   round-trip) that dominates drains over 10^5 keys (SCALE.md §Round-9).
-  ``state`` is a :class:`_KeyState` shim over one pickled blob per member
-  key inside the bucket's GroupState (:data:`BUCKET_STATE_SCHEMA`).
+  Each member key's blob rides in the bucket's GroupState
+  (:data:`BUCKET_STATE_SCHEMA`), so an unchanged key's bytes are copied,
+  not re-encoded.
 
 The bucketed visit splits member keys with one factorize plus a stable
 argsort (each key reads contiguous slices of the visit's column arrays,
 in arrival order) and builds ONE output frame per visit: per-key
 ``pdf.groupby`` demultiplexing and per-key frames + ``pd.concat`` cost
-1.7-2.3x on key-heavy pattern drains. Blobs are pickle protocol 5: the
-procs keep json strings inside their state tuples, which pickle writes
-length-prefixed with no re-escaping (SCALE.md §Round-10).
+1.7-2.3x on key-heavy pattern drains.
 
 Under EventTimeTimeout a member key is visited when it has new rows or
 when the watermark passed its own timer (``hasTimedOut=True``, no rows),
@@ -58,6 +67,11 @@ _KEYABLE = _INTEGRAL + (
     T.FloatType, T.DoubleType, T.StringType, T.BooleanType,
 )
 
+# per key: the key's pickled state object
+KEY_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
+
+# per bucket: the bucket count, then per member key its json-encoded key
+# tuple, its pickled state object and its timer (NO_FIRE: none)
 BUCKET_STATE_SCHEMA = T.StructType(
     [
         T.StructField("n", T.LongType()),
@@ -139,20 +153,22 @@ def _concat(pdfs) -> Optional[pd.DataFrame]:
 
 
 class _KeyState:
-    """GroupState shim for ONE member key of a bucket: ``exists`` /
-    ``get`` / ``update`` / ``remove`` / ``hasTimedOut`` /
-    ``getCurrentWatermarkMs`` / ``setTimeoutTimestamp``. State rides as a
-    pickled blob (the procs' state tuples are plain data — strings, string
-    arrays, ints, bytes). ``fire`` is the timer this visit armed, or None."""
+    """One key's state, as the step sees it in both group modes. ``blob``
+    is the pickled object (None: no state) and changes only through
+    ``update`` / ``remove``; ``fire`` is the timer this visit armed, or
+    None."""
 
-    __slots__ = ("exists", "blob", "fire", "_wm", "_timed_out")
+    __slots__ = ("blob", "fire", "_wm", "_timed_out")
 
     def __init__(self, blob, wm, timed_out):
-        self.exists = blob is not None
         self.blob = blob
         self.fire = None
         self._wm = wm
         self._timed_out = timed_out
+
+    @property
+    def exists(self):
+        return self.blob is not None
 
     @property
     def get(self):
@@ -165,16 +181,24 @@ class _KeyState:
     def getCurrentWatermarkMs(self):
         return self._wm
 
-    def update(self, t):
-        self.blob = _pickle.dumps(tuple(t), protocol=5)
-        self.exists = True
+    def update(self, obj):
+        self.blob = _pickle.dumps(obj, protocol=5)
 
     def remove(self):
         self.blob = None
-        self.exists = False
 
     def setTimeoutTimestamp(self, ms):
         self.fire = int(ms)
+
+
+def _watermark(state) -> int:
+    """The group's event-time watermark; 0 on a stream without one (steps
+    that never read the clock, e.g. the as-of join), as Spark reports
+    before the first watermark."""
+    try:
+        return state.getCurrentWatermarkMs()
+    except PySparkRuntimeError:
+        return 0
 
 
 def _frame_maker(out_schema: T.StructType) -> Callable:
@@ -198,7 +222,9 @@ def _frame_maker(out_schema: T.StructType) -> Callable:
 
 
 def _key_proc(step: Callable, out_schema: T.StructType) -> Callable:
-    """The applyInPandasWithState function of the per-key mode."""
+    """The applyInPandasWithState function of the per-key mode: the step
+    runs against a :class:`_KeyState` over the group's stored blob, and
+    only what it changed reaches Spark's GroupState."""
     to_frame = _frame_maker(out_schema)
 
     def proc(key, pdfs, state):
@@ -206,7 +232,16 @@ def _key_proc(step: Callable, out_schema: T.StructType) -> Callable:
         rows = _NO_ROWS if frame is None else KeyRows(
             _Visit(frame, None), 0, len(frame)
         )
-        out = step(key, rows, state)
+        blob = state.get[0] if state.exists else None
+        shim = _KeyState(blob, _watermark(state), state.hasTimedOut)
+        out = step(key, rows, shim)
+        if shim.blob is not blob:
+            if shim.blob is None:
+                state.remove()
+            else:
+                state.update((shim.blob,))
+        if shim.fire is not None:
+            state.setTimeoutTimestamp(shim.fire)
         if out:
             yield to_frame(out)
 
@@ -270,12 +305,7 @@ def _bucket_proc(
             st = {k: [b, f] for k, b, f in zip(pks, blobs, fires)}
         else:
             st = {}
-        try:
-            wm = state.getCurrentWatermarkMs()
-        except PySparkRuntimeError:
-            # stream has no watermark (NoTimeout steps that never read the
-            # clock, e.g. the as-of join) — expose 0 like Spark does pre-wm
-            wm = 0
+        wm = _watermark(state)
         visits = []
         frame = _concat(pdfs)
         if frame is not None:
@@ -326,7 +356,6 @@ def keyed_state(
     key_cols: list,
     step: Callable,
     out_schema: T.StructType,
-    state_schema: T.StructType,
     timeout,
     buckets: Optional[int],
 ) -> DataFrame:
@@ -335,7 +364,7 @@ def keyed_state(
     (see the module docstring for the step contract)."""
     if not buckets:
         return df.groupBy(*key_cols).applyInPandasWithState(
-            _key_proc(step, out_schema), out_schema, state_schema,
+            _key_proc(step, out_schema), out_schema, KEY_STATE_SCHEMA,
             "append", timeout,
         )
     key_types = [df.schema[k].dataType for k in key_cols]

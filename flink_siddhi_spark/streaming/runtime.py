@@ -58,7 +58,6 @@ import datetime
 import hashlib
 import json
 import logging
-import pickle
 from typing import Optional
 
 import numpy as np
@@ -175,31 +174,22 @@ def _retain(rows: pd.DataFrame, spec: dict):
     return rows, rows  # batch / delay: everything
 
 
-# the retention operators' state: the retained rows as a PICKLED DataFrame
-# (BinaryType), not JSON — to_json round-trips lose float precision beyond
-# 10 significant digits and sub-ms timestamp resolution, which would let
-# restored rows diverge from the batch-mode result (PARITY.md §15); pickle
-# preserves values and dtypes exactly
-_RETAINED_STATE_SCHEMA = T.StructType(
-    [T.StructField("rows", T.BinaryType()), T.StructField("snap", T.IntegerType())]
-)
-
-
 def _retained_step(rows, state, out_cols: list, ord_cols: list, spec: dict):
     """The retention operators' shared state transition for one key:
     restore the stored rows, append the visit's, sort by the batch total
     order, apply the retention rules and store what they keep under the
-    next snapshot id. Returns ``(retained, snap)``."""
+    next snapshot id. The stored frame keeps values and dtypes exactly, so
+    restored rows cannot drift from the batch-mode result (PARITY.md §15).
+    Returns ``(retained, snap)``."""
     frame = rows.frame()[out_cols]
     snap = 0
     if state.exists:
-        blob, snap = state.get
-        stored = pickle.loads(bytes(blob))[out_cols]
+        stored, snap = state.get
         frame = pd.concat([stored, frame], ignore_index=True)
     frame = frame.sort_values(ord_cols, kind="mergesort").reset_index(drop=True)
     kept, retained = _retain(frame, spec)
     snap += 1
-    state.update((pickle.dumps(kept.reset_index(drop=True)), snap))
+    state.update((kept.reset_index(drop=True), snap))
     return retained, snap
 
 
@@ -211,8 +201,8 @@ def _py(v):
 
 def _decode_rows(frame: pd.DataFrame, cols: list, sort_cols: list) -> list:
     """A visit's rows as python lists over ``cols``, ordered by
-    ``sort_cols``: NaN becomes None and numpy scalars python values, so a
-    row is json-encodable exactly as the window states store it."""
+    ``sort_cols``: NaN becomes None and numpy scalars python values, the
+    values ``_agg_over`` reads."""
     if not cols:  # pure count(): row presence is the datum
         return [[] for _ in range(len(frame))]
     if not len(frame):
@@ -410,7 +400,8 @@ class StreamingPlanner(BatchPlanner):
         unique: each batch emits the key's new representative iff it is
         later (by the batch total order) than the stored one — a changelog
         whose latest row per key IS the batch final-contents result.
-        State per key is one ord-tuple string — O(#keys), no row buffering."""
+        State per key is the representative's ord values — O(#keys), no
+        row buffering."""
         first = si.window.name.lower() == "firstunique"
         keys = [a.name for a in si.window.args if isinstance(a, A.Ref)]
         if not keys:
@@ -418,43 +409,25 @@ class StreamingPlanner(BatchPlanner):
         out_cols = [c for c in df.columns if c != "__event_time"]
         out_schema = T.StructType([f for f in df.schema.fields if f.name in out_cols])
         ord_cols = [c for c in self.ord_cols_for(schema) if c in out_cols]
-        state_schema = T.StructType([T.StructField("ord", T.StringType())])
 
         def step(key, rows, state):
-            import json as _json
-
             rows = rows.frame()[out_cols]
             rows = rows.sort_values(ord_cols, kind="mergesort").reset_index(drop=True)
-
-            def ord_of(i):
-                out = []
-                for c in ord_cols:
-                    v = rows[c].iloc[i]
-                    if isinstance(v, pd.Timestamp):
-                        out.append(v.isoformat())
-                    elif hasattr(v, "item"):  # numpy scalar -> python
-                        out.append(v.item())
-                    else:
-                        out.append(v)
-                return out
-
             if first:
                 if state.exists:
                     return None
-                state.update(("1",))
+                state.update(True)
                 return list(rows.iloc[[0]].itertuples(index=False, name=None))
             cand = len(rows) - 1
-            cand_ord = ord_of(cand)
-            if state.exists:
-                (stored,) = state.get
-                if _json.loads(stored) >= cand_ord:
-                    return None
-            state.update((_json.dumps(cand_ord),))
+            cand_ord = [rows[c].iloc[cand] for c in ord_cols]
+            if state.exists and state.get >= cand_ord:
+                return None
+            state.update(cand_ord)
             return list(rows.iloc[[cand]].itertuples(index=False, name=None))
 
         return keyed_state(
-            df, keys, step, out_schema, state_schema,
-            GroupStateTimeout.NoTimeout, self.window_key_buckets,
+            df, keys, step, out_schema, GroupStateTimeout.NoTimeout,
+            self.window_key_buckets,
         )
 
     def _streaming_retention_snapshot(
@@ -507,8 +480,7 @@ class StreamingPlanner(BatchPlanner):
             df = df.withColumn("__gk", F.lit(1))
             keys = ["__gk"]
         return keyed_state(
-            df, keys, step, out_schema, _RETAINED_STATE_SCHEMA,
-            GroupStateTimeout.NoTimeout, None,
+            df, keys, step, out_schema, GroupStateTimeout.NoTimeout, None
         )
 
     def _streaming_retained_agg(
@@ -852,14 +824,14 @@ class StreamingPlanner(BatchPlanner):
             )
         return plan, carry, out_fields
 
-    def _keyed_window(self, df, key_names, step, out_schema, state_schema):
+    def _keyed_window(self, df, key_names, step, out_schema):
         """The count/time window lowerings' keyed state: one state key per
         ``key_names`` combination (bucketed by ``window_key_buckets``), or
         one global key when the query has no group keys."""
         if not key_names:
             df = df.withColumn("__gk", F.lit(0))
         return keyed_state(
-            df, key_names or ["__gk"], step, out_schema, state_schema,
+            df, key_names or ["__gk"], step, out_schema,
             GroupStateTimeout.NoTimeout,
             self.window_key_buckets if key_names else None,
         )
@@ -880,24 +852,21 @@ class StreamingPlanner(BatchPlanner):
         plan, value_cols, out_fields = self._plan_stateful_items(
             q, key_names, field_types, allow_cur=False, what="lengthBatch"
         )
-        state_schema = T.StructType([T.StructField("buffer", T.ArrayType(T.StringType()))])
         # what each buffered row carries, also its sort order
         carry_cols = ([TS_COL] if TS_COL in df.columns else []) + value_cols
 
         def step(key, rows, state):
-            buf = [json.loads(s) for s in state.get[0]] if state.exists else []
+            buf = state.get if state.exists else []
             buf.extend(_decode_rows(rows.frame(), carry_cols, carry_cols))
             cut = len(buf) - len(buf) % n
             out = [
                 _record(plan, key, key_names, carry_cols, None, buf[i:i + n])
                 for i in range(0, cut, n)
             ]
-            state.update(([json.dumps(r) for r in buf[cut:]],))
+            state.update(buf[cut:])
             return out
 
-        return self._keyed_window(
-            df, key_names, step, T.StructType(out_fields), state_schema
-        )
+        return self._keyed_window(df, key_names, step, T.StructType(out_fields))
 
     def _streaming_sliding_length(
         self, df: DataFrame, q: A.Query, si: A.SingleInput, key_names: list[str],
@@ -924,12 +893,11 @@ class StreamingPlanner(BatchPlanner):
         )
         if t_ms is not None and ts_field not in carry:
             carry.append(ts_field)
-        state_schema = T.StructType([T.StructField("ring", T.ArrayType(T.StringType()))])
         carry_cols = ([TS_COL] if TS_COL in df.columns else []) + carry
         ts_idx = carry_cols.index(ts_field) if t_ms is not None else None
 
         def step(key, rows, state):
-            ring = [json.loads(s) for s in state.get[0]] if state.exists else []
+            ring = state.get if state.exists else []
             out = []
             for row in _decode_rows(rows.frame(), carry_cols, carry_cols):
                 ring.append(row)
@@ -942,12 +910,10 @@ class StreamingPlanner(BatchPlanner):
                     while ring and (ring[0][ts_idx] is None or int(ring[0][ts_idx]) <= lo):
                         ring.pop(0)
                 out.append(_record(plan, key, key_names, carry_cols, row, ring))
-            state.update(([json.dumps(r) for r in ring],))
+            state.update(ring)
             return out
 
-        return self._keyed_window(
-            df, key_names, step, T.StructType(out_fields), state_schema
-        )
+        return self._keyed_window(df, key_names, step, T.StructType(out_fields))
 
     def _streaming_sliding_time(
         self, df: DataFrame, q: A.Query, si: A.SingleInput, key_names: list[str],
@@ -971,21 +937,13 @@ class StreamingPlanner(BatchPlanner):
         plan, carry, out_fields = self._plan_stateful_items(
             q, key_names, field_types, allow_cur=True, what="time window"
         )
-        state_schema = T.StructType([
-            T.StructField("buffer", T.ArrayType(T.StringType())),
-            T.StructField("max_ts", T.LongType()),
-        ])
         if TS_COL not in df.columns:
             raise SiddhiPlannerException("#window.time needs the stream's ts_field")
         carry_cols = [TS_COL] + carry  # ts is element 0 of every buffered row
         t_ms = int(t_ms)
 
         def step(key, rows, state):
-            if state.exists:
-                stored, max_ts = state.get
-                buf = [json.loads(s) for s in stored]
-            else:
-                buf, max_ts = [], None
+            buf, max_ts = state.get if state.exists else ([], None)
             out = []
             for row in _decode_rows(rows.frame(), carry_cols, carry_cols):
                 ts = int(row[0])
@@ -1001,12 +959,10 @@ class StreamingPlanner(BatchPlanner):
                     buf.pop(0)
                 win = [w for w in buf if ts - t_ms <= w[0] <= ts]
                 out.append(_record(plan, key, key_names, carry_cols, row, win))
-            state.update(([json.dumps(r) for r in buf], max_ts if max_ts is not None else 0))
+            state.update((buf, max_ts))
             return out
 
-        return self._keyed_window(
-            df, key_names, step, T.StructType(out_fields), state_schema
-        )
+        return self._keyed_window(df, key_names, step, T.StructType(out_fields))
 
     # ------------------------------------------------- streaming aggregation
     def _compile_agg_read(self, q: A.Query) -> DataFrame:
@@ -1106,18 +1062,13 @@ class StreamingPlanner(BatchPlanner):
         fields = list(schema.fields)
         field_types = {f.name: f.dataType for f in schema.df.schema.fields}
         out_schema, _, _, resolve, emit = pattern_output(elems, {stream: schema})
-        # buffer state = ONE json blob of row arrays, stored SORTED. ``seen``
-        # holds content-hashes of already-emitted matches: a running count
-        # would re-emit old matches (and drop new ones) whenever an
-        # out-of-order arrival inserts a match at an earlier NFA position,
-        # and would replay every still-derivable match after buffer eviction.
-        state_schema = T.StructType(
-            [
-                T.StructField("seen", T.ArrayType(T.StringType())),
-                T.StructField("buffer", T.StringType()),
-                T.StructField("nfa", T.StringType()),
-            ]
-        )
+        # a key's state is (seen, rows, hwm, st): the buffered rows as a
+        # list of row arrays stored SORTED, the processed high-water mark
+        # and the kernel/NFA state. ``seen`` holds 16-byte content digests
+        # of already-emitted matches: a running count would re-emit old
+        # matches (and drop new ones) whenever an out-of-order arrival
+        # inserts a match at an earlier NFA position, and would replay
+        # every still-derivable match after buffer eviction.
         every, every_at, within_ms = p.every, p.every_at, p.within_ms
         max_buffer = self.max_buffer_per_key
 
@@ -1221,45 +1172,32 @@ class StreamingPlanner(BatchPlanner):
         # a dry run over no rows: a bad filter fails the plan, not a worker
         element_masks(elems, LazyColumns(pos, lambda c: decode([], c)), 0)
 
-        def _key_step(seen, buf_json, nfa_json, new_rows, wm):
+        def _key_step(seen, rows, hwm, st, new_rows, wm):
             """ONE key's state transition for one micro-batch: merge decoded
             new rows into the sorted buffer, watermark-evict, run the
             kernel/NFA, confirm watermark-passed trailing absences
             (timer-fired, round 10 — Siddhi scheduler parity), dedup
-            emissions. Returns ``(seen, buf_json, nfa_json, rows,
-            new_caps, changed, timer, removable)``: ``timer`` is the
-            event-time ms to arm the timeout at (earliest pending absence
-            confirmation or GC horizon), or None; ``removable`` means the
-            key's state can be DROPPED — empty buffer and no live
-            partials, so nothing is re-derivable and the watermark bars
-            older arrivals (state rows then track active keys, not
-            lifetime keys).
+            emissions. ``st`` is None for a key with no state yet. Returns
+            ``(stored, rows, new_caps, timer, removable)``: ``stored`` is
+            the key's next ``(seen, rows, hwm, st)``, or None when this
+            visit changed nothing; ``timer`` is the event-time ms to arm
+            the timeout at (earliest pending absence confirmation or GC
+            horizon), or None; ``removable`` means the key's state can be
+            DROPPED — empty buffer and no live partials, so nothing is
+            re-derivable and the watermark bars older arrivals (state rows
+            then track active keys, not lifetime keys).
 
             This is the only compute in the stateful pattern operator: its
             step runs it once per key in both group modes of the keyed-state
             driver (per key, or per member key of a hash bucket), so
             cross-mode parity is structural, not tested-in.
             """
-            if buf_json is None:
-                nfa, rows = None, []
-            else:
-                rows = json.loads(buf_json)
-                nfa = json.loads(nfa_json)
-            if not multi and nfa is not None and nfa["st"]["done"]:
-                # sealed: an arm-once pattern emits at most one match ever;
-                # once emitted the buffer is dead weight and late arrivals
-                # cannot retract the emission — drop everything, keep the
-                # done marker so every later batch is a no-op
-                return (
-                    seen, "[]", nfa_json, [], [], buf_json != "[]",
-                    None, False,
-                )
             n_old = len(rows)
             n_new = len(new_rows)
             # tracks whether the buffer's CONTENT changed this visit (new
             # rows, watermark eviction, or the hard cap) — a timer-fired
             # visit that only confirms/re-arms leaves it False so the
-            # caller can skip the state re-encode (round 11)
+            # caller can skip the state write (round 11)
             buf_mutated = n_new > 0
             # in-order fast path: every new row strictly after the processed
             # high-water mark -> sort just the new suffix and RESUME the NFA
@@ -1267,19 +1205,16 @@ class StreamingPlanner(BatchPlanner):
             # same-ts arrival could interleave the old tail under the
             # deterministic tie-break and change strict/every semantics).
             in_order = (
-                nfa is not None
-                and nfa["hwm"] is not None
-                and (
-                    n_new == 0
-                    or min(r[0] for r in new_rows) > nfa["hwm"]
-                )
+                st is not None
+                and hwm is not None
+                and (n_new == 0 or min(r[0] for r in new_rows) > hwm)
             )
             if in_order:
                 if n_new:
                     if n_new > 1:
                         new_rows.sort(key=sort_key)
                     rows.extend(new_rows)
-                start_idx, init = n_old, nfa["st"]
+                start_idx, init = n_old, st
             else:
                 rows.extend(new_rows)
                 rows.sort(key=sort_key)
@@ -1303,11 +1238,11 @@ class StreamingPlanner(BatchPlanner):
                 # (ROUND7_NOTES §Known future work, landed round 8).
                 stale_floor = wm - (within_ms or 0)
                 floor = stale_floor - neg_for_max
-                if has_neg and nfa is not None:
+                if has_neg and st is not None:
                     live = [
                         d["first_ts"]
                         for grp in ("partials", "spawners")
-                        for d in nfa["st"][grp]
+                        for d in st[grp]
                         if d["first_ts"] is not None
                     ]
                     if live:
@@ -1347,9 +1282,9 @@ class StreamingPlanner(BatchPlanner):
                 # empty-region fast path (round 11, VERDICT r10 item 2): a
                 # timer-fired/quiescent visit carries no new rows, so every
                 # kernel/NFA run is the identity on `init` (no row past
-                # start_idx means no transition; serialized state round-trips
-                # byte-equal) — skip mask construction and the engine call;
-                # the quiescent pass below does the visit's real work
+                # start_idx means no transition) — skip mask construction
+                # and the engine call; the quiescent pass below does the
+                # visit's real work
                 found, nfa_st = [], init
             else:
                 # masks over the scanned region only (rows[start_idx:]); the
@@ -1388,7 +1323,7 @@ class StreamingPlanner(BatchPlanner):
                 payload = json.dumps(
                     [[rows[j] for j in idxs] for idxs in cap]
                 )
-                return hashlib.md5(payload.encode()).hexdigest()
+                return hashlib.md5(payload.encode()).digest()
 
             seen_set = set(seen)
             new_caps = []
@@ -1400,11 +1335,8 @@ class StreamingPlanner(BatchPlanner):
                     new_caps.append(cap)
             if len(seen) > 4 * max_buffer:
                 seen = seen[-4 * max_buffer:]
-            hwm = (
-                int(ts_arr[-1])  # buffer is sorted by TS_COL
-                if n_total
-                else (nfa["hwm"] if nfa is not None else None)
-            )
+            if n_total:
+                hwm = int(ts_arr[-1])  # buffer is sorted by TS_COL
             # timer = earliest actionable watermark instant: pending absence
             # confirmation (wm > pend), then the GC horizon — the instant
             # past which the whole buffer is evictable and every live
@@ -1419,24 +1351,11 @@ class StreamingPlanner(BatchPlanner):
             if purge and rows:
                 horizon = hwm + (within_ms or 0) + neg_for_max + 1
                 timer = horizon if timer is None else min(timer, horizon)
-            if region_identity and not buf_mutated and not confirmed:
-                # nothing changed this visit (no rows, no eviction, no
-                # confirmation): hand back the ORIGINAL encodings so the
-                # caller skips the state write and the json re-encode
-                return (
-                    seen, buf_json, nfa_json, rows, new_caps, False,
-                    timer, removable,
-                )
-            return (
-                seen,
-                json.dumps(rows),
-                json.dumps({"hwm": hwm, "st": nfa_st}),
-                rows,
-                new_caps,
-                True,
-                timer,
-                removable,
-            )
+            # nothing changed this visit (no rows, no eviction, no
+            # confirmation): the caller skips the state write
+            unchanged = region_identity and not buf_mutated and not confirmed
+            stored = None if unchanged else (seen, rows, hwm, nfa_st)
+            return stored, rows, new_caps, timer, removable
 
         def take(rows, fname, idx):
             """The picked buffered rows' ``fname`` values as output cells."""
@@ -1452,18 +1371,18 @@ class StreamingPlanner(BatchPlanner):
                 # timed-out visit can never emit)
                 state.remove()
                 return None
-            if state.exists:
-                seen, buf_json, nfa_json = state.get
-                seen = list(seen)
-            else:
-                seen, buf_json, nfa_json = [], None, None
-            if not multi and nfa_json is not None:
-                # peek the seal BEFORE decoding the batch: a sealed key's
-                # later batches must stay no-ops (no per-row json work)
-                if json.loads(nfa_json)["st"]["done"]:
-                    if buf_json != "[]":
-                        state.update((seen, "[]", nfa_json))
-                    return None
+            seen, buf, hwm, st = (
+                state.get if state.exists else ([], [], None, None)
+            )
+            if not multi and st is not None and st["done"]:
+                # sealed: an arm-once pattern emits at most one match ever;
+                # once emitted the buffer is dead weight and late arrivals
+                # cannot retract the emission — drop it, keep the done
+                # marker so every later batch is a no-op (checked BEFORE
+                # decoding the batch: no per-row json work)
+                if buf:
+                    state.update((seen, [], hwm, st))
+                return None
             # the buffer lives as a sorted LIST OF ROW ARRAYS — no pandas in
             # the per-key hot path (a pandas multi-column sort alone costs
             # ~1.3ms FIXED per call; at 100k keys/batch that dominated the
@@ -1477,15 +1396,14 @@ class StreamingPlanner(BatchPlanner):
                 for d in map(loads, rows.col("__row").tolist())
             ]
             wm = state.getCurrentWatermarkMs()
-            seen, buf2, nfa2, buf_rows, new_caps, changed, timer, removable = (
-                _key_step(seen, buf_json, nfa_json, new_rows, wm)
+            stored, buf_rows, new_caps, timer, removable = _key_step(
+                seen, buf, hwm, st, new_rows, wm
             )
             if removable:
-                if state.exists:
-                    state.remove()
+                state.remove()
             else:
-                if changed:
-                    state.update((seen, buf2, nfa2))
+                if stored is not None:
+                    state.update(stored)
                 if timer is not None:
                     # Siddhi-scheduler parity + state GC: wake this key when
                     # the watermark passes the earliest pending absence
@@ -1506,7 +1424,7 @@ class StreamingPlanner(BatchPlanner):
         # pattern_key_buckets multiplexes ~keys/N keys through one Arrow
         # group + GroupState visit (streaming/bucketing.py).
         result = keyed_state(
-            df, [key_col], step, out_schema, state_schema,
+            df, [key_col], step, out_schema,
             GroupStateTimeout.EventTimeTimeout if use_timeout
             else GroupStateTimeout.NoTimeout,
             self.pattern_key_buckets,

@@ -984,9 +984,10 @@ def test_kernel_chain_multiquant_state_interops_with_general_nfa():
 
 def test_element_masks_read_null_ordering_operands_false():
     """The one element-mask function over numpy columns: an all-None object
-    column reads False under every ordering operator (numpy alone raises on
-    None), ``==`` and ``!=`` keep numpy's null results, integer ``x % 0``
-    is null, and a resumed region's ``start_idx`` prefix pads as False."""
+    column reads False under every comparison operator (numpy alone raises
+    on None under an ordering, reads ``!=`` as True and None == None as
+    True), so does a float NaN under ``!=``, integer ``x % 0`` is null, and
+    a resumed region's ``start_idx`` prefix pads as False."""
     from flink_siddhi_spark.operators.pattern import LazyColumns, element_masks
 
     def elem(filt):
@@ -1004,13 +1005,16 @@ def test_element_masks_read_null_ordering_operands_false():
             [m] = element_masks([elem(A.Binary(op, left, right))], cols, 3)
             assert m.dtype == bool and not m.any(), op
     mod0 = A.Binary("%", A.Ref(None, "k"), A.Literal(0, "int"))
-    eq, ne, gt, mod = element_masks(
+    eq, ne, gt, mod, ne_nan, eq_cols = element_masks(
         [elem(A.Binary("==", name, lit)), elem(A.Binary("!=", name, lit)),
          elem(A.Binary(">", A.Ref(None, "v"), A.Literal(1, "int"))),
-         elem(A.Binary("==", mod0, A.Literal(0, "int")))],
+         elem(A.Binary("==", mod0, A.Literal(0, "int"))),
+         elem(A.Binary("!=", A.Ref(None, "v"), A.Literal(1, "int"))),
+         elem(A.Binary("==", name, name))],
         cols, 3, start_idx=2,
     )
-    assert eq.tolist() == [False] * 5
-    assert ne.tolist() == [False, False, True, True, True]
+    assert eq.tolist() == eq_cols.tolist() == [False] * 5
+    assert ne.tolist() == [False] * 5
     assert gt.tolist() == [False, False, False, False, True]
     assert mod.tolist() == [False] * 5
+    assert ne_nan.tolist() == [False, False, False, False, True]

@@ -1,13 +1,18 @@
-"""The keyed-state runner's bucket visit (streaming/bucketing.py), driven
-without Spark: a fake GroupState stands in for the bucket's state, so the
-member-key split, the per-key timer discipline and the one-frame-per-visit
-output are pinned directly."""
+"""The keyed-state runner (streaming/bucketing.py), driven without Spark: a
+fake GroupState stands in for the group's state, so the member-key split,
+the per-key timer discipline, the one-frame-per-visit output and the state
+contract of both group modes are pinned directly."""
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from flink_siddhi_spark.streaming.bucketing import NO_FIRE, _bucket_proc
+from flink_siddhi_spark.streaming.bucketing import (
+    NO_FIRE,
+    _bucket_proc,
+    _key_proc,
+)
 
 OUT = T.StructType([
     T.StructField("a", T.LongType()),
@@ -24,6 +29,7 @@ class FakeGroupState:
         self.timeout = None
         self.wm = wm
         self.hasTimedOut = False
+        self.writes = 0
 
     @property
     def exists(self):
@@ -35,6 +41,7 @@ class FakeGroupState:
 
     def update(self, t):
         self.value = tuple(t)
+        self.writes += 1
 
     def remove(self):
         self.value = None
@@ -131,3 +138,81 @@ def test_bucket_visit_nullable_integral_key_keeps_its_state():
     (out,) = _visit(proc, state, [pd.DataFrame({"a": [7.0, float("nan")]})])
     assert out.values.tolist() == [[7, "-", 3], [None, "-", 1]]
     assert sorted(state.value[1], key=str) == ["[7]", "[null]"]
+
+
+STORED = {
+    "rows": [[1, "a", None], [2, "b", 2.5]],
+    "pair": (7, "x"),
+    "days": {3, 4},
+    "digests": [b"\x00" * 16],
+    "reps": np.arange(4, dtype=np.float32).reshape(2, 2),
+    "hist": pd.DataFrame({"__ts": [1, 2], "p": [0.1, None]}),
+}
+
+
+def _assert_stored(got):
+    assert set(got) == set(STORED)
+    for k in ("rows", "pair", "days", "digests"):
+        assert got[k] == STORED[k] and type(got[k]) is type(STORED[k]), k
+    assert got["reps"].dtype == np.float32
+    np.testing.assert_array_equal(got["reps"], STORED["reps"])
+    pd.testing.assert_frame_equal(got["hist"], STORED["hist"])
+
+
+def _procs(step):
+    """The same step under both group modes, keyed on column ``a``."""
+    return {
+        "key": _key_proc(step, OUT),
+        "bucket": _bucket_proc(
+            ["a"], [T.LongType()], step, OUT, 2, GroupStateTimeout.NoTimeout
+        ),
+    }
+
+
+def test_both_group_modes_hand_the_step_its_stored_object():
+    """``state.get`` returns exactly the object the step passed to
+    ``state.update``, per key and per member key of a bucket alike."""
+    got = {}
+
+    def step(key, rows, state):
+        if state.exists:
+            got[mode] = state.get
+        else:
+            state.update(STORED)
+        return []
+
+    for mode, proc in _procs(step).items():
+        state = FakeGroupState(wm=0)
+        frame = pd.DataFrame({"a": [5]})
+        _visit(proc, state, [frame])
+        _visit(proc, state, [frame])
+        _assert_stored(got[mode])
+    assert set(got) == {"key", "bucket"}
+
+
+def test_visit_without_update_leaves_the_stored_bytes():
+    """A visit that reads its state and calls no ``update`` writes nothing
+    per key, and leaves a member key's blob the same bytes per bucket."""
+
+    def step(key, rows, state):
+        if not state.exists:
+            state.update(STORED)
+        else:
+            _assert_stored(state.get)
+        return []
+
+    procs = _procs(step)
+    frame = pd.DataFrame({"a": [5]})
+
+    state = FakeGroupState(wm=0)
+    _visit(procs["key"], state, [frame])
+    (blob,) = state.value
+    assert isinstance(blob, bytes) and state.writes == 1
+    _visit(procs["key"], state, [frame])
+    assert state.writes == 1 and state.value[0] is blob
+
+    state = FakeGroupState(wm=0)
+    _visit(procs["bucket"], state, [frame])
+    [blob] = state.value[2]
+    _visit(procs["bucket"], state, [frame])
+    assert state.value[2][0] is blob

@@ -314,12 +314,14 @@ def test_pattern_engine_is_logged_once_per_compile(spark, tmp_path, caplog):
 
 
 def test_null_filter_operand_reads_false_in_batch_and_streaming(spark, tmp_path):
-    """An ordering comparison with a null operand reads false in an element
-    filter, in both engines: one key's first a-candidate and b-candidate
-    carry a null ``name``. Batch runs the 2-element pattern on the SQL fast
-    path and the 3-element chain on the numpy kernel (its strict connector
-    turns the relaxed-only prefilter off, so the null rows reach
-    ``element_masks``); streaming runs both through the per-key step."""
+    """A comparison with a null operand reads false in an element filter,
+    in both engines: one key's first a-candidate and b-candidate carry a
+    null ``name`` under an ordering, and one key's only a-candidate a null
+    ``name`` under ``!=``. Batch runs each 2-element pattern on the SQL
+    fast path and each 3-element chain on the numpy kernel (its strict
+    connector turns the relaxed-only prefilter off, so the null rows reach
+    ``element_masks``); streaming runs all of them through the per-key
+    step."""
     from tests.test_property_patterns_r7 import SCHEMA, _run_streaming
 
     rows = [  # (id, name, timestamp, key)
@@ -328,20 +330,31 @@ def test_null_filter_operand_reads_false_in_batch_and_streaming(spark, tmp_path)
         (3, "a", 3000, 2), (4, "z", 4000, 2),
         (2, "a", 1000, 3), (3, "b", 2000, 3), (4, "z", 3000, 3),
     ]
+    ne_rows = [
+        (2, None, 1000, 1), (3, "b", 2000, 1), (4, "z", 3000, 1),
+        (2, "y", 1000, 2), (3, "b", 2000, 2), (4, "z", 3000, 2),
+        (2, "x", 1000, 3), (3, "b", 2000, 3), (4, "z", 3000, 3),
+    ]
     two = "every a = s[name > 'a' and id == 2] -> b = s[name <= 'b' and id == 3]"
-    three = two + " , c = s[id == 4]"
-    for i, pattern in enumerate((two, three)):
+    ne_two = "every a = s[name != 'x' and id == 2] -> b = s[id == 3]"
+    cases = [
+        (two, rows, [("b", "b"), ("c", "a")]),
+        (two + " , c = s[id == 4]", rows, [("b", "b"), ("c", "a")]),
+        (ne_two, ne_rows, [("y", "b")]),
+        (ne_two + " , c = s[id == 4]", ne_rows, [("y", "b")]),
+    ]
+    for i, (pattern, feed, want) in enumerate(cases):
         cql = (
             f"partition with (price of s) begin from {pattern} "
             "select a.name as a_name, b.name as b_name insert into Out end"
         )
         cep = SiddhiCEP(spark)
         df = spark.createDataFrame(
-            [(k, nm, float(u), t) for k, nm, t, u in rows], SCHEMA
+            [(k, nm, float(u), t) for k, nm, t, u in feed], SCHEMA
         )
         cep.define("s", df, "id", "name", "price", "timestamp", ts_field="timestamp")
         batch = sorted(tuple(r) for r in cep.from_("s").cql(cql).returns("Out").collect())
         streamed = sorted(
-            tuple(r) for r in _run_streaming(spark, [rows], cql, str(tmp_path / str(i)))
+            tuple(r) for r in _run_streaming(spark, [feed], cql, str(tmp_path / str(i)))
         )
-        assert batch == streamed == [("b", "b"), ("c", "a")], (pattern, batch, streamed)
+        assert batch == streamed == want, (pattern, batch, streamed)
